@@ -37,26 +37,6 @@ def main():
     spark = get_spark(app_name="geoscan-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    headline = [
-        "flagship_event_anomalies",
-        "j1_join_single_key",
-        "j2_join_two_keys",
-        "u3_tfidf_relational",
-        "u1_cell_id",
-        "u7_haversine",
-        "a8_percentiles",
-        "w1_topk_desc",
-        "u4_explode_tokens",
-        "ttl_window_filter",
-        "geoscan_score_pipeline",
-        "dedup_minhash",
-        "dedup_simhash",
-        "ann_cosine_topk",
-        "text_token_stats",
-        "text_winnow_fingerprint",
-    ]
-    headline = [q for q in headline if q in QUERIES]
-
     # dedup_minhash / dedup_simhash are benched AS REGISTERED (md5
     # signatures, hamming<=6) so the published numbers measure exactly the
     # correctness-verified path. The production scale variants (xxhash64
@@ -84,75 +64,55 @@ def main():
         docs = _with_neardups(spark, sf_dir)
         return dd.simhash_pairs(docs, max_hamming=3)
 
-    from geoscan_fraud_spark.harness_geo import score_pipeline_dense
-
-    QUERIES = dict(QUERIES)
-    QUERIES["dedup_minhash_xxhash64"] = bench_minhash_xxhash64
-    QUERIES["dedup_simhash_h3"] = bench_simhash_h3
-    # u4/u7 rotated out of the 50-slot driver registry in r07; the bench
-    # keeps timing them so headline totals stay comparable across rounds
-    # (the `if q in QUERIES` filter above already dropped them — restore
-    # their original slots)
     from geoscan_fraud_spark.harness import (
         a8_percentiles,
         j1_join_single_key,
         j2_join_two_keys,
-        u1_cell_id,
         u4_explode_tokens,
         u7_haversine,
-        w1_topk_desc,
     )
-    from geoscan_fraud_spark.harness_pipeline import text_token_stats
+    from geoscan_fraud_spark.harness_geo import score_pipeline_dense
+    from geoscan_fraud_spark.harness_pipeline import (
+        ann_cosine_topk,
+        text_token_stats,
+    )
 
-    QUERIES["u4_explode_tokens"] = u4_explode_tokens
-    QUERIES["u7_haversine"] = u7_haversine
-    # u1 rotated out of the 50-slot registry in r12 (slot funds
-    # stateful_novel_tiles); keep timing it
-    QUERIES["u1_cell_id"] = u1_cell_id
-    # w1 rotated out of the 50-slot registry in r12 (slot funds
-    # hybrid_incremental_query); keep timing it so headline totals stay
-    # comparable across rounds. Restored FIRST: later anchor-based
-    # inserts (a8_percentiles) anchor on it.
-    QUERIES["w1_topk_desc"] = w1_topk_desc
-    if "w1_topk_desc" not in headline:
-        headline.insert(headline.index("ttl_window_filter"), "w1_topk_desc")
-    # j2 rotated out of the 50-slot registry in r10 (slot funds
-    # ann_ivf_incremental_query); keep timing it so headline totals stay
-    # comparable across rounds
-    QUERIES["j2_join_two_keys"] = j2_join_two_keys
-    if "j2_join_two_keys" not in headline:
-        headline.insert(
-            headline.index("u3_tfidf_relational"), "j2_join_two_keys"
-        )
-    # j1/a8/text_token_stats rotated out of the 50-slot registry in r08
-    # (slots fund bm25_search/token_shards/rrf_fusion); keep timing them
-    # so headline totals stay comparable across rounds
-    QUERIES["j1_join_single_key"] = j1_join_single_key
-    QUERIES["a8_percentiles"] = a8_percentiles
-    QUERIES["text_token_stats"] = text_token_stats
-    # ann_cosine_topk rotated out in the second r08 wave (slot funds
-    # pii_redact); keep timing it for the same reason
-    from geoscan_fraud_spark.harness_pipeline import ann_cosine_topk
-
-    QUERIES["ann_cosine_topk"] = ann_cosine_topk
-    for name, anchor in [
-        ("j1_join_single_key", "j2_join_two_keys"),
-        ("a8_percentiles", "w1_topk_desc"),
-        ("text_token_stats", "text_winnow_fingerprint"),
-        ("ann_cosine_topk", "text_token_stats"),
-    ]:
-        if name not in headline:
-            headline.insert(headline.index(anchor), name)
-    if "u7_haversine" not in headline:
-        headline.insert(headline.index("a8_percentiles"), "u7_haversine")
-    if "u1_cell_id" not in headline:
-        headline.insert(headline.index("u7_haversine"), "u1_cell_id")
-    if "u4_explode_tokens" not in headline:
-        headline.insert(headline.index("ttl_window_filter"), "u4_explode_tokens")
-    # the registry entry now runs a pinned mini-fixture (oracle-able);
-    # the bench keeps timing the sf-scaled composite for comparability
-    QUERIES["geoscan_score_pipeline"] = score_pipeline_dense
-    headline += ["dedup_minhash_xxhash64", "dedup_simhash_h3"]
+    headline = [
+        "flagship_event_anomalies",
+        "j1_join_single_key",
+        "j2_join_two_keys",
+        "u3_tfidf_relational",
+        "u1_cell_id",
+        "u7_haversine",
+        "a8_percentiles",
+        "w1_topk_desc",
+        "u4_explode_tokens",
+        "ttl_window_filter",
+        "geoscan_score_pipeline",
+        "dedup_minhash",
+        "dedup_simhash",
+        "ann_cosine_topk",
+        "text_token_stats",
+        "text_winnow_fingerprint",
+        "dedup_minhash_xxhash64",
+        "dedup_simhash_h3",
+    ]
+    # headline entries that are not in the `queries()` registry, plus
+    # `geoscan_score_pipeline`, whose registry entry runs a pinned
+    # mini-fixture; the bench times the sf-scaled composite instead
+    QUERIES = {
+        **QUERIES,
+        "j1_join_single_key": j1_join_single_key,
+        "j2_join_two_keys": j2_join_two_keys,
+        "u7_haversine": u7_haversine,
+        "a8_percentiles": a8_percentiles,
+        "u4_explode_tokens": u4_explode_tokens,
+        "geoscan_score_pipeline": score_pipeline_dense,
+        "ann_cosine_topk": ann_cosine_topk,
+        "text_token_stats": text_token_stats,
+        "dedup_minhash_xxhash64": bench_minhash_xxhash64,
+        "dedup_simhash_h3": bench_simhash_h3,
+    }
 
     # Round-5 batch-assembly/decontamination ops, timed but reported under
     # `queries_extra` so `value`/`best_serial_run` stay comparable with

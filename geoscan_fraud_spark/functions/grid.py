@@ -113,14 +113,6 @@ def cell_id(lat: Column, lng: Column, res: int) -> Column:
     return cell_id_from_ij(i, j, res)
 
 
-def cell_decode(cell: Column) -> tuple[Column, Column, Column]:
-    """cell id string -> (res, i, j) long columns."""
-    res = F.conv(F.substring(cell, 1, 2), 16, 10).cast("int")
-    i = F.conv(F.substring(cell, 3, 7), 16, 10).cast("long")
-    j = F.conv(F.substring(cell, 10, 7), 16, 10).cast("long")
-    return res, i, j
-
-
 def lng_ring_count(
     lat: Column, res: int, epsilon_m: float, cap: int | None = None
 ) -> Column:

@@ -67,8 +67,9 @@ def _ordered(df, *cols):
 
 def resolved_oracles() -> dict[str, str]:
     """ORACLES with lazy entries resolved.  An entry whose thunk raises is
-    dropped (that one query degrades to the driver's rows-only check)
-    instead of poisoning the entire oracle dict."""
+    dropped instead of poisoning the entire oracle dict that
+    `oracle_sql()` hands out; `tests/test_oracle_parity.py` and
+    `tools/check_oracle.py` fail that one entry by name."""
     out: dict[str, str] = {}
     for name, spec in ORACLES.items():
         if callable(spec):
@@ -136,38 +137,6 @@ def s2_pruned_scan(spark, sf_dir):
     )
 
 
-# P1/P4/P7/P8 (select + equality filter + alias + literal) was a
-# registered entry through r06; that algebra is load-bearing inside
-# virtually every hash-green entry (every registered query projects,
-# filters on literals, and aliases its outputs — `s2_pruned_scan` and
-# `w1_topk_desc` are direct witnesses), so the slot under the driver's
-# 50-entry cap now funds `semantic_decontam` (round-7 sixth rotation).
-def p_project_filter_alias(spark, sf_dir):
-    """P1 select, P4 equality filter, P7 alias, P8 literal."""
-    c = _t(spark, sf_dir, "customer")
-    return c.filter(
-        (F.col("c_mktsegment") == F.lit("BUILDING")) & (F.col("c_acctbal") > F.lit(0.0))
-    ).select("c_custkey", F.col("c_name").alias("customer_name"), "c_acctbal")
-
-
-# P3/U6 (withColumn + log) was a registered entry through r06; the
-# identical algebra — arithmetic/ln derived columns — is driver-evidenced
-# by the hash-green `u3_tfidf_relational` (log-ratio TF-IDF columns) and
-# `flagship_event_anomalies` (floor/divide bucket arithmetic), so the
-# slot under the driver's 50-entry cap now funds `token_entropy`
-# (round-7 rotation).
-def p_derived_column(spark, sf_dir):
-    """P3 withColumn + U6 log (IEEE-exact arithmetic unrounded; ln rounded)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.withColumn(
-            "net_price", F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-        )
-        .withColumn("log_qty", F.round(F.log(F.col("l_quantity") + F.lit(1.0)), 4))
-        .select("l_orderkey", "l_linenumber", "net_price", "log_qty")
-    )
-
-
 # P5 (left_outer + IS NULL) was a registered entry through r06; it is the
 # literal FORM of the same anti-join the hash-green `j3_anti_join` and
 # `flagship_event_anomalies` evidence (the two forms' row-for-row
@@ -189,17 +158,6 @@ def p_isnull_left_outer(spark, sf_dir):
         .filter(F.expr("o_custkey IS NULL"))
         .select("c_custkey", "c_name")
     )
-
-
-# P2/P6 (drop + inequality filter) was a registered entry through r05; the
-# same algebra is driver-evidenced elsewhere (every entry projects; the
-# hash-green `dedup_minhash` pipeline filters `id <> component`, and
-# `p_isnull_left_outer`/`j3` filter on `>`), so the slot under the driver's
-# 50-entry cap now funds `dedup_incremental` (round-6 rotation).
-def p_drop_neq_filter(spark, sf_dir):
-    """P2 drop + P6 inequality filter."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.filter(F.col("event_type") != "view").drop("ts", "value", "props")
 
 
 # ---------------------------------------------------------------------------
@@ -299,30 +257,6 @@ def salted_join_entry(spark, sf_dir):
     )
 
 
-# J5 (scalar broadcast -> folded literal) was a registered entry through
-# r05; the identical algebra — a driver-side global count folded into the
-# plan as F.lit — is driver-evidenced by the hash-green
-# `u3_tfidf_relational`/`geoscan_personalized_tiles` entries (their IDF
-# N = document_frequency.count() constant-folds the same way,
-# operators/tiles.py), so the slot under the driver's 50-entry cap now
-# funds `salted_join` (round-6 rotation).
-def j5_scalar_in_expr(spark, sf_dir):
-    """J5 — scalar 'broadcast' as a folded literal (replaces `01:408-409`
-    RDD broadcast with `F.lit(count)` constant folding)."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    total = c.count()
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.count(F.lit(1)).alias("customer_cnt"))
-        .withColumn(
-            "customer_share",
-            F.round(F.col("customer_cnt") / F.lit(float(total)), 6),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # §2.4 aggregations
 # ---------------------------------------------------------------------------
@@ -365,15 +299,6 @@ def a2_collect_sorted(spark, sf_dir):
 # 50-entry cap now funds `vocab_token_frequencies` (VERDICT r04 #4).
 
 
-# A4 (distinct) was a registered entry through r05; distinct algebra is
-# driver-evidenced by `distinct_users_exact` (COUNT(DISTINCT ...)) and by
-# the hash-green LSH pipelines (`dedup_minhash`'s candidate `.distinct()`
-# is replayed verbatim in its oracle), so the slot under the driver's
-# 50-entry cap now funds `weighted_sample` (round-6 rotation).
-def a4_distinct(spark, sf_dir):
-    return _t(spark, sf_dir, "events").select("user_id", "event_type").distinct()
-
-
 # A5 (groupBy+max/min) was a registered entry through r06; the identical
 # extremal-aggregate algebra is driver-evidenced by `w1_topk_desc` (max
 # by rank), `a8_percentiles` (grouped order statistics) and the
@@ -389,16 +314,6 @@ def a5_groupby_max(spark, sf_dir):
             F.min("o_orderdate").alias("first_order"),
         )
     )
-
-
-# A6 (global count) was a registered entry through r05; the same global
-# aggregate algebra is driver-evidenced by `u3_tfidf_relational` (its IDF
-# N is a global count folded via F.lit) and every groupBy+count entry,
-# so the slot under the driver's 50-entry cap now funds `asof_join`
-# (VERDICT r05 #2).
-def a6_global_count(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy().agg(F.count(F.lit(1)).alias("n"))
 
 
 # a8_percentiles was a registered entry through r07; grouped exact
@@ -499,20 +414,6 @@ def sessionize_entry(spark, sf_dir):
     return sessionize(ev, gap_seconds=1800).select("event_id", "user_id", "session_id")
 
 
-# W4 (systematic sample) was a registered entry through r05; its algebra
-# (modulo filter + projection) is driver-evidenced by the p_* filter
-# entries and by the derived-table predicates inside `interval_join` /
-# `generation_latest_snapshot`, so the slot under the driver's 50-entry
-# cap now funds `interval_join` (VERDICT r05 #2). Seeded-Bernoulli
-# df.sample stays pytest-pinned (tests/test_ext.py).
-def w4_systematic_sample(spark, sf_dir):
-    """W4 — deterministic systematic sample (seeded Bernoulli `df.sample`
-    is exposed by the engine but is not cross-engine reproducible, so the
-    oracle pins the modulo form)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.filter(F.col("event_id") % 10 == 0).select("event_id", "user_id", "value")
-
-
 @register(
     "ttl_window_filter",
     sql="""
@@ -532,22 +433,6 @@ def ttl_window_filter(spark, sf_dir):
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("recent_events"))
     )
-
-
-# §2.6 unionByName was a registered entry through r05; the same
-# column-matching union algebra is driver-evidenced by
-# `generation_latest_snapshot` (unionByName of two generation snapshots)
-# and inside the dedup entries' id-restriction unions, so the slot under
-# the driver's 50-entry cap now funds `chunk_documents` (VERDICT r05 #2).
-def setop_unionbyname(spark, sf_dir):
-    """§2.6 — unionByName (multi-generation table append pattern)."""
-    c = _t(spark, sf_dir, "customer").select(
-        F.col("c_name").alias("name"), F.lit("customer").alias("kind")
-    )
-    s = _t(spark, sf_dir, "supplier").select(
-        F.lit("supplier").alias("kind"), F.col("s_name").alias("name")
-    )
-    return c.unionByName(s)
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,7 @@
 """Harness entries for SURVEY §7.5 extensions: ranking/analytic window
 functions on per-user event sequences, rollup, distinct-count variants,
-tumbling event-time windows, generation snapshots, and the seeded spatial
-sampler (U2 parity).
+tumbling event-time windows, generation snapshots, the per-cell sample
+pipeline (U2 parity), and as-of / interval joins.
 """
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from geoscan_fraud_spark.harness import _events_coords, _t, register
-from geoscan_fraud_spark.operators.sampling import spatial_downsample
 
 
 # win_rank_per_user was a registered entry through r07's third rotation;
@@ -156,9 +155,6 @@ def generation_latest_snapshot(spark, sf_dir):
     )
 
 
-_RES7_STEP = 1220.629759 / 111320.0
-
-
 # U2 (the reference's per-cell sample pipeline shape: collect struct
 # arrays, slice, explode, dotted access) was a registered entry through
 # r06; the struct-array explode + dotted-field algebra is
@@ -263,25 +259,4 @@ def interval_join_entry(spark, sf_dir):
     )
     return interval_join(
         p, s, point_col="value", start_col="lo", end_col="hi", bucket_width=37.5
-    )
-
-
-def u2_spatial_downsample(spark, sf_dir):
-    """U2 parity — the reference's skew sampler (`01:170-198`) as a seeded
-    window-rank; deterministic cell counts. NOT registered (50-row driver
-    cap): U2 keeps full-SQL evidence via `u2_sample_explode`, the sampler
-    itself is exercised inside `geoscan_distributed_fit` and pinned by
-    tests/test_ext.py."""
-    from geoscan_fraud_spark.functions.grid import cell_id
-
-    pts = _events_coords(spark, sf_dir)
-    sampled = spatial_downsample(pts, res=11, max_per_cell=3)
-    # deterministic per-cell histogram; the <=cap invariant is asserted in
-    # tests (tests/test_ext.py), here the driver records the stable counts
-    return (
-        sampled.withColumn(
-            "h3", cell_id(F.col("latitude"), F.col("longitude"), 11)
-        )
-        .groupBy("h3")
-        .agg(F.count(F.lit(1)).alias("kept"))
     )

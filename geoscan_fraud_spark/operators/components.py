@@ -13,13 +13,13 @@ convergence even on chain-shaped components (plain propagation alone is
 O(diameter)). Each round is checkpointed to cut lineage — without this
 the plan grows exponentially and the driver OOMs long before 100 TB.
 
-Checkpoint durability (VERDICT r05 #3): `localCheckpoint` blocks live on
-executors and die with them — fine locally and for short fits, but an
-executor loss mid-iteration aborts a long 100 TB job. When the session
-has a reliable checkpoint directory configured
-(`sc.setCheckpointDir(...)` — HDFS/object store on a cluster), the
-rounds use reliable `checkpoint()` instead, which survives executor
-failure at the cost of a write to the checkpoint store per round.
+Checkpoint durability: `localCheckpoint` blocks live on executors and
+die with them — fine locally and for short fits, but an executor loss
+mid-iteration aborts a long 100 TB job. When the session has a reliable
+checkpoint directory configured (`sc.setCheckpointDir(...)` —
+HDFS/object store on a cluster), the rounds use reliable `checkpoint()`
+instead, which survives executor failure at the cost of a write to the
+checkpoint store per round.
 """
 
 from __future__ import annotations
@@ -29,22 +29,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _cutter(df: DataFrame, checkpoint: str):
-    """Lineage cut per ``checkpoint`` mode: 'local' (executor-memory
-    blocks), 'reliable' (requires sc.setCheckpointDir), or 'auto'
-    (reliable iff a checkpoint dir is configured)."""
-    if checkpoint not in ("auto", "local", "reliable"):
-        raise ValueError(
-            f"checkpoint must be 'auto', 'local' or 'reliable', got {checkpoint!r}"
-        )
-    sc = df.sparkSession.sparkContext
-    has_dir = sc.getCheckpointDir() is not None
-    if checkpoint == "reliable" and not has_dir:
-        raise ValueError(
-            "checkpoint='reliable' requires spark.sparkContext.setCheckpointDir(...)"
-        )
-    use_reliable = checkpoint == "reliable" or (checkpoint == "auto" and has_dir)
-    if use_reliable:
+def _cutter(df: DataFrame):
+    """Lineage cut: reliable `checkpoint()` when the session has a
+    checkpoint directory, executor-memory `localCheckpoint` otherwise."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return lambda d: d.checkpoint(eager=True)
     return lambda d: d.localCheckpoint(eager=True)
 
@@ -90,7 +78,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint: str = "auto",
     small_graph_threshold: int = 1_000_000,
 ) -> DataFrame:
     """(src, dst) long-id edges -> (id, component) where component is the
@@ -112,7 +99,7 @@ def connected_components(
     runs over contiguous numpy index arrays. The iterative min-label +
     pointer-jumping path remains for genuinely large edge lists (pass
     ``small_graph_threshold=0`` to force it)."""
-    cut = _cutter(edges, checkpoint)
+    cut = _cutter(edges)
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # no distinct: duplicate edges are absorbed by the min-aggregates each
     # round, and a full-dedup shuffle of a 10^8-edge list costs more than

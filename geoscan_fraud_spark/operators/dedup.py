@@ -18,6 +18,7 @@ cross product.
 from __future__ import annotations
 
 import hashlib
+import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -53,21 +54,6 @@ def word_shingles(text_col, n: int = 3):
     """Distinct word n-grams as array<string> — `word_grams` deduplicated
     (the shingle-set form the MinHash/Jaccard family consumes)."""
     return F.array_distinct(word_grams(text_col, n))
-
-
-def minhash_signature(shingles_col, num_hashes: int = 64):
-    """array<bigint> MinHash signature: per seed, min over shingle hashes.
-
-    Row-level expression form (handy for single-doc scoring). The bulk
-    path is `minhash_signature_table` — nested higher-order functions are
-    NOT whole-stage-codegen'd by Spark and run interpreted, ~100x slower
-    at scale (measured: 260 s vs 4 s on 10k docs)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(shingles_col, lambda s: F.xxhash64(s, i))
-        ),
-    )
 
 
 #: Modulus of the portable integer MinHash family: 2^61 - 1 (Mersenne).
@@ -850,8 +836,19 @@ def _dlit(v: float) -> str:
     """Exact SQL double literal: repr() is the shortest round-trip form
     and Spark's `...D` literal goes through Double.parseDouble, so the
     IEEE value is bit-identical to `F.lit(float)` (incl. subnormals and
-    exponent forms — pinned in tests/test_round13_fixes.py)."""
-    return repr(float(v)) + "D"
+    exponent forms — pinned in tests/test_round13_fixes.py). NaN and
+    the infinities have no `...D` spelling and are cast from strings."""
+    v = float(v)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+    return repr(v) + "D"
+
+
+def _ident(name: str) -> str:
+    """Backtick-quoted SQL identifier; embedded backticks are doubled."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def hyperplane_bucket(emb, dim: int, planes: int = 16, seed: int = 42):
@@ -876,7 +873,7 @@ def hyperplane_bucket(emb, dim: int, planes: int = 16, seed: int = 42):
             arr = "array(" + ",".join(_dlit(v) for v in plane) + ")"
             dot = (
                 f"aggregate(zip_with("
-                f"transform(`{emb}`, x -> CAST(x AS DOUBLE)), "
+                f"transform({_ident(emb)}, x -> CAST(x AS DOUBLE)), "
                 f"transform({arr}, x -> CAST(x AS DOUBLE)), "
                 f"(x, y) -> x * y), 0.0D, (s, x) -> s + x)"
             )

@@ -335,33 +335,28 @@ def _tiles_map_factory(precision: int, layers: int, key_cols: list[str]):
     return tiles_map
 
 
-class GeoscanModel(_Params):
-    """Fitted distributed model: a polygons DataFrame + params (M3-M5).
+class _TileModel(_Params):
+    """The serving half both fitted models share: polygon rows keyed by
+    ``_group_cols()`` + cluster, plus params. The distributed model has no
+    group columns; the personalized one is keyed by ``groupedCol``.
+    `getTiles`, `transform`, `save` and `load` are one implementation over
+    that key; `toGeoJson` differs per model (a string vs a DataFrame)."""
 
-    `polygons`: (cluster, geometry GeoJSON-string, n_points) — plain
-    parquet on save, readable library-free.
-    """
-
-    def __init__(self, polygons: DataFrame, params: dict | None = None):
+    def __init__(self, shapes: DataFrame, params: dict | None = None):
         super().__init__()
         if params:
             self._load_params(params)
-        self.polygons = polygons
+        self._shapes = shapes
         self._tiles_cache: dict[tuple[int, int], DataFrame] = {}
 
-    def toGeoJson(self) -> str:
-        """RFC 7946 FeatureCollection; cluster id = feature.id (`01:143`,
-        choropleth keying `01:466-467`)."""
-        rows = self.polygons.orderBy("cluster").collect()
-        feats = [
-            feature(r["cluster"], r["geometry"], {"n_points": r["n_points"]})
-            for r in rows
-        ]
-        return feature_collection(feats)
+    def _group_cols(self) -> list[str]:
+        return []
 
     def getTiles(self, precision: int | None = None, layers: int | None = None) -> DataFrame:
-        """(cluster, h3) covering tiles — `getTiles(precision, layers)`
-        parity (`01:364-365`). Map-only: no shuffle.
+        """(group cols..., cluster, h3) covering tiles — `getTiles(precision,
+        layers)` parity (`01:364-365`), the engine's central serving table.
+        Map-only: no shuffle; ``layers`` rings of spill-over relaxation per
+        `01:360-364`.
 
         Caching: the 2 most recently requested (precision, layers) keys
         stay persisted (2, not 1, so alternating between two precisions —
@@ -380,9 +375,12 @@ class GeoscanModel(_Params):
             while len(self._tiles_cache) >= 2:
                 oldest = next(iter(self._tiles_cache))
                 self._tiles_cache.pop(oldest).unpersist()
-            tiles = self.polygons.mapInPandas(
-                _tiles_map_factory(precision, layers, ["cluster"]),
-                "cluster long, h3 string",
+            keys = self._group_cols() + ["cluster"]
+            schema = ", ".join(
+                f"{c} {self._shapes.schema[c].dataType.simpleString()}" for c in keys
+            )
+            tiles = self._shapes.mapInPandas(
+                _tiles_map_factory(precision, layers, keys), f"{schema}, h3 string"
             )
             self._tiles_cache[key] = tiles.persist()
         return self._tiles_cache[key]
@@ -394,9 +392,10 @@ class GeoscanModel(_Params):
         self._tiles_cache.clear()
 
     def transform(self, df: DataFrame) -> DataFrame:
-        """Assign nullable cluster ids by tile containment, not
-        point-in-polygon — exactly the reference's inference trick
-        (`01:208-210`, `02:36`).
+        """Assign nullable cluster ids by (group cols..., h3) tile
+        containment, not point-in-polygon — exactly the reference's
+        inference trick (`01:208-210`, `01:344`, `02:36`); unmatched rows
+        keep a NULL cluster (`01:227`).
 
         The tile side is model-proportional (clusters x polyfill cells),
         which is usually broadcast-sized — but a continental model at
@@ -405,9 +404,10 @@ class GeoscanModel(_Params):
         tile relation fits (`spark.sql.autoBroadcastJoinThreshold`), which
         keeps the zero-input-shuffle plan at test scale without pinning it
         at any scale."""
+        group = self._group_cols()
         tiles = (
             self.getTiles(self.tilePrecision, self.tileLayers)
-            .groupBy("h3")
+            .groupBy(*group, "h3")
             .agg(F.min("cluster").alias(self.predictionCol))
         )
         pts = df.withColumn(
@@ -421,26 +421,49 @@ class GeoscanModel(_Params):
         return (
             pts.join(
                 tiles.withColumnRenamed("h3", "__h3"),
-                "__h3",
+                [*group, "__h3"],
                 "left_outer",
             )
             .drop("__h3")
         )
 
     def save(self, path: str) -> None:
-        self.polygons.write.mode("overwrite").parquet(os.path.join(path, "data"))
+        """parquet under path/data — library-free readable, the exact
+        property `02_geofraud_fraud.py:29` depends on."""
+        self._shapes.write.mode("overwrite").parquet(os.path.join(path, "data"))
         meta_dir = os.path.join(path, "metadata")
         os.makedirs(meta_dir, exist_ok=True)
         from geoscan_fraud_spark.sources.io import atomic_write_json
 
         atomic_write_json(
             os.path.join(meta_dir, "params.json"),
-            {"class": "GeoscanModel", **self.params_dict()},
+            {"class": type(self).__name__, **self.params_dict()},
         )
 
     @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "GeoscanModel":
+    def load(cls, spark: SparkSession, path: str):
         with open(os.path.join(path, "metadata", "params.json")) as f:
             params = json.load(f)
-        polygons = spark.read.parquet(os.path.join(path, "data"))
-        return cls(polygons, params)
+        return cls(spark.read.parquet(os.path.join(path, "data")), params)
+
+
+class GeoscanModel(_TileModel):
+    """Fitted distributed model: a polygons DataFrame + params (M3-M5).
+
+    `polygons`: (cluster, geometry GeoJSON-string, n_points) — plain
+    parquet on save, readable library-free.
+    """
+
+    @property
+    def polygons(self) -> DataFrame:
+        return self._shapes
+
+    def toGeoJson(self) -> str:
+        """RFC 7946 FeatureCollection; cluster id = feature.id (`01:143`,
+        choropleth keying `01:466-467`)."""
+        rows = self.polygons.orderBy("cluster").collect()
+        feats = [
+            feature(r["cluster"], r["geometry"], {"n_points": r["n_points"]})
+            for r in rows
+        ]
+        return feature_collection(feats)

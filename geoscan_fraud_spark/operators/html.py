@@ -89,15 +89,3 @@ def extract_html_text(
     shuffle, zero Python — plan-asserted in tests); drop or keep the raw
     markup yourself, provenance policies differ."""
     return df.withColumn(out_col, strip_html(F.col(html_col)))
-
-
-def extract_links(html_col: Column) -> Column:
-    """array<string> of href values — feeds the `operators/web.py`
-    provenance family (outlink blocklists, domain-graph construction).
-    One `regexp_extract_all` pass per quote style, concatenated
-    (double-quoted hrefs first, then single-quoted — per-style document
-    order, not global). Unquoted hrefs are skipped (rare in real markup,
-    ambiguous to delimit)."""
-    col_dq = F.regexp_extract_all(html_col, F.lit(r'(?is)<a\b[^>]*?href\s*=\s*"([^"]*)"'), 1)
-    col_sq = F.regexp_extract_all(html_col, F.lit(r"(?is)<a\b[^>]*?href\s*=\s*'([^']*)'"), 1)
-    return F.concat(col_dq, col_sq)

@@ -82,101 +82,6 @@ def extract_features(
     return df.mapInPandas(run, f"{id_col} {id_type}, features array<double>")
 
 
-def frame_sample(
-    df: DataFrame,
-    binary_col: str = "payload",
-    id_col: str = "blob_id",
-    every_n: int = 10,
-    mode: str = "fake",
-) -> DataFrame:
-    """Video frame sampling plumbing: one row per sampled frame index.
-
-    Fake kernel derives a frame count from payload length (1 frame / 1 KiB)
-    and emits (id, frame_idx, frame_features)."""
-    if mode == "real":
-        raise NotImplementedError(
-            "real frame decode requires a video codec library (e.g. PyAV), "
-            "not installed in this environment"
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, feats = [], [], []
-            for bid, payload in zip(pdf[id_col], pdf[binary_col]):
-                payload = bytes(payload)
-                n_frames = max(1, len(payload) // 1024)
-                for fi in range(0, n_frames, every_n):
-                    ids.append(bid)
-                    idxs.append(fi)
-                    feats.append(_fake_features(payload + fi.to_bytes(4, "little")))
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame_features": feats})
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.mapInPandas(
-        run, f"{id_col} {id_type}, frame_idx int, frame_features array<double>"
-    )
-
-
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    binary_col: str = "payload",
-    id_col: str = "blob_id",
-    mode: str = "fake",
-) -> DataFrame:
-    """Image-resize plumbing: (id, payload, out_width, out_height) via
-    mapInPandas — one Arrow batch in, one out, no shuffle, the exact
-    shape a Pillow/torchvision kernel drops into.
-
-    The fake kernel is deterministic AND size-faithful: it re-derives a
-    payload of exactly ``width * height`` bytes by cycling an md5 stream
-    seeded with the original payload's digest + the target dims, so
-    downstream stages (feature extraction, storage sizing) observe the
-    byte-volume change a real resize produces. ``mode='real'`` raises,
-    naming the missing codec dependency."""
-    if width <= 0 or height <= 0:
-        raise ValueError(f"target dims must be positive, got {width}x{height}")
-    if mode == "real":
-        raise NotImplementedError(
-            "real image resize requires a codec library (e.g. Pillow), "
-            "not installed in this environment; use mode='fake' for "
-            "plumbing tests"
-        )
-    if mode != "fake":
-        raise ValueError(f"unknown mode {mode!r}")
-    n_out = width * height
-
-    def _resized(payload: bytes) -> bytes:
-        out = bytearray()
-        seed = hashlib.md5(
-            payload + width.to_bytes(4, "little") + height.to_bytes(4, "little")
-        ).digest()
-        block = seed
-        while len(out) < n_out:
-            block = hashlib.md5(block).digest()
-            out.extend(block)
-        return bytes(out[:n_out])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    binary_col: [_resized(bytes(p)) for p in pdf[binary_col]],
-                    "out_width": width,
-                    "out_height": height,
-                }
-            )
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.mapInPandas(
-        run,
-        f"{id_col} {id_type}, {binary_col} binary, "
-        "out_width int, out_height int",
-    )
-
-
 def documents_as_blobs(documents: DataFrame) -> DataFrame:
     """Fixture adapter: text bytes as the binary payload (tests/harness)."""
     return documents.select(

@@ -331,28 +331,3 @@ def temperature_weights(
     if z == 0:
         raise ValueError("all sources are empty")
     return {s: v / z for s, v in powered.items()}
-
-
-def temperature_mixture(
-    df: DataFrame,
-    temperature: float,
-    total_n: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """`sample_mixture` with weights derived from the data itself at a
-    sampling temperature: one small count aggregate fixes the per-source
-    sizes (eager — the tf-idf scalar pattern), `temperature_weights`
-    rescales them, and the exact largest-remainder quota sampler runs as
-    usual (single window shuffle)."""
-    sizes = {
-        r[source_col]: r["n"]
-        for r in df.groupBy(source_col).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    return sample_mixture(
-        df,
-        temperature_weights(sizes, temperature),
-        total_n,
-        source_col,
-        id_col,
-    )

@@ -19,23 +19,18 @@ barrier (`01:292`).
 
 from __future__ import annotations
 
-import json
-import os
-
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from geoscan_fraud_spark.functions.dbscan_local import local_dbscan
-from geoscan_fraud_spark.functions.grid import cell_id
 from geoscan_fraud_spark.functions.hull import (
     convex_hull,
     feature,
     feature_collection,
     polygon_geometry,
 )
-from geoscan_fraud_spark.operators.geoscan import _Params, _tiles_map_factory
+from geoscan_fraud_spark.operators.geoscan import _Params, _TileModel
 from geoscan_fraud_spark.operators.sampling import spatial_downsample
 
 #: Grid resolution for the per-group skew cap — the reference's own
@@ -135,18 +130,17 @@ class GeoscanPersonalized(_Params):
         return GeoscanPersonalizedModel(models, self.params_dict())
 
 
-class GeoscanPersonalizedModel(_Params):
+class GeoscanPersonalizedModel(_TileModel):
     """A DataFrame of models: one polygon row per (group, cluster) (M7-M10)."""
 
-    def __init__(self, models: DataFrame, params: dict | None = None):
-        super().__init__()
-        self.groupedCol = "user"
-        if params:
-            self._load_params(params)
-            if "groupedCol" in params:
-                self.groupedCol = params["groupedCol"]
-        self.models = models
-        self._tiles_cache: dict[tuple[int, int], DataFrame] = {}
+    groupedCol = "user"
+
+    @property
+    def models(self) -> DataFrame:
+        return self._shapes
+
+    def _group_cols(self) -> list[str]:
+        return [self.groupedCol]
 
     def params_dict(self) -> dict:
         return {**super().params_dict(), "groupedCol": self.groupedCol}
@@ -174,66 +168,3 @@ class GeoscanPersonalizedModel(_Params):
             ]
         )
         return self.models.groupBy(grp).applyInPandas(to_fc, schema)
-
-    def getTiles(self, precision: int | None = None, layers: int | None = None) -> DataFrame:
-        """(group, cluster, h3) lookup relation (`01:364-365`) — the
-        engine's central serving table. Map-only (no shuffle); `layers`
-        rings of spill-over relaxation per `01:360-364`."""
-        precision = self.tilePrecision if precision is None else precision
-        layers = self.tileLayers if layers is None else layers
-        key = (precision, layers)
-        if key not in self._tiles_cache:
-            grp = self.groupedCol
-            grp_type = self.models.schema[grp].dataType.simpleString()
-            tiles = self.models.mapInPandas(
-                _tiles_map_factory(precision, layers, [grp, "cluster"]),
-                f"{grp} {grp_type}, cluster long, h3 string",
-            )
-            self._tiles_cache[key] = tiles.persist()
-        return self._tiles_cache[key]
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        """Per-group cluster assignment via (group, h3) tile join
-        (`01:344`); unmatched rows keep a NULL cluster (`01:227`)."""
-        grp = self.groupedCol
-        tiles = (
-            self.getTiles(self.tilePrecision, self.tileLayers)
-            .groupBy(grp, "h3")
-            .agg(F.min("cluster").alias(self.predictionCol))
-        )
-        pts = df.withColumn(
-            "__h3",
-            cell_id(
-                F.col(self.latitudeCol).cast("double"),
-                F.col(self.longitudeCol).cast("double"),
-                self.tilePrecision,
-            ),
-        )
-        return (
-            pts.join(
-                tiles.withColumnRenamed("h3", "__h3"),
-                [grp, "__h3"],
-                "left_outer",
-            )
-            .drop("__h3")
-        )
-
-    def save(self, path: str) -> None:
-        """parquet under path/data — library-free readable, the exact
-        property `02_geofraud_fraud.py:29` depends on."""
-        self.models.write.mode("overwrite").parquet(os.path.join(path, "data"))
-        meta_dir = os.path.join(path, "metadata")
-        os.makedirs(meta_dir, exist_ok=True)
-        from geoscan_fraud_spark.sources.io import atomic_write_json
-
-        atomic_write_json(
-            os.path.join(meta_dir, "params.json"),
-            {"class": "GeoscanPersonalizedModel", **self.params_dict()},
-        )
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "GeoscanPersonalizedModel":
-        with open(os.path.join(path, "metadata", "params.json")) as f:
-            params = json.load(f)
-        models = spark.read.parquet(os.path.join(path, "data"))
-        return cls(models, params)

@@ -41,15 +41,11 @@ codebook math is numpy matmuls, never per-row loops.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geoscan_fraud_spark.operators.dedup import dot_expr, norm_expr
-from geoscan_fraud_spark.operators.similarity import (
-    _ivf_assign_probe,
-    lloyd_centroids,
-)
+from geoscan_fraud_spark.operators.similarity import lloyd_centroids
 
 #: codes are stored as array<tinyint> with this offset (code 0 -> -128),
 #: the narrowest Spark/parquet integer type; k is capped at 256 to fit
@@ -338,80 +334,3 @@ def _adc_local_topk(
     if has_base:
         score_cols.append("adot_base")
     return cand.select(*score_cols).mapInPandas(run, schema)
-
-
-def ivf_pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    pq_k: int = 256,
-    rerank: int = 4,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    centroids: list[list[float]] | None = None,
-    codebooks=None,
-    train_rows: int = 4096,
-) -> DataFrame:
-    """IVF-PQ ANN with exact re-rank — Faiss's IVFPQ shape on DataFrame
-    ops: coarse-quantize the corpus into ``n_centroids`` inverted lists
-    (`_ivf_assign_probe`, shared with `ivf_topk`), PQ-encode every row
-    to ``m`` bytes + a stored norm, ADC-score only the ``nprobe`` probed
-    lists, then re-rank the top ``rerank * k`` per query against the
-    full-precision vectors. Output contract matches `ivf_topk`:
-    (query_id, vec_id, sim, rank) with ``sim`` the EXACT rounded cosine.
-
-    At 100 TB the shortlist scan reads ``m + 8`` bytes per candidate
-    instead of ``4 * dim`` — with dim=64, m=8 that is ~16x less IO than
-    a float32 scan and 2x less than int8 (`ivf_topk_quantized`), and
-    the ADC inner loop is table lookups, not dot products. The recall
-    cost is measured, not guessed: `tests/test_pq.py` pins recall vs
-    `brute_force_topk` and exact equality when every list is probed.
-    ``codebooks=None`` trains on the ``train_rows`` lowest-hash corpus
-    rows (deterministic and id-bias-free; see `pq_train_sample`). Residual encoding is a
-    property of the PERSISTED index (`ivf_index_write(pq_residual=...)`),
-    where the frozen coarse centroids live; this in-memory form encodes
-    raw vectors."""
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(emb_col).alias("c_emb"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("q_emb"))
-    if codebooks is None:
-        codebooks = pq_train_sample(
-            c, m=m, k=pq_k, vec_col="c_emb", id_col="vec_id", train_rows=train_rows
-        )
-    assigned, probes = _ivf_assign_probe(c, q, n_centroids, nprobe, seed, centroids)
-    enc = pq_encode(
-        assigned, codebooks, vec_col="c_emb", id_col="vec_id", keep_cols=["list_id"]
-    )
-    probes = probes.withColumn("__qn", norm_expr(F.col("q_emb")))
-    cand = probes.join(enc, "list_id").filter(F.col("query_id") != F.col("vec_id"))
-    local = _adc_local_topk(
-        cand, codebooks, rerank * k, corpus.schema[id_col].dataType
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("sim_q"), F.asc("vec_id"))
-    shortlist = (
-        local.withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= rerank * k)
-        .select("query_id", "vec_id")
-    )
-    q_side = q.withColumn("__qn", norm_expr(F.col("q_emb")))
-    rescored = (
-        shortlist.join(q_side, "query_id")
-        .join(c.withColumn("__cn", norm_expr(F.col("c_emb"))), "vec_id")
-        .withColumn(
-            "sim",
-            F.round(
-                dot_expr(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("__qn") * F.col("__cn")),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
-    )

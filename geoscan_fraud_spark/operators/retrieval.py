@@ -1000,40 +1000,6 @@ def text_index_maintain(
     return report
 
 
-def text_index_stats(spark, path: str, top_terms: int = 0) -> DataFrame:
-    """Ops-side occupancy of a persisted BM25 index: per bucket,
-    (bucket, n_postings, n_terms) — the lexical twin of
-    `ivf_index_stats`. Posting-list skew is the inverted-index failure
-    mode (stopwords make some buckets scan-heavy for every query that
-    hashes into them); ``top_terms > 0`` adds the per-bucket heaviest
-    terms as a (term, df) struct array for naming the culprits. One
-    column-pruned scan over the postings partitions."""
-    meta = read_index_meta(os.path.join(path, "stats.json"))
-    p = spark.read.parquet(gen_dir(path, "postings", meta)).select(
-        "bucket", "term"
-    )
-    base = p.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_postings"),
-        F.countDistinct("term").alias("n_terms"),
-    )
-    if not top_terms:
-        return base
-    w = Window.partitionBy("bucket").orderBy(F.desc("df"), F.asc("term"))
-    heavy = (
-        p.groupBy("bucket", "term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= top_terms)
-        .groupBy("bucket")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("df"), F.col("term"))), asc=False
-            ).alias("heavy_terms")
-        )
-    )
-    return base.join(heavy, "bucket", "left")
-
-
 def text_index_fsck(spark, path: str) -> dict:
     """Ops doctor for a persisted BM25 index — the read-only health
     check that closes the lifecycle loop (build → append → delete →

@@ -174,45 +174,3 @@ def weighted_sample_log(
         .limit(k)
         .drop("__logkey", "__mx")
     )
-
-
-def weighted_sample_per_group(
-    df: DataFrame,
-    weight_col: str,
-    k: int,
-    group_cols: list[str],
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """`weighted_sample` per group: k rows from EACH group of
-    ``group_cols``, inclusion probability proportional to ``weight_col``
-    within the group (same A-ES keys — the key is group-independent, so
-    a row keeps its priority whichever stratification is applied).
-
-    One shuffle keyed by the group columns (window rank); groups are
-    ranked independently, so skewed group sizes cost only their own
-    partition's sort. The global-top-k form (`weighted_sample`) stays
-    the no-shuffle path when no stratification is needed."""
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("-", F.col(id_col).cast("string"), F.lit(str(seed)))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        + F.lit(1)
-    ) / F.lit(_U_SCALE)
-    key = F.pow(u, F.lit(1.0) / F.col(weight_col).cast("double"))
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.col("__key").desc(), F.col(id_col)
-    )
-    return (
-        df.filter(F.col(weight_col).cast("double") > 0)
-        .withColumn("__key", key)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__key", "__rn")
-    )

@@ -48,20 +48,16 @@ def extract_anomalies(
     lat_col: str = "latitude",
     lng_col: str = "longitude",
     user_col: str = "user",
-    broadcast_tiles: bool | None = None,
 ) -> DataFrame:
     """Transactions landing outside the user's known tiles (`02:62-68`).
 
     Idiomatic form: anti join on (user, h3); map-only when tiles broadcast.
     The tile table is users × tiles-per-user and grows with the user base,
-    so the default leaves the join strategy to AQE (broadcast while small,
-    shuffle-hash at scale); pass ``broadcast_tiles=True`` only when the
-    caller knows the tile table is bounded.
+    so the join strategy is left to AQE (broadcast while small,
+    shuffle-hash at scale).
     """
     pts = with_cell(transactions, lat_col, lng_col, res)
     keys = tiles.select(user_col, "h3").distinct()
-    if broadcast_tiles:
-        keys = F.broadcast(keys)
     return pts.join(keys, [user_col, "h3"], "left_anti").drop("h3")
 
 

@@ -128,49 +128,3 @@ def assign_token_shards(
         )
         .drop("__pid", "__run", "__off")
     )
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    shard_tokens: int,
-    tokens_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    seed: int = 42,
-    num_partitions: "int | None" = None,
-) -> DataFrame:
-    """Materialize the shard layout: `partitionBy("shard")` parquet with
-    rows sorted by the order key inside each shard, so a re-run writes
-    identical shard contents, same rows in the same in-file order
-    (directory-per-shard; loaders prune with `shard = S`). Returns the per-shard manifest
-    (shard, n_docs, n_tokens) — the data-loader's epoch plan."""
-    assigned = assign_token_shards(
-        df,
-        shard_tokens,
-        tokens_col=tokens_col,
-        id_col=id_col,
-        seed=seed,
-        num_partitions=num_partitions,
-    )
-    (
-        assigned.repartition("shard")
-        .sortWithinPartitions("shard", "__k")
-        .drop("__k")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-    # manifest from the WRITTEN files, not from `assigned`: re-evaluating
-    # the assignment plan would run the offsets join + corpus-wide
-    # running-sum window a second time, where the read-back is a pruned
-    # columnar scan of two columns — and it counts what actually landed
-    spark = df.sparkSession
-    return (
-        spark.read.parquet(path)
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col(tokens_col).cast("long")).alias("n_tokens"),
-        )
-        .orderBy("shard")
-    )

@@ -11,7 +11,7 @@ column expressions throughout, with one deliberate exception:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: small per-language marker-word profiles (n-gram heuristic degenerates to
@@ -332,22 +332,6 @@ def annotate_filter_reasons(df: DataFrame, rules) -> DataFrame:
     if reason is None:
         return df.withColumn("reject_reason", F.lit(None).cast("string"))
     return df.withColumn("reject_reason", reason.otherwise(F.lit(None)))
-
-
-def filter_report(annotated: DataFrame) -> DataFrame:
-    """(reject_reason, n_docs, pct) over an `annotate_filter_reasons`
-    result — NULL reason row = the kept set. Single partial-aggregated
-    groupBy; `pct` derives from a window over the tiny grouped result,
-    not a second pass over the data."""
-    counts = annotated.groupBy("reject_reason").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    total = Window.partitionBy()
-    return counts.select(
-        "reject_reason",
-        "n_docs",
-        F.round(F.col("n_docs") * 100.0 / F.sum("n_docs").over(total), 2).alias("pct"),
-    )
 
 
 def _repetition_stats_arrow(

@@ -130,43 +130,3 @@ def filter_blocked_domains(
     hits = cand.join(F.broadcast(bl), "domain", "left_semi").select(id_col)
     how = "left_semi" if invert else "left_anti"
     return df.join(hits.distinct(), id_col, how)
-
-
-def cap_domain_share(
-    df: DataFrame,
-    group_col: str,
-    max_share: float,
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Keep at most ``ceil(max_share * N)`` rows per ``group_col`` value
-    (N = input row count) — the "no single domain dominates the corpus"
-    rule (RefinedWeb-style provenance balancing; a crawl where one host
-    is 40% of pages trains a model that sounds like that host).
-
-    Which rows survive an over-cap group is a seeded-hash rank —
-    deterministic under any partitioning (the `spatial_downsample`
-    discipline). The share is taken against the INPUT count: exact,
-    one-pass, order-independent — capping against the post-cap total
-    would be circular (the fixed point is computable but data-dependent
-    and iteration-ordered; callers wanting it can re-run with the
-    output). N enters the plan as a broadcast one-row aggregate (the
-    lazy-scalar pattern — no job at build); the only shuffle is the
-    per-group window, keyed by the (high-cardinality) group column."""
-    if not 0 < max_share <= 1:
-        raise ValueError(f"max_share must be in (0, 1], got {max_share}")
-    from pyspark.sql import Window
-
-    total = df.agg(F.count(F.lit(1)).alias("__N"))
-    w = Window.partitionBy(group_col).orderBy(
-        F.xxhash64(F.col(id_col), F.lit(seed)), F.col(id_col)
-    )
-    return (
-        df.crossJoin(F.broadcast(total))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(
-            F.col("__rn")
-            <= F.ceil(F.lit(float(max_share)) * F.col("__N")).cast("long")
-        )
-        .drop("__rn", "__N")
-    )

@@ -159,86 +159,6 @@ def write_sorted_layout(
     out.sortWithinPartitions(*cols).write.mode("overwrite").parquet(path)
 
 
-def zorder_key(
-    df: DataFrame, cols: list[str], bits: int = 16
-) -> tuple[DataFrame, str]:
-    """Attach a Morton (Z-order) key column interleaving ``cols`` —
-    returns (df + key, key column name).
-
-    Each column is min/max-scaled to a ``bits``-bit integer (one small
-    driver-side aggregate — same eager-scalar pattern as the tf-idf N;
-    heavy skew in a column compresses its effective resolution, the
-    standard caveat of min/max Z-ordering) and the bit-planes are
-    interleaved with a shift/or chain — 2·bits native ops, codegen'd.
-    Rows where any key column is NULL get a NULL key (they sort last)."""
-    if not 1 <= bits * len(cols) <= 63:
-        raise ValueError(
-            f"bits*len(cols) must fit a signed long, got {bits}*{len(cols)}"
-        )
-    numeric = (T.NumericType, T.DateType, T.TimestampType, T.TimestampNTZType)
-    for c in cols:
-        if not isinstance(df.schema[c].dataType, numeric):
-            raise ValueError(
-                f"zorder_key needs numeric/temporal columns; {c!r} is "
-                f"{df.schema[c].dataType.simpleString()} — rank-encode strings "
-                f"first (e.g. xxhash64) or use write_sorted_layout"
-            )
-    stats = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"__mn_{i}") for i, c in enumerate(cols)],
-        *[F.max(F.col(c).cast("double")).alias(f"__mx_{i}") for i, c in enumerate(cols)],
-    ).first()
-    scaled = []
-    top = (1 << bits) - 1
-    for i, c in enumerate(cols):
-        mn, mx = stats[f"__mn_{i}"], stats[f"__mx_{i}"]
-        if mn is None or mx is None or mx <= mn:
-            scaled.append(F.lit(0).cast("long"))
-            continue
-        scaled.append(
-            F.least(
-                F.lit(top),
-                F.floor(
-                    (F.col(c).cast("double") - F.lit(float(mn)))
-                    / F.lit(float(mx - mn))
-                    * F.lit(float(top + 1))
-                ),
-            ).cast("long")
-        )
-    key = F.lit(0).cast("long")
-    n = len(cols)
-    for b in range(bits):
-        for i, s in enumerate(scaled):
-            bit = F.shiftright(s, b).bitwiseAND(F.lit(1))
-            key = key.bitwiseOR(F.shiftleft(bit, b * n + i))
-    name = "__zorder"
-    return df.withColumn(name, key), name
-
-
-def write_zorder_layout(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    num_files: int | None = None,
-) -> None:
-    """S7, the real thing: Delta's `OPTIMIZE ... ZORDER BY (user, h3)`
-    (`01:440`) as a Morton-curve file layout for OSS Spark/parquet.
-
-    `write_sorted_layout` (lexicographic) gives tight file min/max stats
-    on the LEADING key only — a lookup on the second column scans every
-    file. Interleaving the bit-planes puts rows close in EVERY dimension
-    into the same files, so parquet row-group stats prune point/range
-    lookups on each Z-ordered column (verified in tests: per-file spread
-    of the second column drops from ~global to a small fraction).
-    One range shuffle on the key, sort within partitions — the identical
-    cost shape to the linear sort."""
-    keyed, key = zorder_key(df, cols, bits)
-    out = keyed.repartitionByRange(
-        *(([num_files] if num_files else []) + [F.col(key)])
-    )
-    out.sortWithinPartitions(key).drop(key).write.mode("overwrite").parquet(path)
-
-
 def write_csv_artifact(df: DataFrame, path: str) -> str:
     """S8 — driver-side CSV artifact sink (`02_geofraud_fraud.py:200-206`).
 
@@ -261,34 +181,6 @@ def drop_database(spark: SparkSession, name: str, path: str | None = None) -> No
     spark.sql(f"DROP DATABASE IF EXISTS {name} CASCADE")
     if path:
         shutil.rmtree(path, ignore_errors=True)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    clear_orphan: bool = False,
-) -> None:
-    """S7 companion — hash-bucketed (+optionally sorted) managed table.
-
-    Bucketing pre-shuffles the data ONCE at write time: two tables
-    bucketed on the same keys into the same bucket count join with ZERO
-    exchange at read time (co-located sort-merge join), and per-key
-    aggregations skip the shuffle too. This is the Spark-native layout
-    lever for repeated joins at the 100 TB scale — write the big fact
-    tables bucketed by their join key and every downstream query saves
-    the dominant shuffle (plan property pinned in tests/test_plans.py).
-    ``clear_orphan`` as in `write_table` — opt-in orphan sweep.
-    """
-    if clear_orphan:
-        _clear_orphan_location(df.sparkSession, name)
-    w = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(name)
 
 
 def write_online_store(
@@ -323,56 +215,6 @@ def with_ttl_filter(df: DataFrame, ts_col: str, ttl_seconds: int = 604_800) -> D
     return df.filter(
         F.col(ts_col) >= F.current_timestamp() - F.expr(f"INTERVAL {ttl_seconds} SECOND")
     )
-
-
-def read_text_files(
-    spark: SparkSession,
-    path: str,
-    whole_files: bool = False,
-) -> DataFrame:
-    """Raw-text corpus source: (path, text) rows from plain text files.
-
-    ``whole_files=False`` (default): one row PER LINE via the native
-    `text` source plus `input_file_name()` — splittable, streams
-    arbitrarily large files, the right shape for line-oriented corpora.
-    ``whole_files=True``: one row per FILE (`wholetext` option) — the
-    document-per-file convention; each file must fit an executor's
-    memory, the documented cost of the whole-file contract. Both are
-    map-only scans; project the path away when unneeded so column
-    pruning drops the metadata. (NB: `wholetext` must go through the
-    `.text()` kwarg — the `.option()` string form is silently ignored
-    by the text source.)"""
-    return spark.read.text(path, wholetext=whole_files).select(
-        F.input_file_name().alias("path"), F.col("value").alias("text")
-    )
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: str | None = None,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """JSON-lines source — the other format crawl/ingest corpora arrive
-    in besides parquet/CSV.
-
-    Pass ``schema`` (DDL string) whenever known: schema-less json reads
-    run a FULL inference pass over the data before the real scan —
-    at 100 TB that is a second read of the corpus. With an explicit
-    schema the scan is single-pass and column-pruned (only ``columns``
-    are parsed out of each line when the reader can push the projection).
-    Corrupt lines land in ``_corrupt_record`` if the schema declares it,
-    per Spark's PERMISSIVE default."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.json(path)
-    return df.select(*columns) if columns else df
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink (one object per line, Spark's `json` format)."""
-    df.write.mode(mode).json(path)
 
 
 def compact_files(
@@ -954,23 +796,6 @@ def generation_findings(path: str, meta: dict, names: list[str]) -> tuple:
             f"index_vacuum removes them"
         )
     return findings, {"live": cur, "stale": stale}
-
-
-def read_orc(
-    spark: SparkSession,
-    path: str,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """ORC source — the other columnar format interchange corpora arrive
-    in. Same pruning story as parquet: pass ``columns`` so the scan's
-    ReadSchema carries only what downstream needs."""
-    df = spark.read.orc(path)
-    return df.select(*columns) if columns else df
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink (Spark-native writer; predicate-pushdown-capable)."""
-    df.write.mode(mode).orc(path)
 
 
 #: Reserved batch id for a compaction's PUBLISH directory: the folded

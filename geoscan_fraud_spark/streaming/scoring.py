@@ -528,56 +528,6 @@ def text_index_ingest_sink(
     return inner
 
 
-def countmin_sink(
-    sketch_path: str,
-    text_col: str = "text",
-    depth: int = 4,
-    width: int = 1024,
-    seed: int = 42,
-):
-    """`writeStream.foreachBatch(...)` sink appending one count-min
-    sketch (sparse (row, col, c) cells — `profiling.countmin_profile`)
-    per micro-batch. Rollup at any horizon is `merge_countmin` over the
-    persisted cells grouped however the reader likes (all batches, a
-    time window after `expire`-style pruning of batch dirs): cells are
-    additive, so the merged sketch equals a from-scratch build. Same
-    idempotent batch_id=N overwrite contract as `profile_sink`."""
-
-    def inner(batch_df: DataFrame, batch_id: int) -> None:
-        from geoscan_fraud_spark.operators.profiling import countmin_profile
-
-        countmin_profile(batch_df, text_col, depth, width, seed).write.mode(
-            "overwrite"
-        ).parquet(f"{sketch_path}/batch_id={batch_id}")
-
-    return inner
-
-
-def sample_sink(
-    sample_path: str,
-    weight_col: str,
-    k: int,
-    id_col: str = "doc_id",
-    seed: int = 42,
-):
-    """`writeStream.foreachBatch(...)` sink keeping a weighted k-sample
-    per micro-batch WITH its A-ES keys (`sampling.weighted_sample
-    keep_key=True`), so the persisted per-batch samples roll up into
-    the EXACT corpus-level sample via `merge_weighted_samples` — a
-    running "show me k representative documents" view over an unbounded
-    stream in k rows per batch of state. Ids must be unique across
-    batches (the ingest contract). Idempotent batch_id=N overwrites."""
-
-    def inner(batch_df: DataFrame, batch_id: int) -> None:
-        from geoscan_fraud_spark.operators.sampling import weighted_sample
-
-        weighted_sample(
-            batch_df, weight_col, k, id_col, seed, keep_key=True
-        ).write.mode("overwrite").parquet(f"{sample_path}/batch_id={batch_id}")
-
-    return inner
-
-
 def profile_sink(
     profile_path: str,
     group_cols: list[str] | None = None,
@@ -974,179 +924,5 @@ def prepared_serving_sink(
                     )
         finally:
             sc.setJobDescription(prev_desc)
-
-    return inner
-
-
-def span_ingest_sink(
-    index_path: str,
-    out_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_len: int = 50,
-    min_count: int = 1,
-):
-    """Incremental ExactSubstr at ingest: each micro-batch has its
-    repeated >= ``min_len`` token spans deleted against the persisted
-    gram-count store (`operators/spans.remove_spans_against_index` —
-    keep='first' semantics, exact one-shot equivalence at
-    ``min_count=1``), rewritten docs land in ``out_path`` and the RAW
-    batch's gram counts (pre-removal — the one-shot totals count every
-    occurrence ever ingested) append to ``index_path``.
-
-    Same retry contract as `incremental_ingest_sink`: both writes are
-    `batch_id=N` overwrites and the store read filters to STRICTLY
-    EARLIER batches (partition-pruned), so a replayed micro-batch
-    rewrites itself identically instead of marking its own spans as
-    already-ingested duplicates. Store cost: ~16 bytes per distinct
-    gram per batch; the per-batch read is a partition-pruned scan +
-    group-sum over gram hashes (signature-sized, the corpus stays
-    cold).
-
-    Compaction (this store COUNT-sums where the signature store
-    set-unions): `sources/io.compact_index` works on this layout, and
-    since r08 the store read runs through
-    `operators/spans.dedup_span_store`, which collapses the transient
-    duplicate rows a crashed compaction swap can leave behind (the same
-    origin batch visible both live and inside the folded base) BEFORE
-    the group-sum — so crash recovery can no longer 2x a gram count
-    (over-removal). The one residual caveat is provenance-free base
-    rows (``src_batch=-1``, from re-compacting a pre-r07 base): those
-    are structurally non-dedupable, and for them compact_index's manual
-    crash recovery remains the contract before restarting this
-    stream."""
-    from geoscan_fraud_spark.operators.spans import (
-        dedup_span_store,
-        remove_spans_against_index,
-        span_gram_index,
-    )
-
-    def inner(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        from pyspark.errors import AnalysisException
-
-        from geoscan_fraud_spark.sources.io import heal_pending_base
-
-        spark = batch_df.sparkSession
-        # complete a crashed compaction before reading (this sink is the
-        # single writer while streaming; the publish dir holds every
-        # folded row, so healing is mechanical)
-        if os.path.isdir(index_path):
-            heal_pending_base(index_path)
-        # Duplicates can ONLY exist once a compacted base (batch_id=-1)
-        # is present — live batch_id=N dirs are single-writer overwrites
-        # and cannot duplicate each other — so the steady pre-compaction
-        # stream skips both the mergeSchema footer pass and the dedup
-        # shuffle entirely (same os.path contract as compact_index).
-        has_base = os.path.isdir(os.path.join(index_path, "batch_id=-1"))
-        try:
-            if has_base:
-                # mergeSchema: the base carries the src_batch payload
-                # column that live batch_id=N partitions lack
-                raw = spark.read.option("mergeSchema", "true").parquet(index_path)
-                # pending=False: heal_pending_base just ran above, so a
-                # batch_id=-3 publish dir cannot exist on this hot path
-                # — skip the per-read detection aggregate (ADVICE r09)
-                idx = dedup_span_store(
-                    raw.filter(F.col("batch_id") < batch_id), pending=False
-                )
-            else:
-                raw = spark.read.parquet(index_path)
-                idx = raw.filter(F.col("batch_id") < batch_id).select("gh", "cnt")
-        except AnalysisException:
-            # bootstrap only: the index path does not exist yet; any
-            # other failure (corruption, schema drift) must surface
-            idx = spark.createDataFrame([], "gh long, cnt bigint")
-        cleaned = remove_spans_against_index(
-            batch_df,
-            idx,
-            text_col=text_col,
-            id_col=id_col,
-            min_len=min_len,
-            min_count=min_count,
-        )
-        cleaned.write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        )
-        span_gram_index(
-            batch_df, text_col=text_col, id_col=id_col, min_len=min_len
-        ).write.mode("overwrite").parquet(f"{index_path}/batch_id={batch_id}")
-
-    return inner
-
-
-def bloom_ingest_sink(
-    digest_path: str,
-    out_path: str,
-    key_col: str = "text",
-    id_col: str = "doc_id",
-    expected_items: int = 1_000_000,
-    fpr: float = 0.01,
-):
-    """Exact-dedup at ingest with O(1) state (the Dolma mechanism): each
-    micro-batch drops rows whose ``key_col`` probes positive against the
-    OR of all prior batches' Bloom digests (`operators/bloomset`), plus
-    exact repeats within the batch (`operators/dedup.exact_dedup_agg`,
-    keep min ``id_col`` — the digest cannot see intra-batch order);
-    NULL keys are never dedupable and always pass; survivors land in
-    ``out_path`` and
-    the batch's own digest (built over the RAW batch keys, so replays
-    and rejected rows stay represented) appends to ``digest_path``.
-
-    vs the MinHash signature store (`neardup_ingest_sink`): this guard
-    is EXACT-match only, but its state is ~1.2 bytes/key at 1% FPR flat
-    (a digest row per batch, OR-merged at read) and the probe is a
-    broadcast map pass — no store join at all. The documented cost is
-    one-sided: a false positive silently drops a genuinely NEW document
-    (at ~fpr); a seen key is never missed. Retry contract as ever:
-    batch_id=N overwrites + strictly-earlier digest read."""
-    from geoscan_fraud_spark.operators.bloomset import (
-        build_bloom,
-        merge_blooms,
-        probe_bloom,
-    )
-
-    def inner(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch_df.sparkSession
-        prior = None
-        try:
-            rows = (
-                spark.read.parquet(digest_path)
-                .filter(F.col("batch_id") < batch_id)
-                .collect()
-            )
-            if rows:
-                prior = merge_blooms([bytes(r["bits"]) for r in rows])
-        except AnalysisException:
-            prior = None  # bootstrap: no digests yet
-
-        from geoscan_fraud_spark.operators.dedup import exact_dedup_agg
-
-        # within-batch: keep the min-id row per key; NULL keys are not
-        # dedupable and pass through untouched (exact_dedup_agg groups
-        # them under the '<null>' marker — exempt them from the group)
-        nulls = batch_df.filter(F.col(key_col).isNull())
-        w_first = exact_dedup_agg(
-            batch_df.filter(F.col(key_col).isNotNull()), [key_col], id_col
-        ).unionByName(nulls)
-        if prior is not None:
-            probed = probe_bloom(
-                w_first, prior, key_col, expected_items, fpr
-            )
-            # NULL-key rows probe NULL — coalesce keeps them (a NULL
-            # predicate would silently drop them from batch 1 onward)
-            kept = probed.filter(
-                ~F.coalesce(F.col("maybe_seen"), F.lit(False))
-            ).drop("maybe_seen")
-        else:
-            kept = w_first
-        kept.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
-        digest = build_bloom(batch_df, key_col, expected_items, fpr)
-        spark.createDataFrame(
-            [(bytearray(digest),)], "bits binary"
-        ).write.mode("overwrite").parquet(f"{digest_path}/batch_id={batch_id}")
 
     return inner

@@ -67,7 +67,3 @@ def make_transactions(
     df = pd.DataFrame(rows, columns=["latitude", "longitude", "amount", "user"])
     # deterministic global shuffle so partition order carries no signal
     return df.sample(frac=1.0, random_state=seed).reset_index(drop=True)
-
-
-def transactions_df(spark, **kwargs):
-    return spark.createDataFrame(make_transactions(**kwargs))

@@ -42,13 +42,11 @@ def _rowset(cols, rows):
     return sorted(tuple(_norm(r[i]) for i in idx) for r in rows)
 
 
-def compare_query(spark, con, fn, sql: str | None, sf_dir: str):
-    """Returns (status, message); status in {'pass','rows-only','fail'}."""
+def compare_query(spark, con, fn, sql: str, sf_dir: str):
+    """Returns (status, message); status in {'pass','fail'}."""
     sdf = fn(spark, sf_dir)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
-    if sql is None:
-        return ("rows-only", f"{len(srows)} rows")
     res = con.execute(sql)
     dcols = [d[0] for d in res.description]
     drows = res.fetchall()

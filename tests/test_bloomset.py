@@ -79,58 +79,3 @@ def test_probe_rejects_mismatched_params(spark):
     bloom = build_bloom(df, "key", 100, 0.01)
     with pytest.raises(ValueError, match="parameters must match"):
         probe_bloom(df, bloom, "key", 9999, 0.01)
-
-
-def test_bloom_ingest_guard(spark, tmp_path):
-    """Cross-batch exact-dedup at ingest with O(1) state: batch 2's
-    repeats of batch 1 drop (no false negatives => no dup ever passes);
-    genuinely new docs survive up to the documented FPR."""
-    from geoscan_fraud_spark.streaming.scoring import bloom_ingest_sink
-
-    idx, out = str(tmp_path / "blooms"), str(tmp_path
-/ "docs")
-    sink = bloom_ingest_sink(
-        idx, out, key_col="text", expected_items=5000, fpr=0.001
-    )
-    b0 = spark.createDataFrame(
-        [(i, f"document number {i}") for i in range(100)],
-        "doc_id int, text string",
-    )
-    dup = [(1000 + i, f"document number {i}") for i in range(50)]  # repeats
-    new = [(2000 + i, f"fresh content {i}") for i in range(50)]
-    b1 = spark.createDataFrame(dup + new, "doc_id int, text string")
-    sink(b0, 0)
-    sink(b1, 1)
-    kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert set(range(100)) <= kept  # batch 0 intact
-    assert not any(1000 <= i < 2000 for i in kept)  # every repeat dropped
-    n_new = sum(1 for i in kept if i >= 2000)
-    assert n_new >= 49  # new docs survive (FPR may cost at most a hair)
-
-    sink(b1, 1)  # crash-replay: strictly-earlier digest read keeps output stable
-    again = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert again == kept
-
-
-def test_bloom_ingest_null_keys_pass_every_batch(spark, tmp_path):
-    """Review fix: NULL keys are never dedupable — they must survive in
-    EVERY batch, not just the bootstrap one, and within-batch dedup must
-    keep the MIN-ID row per key regardless of column order."""
-    from geoscan_fraud_spark.streaming.scoring import bloom_ingest_sink
-
-    idx, out = str(tmp_path / "b"), str(tmp_path / "d")
-    sink = bloom_ingest_sink(idx, out, key_col="text", id_col="doc_id",
-                             expected_items=100, fpr=0.001)
-    # column order deliberately (text, doc_id): min must still be by id
-    b0 = spark.createDataFrame(
-        [("same", 7), ("same", 3), (None, 1)], "text string, doc_id int"
-    )
-    b1 = spark.createDataFrame(
-        [("fresh", 10), (None, 11)], "text string, doc_id int"
-    )
-    sink(b0, 0)
-    sink(b1, 1)
-    kept = {(r["doc_id"], r["text"]) for r in spark.read.parquet(out).collect()}
-    assert (3, "same") in kept and (7, "same") not in kept  # min-id wins
-    assert (1, None) in kept and (11, None) in kept  # NULLs always pass
-    assert (10, "fresh") in kept

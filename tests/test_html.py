@@ -7,12 +7,10 @@ from __future__ import annotations
 import random
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
 from geoscan_fraud_spark.operators.html import (
     extract_html_text,
-    extract_links,
     strip_html,
 )
 from geoscan_fraud_spark.plans.audit import plan_summary
@@ -116,19 +114,6 @@ def test_extract_html_text_plan_map_only(spark):
     plan = plan_summary(extract_html_text(df, "html"))
     assert plan["shuffles"] == 0
     assert plan["python_eval"] == 0
-
-
-def test_extract_links(spark):
-    html = (
-        '<a href="https://a.example/one">1</a> text '
-        "<A HREF='https://b.example/two?q=1'>2</A> "
-        '<a class="x" href="/relative/path">3</a> <a>no href</a>'
-    )
-    df = spark.createDataFrame([(1, html)], "id long, html string")
-    got = df.select(extract_links(F.col("html")).alias("l")).first()["l"]
-    assert sorted(got) == sorted(
-        ["https://a.example/one", "/relative/path", "https://b.example/two?q=1"]
-    )
 
 
 def test_extract_then_gate_composes(spark):

@@ -130,24 +130,6 @@ def test_reference_csv_golden_invariants(spark):
     assert flagged <= n_anom
     assert n_anom - flagged <= max(10, 0.02 * n_anom)
 
-def test_read_write_jsonl_roundtrip(spark, tmp_path):
-    from geoscan_fraud_spark.sources.io import read_jsonl, write_jsonl
-
-    df = spark.createDataFrame(
-        [(1, "alpha", 1.5), (2, "beta", None)], "id long, name string, score double"
-    )
-    path = str(tmp_path / "jl")
-    write_jsonl(df, path)
-    back = read_jsonl(spark, path, schema="id long, name string, score double")
-    assert sorted((r.id, r.name, r.score) for r in back.collect()) == [
-        (1, "alpha", 1.5),
-        (2, "beta", None),
-    ]
-    pruned = read_jsonl(
-        spark, path, schema="id long, name string, score double", columns=["id"]
-    )
-    assert pruned.columns == ["id"]
-
 
 def test_compact_files_merges_small_files(spark, tmp_path):
     from geoscan_fraud_spark.sources.io import compact_files
@@ -171,71 +153,3 @@ def test_compact_files_merges_small_files(spark, tmp_path):
     assert n == 1 and after == 1
     got = sorted(r.id for r in spark.read.parquet(path).collect())
     assert got == list(range(1000))
-
-
-def test_zorder_layout_clusters_both_dimensions(spark, tmp_path):
-    """Morton layout: per-file value spread shrinks on BOTH columns;
-    lexicographic sort leaves the second column's spread ~global."""
-    import os
-
-    from geoscan_fraud_spark.sources.io import (
-        write_sorted_layout,
-        write_zorder_layout,
-    )
-    from pyspark.sql import functions as F
-
-    # two independent uniform dims: id-hash derived, deterministic
-    df = (
-        spark.range(0, 4096)
-        .select(
-            (F.pmod(F.xxhash64("id"), F.lit(4096))).alias("x"),
-            (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(4096))).alias("y"),
-        )
-    )
-    zpath = str(tmp_path / "z")
-    spath = str(tmp_path / "s")
-    write_zorder_layout(df, zpath, ["x", "y"], bits=12, num_files=16)
-    write_sorted_layout(df, spath, ["x"], num_files=16)
-
-    def per_file_avg_spread(path, col):
-        files = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ]
-        assert len(files) >= 8
-        spreads = []
-        for f in files:
-            stats = (
-                spark.read.parquet(f)
-                .agg(F.min(col).alias("mn"), F.max(col).alias("mx"))
-                .first()
-            )
-            spreads.append(stats["mx"] - stats["mn"])
-        return sum(spreads) / len(spreads)
-
-    global_spread = 4095
-    # z-order: both dims clustered well below global spread
-    assert per_file_avg_spread(zpath, "x") < 0.5 * global_spread
-    assert per_file_avg_spread(zpath, "y") < 0.5 * global_spread
-    # lexicographic: x tight, y unclustered (~global)
-    assert per_file_avg_spread(spath, "x") < 0.2 * global_spread
-    assert per_file_avg_spread(spath, "y") > 0.8 * global_spread
-
-
-def test_zorder_key_interleaves_bits(spark):
-    from geoscan_fraud_spark.sources.io import zorder_key
-    from pyspark.sql import functions as F
-
-    # x,y in [0,3] with bits=2: morton of (3,0)=0b0101=5, (0,3)=0b1010=10,
-    # (3,3)=0b1111=15 when min=0 max=3 scaling maps values to themselves...
-    # scaling maps v -> floor(v/3*4) capped at 3: 0->0,1->1,2->2,3->3
-    df = spark.createDataFrame(
-        [(0, 0), (3, 0), (0, 3), (3, 3)], "x int, y int"
-    )
-    keyed, name = zorder_key(df, ["x", "y"], bits=2)
-    got = {(r.x, r.y): r[name] for r in keyed.collect()}
-    assert got[(0, 0)] == 0
-    assert got[(3, 3)] == 15
-    assert got[(3, 0)] + got[(0, 3)] == 15
-    assert got[(3, 0)] != got[(0, 3)]

@@ -1,34 +1,12 @@
-"""ORC source/sink, incremental-store compaction, temperature mixture."""
+"""Incremental-store compaction, crash healing, temperature weights."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from geoscan_fraud_spark.operators.packing import (
-    sample_mixture,
-    temperature_mixture,
-    temperature_weights,
-)
-from geoscan_fraud_spark.sources.io import (
-    compact_index,
-    load_fixture,
-    read_orc,
-    write_orc,
-)
-
-
-def test_orc_roundtrip_and_projection(spark, sf_dir, tmp_path):
-    docs = load_fixture(spark, sf_dir, "documents")
-    path = str(tmp_path / "docs_orc")
-    write_orc(docs, path)
-    back = read_orc(spark, path, columns=["doc_id", "lang"])
-    assert back.columns == ["doc_id", "lang"]
-    assert back.count() == docs.count()
-    full = read_orc(spark, path)
-    assert {r["doc_id"] for r in full.select("doc_id").collect()} == {
-        r["doc_id"] for r in docs.select("doc_id").collect()
-    }
+from geoscan_fraud_spark.operators.packing import temperature_weights
+from geoscan_fraud_spark.sources.io import compact_index
 
 
 def test_compact_index_folds_batches_and_keeps_retry_guard(spark, tmp_path):
@@ -90,19 +68,6 @@ def test_temperature_weights_limits():
     with pytest.raises(ValueError):
         temperature_weights(sizes, 0.0)
     assert "empty" not in temperature_weights({"a": 10, "empty": 0}, 1.0)
-
-
-def test_temperature_mixture_matches_manual_weights(spark, sf_dir):
-    docs = load_fixture(spark, sf_dir, "documents")
-    sizes = {
-        r["source"]: r["n"]
-        for r in docs.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    manual = sample_mixture(docs, temperature_weights(sizes, 2.0), 200)
-    auto = temperature_mixture(docs, 2.0, 200)
-    assert {r["doc_id"] for r in auto.select("doc_id").collect()} == {
-        r["doc_id"] for r in manual.select("doc_id").collect()
-    }
 
 
 def test_compact_index_preserves_streaming_dedup(spark, tmp_path):
@@ -231,51 +196,6 @@ def test_compact_and_expire_heal_pending_state_themselves(spark, tmp_path):
     os.makedirs(f"{store2}/batch_id=-3")  # publish dir, no manifest
     with pytest.raises(ValueError, match="_folded.json"):
         compact_index(spark, store2)
-
-
-def test_span_sink_heals_crashed_compaction_on_restart(spark, tmp_path):
-    """A stream restarting over a crashed store compaction heals it in
-    the first micro-batch and produces the same output as a stream that
-    never saw a crash (rows in the window are duplicated, and the
-    (gh, origin) read guard already collapses them)."""
-    from geoscan_fraud_spark.streaming.scoring import span_ingest_sink
-
-    docs0 = spark.createDataFrame(
-        [(0, "a b c d e f g h i j"), (1, "k l m n o p q r s t")],
-        "doc_id long, text string",
-    )
-    docs1 = spark.createDataFrame(
-        [(2, "a b c d e f g h i j")], "doc_id long, text string"
-    )
-    base_args = dict(min_len=5, min_count=1)
-
-    crashed = {
-        "out": str(tmp_path / "c_out"),
-        "idx": str(tmp_path / "c_idx"),
-    }
-    clean = {"out": str(tmp_path / "k_out"), "idx": str(tmp_path / "k_idx")}
-    for p in (crashed, clean):
-        sink = span_ingest_sink(p["idx"], p["out"], **base_args)
-        sink(docs0, 0)
-
-    # crash a compaction of batch 0 on one store only
-    _crash_after_publish(spark, crashed["idx"], [0])
-    sink_c = span_ingest_sink(crashed["idx"], crashed["out"], **base_args)
-    sink_k = span_ingest_sink(clean["idx"], clean["out"], **base_args)
-    sink_c(docs1, 1)
-    sink_k(docs1, 1)
-
-    assert not os.path.isdir(f"{crashed['idx']}/batch_id=-3")  # healed
-    assert os.path.isdir(f"{crashed['idx']}/batch_id=-1")
-    got = {
-        r["doc_id"]: r["text"]
-        for r in spark.read.parquet(crashed["out"]).collect()
-    }
-    want = {
-        r["doc_id"]: r["text"]
-        for r in spark.read.parquet(clean["out"]).collect()
-    }
-    assert got == want and 2 in got  # doc 2's repeated span removed same way
 
 
 def test_store_fsck_clean_and_each_finding_surfaces(spark, tmp_path):

@@ -158,13 +158,8 @@ def test_multimodal_plumbing(spark, docs):
         r["blob_id"]: r["features"] for r in feats2
     }
 
-    frames = mm.frame_sample(blobs.limit(5), every_n=1)
-    assert frames.count() >= 5
-
     with pytest.raises(NotImplementedError, match="codec"):
         mm.extract_features(blobs, mode="real")
-    with pytest.raises(NotImplementedError, match="codec"):
-        mm.frame_sample(blobs, mode="real")
 
 
 def test_quantize_embeddings_roundtrip_and_cosine_recall(spark, embeddings):
@@ -256,28 +251,3 @@ def test_multimodal_crc32_and_feature_values(spark):
         )
         expect = raw / (np.linalg.norm(raw) or 1.0)
         assert np.allclose(feats[did], expect)
-
-
-def test_resize_images_plumbing(spark, docs):
-    """Resize stage: deterministic, size-faithful fake kernel — output
-    payload is exactly width*height bytes, stable across runs, distinct
-    for distinct inputs/dims; mode='real' names the missing codec."""
-    blobs = mm.documents_as_blobs(
-        docs.selectExpr("doc_id", "text", "'srcX' as source")
-    ).limit(8)
-    out = mm.resize_images(blobs, 16, 9).collect()
-    assert len(out) == 8
-    assert all(len(r["payload"]) == 16 * 9 for r in out)
-    assert all((r["out_width"], r["out_height"]) == (16, 9) for r in out)
-    again = {r["blob_id"]: bytes(r["payload"]) for r in mm.resize_images(blobs, 16, 9).collect()}
-    first = {r["blob_id"]: bytes(r["payload"]) for r in out}
-    assert again == first
-    other = {r["blob_id"]: bytes(r["payload"]) for r in mm.resize_images(blobs, 9, 16).collect()}
-    assert any(other[k] != first[k] for k in first)  # dims feed the kernel
-    # feature extraction composes downstream on the resized payloads
-    feats = mm.extract_features(mm.resize_images(blobs, 16, 9))
-    assert feats.count() == 8
-    with pytest.raises(NotImplementedError, match="codec"):
-        mm.resize_images(blobs, 16, 9, mode="real")
-    with pytest.raises(ValueError, match="dims"):
-        mm.resize_images(blobs, 0, 9)

@@ -53,25 +53,6 @@ def test_anomaly_join_is_broadcast_no_shuffle_of_big_side(spark, sf_dir):
     assert s["shuffles"] <= 1
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir):
-    """Two tables bucketed on the join key into the same bucket count must
-    join without ANY shuffle — the write-once-join-many layout lever."""
-    from geoscan_fraud_spark.sources.io import write_bucketed_table
-
-    ev = load_fixture(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    us = ev.groupBy("user_id").agg(F.sum("value").alias("total"))
-    try:
-        write_bucketed_table(ev, "bt_events", ["user_id"], num_buckets=8)
-        write_bucketed_table(us, "bt_users", ["user_id"], num_buckets=8)
-        joined = spark.table("bt_events").join(spark.table("bt_users"), "user_id")
-        s = plan_summary(joined)
-        assert s["shuffles"] == 0, "bucketed join must not exchange"
-        assert joined.count() == ev.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bt_events")
-        spark.sql("DROP TABLE IF EXISTS bt_users")
-
-
 def test_cell_id_is_pure_jvm(spark, sf_dir):
     ev = load_fixture(spark, sf_dir, "events")
     df = ev.select(

@@ -1,10 +1,9 @@
 """Product-quantization ANN (operators/pq.py + the IVF-PQ index tier).
 
 Pins: codebook training determinism, encode exactness invariants,
-ADC local-topk tie discipline, exact-equality of the full-probe /
-full-shortlist path with brute force, measured partial-probe recall,
-and the persisted IVF-PQ lifecycle (build -> append -> delete ->
-compact) serving identically through the PQ and int8 shortlist tiers.
+ADC local-topk tie discipline, and the persisted IVF-PQ lifecycle
+(build -> append -> delete -> compact) serving identically through the
+PQ and int8 shortlist tiers and equal to brute force at full probe.
 """
 
 from __future__ import annotations
@@ -17,7 +16,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from geoscan_fraud_spark.operators.pq import (
-    ivf_pq_topk,
     pq_encode,
     pq_reconstruct,
     pq_train_codebooks,
@@ -93,31 +91,8 @@ def test_encode_invariants(spark, emb):
 
 
 # ---------------------------------------------------------------------------
-# in-memory IVF-PQ
+# persisted IVF-PQ
 # ---------------------------------------------------------------------------
-
-
-def test_full_probe_full_shortlist_equals_brute_force(spark, emb):
-    q = emb.filter(F.col("vec_id") < 3)
-    n = emb.count()
-    got = ivf_pq_topk(
-        q, emb, k=5, n_centroids=4, nprobe=4, m=8, pq_k=16, rerank=n
-    )
-    assert _rows(got) == _rows(brute_force_topk(q, emb, k=5))
-
-
-def test_partial_probe_recall_measured(spark, emb):
-    q = emb.filter(F.col("vec_id") < 20)
-    exact = brute_force_topk(q, emb, k=10).select("query_id", "vec_id")
-    approx = ivf_pq_topk(
-        q, emb, k=10, n_centroids=8, nprobe=4, m=8, pq_k=16, rerank=8
-    ).select("query_id", "vec_id")
-    hit = exact.join(approx, ["query_id", "vec_id"], "left_semi").count()
-    recall = hit / exact.count()
-    # probing half the lists with an 8x shortlist: the floor is loose on
-    # purpose (the corpus is random synthetic, the hardest case for PQ);
-    # the full-probe test above pins the exact ceiling
-    assert recall >= 0.5, f"recall@10 collapsed: {recall}"
 
 
 def test_adc_tie_break_is_vec_id_asc(spark):
@@ -126,16 +101,11 @@ def test_adc_tie_break_is_vec_id_asc(spark):
     # the global merge, so top-k = the k smallest non-self ids
     rows = [(i, [1.0, 2.0] * 8) for i in range(30)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    path = tempfile.mkdtemp(prefix="pq_ties_") + "/idx"
+    ivf_index_write(df, path, n_centroids=2, pq_m=8, pq_k=4, pq_train_rows=30)
     q = df.filter(F.col("vec_id") == 29)
-    got = ivf_pq_topk(
-        q, df, k=5, n_centroids=2, nprobe=2, m=8, pq_k=4, rerank=2
-    )
+    got = ivf_index_query(q, path, k=5, nprobe=2, rerank=2, shortlist="pq")
     assert [r["vec_id"] for r in got.orderBy("rank").collect()] == [0, 1, 2, 3, 4]
-
-
-# ---------------------------------------------------------------------------
-# persisted IVF-PQ lifecycle
-# ---------------------------------------------------------------------------
 
 
 def test_pq_index_lifecycle_serves_identically(spark, emb):

@@ -317,24 +317,6 @@ def test_index_compact_collapses_df_log_and_preserves_results(
         text_index_compact(spark, path)
 
 
-def test_text_index_stats_occupancy(spark, docs_df, index_path):
-    from geoscan_fraud_spark.operators.retrieval import text_index_stats
-
-    base = text_index_stats(spark, index_path).collect()
-    toks = [_py_tokens(t) for _, t in DOCS]
-    # total postings = sum over docs of DISTINCT terms per doc
-    assert sum(r["n_postings"] for r in base) == sum(len(set(t)) for t in toks)
-
-    heavy = text_index_stats(spark, index_path, top_terms=2).collect()
-    by_bucket = {r["bucket"]: r for r in heavy}
-    # "fox" (df=3: docs 1,3,8) must headline its bucket
-    from geoscan_fraud_spark.operators.retrieval import term_bucket_py
-
-    b = term_bucket_py("fox", 8)
-    top = by_bucket[b]["heavy_terms"][0]
-    assert top["term"] == "fox" and top["df"] == 3
-
-
 def test_index_append_split_invariance(spark, tmp_path):
     """Property: HOWEVER a corpus is split into ingest batches — counts,
     sizes, order — the incrementally grown index serves bit-identical

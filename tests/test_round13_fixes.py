@@ -362,7 +362,9 @@ def test_simhash_expr_pack_bit_parity_with_column_form(spark):
 def test_hyperplane_bucket_name_equals_column_form(spark):
     """hyperplane_bucket(str) — the one-expr JVM-parsed path — equals
     hyperplane_bucket(Column) — the kept compatibility path — on real
-    vectors including negatives and zeros."""
+    vectors including negatives and zeros, and on a column name with an
+    embedded backtick. The string builders' double literals equal
+    `F.lit` for the non-finite values too."""
     from geoscan_fraud_spark.operators import dedup as dd
 
     rows = [
@@ -371,13 +373,23 @@ def test_hyperplane_bucket_name_equals_column_form(spark):
         (3, [0.0] * 64),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    by_name = df.select(
-        "vec_id", dd.hyperplane_bucket("embedding", 64, 16, 42).alias("b")
-    )
-    by_col = df.select(
-        "vec_id",
-        dd.hyperplane_bucket(F.col("embedding"), 64, 16, 42).alias("b"),
-    )
-    assert sorted(map(tuple, by_name.collect())) == sorted(
-        map(tuple, by_col.collect())
-    )
+    for name in ("embedding", "emb`x"):
+        d = df.withColumnRenamed("embedding", name)
+        quoted = "`" + name.replace("`", "``") + "`"
+        by_name = d.select(
+            "vec_id", dd.hyperplane_bucket(name, 64, 16, 42).alias("b")
+        )
+        by_col = d.select(
+            "vec_id",
+            dd.hyperplane_bucket(F.col(quoted), 64, 16, 42).alias("b"),
+        )
+        assert sorted(map(tuple, by_name.collect())) == sorted(
+            map(tuple, by_col.collect())
+        ), name
+
+    values = [float("nan"), float("inf"), float("-inf"), -0.0, 5e-324]
+    by_str = df.limit(1).select(*[F.expr(dd._dlit(v)) for v in values]).first()
+    by_lit = df.limit(1).select(*[F.lit(v) for v in values]).first()
+    assert [repr(v) for v in by_str] == [repr(v) for v in by_lit] == [
+        repr(v) for v in values
+    ]

@@ -4,7 +4,7 @@
 `spark-warehouse/bt_*` directories (no catalog entry after a crashed
 session) made `saveAsTable` raise LOCATION_ALREADY_EXISTS. Two fixes, both
 pinned here: the suite runs against a per-session temp warehouse
-(conftest), and `write_table`/`write_bucketed_table` can clear an orphaned
+(conftest), and `write_table` can clear an orphaned
 location (and ONLY an orphaned one) before writing — since r06 behind the
 explicit `clear_orphan=True` opt-in (ADVICE r05: with in-memory catalogs,
 "no catalog entry" is also the state of a CONCURRENT session's live table,
@@ -19,7 +19,6 @@ from urllib.parse import urlparse
 from geoscan_fraud_spark.sources.io import (
     _clear_orphan_location,
     load_fixture,
-    write_bucketed_table,
     write_table,
 )
 
@@ -44,18 +43,6 @@ def test_suite_uses_private_warehouse(spark):
     wh = _warehouse_path(spark)
     assert "spark-warehouse" in os.path.basename(wh.rstrip("/"))
     assert wh != os.path.join(os.getcwd(), "spark-warehouse")
-
-
-def test_bucketed_write_survives_orphan_location(spark, sf_dir):
-    _seed_orphan(spark, "bt_orphan")
-    ev = load_fixture(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    try:
-        write_bucketed_table(
-            ev, "bt_orphan", ["user_id"], num_buckets=4, clear_orphan=True
-        )
-        assert spark.table("bt_orphan").count() == ev.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bt_orphan")
 
 
 def test_write_table_survives_orphan_location(spark, sf_dir):

@@ -569,32 +569,6 @@ def test_token_entropy_matches_python_reference(spark, docs):
         assert abs(got[r.doc_id] - h) < 5e-4, r.doc_id
 
 
-def test_weighted_sample_per_group(spark, sf_dir):
-    from geoscan_fraud_spark.operators.sampling import (
-        weighted_sample,
-        weighted_sample_per_group,
-    )
-
-    d = load_fixture(spark, sf_dir, "documents")
-    s = weighted_sample_per_group(d, "n_chars", 10, ["source"], seed=7)
-    counts = {r.source: r.n for r in s.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    src_sizes = {
-        r.source: r.n
-        for r in d.groupBy("source").agg(F.count("*").alias("n")).collect()
-    }
-    for src, n in counts.items():
-        assert n == min(10, src_sizes[src])
-    # priority consistency: a group's sample = global A-ES ranking
-    # restricted to that group (same keys)
-    one_src = next(iter(src_sizes))
-    grp = d.filter(F.col("source") == one_src)
-    direct = {r.doc_id for r in weighted_sample(grp, "n_chars", 10, seed=7).collect()}
-    via_group = {
-        r.doc_id for r in s.filter(F.col("source") == one_src).collect()
-    }
-    assert direct == via_group
-
-
 def test_entropy_and_repetition_are_map_only(spark, docs):
     from geoscan_fraud_spark.operators.text import token_entropy
     from geoscan_fraud_spark.plans.audit import plan_summary

@@ -218,43 +218,6 @@ def test_dedup_span_store_collapses_crash_duplicates(spark, tmp_path):
     assert dedup_span_store(both).count() == 2 * store_rows.count()
 
 
-def test_span_ingest_sink_reads_through_dedup(spark, tmp_path):
-    """End-to-end: the streaming sink's store read tolerates a planted
-    half-swapped duplicate — batch 1's rewrite equals the rewrite
-    against the clean store."""
-    from geoscan_fraud_spark.streaming.scoring import span_ingest_sink
-
-    idx_path = str(tmp_path / "idx")
-    out_path = str(tmp_path / "out")
-    sink = span_ingest_sink(idx_path, out_path, min_len=5)
-
-    b0 = spark.createDataFrame(
-        [(0, "a b c d e f g h i j"), (1, "a b c d e f g h i j")],
-        "doc_id int, text string",
-    )
-    sink(b0, 0)
-    clean_idx = spark.read.parquet(idx_path)
-
-    # plant the crash artifact: base duplicating batch 0's rows
-    clean_idx.filter(F.col("batch_id") == 0).drop("batch_id").withColumn(
-        "src_batch", F.lit(0)
-    ).write.parquet(f"{idx_path}/batch_id=-1")
-
-    b1 = spark.createDataFrame(
-        [(2, "a b c d e f g h i j"), (3, "k l m n o p q r s t")],
-        "doc_id int, text string",
-    )
-    sink(b1, 1)
-    got = {
-        r["doc_id"]: (r["text"], r["removed_tokens"])
-        for r in spark.read.parquet(f"{out_path}/batch_id=1").collect()
-    }
-    # doc 2 repeats the store's gram run (removed entirely under
-    # keep='first': the global first lives in batch 0); doc 3 is novel
-    assert got[2][1] > 0
-    assert got[3] == ("k l m n o p q r s t", 0)
-
-
 def test_write_table_orc_round_trip(spark, sf_dir):
     """r08 (VERDICT r07 #6): S4's format pluggability exercised with a
     real non-parquet format — the tiles-shaped aggregate written through

@@ -9,10 +9,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from geoscan_fraud_spark.operators.shards import (
-    assign_token_shards,
-    write_training_shards,
-)
+from geoscan_fraud_spark.operators.shards import assign_token_shards
 
 
 def _docs(n=200, seed=9):
@@ -89,26 +86,6 @@ def test_seed_changes_layout(spark):
     assert a != b  # different global order
     assert a == _py_shards(rows, 800, seed=1)
     assert b == _py_shards(rows, 800, seed=2)
-
-
-def test_write_training_shards_roundtrip(spark, tmp_path):
-    rows = _docs(120, seed=3)
-    df = spark.createDataFrame(rows, "doc_id int, text string, n_tokens int")
-    path = str(tmp_path / "shards")
-    manifest = write_training_shards(df, path, shard_tokens=900).collect()
-    back = spark.read.parquet(path)
-    assert back.count() == len(rows)
-    # manifest agrees with what landed on disk, per shard
-    disk = {
-        r["shard"]: (r["n"], r["tok"])
-        for r in back.groupBy("shard")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_tokens").alias("tok"))
-        .collect()
-    }
-    assert {m["shard"]: (m["n_docs"], m["n_tokens"]) for m in manifest} == disk
-    # partition pruning reaches the file listing
-    one = back.filter(F.col("shard") == 0)
-    assert one.count() == disk[0][0]
 
 
 def test_validation(spark):

@@ -309,72 +309,6 @@ def test_incremental_spans_equal_one_shot(spark):
     assert sum(v[1] for v in got.values()) > 0
 
 
-def test_span_ingest_sink_idempotent_and_equivalent(spark, tmp_path):
-    """The foreachBatch sink: two batches through the store == one-shot;
-    replaying a committed batch rewrites it identically (the strictly-
-    earlier store read ignores the batch's own delta)."""
-    from geoscan_fraud_spark.streaming.scoring import span_ingest_sink
-
-    docs = sorted(_corpus(23, n_docs=10))
-    full = spark.createDataFrame(docs, "doc_id int, text string")
-    one_shot = {
-        r["doc_id"]: r["text"]
-        for r in remove_repeated_spans(full, min_len=5, keep="first").collect()
-    }
-    idx, out = str(tmp_path / "gidx"), str(tmp_path / "gout")
-    sink = span_ingest_sink(idx, out, min_len=5)
-    cut = len(docs) // 2
-    b0 = spark.createDataFrame(docs[:cut], "doc_id int, text string")
-    b1 = spark.createDataFrame(docs[cut:], "doc_id int, text string")
-    sink(b0, 0)
-    sink(b1, 1)
-    got = {
-        r["doc_id"]: r["text"] for r in spark.read.parquet(out).collect()
-    }
-    assert got == one_shot
-    sink(b1, 1)  # crash-replay of the last batch
-    again = {
-        r["doc_id"]: r["text"] for r in spark.read.parquet(out).collect()
-    }
-    assert again == one_shot
-
-
-def test_span_store_compaction_preserves_decisions(spark, tmp_path):
-    """`compact_index` (written for the signature store) folds the
-    gram-count store too: a completed fold must not change a later
-    batch's rewrite, and the kept-unfolded newest batch keeps the
-    crash-replay guard intact. (A fold that CRASHES mid-swap can leave
-    transient duplicate rows, which this count-summing store reads as
-    over-counts — recovery before restart is documented in
-    span_ingest_sink; only the completed-fold path is pinned here.)"""
-    from geoscan_fraud_spark.sources.io import compact_index
-    from geoscan_fraud_spark.streaming.scoring import span_ingest_sink
-
-    docs = sorted(_corpus(29, n_docs=12))
-    idx, out = str(tmp_path / "gidx"), str(tmp_path / "gout")
-    sink = span_ingest_sink(idx, out, min_len=5)
-    thirds = [docs[:5], docs[5:10], docs[10:]]
-    for i, b in enumerate(thirds[:2]):
-        sink(spark.createDataFrame(b, "doc_id int, text string"), i)
-
-    b2 = spark.createDataFrame(thirds[2], "doc_id int, text string")
-    sink(b2, 2)
-    before = {
-        r["doc_id"]: r["text"]
-        for r in spark.read.parquet(f"{out}/batch_id=2").collect()
-    }
-
-    folded = compact_index(spark, idx, keep_last=1)
-    assert folded == 2  # batches 0 and 1 -> base; batch 2 kept unfolded
-
-    sink(b2, 2)  # crash-replay of the newest batch against the compacted store
-    after = {
-        r["doc_id"]: r["text"]
-        for r in spark.read.parquet(f"{out}/batch_id=2").collect()
-    }
-    assert after == before
-
-
 def test_pipeline_span_stage(spark):
     """span_min_len composes into prepare_training_corpus: a boilerplate
     paragraph shared by otherwise-distinct docs (below the near-dup

@@ -731,72 +731,6 @@ def test_prepared_ingest_sink_classifier_gate(spark, tmp_path):
     assert sorted(r.doc_id for r in out.collect()) == [500]
 
 
-def test_countmin_sink_rollup_matches_batch_sketch(spark, tmp_path):
-    from geoscan_fraud_spark.operators.profiling import (
-        countmin_profile,
-        merge_countmin,
-    )
-    from geoscan_fraud_spark.streaming.scoring import countmin_sink
-
-    rows0 = [(i, f"alpha beta tok{i % 7}") for i in range(40)]
-    rows1 = [(i + 100, f"gamma alpha tok{i % 5}") for i in range(40)]
-    schema = "doc_id long, text string"
-    b0 = spark.createDataFrame(rows0, schema)
-    b1 = spark.createDataFrame(rows1, schema)
-    path = str(tmp_path / "cm")
-    sink = countmin_sink(path, width=512)
-    sink(b0, 0)
-    sink(b1, 1)
-
-    merged = {
-        (r["row"], r["col"]): r["c"]
-        for r in merge_countmin(
-            [spark.read.parquet(path).drop("batch_id")]
-        ).collect()
-    }
-    direct = {
-        (r["row"], r["col"]): r["c"]
-        for r in countmin_profile(b0.unionByName(b1), width=512).collect()
-    }
-    assert merged == direct
-
-    # retry replay stays idempotent
-    sink(b1, 1)
-    again = {
-        (r["row"], r["col"]): r["c"]
-        for r in merge_countmin(
-            [spark.read.parquet(path).drop("batch_id")]
-        ).collect()
-    }
-    assert again == direct
-
-
-def test_sample_sink_rollup_equals_global_sample(spark, tmp_path):
-    from geoscan_fraud_spark.operators.sampling import (
-        merge_weighted_samples,
-        weighted_sample,
-    )
-    from geoscan_fraud_spark.streaming.scoring import sample_sink
-
-    rows = [(i, 0.5 + (i * 13 % 31) / 4.0) for i in range(300)]
-    df = spark.createDataFrame(rows, "doc_id long, w double")
-    b0 = df.filter(F.col("doc_id") < 150)
-    b1 = df.filter(F.col("doc_id") >= 150)
-    path = str(tmp_path / "samples")
-    sink = sample_sink(path, "w", k=20)
-    sink(b0, 0)
-    sink(b1, 1)
-
-    merged = sorted(
-        r["doc_id"]
-        for r in merge_weighted_samples(
-            [spark.read.parquet(path).drop("batch_id")], 20
-        ).collect()
-    )
-    direct = sorted(r["doc_id"] for r in weighted_sample(df, "w", 20).collect())
-    assert merged == direct
-
-
 def test_prepared_ingest_sink_decontam_gates(spark, tmp_path):
     """Streaming prepare with BOTH decontamination gates: a doc quoting
     the benchmark drops at the n-gram stage, a paraphrase (no shared

@@ -61,25 +61,6 @@ def test_filter_blocked_domains_dataframe_blocklist(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_read_text_files_lines_and_whole(spark, tmp_path):
-    from geoscan_fraud_spark.sources.io import read_text_files
-
-    d = tmp_path / "corpus"
-    d.mkdir()
-    (d / "a.txt").write_text("line one\nline two\n")
-    (d / "b.txt").write_text("solo doc body")
-
-    lines = read_text_files(spark, str(d))
-    got = sorted(r["text"] for r in lines.collect())
-    assert got == ["line one", "line two", "solo doc body"]
-    assert all(r["path"].endswith((".txt",)) for r in lines.collect())
-
-    whole = read_text_files(spark, str(d), whole_files=True)
-    by_file = {r["path"].rsplit("/", 1)[-1]: r["text"] for r in whole.collect()}
-    assert by_file["a.txt"] == "line one\nline two\n"
-    assert by_file["b.txt"] == "solo doc body"
-
-
 def test_url_parse_matches_urllib_oracle(spark):
     """Property check: the native-regexp host extraction agrees with
     urllib.parse on a battery of URL shapes (the independent oracle)."""
@@ -107,33 +88,6 @@ def test_url_parse_matches_urllib_oracle(spark):
     for i, u in enumerate(urls):
         expected = (urlsplit(u).hostname or "").lower()
         assert got[i] == expected, u
-
-
-def test_cap_domain_share(spark):
-    """One domain at 60% of the corpus shrinks to the cap; small domains
-    are untouched; selection is partition-stable."""
-    from geoscan_fraud_spark.operators.web import cap_domain_share
-
-    rows = [(i, "big.com") for i in range(60)] + [
-        (100 + i, f"d{i % 8}.org") for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, domain string")
-    out = cap_domain_share(df, "domain", max_share=0.3)
-    by_dom = {}
-    for r in out.collect():
-        by_dom[r["domain"]] = by_dom.get(r["domain"], 0) + 1
-    assert by_dom["big.com"] == 30  # ceil(0.3 * 100)
-    assert sum(v for k, v in by_dom.items() if k != "big.com") == 40
-
-    a = sorted(r["doc_id"] for r in out.collect())
-    b = sorted(
-        r["doc_id"]
-        for r in cap_domain_share(df.repartition(7), "domain", 0.3).collect()
-    )
-    assert a == b
-
-    with pytest.raises(ValueError, match="max_share"):
-        cap_domain_share(df, "domain", 0.0)
 
 
 def test_pipeline_domain_blocklist_stage(spark):

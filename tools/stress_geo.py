@@ -100,7 +100,7 @@ def main():
     print(f"personalized tiles: {npt:,} in {time.perf_counter()-t0:.1f}s")
 
     t0 = time.perf_counter()
-    anomalies = extract_anomalies(tx, ptiles, res=10, broadcast_tiles=False)
+    anomalies = extract_anomalies(tx, ptiles, res=10)
     na = anomalies.count()
     print(f"anti-join scoring: {na:,} anomalies in {time.perf_counter()-t0:.1f}s")
 
