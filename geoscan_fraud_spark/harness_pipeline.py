@@ -735,10 +735,10 @@ def _gram_list_sql(n: int) -> str:
     """,
 )
 def text_repetition(spark, sf_dir):
-    """Gopher repetition signals (r07 rotation): per-n duplicate-gram
-    fraction + top-gram share, replayed in DuckDB as list algebra (the
-    engine computes the top share via a sort + run-length fold; the
-    oracle counts grams directly — same value, independent mechanism)."""
+    """Gopher repetition signals: per-n duplicate-gram fraction +
+    top-gram share, replayed in DuckDB as list algebra (the engine counts
+    gram multiplicity per document in one Arrow pass; the oracle groups
+    the unnested grams — same value, independent mechanism)."""
     return tx.repetition_stats(_t(spark, sf_dir, "documents"), ns=(2, 3))
 
 

@@ -63,16 +63,10 @@ def lloyd_centroids(
     return [[float(v) for v in c] for c in cent]
 
 
-#: implementation switch for `_centroid_dists` — 'arrow' (default: one
-#: vectorized pandas_udf, bit-identical accumulation, ~10x the fold's
-#: throughput at fixture scale) or 'fold' (the pure-JVM higher-order
-#: aggregate — the semantics-defining form; kept selectable for the
-#: bit-parity test and for Arrow-less deployments).
-_CENTROID_DISTS_IMPL = "arrow"
-
-
 def _centroid_dists_fold(emb, centroids: list[list[float]]):
-    """array of per-centroid |x-c|^2 via the dot-product identity
+    """The pure-JVM higher-order fold that defines `_centroid_dists`'
+    semantics, kept as its bit-parity reference: an array of
+    per-centroid |x-c|^2 via the dot-product identity
     x.x + c.c - 2 x.c, sharing ONE x.x term across all centroids (the
     per-centroid form re-evaluated it n_centroids times) and folding
     each c.c to a Python-side literal with the same left-to-right IEEE
@@ -90,8 +84,9 @@ def _centroid_dists_fold(emb, centroids: list[list[float]]):
     return F.array(*dists)
 
 
-def _centroid_dists_arrow(emb, centroids: list[list[float]]):
-    """`_centroid_dists_fold` as ONE vectorized pandas_udf (guide §4.2).
+def _centroid_dists(emb, centroids: list[list[float]]):
+    """Per-centroid squared-L2 distance array: `_centroid_dists_fold` as
+    ONE vectorized pandas_udf.
 
     The higher-order `F.aggregate` fold evaluates INTERPRETED per array
     element (and the codegen'd expansion blows past HugeMethodLimit —
@@ -109,7 +104,7 @@ def _centroid_dists_arrow(emb, centroids: list[list[float]]):
     denormals and ~1e150 magnitudes). If |x|^2 itself overflows to inf
     (elements beyond ~1e154 — no real embedding pipeline), inf - inf
     distances are NaN on both paths but Arrow's nested-array transport
-    surfaces NaN as NULL; pass impl='fold' for such exotic domains.
+    surfaces NaN as NULL, where `_centroid_dists_fold` keeps NaN.
     """
     C = [[float(v) for v in ctr] for ctr in centroids]
     c2s = []
@@ -147,19 +142,6 @@ def _centroid_dists_arrow(emb, centroids: list[list[float]]):
         return pd.Series(vals, index=s.index)
 
     return dists(emb)
-
-
-def _centroid_dists(emb, centroids: list[list[float]], impl: str | None = None):
-    """Per-centroid squared-L2 distance array; `impl` defaults to the
-    module switch (`'arrow'` — vectorized, bit-identical) with `'fold'`
-    the pure-JVM reference form. Both share one x.x term per row and
-    fold c.c to a driver-side literal with identical accumulation."""
-    impl = impl or _CENTROID_DISTS_IMPL
-    if impl == "arrow":
-        return _centroid_dists_arrow(emb, centroids)
-    if impl == "fold":
-        return _centroid_dists_fold(emb, centroids)
-    raise ValueError(f"impl must be 'arrow' or 'fold', got {impl!r}")
 
 
 def brute_force_topk(

@@ -4,9 +4,8 @@ Beyond-reference operators (SURVEY §2.10) over the `documents` table; the
 reference's own TF-IDF pipeline IS a text pipeline on H3 "words"
 (`01_geofraud_clustering.py:380`), so these reuse its algebra. Native
 column expressions throughout, with one deliberate exception:
-`repetition_stats` defaults to an Arrow `mapInPandas` pass (measured
-3.7x the interpreted-HOF native chain, which remains available as
-``impl='native'``); no row-at-a-time Python UDFs anywhere.
+`repetition_stats` is an Arrow `mapInPandas` pass (measured 3.7x an
+interpreted-HOF native chain); no row-at-a-time Python UDFs anywhere.
 """
 
 from __future__ import annotations
@@ -334,20 +333,36 @@ def annotate_filter_reasons(df: DataFrame, rules) -> DataFrame:
     return df.withColumn("reject_reason", reason.otherwise(F.lit(None)))
 
 
-def _repetition_stats_arrow(
-    df: DataFrame, text_col: str, id_col: str, ns: tuple[int, ...]
+def repetition_stats(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    ns: tuple[int, ...] = (2, 3, 4),
 ) -> DataFrame:
-    """Arrow path of `repetition_stats` (see its docstring): one
-    mapInPandas pass producing RAW dup/top ratios; the caller-visible
-    rounding stays Spark's `F.round` so the two impls cannot diverge on
-    rounding semantics. Tokenization replicates `F.split(_, '\\s+')`
-    exactly: Java's \\s is the ASCII class [ \\t\\n\\x0B\\f\\r] and
-    split keeps leading/trailing empty strings at limit -1, which is
-    `re.split(r'\\s+', t, flags=re.ASCII)` verbatim. NULL text behaves
-    like EMPTY text (dup 0.0, top 1.0) — the native chain's `concat_ws`
-    skips nulls, so its shorter-than-n branch turns a null word array
-    into the single empty gram; parity pinned in
-    test_round12_fixes.py."""
+    """Within-document repetition signals (the Gopher/MassiveText rule
+    family): for each n in ``ns``, the fraction of n-gram occurrences
+    that are repeats (``dup_frac_n``) and the share of the single most
+    frequent n-gram (``top_frac_n``). Boilerplate, keyword stuffing and
+    templated spam all light these up long before corpus-level dedup
+    can see them.
+
+    Map-only and single-pass: NO explode, NO shuffle, NO per-gram
+    grouping; documents shorter than n words count as one gram
+    (convention shared with `word_grams`), and NULL text behaves like
+    EMPTY text (dup 0.0, top 1.0).
+
+    One Arrow `mapInPandas` pass builds the grams and counts their
+    multiplicity per document; the RAW ratios go back to Spark, which
+    applies `F.round(_, 4)` (HALF_UP on IEEE doubles). Tokenization
+    replicates `F.split(_, '\\s+')` exactly: Java's \\s is the ASCII
+    class [ \\t\\n\\x0B\\f\\r] and split keeps leading/trailing empty
+    strings at limit -1, which is `re.split(r'\\s+', t, flags=re.ASCII)`
+    verbatim; the whitespace/null edge cases are pinned in
+    test_round12_fixes.py. Catalyst evaluates higher-order-function
+    lambdas interpreted, so an equivalent native sort + run-length fold
+    paid per-element struct allocation: it measured 6.19 s vs 1.68 s
+    (3.7x) for the Arrow pass on 5000 sf0.1 docs under noop forcing.
+    """
     import re
 
     from pyspark.sql import types as T
@@ -406,83 +421,6 @@ def _repetition_stats_arrow(
     return raw.select(F.col(id_field.name), *rounded)
 
 
-def repetition_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ns: tuple[int, ...] = (2, 3, 4),
-    impl: str = "arrow",
-) -> DataFrame:
-    """Within-document repetition signals (the Gopher/MassiveText rule
-    family): for each n in ``ns``, the fraction of n-gram occurrences
-    that are repeats (``dup_frac_n``) and the share of the single most
-    frequent n-gram (``top_frac_n``). Boilerplate, keyword stuffing and
-    templated spam all light these up long before corpus-level dedup
-    can see them.
-
-    Both impls are map-only and single-pass: NO explode, NO shuffle, NO
-    per-gram grouping; documents shorter than n words count as one gram
-    (convention shared with `word_grams`).
-
-    ``impl='arrow'`` (default, r12): one Arrow `mapInPandas` pass —
-    gram building + numpy multiplicity per document, RAW ratios handed
-    back to Spark, which applies the same `F.round(_, 4)` as the native
-    path so the rounding semantics (HALF_UP on identical IEEE doubles)
-    cannot diverge. Tokenization replicates `F.split(_, '\\s+')` exactly
-    (Java-regex ASCII whitespace, leading/trailing empties kept —
-    `re.split(r'\\s+', t, flags=re.ASCII)`); bit-parity with the native
-    path is pinned across the fixture corpus and the whitespace/null
-    edge cases in test_round12_fixes.py. Rationale: Catalyst evaluates
-    higher-order-function lambdas INTERPRETED, so the native run-length
-    fold pays per-element struct allocation — measured 6.19 s vs 1.68 s
-    (3.7x) for the Arrow pass on 5000 sf0.1 docs under noop forcing.
-
-    ``impl='native'`` keeps the pure-JVM chain (zero Python boundary —
-    the right choice when the Python-worker pool is the contended
-    resource): duplicates via ``1 - distinct/total``; the top-gram share
-    via sort + a linear aggregate fold carrying (prev, run, best) struct
-    state — O(L log L) per document.
-    """
-    if impl == "arrow":
-        return _repetition_stats_arrow(df, text_col, id_col, ns)
-    if impl != "native":
-        raise ValueError(f"impl must be 'arrow' or 'native', got {impl!r}")
-    from geoscan_fraud_spark.operators.dedup import word_grams
-
-    cols = [F.col(id_col)]
-    for n in ns:
-        grams = word_grams(F.col(text_col), n)
-        total = F.size(grams)
-        distinct = F.size(F.array_distinct(grams))
-        dup_frac = F.round(
-            (total - distinct).cast("double") / total, 4
-        ).alias(f"dup_frac_{n}")
-        run_state = F.aggregate(
-            F.array_sort(grams),
-            F.struct(
-                F.lit(None).cast("string").alias("prev"),
-                F.lit(0).alias("run"),
-                F.lit(0).alias("best"),
-            ),
-            lambda acc, x: F.struct(
-                x.alias("prev"),
-                F.when(x == acc["prev"], acc["run"] + 1)
-                .otherwise(F.lit(1))
-                .alias("run"),
-                F.greatest(
-                    acc["best"],
-                    F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
-                ).alias("best"),
-            ),
-            lambda acc: acc["best"],
-        )
-        top_frac = F.round(run_state.cast("double") / total, 4).alias(
-            f"top_frac_{n}"
-        )
-        cols += [dup_frac, top_frac]
-    return df.select(*cols)
-
-
 def winnow_shared_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -536,9 +474,8 @@ def token_entropy(
     `repetition_stats` (which sees adjacency, not distribution).
 
     Native one-pass form: H = ln N - (1/N)·Σ c·ln c over token counts c,
-    computed by sorting the token array and folding run lengths (the
-    same sort + run-length trick as `repetition_stats` — map-only, no
-    explode, no shuffle)."""
+    computed by sorting the token array and folding run lengths —
+    map-only, no explode, no shuffle."""
     toks = F.array_sort(F.split(F.col(text_col), r"\s+"))
     n = F.size(toks)
     clogc = F.aggregate(

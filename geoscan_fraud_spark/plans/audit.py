@@ -3,8 +3,8 @@
 At 100 TB the difference between a broadcast join and a shuffled one, or a
 pruned scan and a full one, is the difference between minutes and days.
 These helpers extract the properties that matter from
-`df._jdf.queryExecution()` so tests and tools/audit_plans.py can assert
-them.
+`df._jdf.queryExecution()` so tests and `tools/profile.py plans` can
+assert them.
 """
 
 from __future__ import annotations

@@ -470,18 +470,20 @@ def test_s2_pruned_scan_pandas_pin(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# repetition_stats Arrow path (COVERAGE §2.9 r13 candidate, landed r12)
+# repetition_stats tokenization edges, pinned to the retired native chain
 # ---------------------------------------------------------------------------
 
 
 def test_repetition_stats_arrow_bit_parity_with_native(spark):
-    """The Arrow default must be BIT-identical to the native HOF chain on
+    """The Arrow pass must reproduce, bit for bit, what the retired native
+    HOF chain (`F.split(_, '\\s+')` + sort + run-length fold) returned on
     every tokenization edge the two could disagree on: leading/trailing
     whitespace (Java split keeps the empty strings at limit -1), runs of
-    mixed ASCII whitespace, unicode whitespace (Java \\s is ASCII-only —
-    NBSP is a token character, not a separator), shorter-than-n docs,
-    single-token docs, empty string, and NULL text (which the native
-    chain's null-skipping concat_ws treats as EMPTY text)."""
+    mixed ASCII whitespace incl. \\x0b and \\f, unicode whitespace (Java
+    \\s is ASCII-only — NBSP is a token character, not a separator),
+    shorter-than-n docs, single-token docs, empty string, and NULL text
+    (which the native chain's null-skipping concat_ws treated as EMPTY
+    text). The expected tuples are the native chain's output."""
     from geoscan_fraud_spark.operators.text import repetition_stats
 
     rows = [
@@ -489,7 +491,7 @@ def test_repetition_stats_arrow_bit_parity_with_native(spark):
         (1, " leading space"),
         (2, "trailing space "),
         (3, "tab\tand\nnewline\x0bvt\fff\rcr mix"),
-        (4, "nbsp is one token"),
+        (4, "nbsp\u00a0is one token"),
         (5, "x"),
         (6, ""),
         (7, None),
@@ -497,29 +499,21 @@ def test_repetition_stats_arrow_bit_parity_with_native(spark):
         (9, "  double  spaces  everywhere  "),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {r["doc_id"]: tuple(r) for r in repetition_stats(df).collect()}
-    n = {
-        r["doc_id"]: tuple(r)
-        for r in repetition_stats(df, impl="native").collect()
+    got = {r["doc_id"]: tuple(r) for r in repetition_stats(df).collect()}
+    # (doc_id, dup_frac_2, top_frac_2, dup_frac_3, top_frac_3, dup_frac_4,
+    #  top_frac_4)
+    assert got == {
+        0: (0, 0.6, 0.6, 0.5, 0.5, 0.3333, 0.6667),
+        1: (1, 0.0, 0.5, 0.0, 1.0, 0.0, 1.0),
+        2: (2, 0.0, 0.5, 0.0, 1.0, 0.0, 1.0),
+        3: (3, 0.0, 0.1667, 0.0, 0.2, 0.0, 0.25),
+        4: (4, 0.0, 0.5, 0.0, 1.0, 0.0, 1.0),
+        5: (5, 0.0, 1.0, 0.0, 1.0, 0.0, 1.0),
+        6: (6, 0.0, 1.0, 0.0, 1.0, 0.0, 1.0),
+        7: (7, 0.0, 1.0, 0.0, 1.0, 0.0, 1.0),
+        8: (8, 0.6667, 1.0, 0.5, 1.0, 0.0, 1.0),
+        9: (9, 0.0, 0.25, 0.0, 0.3333, 0.0, 0.5),
     }
-    assert a == n
-    # null text == empty text: one empty gram -> dup 0.0, top 1.0
-    assert a[7][1:] == (0.0, 1.0, 0.0, 1.0, 0.0, 1.0)
-
-
-def test_repetition_stats_arrow_parity_on_fixture(spark, sf_dir):
-    """Corpus-level parity: the gate entry `text_repetition` (and the
-    streaming quality gate) must hash identically through either impl."""
-    from geoscan_fraud_spark.operators.text import repetition_stats
-    from geoscan_fraud_spark.sources.io import load_fixture
-
-    docs = load_fixture(spark, sf_dir, "documents").select("doc_id", "text")
-    a = sorted(tuple(r) for r in repetition_stats(docs, ns=(2, 3)).collect())
-    n = sorted(
-        tuple(r)
-        for r in repetition_stats(docs, ns=(2, 3), impl="native").collect()
-    )
-    assert a == n
 
 
 # ---------------------------------------------------------------------------
@@ -618,7 +612,7 @@ def test_snt_fixture_exercises_state_branches(sf_dir):
 
 
 def test_centroid_dists_arrow_bit_parity(spark, sf_dir):
-    """The vectorized `_centroid_dists_arrow` kernel must reproduce the
+    """The vectorized `_centroid_dists` kernel must reproduce the
     higher-order fold's distances BIT-FOR-BIT (same left-to-right IEEE
     accumulation), on the fixture embeddings AND on adversarial values
     (denormals, huge/tiny magnitudes, exact ties), including NULL rows.
@@ -635,13 +629,12 @@ def test_centroid_dists_arrow_bit_parity(spark, sf_dir):
     cent = [[float(v) for v in rng.normal(scale=s, size=dim)]
             for s in (1.0, 1e-3, 1e3, 1.0)]
 
-    def dists(impl, df, col="embedding"):
-        rows = df.select(
-            "vec_id", sim._centroid_dists(F.col(col), cent, impl=impl).alias("d")
-        ).collect()
+    def dists(kernel, df, col="embedding"):
+        rows = df.select("vec_id", kernel(F.col(col), cent).alias("d")).collect()
         return {r.vec_id: r.d for r in rows}
 
-    a, b = dists("fold", e), dists("arrow", e)
+    fold, arrow = sim._centroid_dists_fold, sim._centroid_dists
+    a, b = dists(fold, e), dists(arrow, e)
     assert set(a) == set(b)
     for k in a:
         for x, y in zip(a[k], b[k]):
@@ -666,7 +659,7 @@ def test_centroid_dists_arrow_bit_parity(spark, sf_dir):
         ],
         schema,
     )
-    a, b = dists("fold", adv), dists("arrow", adv)
+    a, b = dists(fold, adv), dists(arrow, adv)
     # a NULL embedding yields an array of k NULL distances on both paths
     assert list(a[3]) == [None] * len(cent)
     assert list(b[3]) == [None] * len(cent)
@@ -685,6 +678,10 @@ def test_centroid_dists_arrow_bit_parity(spark, sf_dir):
 
 
 def test_ingest_gate_skips_unreferenced_stat_passes(spark, tmp_path, monkeypatch):
+    # imported before the patch: the sink imports `pipelines` lazily, and
+    # a first import under the patch would bind the poisoned function into
+    # it for every later test (test_round6_ops' corpus pipeline)
+    import geoscan_fraud_spark.operators.pipelines  # noqa: F401
     import geoscan_fraud_spark.operators.text as text_mod
     import geoscan_fraud_spark.streaming.scoring as sc
     from geoscan_fraud_spark.operators.incremental import minhash_index

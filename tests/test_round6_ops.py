@@ -338,15 +338,11 @@ def test_repetition_stats_hand_cases(spark):
     assert got[3].dup_frac_2 == 0.0 and got[3].top_frac_2 == 1.0
 
 
-@pytest.mark.parametrize("impl", ["arrow", "native"])
-def test_repetition_stats_matches_python_reference(spark, docs, impl):
+def test_repetition_stats_matches_python_reference(spark, docs):
     from geoscan_fraud_spark.operators.text import repetition_stats
 
     sample = docs.limit(100)
-    got = {
-        r.doc_id: r
-        for r in repetition_stats(sample, ns=(2, 3), impl=impl).collect()
-    }
+    got = {r.doc_id: r for r in repetition_stats(sample, ns=(2, 3)).collect()}
     for r in sample.collect():
         for n in (2, 3):
             dup, top = _py_repetition(r.text, n)
@@ -356,16 +352,10 @@ def test_repetition_stats_matches_python_reference(spark, docs, impl):
 
 def test_repetition_stats_is_map_only(spark, docs):
     from geoscan_fraud_spark.operators.text import repetition_stats
-    from geoscan_fraud_spark.plans.audit import plan_summary
+    from geoscan_fraud_spark.plans.audit import formatted_plan, plan_summary
 
-    # native: pure JVM — zero shuffles, zero Python boundaries
-    s = plan_summary(repetition_stats(docs, impl="native"))
-    assert s["shuffles"] == 0
-    assert s["python_eval"] == 0
-    # arrow (default, r12): still map-only — zero shuffles, an Arrow
-    # batch boundary (MapInPandas), never row-at-a-time Python
-    from geoscan_fraud_spark.plans.audit import formatted_plan
-
+    # map-only — zero shuffles, an Arrow batch boundary (MapInPandas),
+    # never row-at-a-time Python
     arrow = repetition_stats(docs)
     s = plan_summary(arrow)
     assert s["shuffles"] == 0

@@ -10,10 +10,12 @@ use the engine's tuned session instead.
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+# not tools/: its profile.py would shadow the stdlib one pyspark imports
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 from geoscan_fraud_spark.testing.oracle import compare_query, duckdb_connection
 

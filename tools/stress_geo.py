@@ -18,10 +18,12 @@ at a coarser cell / lower cap — exactly the reference's skew answer
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# not tools/: its profile.py would shadow the stdlib one pyspark imports
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main():

@@ -76,12 +76,14 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+# not tools/: its profile.py would shadow the stdlib one pyspark imports
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 FLAG_SLOPE = 1.35
 #: skewed wall / uniform wall at the same rung above this flags
