@@ -609,11 +609,10 @@ def bench_bm25_index_query_tombstoned(spark, sf_dir):
     import tempfile
 
     from geoscan_fraud_spark.operators.retrieval import (
-        text_index_delete,
         text_index_query,
         text_index_write,
     )
-    from geoscan_fraud_spark.sources.io import load_fixture
+    from geoscan_fraud_spark.sources.io import index_delete, load_fixture
     from pyspark.sql import functions as F
 
     key = "bm25:" + sf_dir
@@ -623,7 +622,7 @@ def bench_bm25_index_query_tombstoned(spark, sf_dir):
             "doc_id", "text"
         )
         text_index_write(docs, path, n_buckets=32)
-        text_index_delete(
+        index_delete(
             spark, path, docs.filter(F.col("doc_id") % 10 == 0).select(
                 "doc_id"
             )
@@ -641,11 +640,10 @@ def bench_ivf_index_query_tombstoned(spark, sf_dir):
 
     from geoscan_fraud_spark.harness_pipeline import _ivf_centroids
     from geoscan_fraud_spark.operators.similarity import (
-        ivf_index_delete,
         ivf_index_query,
         ivf_index_write,
     )
-    from geoscan_fraud_spark.sources.io import load_fixture
+    from geoscan_fraud_spark.sources.io import index_delete, load_fixture
     from pyspark.sql import functions as F
 
     key = "ivf:" + sf_dir
@@ -655,7 +653,7 @@ def bench_ivf_index_query_tombstoned(spark, sf_dir):
         ivf_index_write(
             e, path, centroids=_ivf_centroids("/root/testdata/sf0.01")
         )
-        ivf_index_delete(
+        index_delete(
             spark, path, e.filter(F.col("vec_id") % 10 == 0).select(
                 "vec_id"
             )

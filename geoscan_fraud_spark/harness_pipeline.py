@@ -512,7 +512,7 @@ def ann_ivf_incremental_query(spark, sf_dir):
     pin (VERDICT r09 #6). Build `ivf_index_write` over the even vec_ids
     (the fixed sf0.01 Lloyd quantizer, so probes replay in SQL), append
     the odd half against the frozen centroids, tombstone every
-    ``vec_id % 7 == 3`` (`ivf_index_delete`), snapshot the generation-0
+    ``vec_id % 7 == 3`` (`index_delete`), snapshot the generation-0
     metadata, `ivf_index_compact` — tombstones applied physically, rows
     recomputed, published as generation 1 in one atomic pointer flip —
     then query TWICE: the live read (post-flip gen 1) and the STALE read
@@ -539,11 +539,10 @@ def ann_ivf_incremental_query(spark, sf_dir):
     from geoscan_fraud_spark.operators.similarity import (
         ivf_index_append,
         ivf_index_compact,
-        ivf_index_delete,
         ivf_index_query,
         ivf_index_write,
     )
-    from geoscan_fraud_spark.sources.io import read_index_meta
+    from geoscan_fraud_spark.sources.io import index_delete, read_index_meta
 
     e = _t(spark, sf_dir, "embeddings")
     cent = _ivf_centroids("/root/testdata/sf0.01")
@@ -553,7 +552,7 @@ def ann_ivf_incremental_query(spark, sf_dir):
         pq_m=8, pq_k=16, pq_residual=True,
     )
     ivf_index_append(e.filter(F.col("vec_id") % 2 == 1), path)
-    ivf_index_delete(
+    index_delete(
         spark, path, e.filter(F.col("vec_id") % 7 == 3).select("vec_id")
     )
     import os as _os
@@ -1902,7 +1901,7 @@ def bm25_incremental_query(spark, sf_dir):
     """Serving-path BM25 over the FULL index lifecycle (r09 rotation,
     widened this round to gate the MVCC machinery too): build
     `text_index_write` over the even doc_ids, `text_index_append` the
-    odd half, tombstone every ``doc_id % 7 == 3`` (`text_index_delete`),
+    odd half, tombstone every ``doc_id % 7 == 3`` (`index_delete`),
     `text_index_compact` — which applies the tombstones physically,
     rebuilds the df log from ground truth, recomputes the stats, and
     publishes it all as a NEW generation with one atomic pointer flip —
@@ -1918,16 +1917,16 @@ def bm25_incremental_query(spark, sf_dir):
     from geoscan_fraud_spark.operators.retrieval import (
         text_index_append,
         text_index_compact,
-        text_index_delete,
         text_index_query,
         text_index_write,
     )
+    from geoscan_fraud_spark.sources.io import index_delete
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     path = tempfile.mkdtemp(prefix="bm25_inc_entry_") + "/idx"
     text_index_write(docs.filter(F.col("doc_id") % 2 == 0), path, n_buckets=32)
     text_index_append(docs.filter(F.col("doc_id") % 2 == 1), path)
-    text_index_delete(
+    index_delete(
         spark, path, docs.filter(F.col("doc_id") % 7 == 3).select("doc_id")
     )
     text_index_compact(spark, path)
@@ -2073,21 +2072,20 @@ def hybrid_incremental_query(spark, sf_dir):
         hybrid_search,
         text_index_append,
         text_index_compact,
-        text_index_delete,
         text_index_write,
     )
     from geoscan_fraud_spark.operators.similarity import (
         ivf_index_append,
         ivf_index_compact,
-        ivf_index_delete,
         ivf_index_write,
     )
+    from geoscan_fraud_spark.sources.io import index_delete
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     tpath = tempfile.mkdtemp(prefix="hybrid_inc_bm25_") + "/idx"
     text_index_write(docs.filter(F.col("doc_id") % 2 == 0), tpath, n_buckets=32)
     text_index_append(docs.filter(F.col("doc_id") % 2 == 1), tpath)
-    text_index_delete(
+    index_delete(
         spark, tpath, docs.filter(F.col("doc_id") % 7 == 3).select("doc_id")
     )
     text_index_compact(spark, tpath)
@@ -2100,7 +2098,7 @@ def hybrid_incremental_query(spark, sf_dir):
         pq_m=8, pq_k=16, pq_residual=True,
     )
     ivf_index_append(e.filter(F.col("vec_id") % 2 == 1), apath)
-    ivf_index_delete(
+    index_delete(
         spark, apath, e.filter(F.col("vec_id") % 7 == 3).select("vec_id")
     )
     ivf_index_compact(spark, apath)

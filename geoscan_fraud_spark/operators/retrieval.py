@@ -54,13 +54,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geoscan_fraud_spark.sources.io import (
+    anti_tombstones,
     atomic_write_json,
+    fold_generation,
     gen_dir,
-    generation_findings,
-    index_vacuum,
     index_writer_lock,
-    list_index_generations,
-    mark_retired_generations,
+    next_generation,
+    publish_generation,
     read_index_meta,
 )
 
@@ -278,16 +278,13 @@ def text_index_write(
     ``postings.gN``/``terms.gN`` beside them and flips the metadata
     pointer in one atomic commit (first build = generation 0, the bare
     layout). Prior tombstones belong to the replaced snapshot and do
-    not carry over; stale generations remain until `text_index_vacuum`.
+    not carry over; stale generations remain until `index_vacuum`.
     """
     os.makedirs(path, exist_ok=True)
     with index_writer_lock(path, "text_index_write"):
-        prior = list_index_generations(path, _TEXT_GEN_FAMILIES)
-        prior_gens = [g for gs in prior.values() for g in gs]
         cursor = None
         try:
             prior_meta = read_index_meta(os.path.join(path, "stats.json"))
-            prior_gens.append(int(prior_meta.get("gen", 0)))
             # a rebuild over a streaming-fed index must carry the stream
             # cursor (like ivf_index_rebuild): dropping it would let a
             # crash-window replay of an already-committed batch pass the
@@ -299,14 +296,14 @@ def text_index_write(
             if "last_stream_batch" in prior_meta:
                 cursor = int(prior_meta["last_stream_batch"])
         except (FileNotFoundError, ValueError):
-            pass  # no or torn metadata — a rebuild is exactly the cure
-        g_new = (max(prior_gens) + 1) if prior_gens else 0
+            prior_meta = None  # no or torn metadata — a rebuild is the cure
+        g_new = next_generation(path, prior_meta, _TEXT_GEN_FAMILIES)
         meta_stub = {"gen": g_new}
         postings_dir = gen_dir(path, "postings", meta_stub)
         terms_dir = gen_dir(path, "terms", meta_stub)
 
         # src_batch stamps each posting's ingest generation (-1 =
-        # build), enabling `text_index_expire`; format 2 = the column
+        # build), enabling `index_expire`; format 2 = the column
         # is in EVERY postings file (no mixed schemas).
         # NOTE (r12): the obvious job cut here — riding the global
         # counters on the postings write via `Dataset.observe` — is
@@ -431,8 +428,7 @@ def text_index_write(
         }
         if cursor is not None:
             stats["last_stream_batch"] = cursor
-        atomic_write_json(os.path.join(path, "stats.json"), stats)
-        mark_retired_generations(path, _TEXT_GEN_FAMILIES, g_new)
+        publish_generation(path, "stats.json", stats, _TEXT_GEN_FAMILIES)
         return n_buckets
 
 
@@ -611,47 +607,7 @@ def text_index_append(
         }
 
 
-def text_index_delete(spark, path: str, doc_ids) -> None:
-    """Logical delete (tombstones) for a persisted BM25 index — the
-    takedown path. ``doc_ids`` is a one-column DataFrame (or a small
-    Python list). Appends to ``path/tombstones``; deleted docs stop
-    being RETURNED immediately (`text_index_query` anti-joins postings),
-    while df/n_docs/avgdl keep their pre-delete values until
-    `text_index_compact` — exactly Lucene's delete-then-merge scoring
-    semantics (deleted docs still dampen idf until segments merge).
-    Compaction applies tombstones physically, rebuilds df from the
-    surviving postings, and subtracts the deleted docs' (count, dl)
-    from the stats counters — including deleted ZERO-TOKEN docs, whose
-    ids the ``empty_docs`` list tracks precisely because postings
-    cannot witness them (VERDICT r09 #5 closed the old
-    n_empty-persists caveat; a legacy index without ``empties_tracked``
-    keeps the conservative carry-forward until
-    `text_index_upgrade_empties` migrates it).
-
-    Tombstones are generation-scoped and the delete takes the writer
-    lock: a takedown landing in a snapshot that a concurrent compaction
-    is about to replace would be silently vacuumed away with it — the
-    lock makes that a loud refusal instead (retry after maintenance)."""
-    from geoscan_fraud_spark.sources.io import one_column_ids
-
-    doc_ids = one_column_ids(spark, doc_ids, "doc_id", "text_index_delete")
-    with index_writer_lock(path, "text_index_delete"):
-        meta = read_index_meta(os.path.join(path, "stats.json"))
-        doc_ids.write.mode("append").parquet(
-            gen_dir(path, "tombstones", meta)
-        )
-
-
-def _anti_doc_tombstones(spark, tpath: str, postings: DataFrame) -> DataFrame:
-    """Hide tombstoned docs; ``tpath`` is the generation-resolved
-    tombstones dir (callers pass ``gen_dir(path, "tombstones", meta)``)."""
-    if not os.path.isdir(tpath):
-        return postings
-    dead = spark.read.parquet(tpath).toDF("doc_id")
-    return postings.join(dead, "doc_id", "left_anti")
-
-
-def text_index_compact(spark, path: str, expire_below: int | None = None) -> int:
+def text_index_compact(spark, path: str) -> int:
     """Maintenance for an appended `text_index_write` index: fold
     postings back to one file per bucket directory and collapse the
     sum-mergeable df log to one row per (bucket, term). Single-writer.
@@ -667,12 +623,12 @@ def text_index_compact(spark, path: str, expire_below: int | None = None) -> int
     old snapshot (its files are never touched), a query starting after
     it sees the compacted one. A crash ANYWHERE before the flip leaves
     the live index byte-identical (the half-written new generation is
-    an unpublished orphan — fsck names it, `text_index_vacuum` removes
+    an unpublished orphan — fsck names it, `index_vacuum` removes
     it, and a re-run simply publishes the next number). There is no
     rows-missing window at all — strictly stronger than the previous
     rename-swap, whose post-swap/pre-stats crash needed the idempotent
     recompute to heal. Stale generations hold the pre-compaction
-    snapshot (and its tombstones) until `text_index_vacuum`.
+    snapshot (and its tombstones) until `index_vacuum`.
 
     Doubles as the crash healer for `text_index_ingest_sink`: postings
     are deduped with full-row distinct() — a (doc_id, term) posting is
@@ -684,23 +640,21 @@ def text_index_compact(spark, path: str, expire_below: int | None = None) -> int
     RECOMPUTED from the surviving postings (count/sum over the distinct
     (doc_id, dl) pairs, plus the ``n_empty`` zero-token-doc counter).
 
-    ``expire_below`` (format-2 indexes): also drop every doc whose
-    ingest generation is below the cutoff — retention for
-    freshness-bounded corpora. Build rows (``src_batch = -1``) never
-    expire (rebuild the index over a newer backfill to age them). Docs
-    both tombstoned AND expired come off the stats exactly once (the
-    recompute cannot double-subtract by construction).
-
     Zero-token docs: for an ``empties_tracked`` index the ``empty_docs``
     list is folded exactly like the postings — distinct (replay heal),
     expire filter, anti-join tombstones — and ``n_empty`` is RECOMPUTED
     from the survivors, so a tombstoned or expired empty doc comes off
-    n_docs exactly (VERDICT r09 #5; the old caveat — "its +1 persists"
-    — is closed). A legacy index without the flag keeps the
+    n_docs exactly. A legacy index without the flag keeps the
     conservative carry-forward of its counter until
-    `text_index_upgrade_empties` backfills the list and flips the flag
-    (r11); indexes written before ``n_empty`` existed treat it as 0, so
-    their empty docs (if any) drop out of n_docs at first compaction."""
+    `text_index_upgrade_empties` backfills the list and flips the flag;
+    indexes written before ``n_empty`` existed treat it as 0, so their
+    empty docs (if any) drop out of n_docs at first compaction."""
+    return _text_compact(spark, path, None)
+
+
+def _text_compact(spark, path: str, expire_below: int | None) -> int:
+    """`text_index_compact`, optionally also dropping every doc whose
+    ingest generation is below ``expire_below`` (`index_expire`)."""
     stats_path = os.path.join(path, "stats.json")
     with index_writer_lock(path, "text_index_compact"):
         # refuse over a PRE-GENERATION crash's rename-swap leftovers:
@@ -714,46 +668,12 @@ def text_index_compact(spark, path: str, expire_below: int | None = None) -> int
                         f"mid-swap; recover it manually before re-running"
                     )
         meta = read_index_meta(stats_path)
-        if expire_below is not None and int(meta.get("format", 1)) < 2:
-            raise ValueError(
-                "expire_below needs a format-2 index (src_batch-stamped "
-                "postings); rebuild this legacy index first"
-            )
-        expired = (
-            (F.col("src_batch") != -1) & (F.col("src_batch") < expire_below)
-            if expire_below is not None
-            else F.lit(False)
+        new_meta = dict(meta, gen=next_generation(path, meta, _TEXT_GEN_FAMILIES))
+        new_postings = fold_generation(
+            spark, path, meta, new_meta["gen"], "postings", expire_below,
+            "doc_id", "bucket",
         )
-        # next generation = one past EVERYTHING on disk, so a crashed
-        # run's orphan is never half-reused
-        on_disk = list_index_generations(path, _TEXT_GEN_FAMILIES)
-        g_new = (
-            max(
-                [int(meta.get("gen", 0))]
-                + [g for gs in on_disk.values() for g in gs]
-            )
-            + 1
-        )
-        new_meta = dict(meta, gen=g_new)
-        new_postings = gen_dir(path, "postings", new_meta)
         new_terms = gen_dir(path, "terms", new_meta)
-
-        folded = _anti_doc_tombstones(
-            spark,
-            gen_dir(path, "tombstones", meta),
-            spark.read.parquet(gen_dir(path, "postings", meta))
-            .distinct()
-            .filter(~expired),
-        )
-        # hash repartition on the partition column: each bucket lands in
-        # exactly one task — one file per directory, the optimal serving
-        # layout (parquet is splittable, so no downstream fan-out cost)
-        (
-            folded.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(new_postings)
-        )
         (
             spark.read.parquet(new_postings)
             .groupBy("bucket", "term")
@@ -775,27 +695,16 @@ def text_index_compact(spark, path: str, expire_below: int | None = None) -> int
         )
         n_empty = int(new_meta.get("n_empty", 0))
         if meta.get("empties_tracked"):
-            # fold the zero-token doc list with the SAME pipeline as the
-            # postings (distinct replay heal -> expire -> anti-tombstone)
-            # and recompute n_empty from the survivors — the exact
-            # accounting postings cannot provide (VERDICT r09 #5)
-            old_empty = gen_dir(path, "empty_docs", meta)
-            survivors = None
-            if os.path.isdir(old_empty):
-                survivors = _anti_doc_tombstones(
-                    spark,
-                    gen_dir(path, "tombstones", meta),
-                    spark.read.parquet(old_empty)
-                    .distinct()
-                    .filter(~expired),
+            # the zero-token doc list folds through the SAME pipeline
+            # as the postings, and n_empty is recomputed from the
+            # survivors — the exact accounting postings cannot provide
+            n_empty = 0
+            if os.path.isdir(gen_dir(path, "empty_docs", meta)):
+                new_empty = fold_generation(
+                    spark, path, meta, new_meta["gen"], "empty_docs",
+                    expire_below, "doc_id", None,
                 )
-                n_empty = survivors.count()
-            else:
-                n_empty = 0
-            if n_empty:
-                survivors.coalesce(1).write.mode("overwrite").parquet(
-                    gen_dir(path, "empty_docs", new_meta)
-                )
+                n_empty = spark.read.parquet(new_empty).count()
             new_meta["n_empty"] = n_empty
         new_meta["n_docs"] = int(n_live) + n_empty
         new_meta["total_dl"] = int(dl_live)
@@ -805,8 +714,7 @@ def text_index_compact(spark, path: str, expire_below: int | None = None) -> int
             else 0.0
         )
         # THE commit: stats + generation pointer in one atomic rename
-        atomic_write_json(stats_path, new_meta)
-        mark_retired_generations(path, _TEXT_GEN_FAMILIES, g_new)
+        publish_generation(path, "stats.json", new_meta, _TEXT_GEN_FAMILIES)
         n = 0
         for d in (new_postings, new_terms):
             for _root, _dirs, files in os.walk(d):
@@ -843,8 +751,8 @@ def text_index_upgrade_empties(
 
     ``strict=False`` reports ``{"upgraded": False, "needs_corpus":
     True}`` instead of raising when the corpus is required but absent —
-    how `text_index_maintain` folds the free half of this migration
-    into the runbook. Single-writer (writer lock); idempotent (an
+    how `index_maintain` folds the free half of this migration into
+    the runbook. Single-writer (writer lock); idempotent (an
     already-tracked index is a no-op)."""
     stats_path = os.path.join(path, "stats.json")
     with index_writer_lock(path, "text_index_upgrade_empties"):
@@ -860,7 +768,7 @@ def text_index_upgrade_empties(
             raise ValueError(
                 f"{path}: postings hold {n_posting_docs} distinct docs but "
                 f"stats.json records n_docs={meta['n_docs']} — the index is "
-                f"inconsistent (run text_index_fsck); refusing to upgrade"
+                f"inconsistent (run index_fsck); refusing to upgrade"
             )
         if implied == 0:
             meta["n_empty"] = 0
@@ -915,151 +823,27 @@ def text_index_upgrade_empties(
         return {"upgraded": True, "n_empty": implied}
 
 
-def text_index_expire(spark, path: str, min_src_batch: int) -> int:
-    """Retention for a format-2 BM25 index: physically drop every doc
-    whose ingest generation is older than ``min_src_batch`` — the
-    lexical `ivf_index_expire`. Runs as a full compaction (replay
-    dedup + tombstones + df rebuild + exact stats subtraction)."""
-    return text_index_compact(spark, path, expire_below=min_src_batch)
+def _maintain_empties(spark, path: str) -> dict:
+    """`index_maintain`'s BM25-only step: the free half of the legacy
+    ``empties_tracked`` upgrade. When the index provably holds no empty
+    docs the flag flips in place; otherwise the report names the
+    corpus-requiring migration (`text_index_upgrade_empties(corpus=...)`)
+    without failing the runbook."""
+    if read_index_meta(os.path.join(path, "stats.json")).get("empties_tracked"):
+        return {}
+    return {"empties_upgrade": text_index_upgrade_empties(spark, path, strict=False)}
 
 
-def text_index_vacuum(path: str, min_age_sec: float = 0.0) -> list:
-    """Remove generations the stats.json pointer no longer references —
-    stale pre-compaction snapshots (kept so in-flight readers finish
-    against complete data) and unpublished orphans from a crashed
-    maintenance run. Returns the removed directory names.
-    ``min_age_sec`` mechanizes the grace period: generations younger
-    than it are skipped, so a scheduled vacuum(min_age_sec = 2x the
-    longest query) can never delete files under an in-flight straggler
-    (the Delta VACUUM contract — see `sources.io.index_vacuum`)."""
-    return index_vacuum(
-        path, "stats.json", _TEXT_GEN_FAMILIES, min_age_sec=min_age_sec
-    )
-
-
-def text_index_maintain(
-    spark,
-    path: str,
-    compact_after: int = 64,
-    vacuum_min_age_sec: float = 0.0,
-) -> dict:
-    """One-call ops runbook for a persisted BM25 index (VERDICT r09 #2):
-    heal → compact-if-needed → vacuum → verify. `text_index_fsck`
-    reports; this ACTS — a crashed metadata commit, a dead writer's
-    lock, accreted append files, pending takedowns, and retired/orphaned
-    generations all return to clean in one call.
-
-    1. `sources.io.heal_index_artifacts` — remove an orphaned
-       ``stats.json.tmp``; reclaim a provably-dead same-host writer
-       lock (a live/foreign holder is left to refuse loudly below);
-    2. `text_index_compact` when the live generation is under pressure:
-       MAX data files in any one bucket directory above
-       ``compact_after`` (the `store_fsck` pressure idea applied to the
-       serving layout — every query pays the probed buckets' file
-       listing/footer costs; per-directory rather than total, so the
-       metric settles to 1 after the fold and maintain is idempotent)
-       OR pending tombstones (a maintain pass should land takedowns
-       physically);
-    3. `text_index_vacuum(vacuum_min_age_sec)` — drop retired/orphaned
-       generations past the grace period (retire-stamped, so a fresh
-       flip always survives the grace window);
-    4. `text_index_fsck` — the post-state, status lifted to top level.
-
-    Returns ``{"healed", "compacted", "vacuumed", "fsck", "status"}``.
-    Single-writer like every maintenance op (steps 2-3 take the writer
-    lock); schedule it between ingest windows, or let
-    `streaming/scoring.prepared_serving_sink(maintain_every_n=...)`
-    run it on cadence."""
-    from geoscan_fraud_spark.sources.io import (
-        heal_index_artifacts,
-        serving_layout_pressure,
-    )
-
-    report: dict = {"healed": heal_index_artifacts(path, "stats.json")}
-    meta = read_index_meta(os.path.join(path, "stats.json"))
-    if not meta.get("empties_tracked"):
-        # the free half of the legacy upgrade (VERDICT r10 #5): when the
-        # index provably holds no empty docs the flag flips in place;
-        # otherwise the report names the corpus-requiring migration
-        # (`text_index_upgrade_empties(corpus=...)`) without failing the
-        # runbook
-        report["empties_upgrade"] = text_index_upgrade_empties(
-            spark, path, strict=False
-        )
-        meta = read_index_meta(os.path.join(path, "stats.json"))
-    pressure = serving_layout_pressure(gen_dir(path, "postings", meta))
-    tombs = os.path.isdir(gen_dir(path, "tombstones", meta))
-    report["compacted"] = pressure > compact_after or tombs
-    if report["compacted"]:
-        text_index_compact(spark, path)
-    report["vacuumed"] = text_index_vacuum(
-        path, min_age_sec=vacuum_min_age_sec
-    )
-    report["fsck"] = text_index_fsck(spark, path)
-    report["status"] = report["fsck"]["status"]
-    return report
-
-
-def text_index_fsck(spark, path: str) -> dict:
-    """Ops doctor for a persisted BM25 index — the read-only health
-    check that closes the lifecycle loop (build → append → delete →
-    compact → expire all have tests; this is what an operator RUNS when
-    something looks off). Returns::
-
-        {"status": "ok" | "attention", "findings": [str, ...],
-         "meta": {...}, "measured": {...}}
-
-    Checks, cheapest first:
-
-    * filesystem artifacts (`index_artifact_findings`): stale writer
-      lock, orphaned metadata ``.tmp``, crashed-swap leftovers;
-    * metadata readability (a torn pre-atomic stats.json reports as a
-      finding instead of raising);
-    * duplicate postings rows (count vs full-row distinct — pending
-      crash-replay heal, `text_index_compact` removes them);
-    * counter drift: n_docs/total_dl measured from the distinct
-      (doc_id, dl) pairs (+ the n_empty counter) vs the stats.json
-      values — drift beyond pending tombstones means a lost update
-      (e.g. pre-lock concurrent appends) and warrants a compaction;
-    * df-log consistency: the summed df log vs the distinct
-      (term, doc_id) posting count (over-count = replayed appends,
-      healed by compaction).
-
-    Pending tombstones are reported (deleted docs still inside the
-    measured counts by design — Lucene delete-then-merge). Three
-    column-pruned aggregates over the postings + one over the df log;
-    run it at maintenance cadence, not per query."""
-    from geoscan_fraud_spark.sources.io import index_artifact_findings
-
-    findings = index_artifact_findings(path, "stats.json", ["postings", "terms"])
-    report: dict = {"meta": None, "measured": {}}
-    try:
-        meta = read_index_meta(os.path.join(path, "stats.json"))
-        report["meta"] = meta
-    except ValueError as e:
-        findings.append(str(e))
-        report["status"] = "attention"
-        report["findings"] = findings
-        return report
-
-    # generation adjudication: orphans (crashed maintenance, never
-    # published) are findings; stale pre-flip snapshots pending vacuum
-    # are normal operation and report informationally
-    gen_f, report["generations"] = generation_findings(
-        path, meta, _TEXT_GEN_FAMILIES
-    )
-    findings.extend(gen_f)
-
-    p = spark.read.parquet(gen_dir(path, "postings", meta))
-    n_rows, n_distinct = p.select(
-        F.count(F.lit(1)),
-        F.count_distinct(*[F.col(c) for c in p.columns]),
-    ).first()
-    if n_rows != n_distinct:
-        findings.append(
-            f"{n_rows - n_distinct} duplicate posting rows (crash-window "
-            f"replay pending heal) — run text_index_compact"
-        )
+def _text_fsck_checks(spark, path: str, meta: dict, p: DataFrame, _n_distinct: int):
+    """`index_fsck`'s BM25 checks over the live postings ``p``: counter
+    drift — n_docs/total_dl measured from the distinct (doc_id, dl)
+    pairs (+ the n_empty counter) vs the stats.json values; beyond
+    pending tombstones (deleted docs stay inside the counts until
+    compaction, Lucene delete-then-merge) that means a lost update —
+    and df-log consistency: the summed df log vs the distinct
+    (term, doc_id) posting count (over-count = replayed appends, healed
+    by compaction). Returns ``(measured, findings)``."""
+    findings = []
     n_live, dl_live = (
         p.select("doc_id", "dl")
         .distinct()
@@ -1068,16 +852,6 @@ def text_index_fsck(spark, path: str) -> dict:
     )
     measured_docs = int(n_live) + int(meta.get("n_empty", 0))
     measured_dl = int(dl_live)
-    report["measured"] = {"n_docs": measured_docs, "total_dl": measured_dl}
-
-    tpath = gen_dir(path, "tombstones", meta)
-    n_tomb = 0
-    if os.path.isdir(tpath):
-        n_tomb = spark.read.parquet(tpath).distinct().count()
-        findings.append(
-            f"{n_tomb} pending tombstones (still idf-damping until "
-            f"text_index_compact applies them)"
-        )
     if measured_docs != int(meta["n_docs"]) or measured_dl != int(
         meta.get("total_dl", measured_dl)
     ):
@@ -1101,10 +875,7 @@ def text_index_fsck(spark, path: str) -> dict:
             f"(term, doc_id) pairs — replayed appends or pending deletes; "
             f"text_index_compact rebuilds df from ground truth"
         )
-
-    report["status"] = "ok" if not findings else "attention"
-    report["findings"] = findings
-    return report
+    return {"n_docs": measured_docs, "total_dl": measured_dl}, findings
 
 
 def text_index_query(
@@ -1132,7 +903,7 @@ def text_index_query(
     pass a previously-loaded ``stats.json`` dict to plan this query
     against that generation even if maintenance has flipped the pointer
     since — a retired generation's files (and its tombstones) stay
-    complete on disk until `text_index_vacuum`. Default None loads the
+    complete on disk until `index_vacuum`. Default None loads the
     live metadata."""
     if meta is None:
         meta = read_index_meta(os.path.join(path, "stats.json"))
@@ -1154,12 +925,14 @@ def text_index_query(
     # all directories resolve through the metadata read above: the
     # query is pinned to ONE generation even if a compaction publishes
     # a new one mid-flight (snapshot isolation — gen_dir)
-    postings = _anti_doc_tombstones(
+    postings = anti_tombstones(
         spark,
-        gen_dir(path, "tombstones", meta),
+        path,
+        meta,
         spark.read.parquet(gen_dir(path, "postings", meta))
         .filter(F.col("bucket").isin(buckets))
         .filter(F.col("term").isin(terms_list)),
+        "doc_id",
     )
     dfreq = (
         spark.read.parquet(gen_dir(path, "terms", meta))

@@ -25,13 +25,13 @@ from pyspark.sql import functions as F
 
 from geoscan_fraud_spark.operators.dedup import cosine_expr, dot_expr, norm_expr
 from geoscan_fraud_spark.sources.io import (
+    anti_tombstones,
     atomic_write_json,
+    fold_generation,
     gen_dir,
-    generation_findings,
-    index_vacuum,
     index_writer_lock,
-    list_index_generations,
-    mark_retired_generations,
+    next_generation,
+    publish_generation,
     read_index_meta,
 )
 
@@ -777,17 +777,14 @@ def ivf_index_write(
     beside the dirs in-flight readers resolved, and the metadata pointer
     flips in one atomic commit — prior tombstones belong to the replaced
     snapshot and do not carry over; stale generations remain until
-    `ivf_index_vacuum`."""
+    `index_vacuum`."""
     import os
 
     os.makedirs(path, exist_ok=True)
     with index_writer_lock(path, "ivf_index_write"):
-        prior = list_index_generations(path, _IVF_GEN_FAMILIES)
-        prior_gens = [g for gs in prior.values() for g in gs]
         extra = None
         try:
             prior_meta = read_index_meta(os.path.join(path, "centroids.json"))
-            prior_gens.append(int(prior_meta.get("gen", 0)))
             # carry the stream cursor through a rebuild-over-live (the
             # ivf_index_rebuild contract): dropping it would let a
             # crash-window replay of a committed batch re-append and
@@ -798,8 +795,8 @@ def ivf_index_write(
                     "last_stream_batch": int(prior_meta["last_stream_batch"])
                 }
         except (FileNotFoundError, ValueError):
-            pass  # no or torn metadata — a rebuild is exactly the cure
-        g_new = (max(prior_gens) + 1) if prior_gens else 0
+            prior_meta = None  # no or torn metadata — a rebuild is the cure
+        g_new = next_generation(path, prior_meta, _IVF_GEN_FAMILIES)
         return _ivf_index_write_locked(
             corpus, path, n_centroids, emb_col, id_col, seed, centroids,
             gen=g_new, extra_meta=extra,
@@ -845,7 +842,7 @@ def _ivf_index_write_locked(
         )
 
     # src_batch stamps every row's ingest generation (-1 = the build),
-    # making `ivf_index_expire` retention possible; format 2 marks the
+    # making `index_expire` retention possible; format 2 marks the
     # column as present in EVERY list file (no mixed schemas)
     base = assigned.withColumn("src_batch", F.lit(-1))
     keep = ["list_id", "src_batch"]
@@ -962,10 +959,7 @@ def _ivf_index_write_locked(
     # the generation pointer flips here, in the same atomic commit as
     # the quantizer — before this line the build never existed for
     # readers (snapshot isolation; see ivf_index_compact)
-    atomic_write_json(os.path.join(path, "centroids.json"), meta)
-    # stamp the outgoing generations NOW so vacuum's grace period ages
-    # from this flip, not from their last write (ADVICE r09)
-    mark_retired_generations(path, _IVF_GEN_FAMILIES, gen)
+    publish_generation(path, "centroids.json", meta, _IVF_GEN_FAMILIES)
     return len(cent)
 
 
@@ -1080,7 +1074,7 @@ def ivf_index_append(
             batch = assigned.drop("__d2", "__dim")
             keep = ["list_id"]
             if int(meta.get("format", 1)) >= 2:
-                # stamp the ingest generation so `ivf_index_expire` can
+                # stamp the ingest generation so `index_expire` can
                 # age rows. ``src_batch`` (the streaming sink passes its
                 # batch id) MUST be replay-stable: a crash-window replay
                 # then stamps the SAME value and stays bit-identical for
@@ -1150,23 +1144,26 @@ def ivf_index_append(
         }
 
 
-def _ivf_relayout(spark, path: str, op: str, row_filter) -> int:
-    """Shared compact/expire body: publish a NEW GENERATION of the lists
-    (distinct -> ``row_filter`` -> anti-tombstones -> one file per list
-    dir) and flip the metadata pointer in one atomic commit. Readers
-    resolve their lists dir through the metadata they load first, so a
-    query planned before the flip finishes against the old snapshot —
-    its files are never touched — and a crash anywhere before the flip
-    leaves the live index byte-identical (the half-written generation
-    is an unpublished orphan: fsck names it, `ivf_index_vacuum` removes
-    it). The ``rows``/``appended_rows`` counters are RECOMPUTED from the
-    surviving rows so `ivf_index_fsck`'s drift check stays exact after
-    tombstones/expiry apply. Caller-visible contract unchanged: query
-    results identical for a pure relayout (pytest-pinned)."""
+def _ivf_relayout(spark, path: str, expire_below: int | None) -> int:
+    """`ivf_index_compact`'s body, optionally also dropping every
+    appended vector whose ingest generation is below ``expire_below``
+    (`index_expire`; build rows, ``src_batch = -1``, never expire — the
+    backfill corpus is the quantizer's ground truth). Publishes a NEW
+    GENERATION of the lists (`fold_generation`: distinct -> expiry ->
+    anti-tombstones -> one file per list dir) and flips the metadata
+    pointer in one atomic commit. Readers resolve their lists dir
+    through the metadata they load first, so a query planned before the
+    flip finishes against the old snapshot — its files are never
+    touched — and a crash anywhere before the flip leaves the live
+    index byte-identical (the half-written generation is an unpublished
+    orphan: fsck names it, `index_vacuum` removes it). The
+    ``rows``/``appended_rows`` counters are RECOMPUTED from the
+    surviving rows so `index_fsck`'s drift check stays exact after
+    tombstones/expiry apply."""
     import os
 
     meta_path = os.path.join(path, "centroids.json")
-    with index_writer_lock(path, op):
+    with index_writer_lock(path, "ivf_index_compact"):
         for leftover in ("__compact__", "__old__"):
             p = os.path.join(path, f"lists.{leftover}")
             if os.path.exists(p):
@@ -1175,41 +1172,17 @@ def _ivf_relayout(spark, path: str, op: str, row_filter) -> int:
                     f"mid-swap; recover it manually before re-running"
                 )
         meta = read_index_meta(meta_path)
-        keep = row_filter(meta)
-        on_disk = list_index_generations(path, _IVF_GEN_FAMILIES)
-        g_new = (
-            max(
-                [int(meta.get("gen", 0))]
-                + [g for gs in on_disk.values() for g in gs]
-            )
-            + 1
-        )
-        new_meta = dict(meta, gen=g_new)
-        new_lists = gen_dir(path, "lists", new_meta)
-        folded = _anti_tombstones(
-            spark,
-            gen_dir(path, "tombstones", meta),
-            spark.read.parquet(gen_dir(path, "lists", meta))
-            .distinct()
-            .filter(keep),
-            "vec_id",
-        )
-        # hash repartition on the partition column: each list lands in
-        # exactly one task — one file per directory
-        (
-            folded.repartition(F.col("list_id"))
-            .write.mode("overwrite")
-            .partitionBy("list_id")
-            .parquet(new_lists)
+        new_meta = dict(meta, gen=next_generation(path, meta, _IVF_GEN_FAMILIES))
+        new_lists = fold_generation(
+            spark, path, meta, new_meta["gen"], "lists", expire_below,
+            "vec_id", "list_id",
         )
         new_meta["rows"] = int(
             spark.read.parquet(new_lists).select("vec_id").count()
         )
         new_meta["appended_rows"] = 0
         # THE commit: counters + generation pointer in one atomic rename
-        atomic_write_json(meta_path, new_meta)
-        # vacuum's grace period ages from this flip (ADVICE r09)
-        mark_retired_generations(path, _IVF_GEN_FAMILIES, g_new)
+        publish_generation(path, "centroids.json", new_meta, _IVF_GEN_FAMILIES)
         n = 0
         for _root, _dirs, files in os.walk(new_lists):
             n += sum(1 for f in files if not f.startswith(("_", ".")))
@@ -1224,54 +1197,14 @@ def ivf_index_compact(spark, path: str) -> int:
     and its meta commit replays the batch as bit-identical rows
     (deterministic assignment + quantization), so distinct() removes
     exactly the replay and can never collapse genuinely different data.
-    Tombstones (`ivf_index_delete`) are applied PHYSICALLY into the new
+    Tombstones (`index_delete`) are applied PHYSICALLY into the new
     generation — the compacted snapshot has the deleted rows gone from
     disk, not just filtered at read; the old snapshot keeps serving its
     in-flight readers (tombstone-filtered as before) until
-    `ivf_index_vacuum`. Publishes a new generation with one atomic
+    `index_vacuum`. Publishes a new generation with one atomic
     pointer flip — see `_ivf_relayout` for the crash story. Otherwise
     pure relayout: query results unchanged (pytest-pinned)."""
-    return _ivf_relayout(
-        spark, path, "ivf_index_compact", lambda _meta: F.lit(True)
-    )
-
-
-def ivf_index_expire(spark, path: str, min_src_batch: int) -> int:
-    """Retention for a format-2 serving index: physically drop every
-    vector whose ingest generation (``src_batch``, stamped at append) is
-    older than ``min_src_batch`` — the freshness-bounded-corpus policy
-    (`sources/io.expire_index` applied to the serving store). Build-time
-    rows (``src_batch = -1``) never expire: the backfill corpus is the
-    quantizer's ground truth; age it out with `ivf_index_rebuild` on a
-    newer corpus instead. Runs as a compaction (new-generation relayout
-    + atomic pointer flip, also applies pending tombstones + replay
-    dedup — `_ivf_relayout`). Returns the data-file count after."""
-
-    def keep(meta):
-        if int(meta.get("format", 1)) < 2:
-            raise ValueError(
-                "ivf_index_expire needs a format-2 index (src_batch-stamped "
-                "rows); rebuild this legacy index with ivf_index_rebuild first"
-            )
-        return (F.col("src_batch") == -1) | (
-            F.col("src_batch") >= min_src_batch
-        )
-
-    return _ivf_relayout(spark, path, "ivf_index_expire", keep)
-
-
-def ivf_index_vacuum(path: str, min_age_sec: float = 0.0) -> list:
-    """Remove generations the centroids.json pointer no longer
-    references — stale pre-maintenance snapshots (kept so in-flight
-    readers finish against complete data) and unpublished orphans from
-    a crashed run. Returns the removed directory names.
-    ``min_age_sec`` mechanizes the grace period: generations younger
-    than it are skipped, so a scheduled vacuum(min_age_sec = 2x the
-    longest query) can never delete files under an in-flight straggler
-    (the Delta VACUUM contract — see `sources.io.index_vacuum`)."""
-    return index_vacuum(
-        path, "centroids.json", _IVF_GEN_FAMILIES, min_age_sec=min_age_sec
-    )
+    return _ivf_relayout(spark, path, None)
 
 
 def ivf_index_rebuild(
@@ -1320,21 +1253,15 @@ def ivf_index_rebuild(
         # it — a rebuild is also a physical delete (the new generation
         # starts with an empty tombstone set)
         vecs = dequantize_embeddings(
-            _anti_tombstones(
+            anti_tombstones(
                 spark,
-                gen_dir(path, "tombstones", meta),
+                path,
+                meta,
                 spark.read.parquet(gen_dir(path, "lists", meta)),
                 "vec_id",
             )
         )
-        on_disk = list_index_generations(path, _IVF_GEN_FAMILIES)
-        g_new = (
-            max(
-                [int(meta.get("gen", 0))]
-                + [g for gs in on_disk.values() for g in gs]
-            )
-            + 1
-        )
+        g_new = next_generation(path, meta, _IVF_GEN_FAMILIES)
         extra = (
             {"last_stream_batch": meta["last_stream_batch"]}
             if "last_stream_batch" in meta
@@ -1372,47 +1299,6 @@ def ivf_index_rebuild(
         return k
 
 
-def ivf_index_delete(spark, path: str, ids) -> None:
-    """Logical delete (tombstones) — the takedown/right-to-be-forgotten
-    path. ``ids`` is a one-column DataFrame of vec_ids (or a Python
-    list, for small driver-side delete sets). The ids append to
-    ``path/tombstones`` as parquet — no list rewrite, no read of the
-    index; deleted vectors stop being returned by `ivf_index_query`
-    IMMEDIATELY (anti-join at read). `ivf_index_compact` applies
-    tombstones physically during its relayout and clears them — the
-    Lucene delete-then-merge lifecycle. List ids pass through with their
-    own type (no int() coercion — string vec_ids are as tombstone-able
-    here as in `text_index_delete`; ADVICE r08).
-
-    Tombstones are generation-scoped and the delete takes the writer
-    lock: a takedown landing in a snapshot that a concurrent compaction
-    is about to replace would be silently vacuumed away with it — the
-    lock makes that a loud refusal instead (retry after maintenance)."""
-    import os
-
-    from geoscan_fraud_spark.sources.io import one_column_ids
-
-    ids = one_column_ids(spark, ids, "vec_id", "ivf_index_delete")
-    with index_writer_lock(path, "ivf_index_delete"):
-        meta = read_index_meta(os.path.join(path, "centroids.json"))
-        ids.write.mode("append").parquet(
-            gen_dir(path, "tombstones", meta)
-        )
-
-
-def _anti_tombstones(spark, tpath: str, df: DataFrame, key: str) -> DataFrame:
-    """Filter rows whose ``key`` is tombstoned; ``tpath`` is the
-    generation-resolved tombstones dir (callers pass
-    ``gen_dir(path, "tombstones", meta)``). No-op when no tombstone dir
-    exists (the common case pays only an os.path check)."""
-    import os
-
-    if not os.path.isdir(tpath):
-        return df
-    dead = spark.read.parquet(tpath).toDF(key)
-    return df.join(dead, key, "left_anti")
-
-
 def ivf_index_stats(spark, path: str) -> DataFrame:
     """Per-list occupancy of a persisted index: (list_id, n_vectors).
 
@@ -1431,48 +1317,17 @@ def ivf_index_stats(spark, path: str) -> DataFrame:
     )
 
 
-def ivf_index_fsck(spark, path: str) -> dict:
-    """Ops doctor for a persisted IVF index — the dense twin of
-    `text_index_fsck`. Returns ``{"status", "findings", "meta",
-    "measured"}``. Checks: filesystem artifacts (stale writer lock,
-    orphaned metadata ``.tmp``, crashed compaction/rebuild swap
-    leftovers), metadata readability (torn JSON reports instead of
-    raising), duplicate rows (count vs full-row distinct — pending
-    crash-replay heal), row-counter drift (measured distinct rows vs
-    the ``rows + appended_rows`` counters; beyond pending tombstones
-    that is a lost update), stored-vector dim vs the metadata dim, and
-    list ids outside the quantizer's range (corruption or a foreign
-    file). Two column-pruned aggregates over the lists; maintenance
-    cadence, not per query."""
-    import os
-
-    from geoscan_fraud_spark.sources.io import index_artifact_findings
-
-    findings = index_artifact_findings(path, "centroids.json", "lists")
-    report: dict = {"meta": None, "measured": {}}
-    try:
-        meta = read_index_meta(os.path.join(path, "centroids.json"))
-        report["meta"] = meta
-    except ValueError as e:
-        findings.append(str(e))
-        report["status"] = "attention"
-        report["findings"] = findings
-        return report
-
-    # generation adjudication: orphans (crashed maintenance, never
-    # published) are findings; stale pre-flip snapshots pending vacuum
-    # are normal operation and report informationally
-    gen_f, report["generations"] = generation_findings(
-        path, meta, _IVF_GEN_FAMILIES
-    )
-    findings.extend(gen_f)
-
-    lists = spark.read.parquet(gen_dir(path, "lists", meta))
+def _ivf_fsck_checks(spark, path: str, meta: dict, lists: DataFrame, n_distinct: int):
+    """`index_fsck`'s IVF checks over the live lists: stored-vector dim
+    vs the metadata dim, list ids outside the quantizer's range
+    (corruption or a foreign file), the PQ tier's all-or-nothing
+    columns, and row-counter drift (measured distinct rows vs the
+    ``rows + appended_rows`` counters; beyond pending tombstones that
+    is a lost update). Returns ``(measured, findings)``."""
+    findings = []
     lo = 1 if meta["one_based"] else 0
     hi = meta["n_centroids"] - (0 if meta["one_based"] else 1)
-    n_rows, n_distinct, dim_min, dim_max, bad_lists = lists.select(
-        F.count(F.lit(1)),
-        F.count_distinct(*[F.col(c) for c in lists.columns]),
+    dim_min, dim_max, bad_lists = lists.select(
         F.min(F.size("qvec")),
         F.max(F.size("qvec")),
         F.coalesce(
@@ -1482,13 +1337,7 @@ def ivf_index_fsck(spark, path: str) -> dict:
             F.lit(0),
         ),
     ).first()
-    report["measured"] = {"rows": int(n_distinct)}
-    if n_rows != n_distinct:
-        findings.append(
-            f"{n_rows - n_distinct} duplicate rows (crash-window replay "
-            f"pending heal) — run ivf_index_compact"
-        )
-    if n_rows and (dim_min != meta["dim"] or dim_max != meta["dim"]):
+    if dim_min is not None and (dim_min != meta["dim"] or dim_max != meta["dim"]):
         findings.append(
             f"stored vector dims [{dim_min}, {dim_max}] != metadata dim "
             f"{meta['dim']} — the index is corrupt or holds foreign files"
@@ -1531,63 +1380,14 @@ def ivf_index_fsck(spark, path: str) -> dict:
                     f"ivf_index_rebuild re-encodes"
                 )
 
-    tpath = gen_dir(path, "tombstones", meta)
-    if os.path.isdir(tpath):
-        n_tomb = spark.read.parquet(tpath).distinct().count()
-        findings.append(
-            f"{n_tomb} pending tombstones (hidden at read; "
-            f"ivf_index_compact applies them physically)"
-        )
     expected = int(meta.get("rows", 0)) + int(meta.get("appended_rows", 0))
-    if int(n_distinct) != expected:
+    if n_distinct != expected:
         findings.append(
             f"row-counter drift: metadata says {expected} "
             f"(rows + appended_rows), lists hold {n_distinct} distinct — "
             f"beyond pending tombstones/expiry this means a lost update"
         )
-
-    report["status"] = "ok" if not findings else "attention"
-    report["findings"] = findings
-    return report
-
-
-def ivf_index_maintain(
-    spark,
-    path: str,
-    compact_after: int = 64,
-    vacuum_min_age_sec: float = 0.0,
-) -> dict:
-    """One-call ops runbook for a persisted IVF index — the dense twin
-    of `text_index_maintain` (VERDICT r09 #2): heal → compact-if-needed
-    → vacuum → verify, returning ``{"healed", "compacted", "vacuumed",
-    "fsck", "status"}``. Heals an orphaned ``centroids.json.tmp`` and a
-    provably-dead writer lock; compacts when any ONE list directory
-    carries more data files than ``compact_after`` (append accretion —
-    every probe pays the probed lists' file listing/footer costs;
-    per-directory so the metric settles to 1 post-fold and maintain is
-    idempotent) or tombstones are pending (takedowns land physically);
-    vacuums retired/orphaned generations past the grace period. Single-writer; schedule between
-    ingest windows or via `prepared_serving_sink(maintain_every_n)`."""
-    import os
-
-    from geoscan_fraud_spark.sources.io import (
-        heal_index_artifacts,
-        serving_layout_pressure,
-    )
-
-    report: dict = {"healed": heal_index_artifacts(path, "centroids.json")}
-    meta = read_index_meta(os.path.join(path, "centroids.json"))
-    pressure = serving_layout_pressure(gen_dir(path, "lists", meta))
-    tombs = os.path.isdir(gen_dir(path, "tombstones", meta))
-    report["compacted"] = pressure > compact_after or tombs
-    if report["compacted"]:
-        ivf_index_compact(spark, path)
-    report["vacuumed"] = ivf_index_vacuum(
-        path, min_age_sec=vacuum_min_age_sec
-    )
-    report["fsck"] = ivf_index_fsck(spark, path)
-    report["status"] = report["fsck"]["status"]
-    return report
+    return {"rows": n_distinct}, findings
 
 
 def ivf_recall_at_k(
@@ -1665,7 +1465,7 @@ def ivf_index_query(
     ``centroids.json`` dict to plan THIS query against that generation
     even if maintenance has flipped the pointer since — the read-side
     half of the generation contract (`gen_dir`: a retired generation's
-    files are never touched until `ivf_index_vacuum`, so a reader that
+    files are never touched until `index_vacuum`, so a reader that
     resolved its metadata before a flip finishes against complete
     data). Default None loads the live metadata — the ordinary case.
 
@@ -1734,9 +1534,10 @@ def ivf_index_query(
 
         # the ADC tier reads ONLY the code columns — column pruning
         # reaches the parquet scan, so each probed row costs ~m+8 bytes
-        lists = _anti_tombstones(
+        lists = anti_tombstones(
             spark,
-            gen_dir(path, "tombstones", meta),
+            path,
+            meta,
             spark.read.parquet(gen_dir(path, "lists", meta))
             .filter(F.col("list_id").isin(probe_ids))
             .select("list_id", "vec_id", "vnorm", "codes"),
@@ -1790,9 +1591,10 @@ def ivf_index_query(
             .select("query_id", "q_emb", "__qn", "vec_id")
         )
     else:
-        lists = _anti_tombstones(
+        lists = anti_tombstones(
             spark,
-            gen_dir(path, "tombstones", meta),
+            path,
+            meta,
             spark.read.parquet(gen_dir(path, "lists", meta)).filter(
                 F.col("list_id").isin(probe_ids)
             ),

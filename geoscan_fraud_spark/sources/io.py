@@ -546,19 +546,16 @@ def index_writer_lock(path: str, op: str):
 
 
 def index_artifact_findings(path: str, meta_name: str, data_dirs) -> list:
-    """Shared filesystem-level health sweep for a persisted serving
-    index (`text_index_fsck` / `ivf_index_fsck` front half): stale
-    writer lock, orphaned metadata ``.tmp`` (a crash between tmp-write
-    and replace — the LIVE metadata is intact, the tmp is garbage),
-    crashed-swap leftovers from compaction/rebuild — swept for EVERY
-    data-dir family the index owns (``data_dirs`` is a name or a list:
-    a text index's crashed pre-generation compaction could leave
-    ``terms.__old__`` with ``postings`` clean, and the doctor must not
-    green-light an index whose maintenance path is blocked). Returns a
-    list of human-readable findings (empty = clean). Pure os-walk — no
-    Spark job."""
-    if isinstance(data_dirs, str):
-        data_dirs = [data_dirs]
+    """Filesystem-level health sweep for a persisted serving index
+    (`index_fsck`'s front half): stale writer lock, orphaned metadata
+    ``.tmp`` (a crash between tmp-write and replace — the LIVE metadata
+    is intact, the tmp is garbage), crashed-swap leftovers from
+    compaction/rebuild — swept for EVERY data-dir family in
+    ``data_dirs`` (a text index's crashed pre-generation compaction
+    could leave ``terms.__old__`` with ``postings`` clean, and the
+    doctor must not green-light an index whose maintenance path is
+    blocked). Returns a list of human-readable findings (empty =
+    clean). Pure os-walk — no Spark job."""
     findings = []
     lock = os.path.join(path, ".writer.lock")
     if os.path.exists(lock):
@@ -598,7 +595,7 @@ def index_artifact_findings(path: str, meta_name: str, data_dirs) -> list:
 
 
 def heal_index_artifacts(path: str, meta_name: str) -> list:
-    """The mechanical half of a serving-index `*_maintain` runbook:
+    """The mechanical half of the `index_maintain` runbook:
     heal every filesystem artifact `index_artifact_findings` can name
     that has a SAFE automatic remedy, and return what was healed.
 
@@ -697,71 +694,29 @@ def list_index_generations(path: str, names: list[str]) -> dict:
     return out
 
 
-def index_vacuum(
-    path: str, meta_name: str, names: list[str], min_age_sec: float = 0.0
-) -> list[str]:
-    """Remove every data-dir generation the index metadata does NOT
-    reference — both STALE generations (pre-flip snapshots kept so
-    in-flight readers finish against complete data) and ORPHANS (a
-    maintenance op crashed after writing its new generation but before
-    the metadata flip, so the dir was never published). Returns the
-    removed directory names (empty = nothing to do).
-
-    The grace-period contract is the operator's (Delta VACUUM's rule):
-    run it only after every query that could have resolved an old
-    generation has finished — the pointer flip is atomic, so any query
-    STARTED after the flip is already on the live generation.
-    ``min_age_sec`` mechanizes it: a generation whose directory mtime
-    is more recent than that is SKIPPED (returned next time), so a
-    scheduled ``vacuum(min_age_sec=2 * longest_query)`` can never pull
-    files out from under a straggler. The mtime is the RETIRE time,
-    not the last write: every maintenance op stamps the outgoing
-    generations via `mark_retired_generations` in the same call that
-    publishes the new one — Delta VACUUM likewise ages from logical
-    removal, and aging from last-write would delete a quiescent
-    generation (last append long before the flip) the instant a
-    post-flip vacuum ran, under any in-flight reader (ADVICE r09).
-    Generations retired by a pre-stamp version of the code age from
-    their last write — the old, weaker behavior, never weaker than
-    what they were written under. Takes the writer lock: racing a live
-    compaction could delete the generation it is about to publish."""
-    import time
-
-    with index_writer_lock(path, "index_vacuum"):
-        meta = read_index_meta(os.path.join(path, meta_name))
-        cur = int(meta.get("gen", 0))
-        removed = []
-        now = time.time()
-        for name, gens in list_index_generations(path, names).items():
-            for g in gens:
-                if g == cur:
-                    continue
-                target = os.path.join(path, gen_suffix(name, g))
-                if min_age_sec > 0:
-                    try:
-                        age = now - os.path.getmtime(target)
-                    except OSError:
-                        continue
-                    if age < min_age_sec:
-                        continue  # inside the grace period — next time
-                shutil.rmtree(target)
-                removed.append(os.path.basename(target))
-        return sorted(removed)
+def next_generation(path: str, meta: dict | None, families) -> int:
+    """The generation a writer publishes next: one past every
+    generation on disk and the live pointer, so a crashed run's
+    unpublished orphan is never half-reused. ``meta`` is None when the
+    metadata is missing or torn (a rebuild is the cure); with nothing
+    on disk either, the first build is generation 0 (the bare layout)."""
+    gens = [g for gs in list_index_generations(path, families).values() for g in gs]
+    if meta is not None:
+        gens.append(int(meta.get("gen", 0)))
+    return max(gens) + 1 if gens else 0
 
 
 def mark_retired_generations(path: str, names: list[str], live_gen: int) -> None:
     """Stamp every non-live on-disk generation directory with NOW
     (`os.utime`), so `index_vacuum`'s ``min_age_sec`` grace period ages
     from the pointer FLIP that retired the snapshot rather than from
-    its last write (ADVICE r09: a generation that had been quiescent
-    longer than the grace period would otherwise be vacuumable the
-    instant it was retired, under any reader that resolved it just
-    before the flip). Called by every maintenance op in the same
-    breath as its `atomic_write_json` pointer flip. Also stamps
-    never-published orphans — harmless (they are garbage either way;
-    the stamp just delays their removal by one grace period). Best
-    effort: a dir that vanishes mid-stamp is already someone else's
-    vacuum."""
+    its last write (a generation that had been quiescent longer than
+    the grace period would otherwise be vacuumable the instant it was
+    retired, under any reader that resolved it just before the flip).
+    Also stamps never-published orphans — harmless (they are garbage
+    either way; the stamp just delays their removal by one grace
+    period). Best effort: a dir that vanishes mid-stamp is already
+    someone else's vacuum."""
     import time
 
     now = time.time()
@@ -775,8 +730,65 @@ def mark_retired_generations(path: str, names: list[str], live_gen: int) -> None
                 pass
 
 
+def publish_generation(path: str, meta_name: str, meta: dict, families) -> None:
+    """THE commit of every op that writes a new generation: the
+    metadata (counters + ``gen`` pointer) lands in one
+    `atomic_write_json` — before it the new generation never existed
+    for readers — then the outgoing generations are retire-stamped
+    (`mark_retired_generations`)."""
+    atomic_write_json(os.path.join(path, meta_name), meta)
+    mark_retired_generations(path, families, int(meta["gen"]))
+
+
+def anti_tombstones(
+    spark: SparkSession, path: str, meta: dict, df: DataFrame, key: str
+) -> DataFrame:
+    """Hide the rows of ``df`` whose ``key`` is tombstoned in the
+    generation ``meta`` points at. No-op when that generation has no
+    tombstones (the common case pays one os.path check)."""
+    tpath = gen_dir(path, "tombstones", meta)
+    if not os.path.isdir(tpath):
+        return df
+    return df.join(spark.read.parquet(tpath).toDF(key), key, "left_anti")
+
+
+def fold_generation(
+    spark: SparkSession,
+    path: str,
+    meta: dict,
+    gen: int,
+    family: str,
+    expire_below: int | None,
+    key: str,
+    partition_col,
+) -> str:
+    """Fold one data-dir family of the live generation into generation
+    ``gen``: full-row distinct (a crash-window replay re-appends
+    bit-identical rows, so this removes exactly the replay) -> drop the
+    rows whose ``src_batch`` is below ``expire_below`` (None keeps all;
+    build rows, ``src_batch = -1``, never expire) -> tombstone
+    anti-join -> a hash repartition on ``partition_col`` so each
+    partition directory gets one file (one file in all when it is
+    None). Returns the written directory; the caller publishes it with
+    `publish_generation`."""
+    out = os.path.join(path, gen_suffix(family, gen))
+    rows = spark.read.parquet(gen_dir(path, family, meta)).distinct()
+    if expire_below is not None:
+        rows = rows.filter(
+            (F.col("src_batch") == -1) | (F.col("src_batch") >= expire_below)
+        )
+    folded = anti_tombstones(spark, path, meta, rows, key)
+    if partition_col is None:
+        folded.repartition(1).write.mode("overwrite").parquet(out)
+    else:
+        folded.repartition(F.col(partition_col)).write.mode(
+            "overwrite"
+        ).partitionBy(partition_col).parquet(out)
+    return out
+
+
 def generation_findings(path: str, meta: dict, names: list[str]) -> tuple:
-    """Generation adjudication for the fscks: returns
+    """Generation adjudication for `index_fsck`: returns
     ``(findings, generations)`` where findings flag ORPHAN generations
     newer than the live pointer (a crashed maintenance op — harmless,
     never published, vacuum removes) and ``generations`` reports the
@@ -796,6 +808,246 @@ def generation_findings(path: str, meta: dict, names: list[str]) -> tuple:
             f"index_vacuum removes them"
         )
     return findings, {"live": cur, "stale": stale}
+
+
+def _index_kind(path: str) -> dict:
+    """What differs between the two serving indexes, picked by the
+    metadata file found at ``path``: ``stats.json`` is a BM25 index
+    (`operators/retrieval.py`), ``centroids.json`` an IVF index
+    (`operators/similarity.py`).
+
+    * ``families`` — every generation-scoped data-dir family; listing,
+      vacuum, fsck and the retire stamps must agree on it;
+    * ``id_col`` — the tombstone key; ``data`` — the family that
+      compaction folds and fsck scans;
+    * ``compact(spark, path, expire_below)`` — the new-generation
+      relayout (``expire_below=None`` is a plain compaction);
+    * ``checks(spark, path, meta, data, n_distinct)`` — the
+      store-specific fsck checks, returning ``(measured, findings)``;
+    * ``upgrade(spark, path)`` — a maintain step run before the
+      pressure check, returning extra report entries."""
+    from geoscan_fraud_spark.operators import retrieval, similarity
+
+    kinds = (
+        {
+            "meta": "stats.json",
+            "families": retrieval._TEXT_GEN_FAMILIES,
+            "id_col": "doc_id",
+            "data": "postings",
+            "compact": retrieval._text_compact,
+            "checks": retrieval._text_fsck_checks,
+            "upgrade": retrieval._maintain_empties,
+        },
+        {
+            "meta": "centroids.json",
+            "families": similarity._IVF_GEN_FAMILIES,
+            "id_col": "vec_id",
+            "data": "lists",
+            "compact": similarity._ivf_relayout,
+            "checks": similarity._ivf_fsck_checks,
+            "upgrade": lambda spark, path: {},
+        },
+    )
+    for kind in kinds:
+        if os.path.isfile(os.path.join(path, kind["meta"])):
+            return kind
+    raise ValueError(
+        f"{path} is not a serving index: it holds neither stats.json "
+        f"(BM25) nor centroids.json (IVF)"
+    )
+
+
+def index_delete(spark: SparkSession, path: str, ids) -> None:
+    """Logical delete (tombstones) for a serving index — the
+    takedown / right-to-be-forgotten path. ``ids`` is a one-column
+    DataFrame or a small Python list, of any id type. The ids append
+    to the live generation's ``tombstones`` — no data rewrite; the
+    deleted rows stop being returned by the query IMMEDIATELY
+    (anti-join at read). Compaction applies tombstones physically and
+    the new generation starts without them — the Lucene
+    delete-then-merge lifecycle. A BM25 index keeps its pre-delete
+    df/n_docs/avgdl until then (deleted docs still damp idf until
+    segments merge); compaction recomputes them from the survivors,
+    zero-token docs included (the ``empty_docs`` family).
+
+    Takes the writer lock: a takedown landing in a snapshot that a
+    concurrent compaction is about to replace would be silently
+    vacuumed away with it — the lock makes that a loud refusal
+    instead (retry after maintenance)."""
+    kind = _index_kind(path)
+    ids = one_column_ids(spark, ids, kind["id_col"], "index_delete")
+    with index_writer_lock(path, "index_delete"):
+        meta = read_index_meta(os.path.join(path, kind["meta"]))
+        ids.write.mode("append").parquet(gen_dir(path, "tombstones", meta))
+
+
+def index_vacuum(path: str, min_age_sec: float = 0.0) -> list[str]:
+    """Remove every data-dir generation the index metadata does NOT
+    reference — both STALE generations (pre-flip snapshots kept so
+    in-flight readers finish against complete data) and ORPHANS (a
+    maintenance op crashed after writing its new generation but before
+    the metadata flip, so the dir was never published). Returns the
+    removed directory names (empty = nothing to do).
+
+    The grace-period contract is the operator's (Delta VACUUM's rule):
+    run it only after every query that could have resolved an old
+    generation has finished — the pointer flip is atomic, so any query
+    STARTED after the flip is already on the live generation.
+    ``min_age_sec`` mechanizes it: a generation whose directory mtime
+    is more recent than that is SKIPPED (returned next time), so a
+    scheduled ``index_vacuum(min_age_sec=2 * longest_query)`` can never
+    pull files out from under a straggler. The mtime is the RETIRE
+    time, not the last write: every publish stamps the outgoing
+    generations (`publish_generation`) — Delta VACUUM likewise ages
+    from logical removal. Takes the writer lock: racing a live
+    compaction could delete the generation it is about to publish."""
+    import time
+
+    kind = _index_kind(path)
+    with index_writer_lock(path, "index_vacuum"):
+        meta = read_index_meta(os.path.join(path, kind["meta"]))
+        cur = int(meta.get("gen", 0))
+        removed = []
+        now = time.time()
+        for name, gens in list_index_generations(path, kind["families"]).items():
+            for g in gens:
+                if g == cur:
+                    continue
+                target = os.path.join(path, gen_suffix(name, g))
+                if min_age_sec > 0:
+                    try:
+                        age = now - os.path.getmtime(target)
+                    except OSError:
+                        continue
+                    if age < min_age_sec:
+                        continue  # inside the grace period — next time
+                shutil.rmtree(target)
+                removed.append(os.path.basename(target))
+        return sorted(removed)
+
+
+def index_expire(spark: SparkSession, path: str, min_src_batch: int) -> int:
+    """Retention for a format-2 serving index: physically drop every
+    row whose ingest generation (``src_batch``, stamped at append) is
+    older than ``min_src_batch`` — the freshness-bounded-corpus policy
+    (`expire_index` applied to a serving store). Build rows
+    (``src_batch = -1``) never expire; age them out by rebuilding over
+    a newer corpus. Runs as a compaction (replay dedup + tombstones +
+    recomputed counters; a BM25 doc both tombstoned and expired comes
+    off the stats exactly once). Returns the data-file count after."""
+    kind = _index_kind(path)
+    meta = read_index_meta(os.path.join(path, kind["meta"]))
+    if int(meta.get("format", 1)) < 2:
+        raise ValueError(
+            f"index_expire needs a format-2 index (src_batch-stamped rows); "
+            f"rebuild the legacy index at {path} first"
+        )
+    return kind["compact"](spark, path, min_src_batch)
+
+
+def index_maintain(
+    spark: SparkSession,
+    path: str,
+    compact_after: int = 64,
+    vacuum_min_age_sec: float = 0.0,
+) -> dict:
+    """One-call ops runbook for a serving index: heal → compact-if-needed
+    → vacuum → verify. `index_fsck` reports; this ACTS — a crashed
+    metadata commit, a dead writer's lock, accreted append files,
+    pending takedowns, and retired/orphaned generations all return to
+    clean in one call.
+
+    1. `heal_index_artifacts` — remove an orphaned metadata ``.tmp``;
+       reclaim a provably-dead same-host writer lock (a live/foreign
+       holder is left to refuse loudly below). A BM25 index then flips
+       its legacy ``empties_tracked`` flag when that is free
+       (`text_index_upgrade_empties(strict=False)`, reported as
+       ``empties_upgrade``);
+    2. compaction when the live generation is under pressure — MAX
+       data files in any one partition directory above
+       ``compact_after`` (`serving_layout_pressure`: per-directory, so
+       the metric settles to 1 after the fold and maintain is
+       idempotent) — or tombstones are pending (a maintain pass lands
+       takedowns physically);
+    3. `index_vacuum(vacuum_min_age_sec)` — drop retired/orphaned
+       generations past the grace period;
+    4. `index_fsck` — the post-state, status lifted to top level.
+
+    Returns ``{"healed", "compacted", "vacuumed", "fsck", "status"}``.
+    Single-writer like every maintenance op; schedule it between
+    ingest windows, or let
+    `streaming/scoring.prepared_serving_sink(maintain_every_n=...)`
+    run it on cadence."""
+    kind = _index_kind(path)
+    report: dict = {"healed": heal_index_artifacts(path, kind["meta"])}
+    report.update(kind["upgrade"](spark, path))
+    meta = read_index_meta(os.path.join(path, kind["meta"]))
+    pressure = serving_layout_pressure(gen_dir(path, kind["data"], meta))
+    tombs = os.path.isdir(gen_dir(path, "tombstones", meta))
+    report["compacted"] = pressure > compact_after or tombs
+    if report["compacted"]:
+        kind["compact"](spark, path, None)
+    report["vacuumed"] = index_vacuum(path, vacuum_min_age_sec)
+    report["fsck"] = index_fsck(spark, path)
+    report["status"] = report["fsck"]["status"]
+    return report
+
+
+def index_fsck(spark: SparkSession, path: str) -> dict:
+    """Read-only ops doctor for a serving index. Returns::
+
+        {"status": "ok" | "attention", "findings": [str, ...],
+         "meta": {...}, "measured": {...}, "generations": {...}}
+
+    Checks, cheapest first: filesystem artifacts
+    (`index_artifact_findings`: stale writer lock, orphaned metadata
+    ``.tmp``, crashed-swap leftovers); metadata readability (torn JSON
+    reports as a finding instead of raising); orphan generations
+    (`generation_findings`); duplicate rows in the data family (count
+    vs full-row distinct — a crash-window replay pending heal); pending
+    tombstones (hidden at read by design); then the store's own checks
+    — BM25: n_docs/total_dl counter drift and df-log consistency; IVF:
+    stored dims, list-id range, the PQ tier, row-counter drift. Run it
+    at maintenance cadence, not per query."""
+    kind = _index_kind(path)
+    findings = index_artifact_findings(path, kind["meta"], kind["families"])
+    report: dict = {"meta": None, "measured": {}}
+    try:
+        meta = read_index_meta(os.path.join(path, kind["meta"]))
+    except ValueError as e:
+        findings.append(str(e))
+        report["status"] = "attention"
+        report["findings"] = findings
+        return report
+    report["meta"] = meta
+    gen_f, report["generations"] = generation_findings(path, meta, kind["families"])
+    findings.extend(gen_f)
+
+    data = spark.read.parquet(gen_dir(path, kind["data"], meta))
+    # distinct over a STRUCT: a multi-argument count_distinct skips any
+    # row holding a NULL column, miscounting it as a duplicate
+    n_rows, n_distinct = data.select(
+        F.count(F.lit(1)), F.count_distinct(F.struct(*data.columns))
+    ).first()
+    if n_rows != n_distinct:
+        findings.append(
+            f"{n_rows - n_distinct} duplicate rows in {kind['data']} "
+            f"(crash-window replay pending heal) — compaction removes them"
+        )
+    tpath = gen_dir(path, "tombstones", meta)
+    if os.path.isdir(tpath):
+        n_tomb = spark.read.parquet(tpath).distinct().count()
+        findings.append(
+            f"{n_tomb} pending tombstones (hidden at read; compaction "
+            f"applies them physically)"
+        )
+    report["measured"], store_f = kind["checks"](
+        spark, path, meta, data, int(n_distinct)
+    )
+    findings.extend(store_f)
+    report["status"] = "ok" if not findings else "attention"
+    report["findings"] = findings
+    return report
 
 
 #: Reserved batch id for a compaction's PUBLISH directory: the folded
@@ -1039,7 +1291,7 @@ def store_fsck(
 ) -> dict:
     """Ops doctor for an incremental-dedup store (the `batch_id=N`
     layout the streaming sinks write) — the third fsck, completing the
-    symmetry with `text_index_fsck` / `ivf_index_fsck`. Read-only;
+    symmetry with the serving indexes' `index_fsck`. Read-only;
     returns ``{"status": "ok" | "attention", "findings": [...],
     "measured": {...}}``. Checks, cheapest first:
 
@@ -1190,8 +1442,8 @@ def store_fsck(
 
 def serving_layout_pressure(d: str) -> int:
     """MAX data files in any one leaf partition directory — the
-    serving-layout pressure metric the `*_maintain` runbooks compact
-    on. Per-directory (not total): a query pays listing + footer costs
+    serving-layout pressure metric `index_maintain` compacts on.
+    Per-directory (not total): a query pays listing + footer costs
     per PROBED directory, and compaction folds each directory to one
     file, so this metric settles to 1 after a compact — a total-count
     threshold would never settle below `n_partitions` and a maintain

@@ -17,6 +17,8 @@ an externally-served bloom scorer and a TTL'd online store
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -166,6 +168,24 @@ def dedup_stream(
 _OUT_CLUSTER_MIN_BYTES = 256 * 1024 * 1024
 
 
+@contextlib.contextmanager
+def _job_label(spark, label: str):
+    """Label every Spark job the body runs with ``label`` (the job
+    description the status store, the UI and `tools/profile.py jobs`
+    group by), then restore the PRIOR description — the streaming
+    engine's own batch label — so jobs that run later in the same
+    micro-batch keep their attribution. foreachBatch runs on the
+    stream-execution thread and the description is thread-local, so a
+    label lands on exactly this batch's jobs."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)
+
+
 def _maybe_cluster_output(df: DataFrame, cluster_output):
     """Size-gated REBALANCE before a ``batch_id=N`` corpus write (guide
     §6, VERDICT r12 #4). ``cluster_output``: ``'auto'`` applies the
@@ -279,35 +299,23 @@ def incremental_ingest_sink(
         # index_fn then receives it as a second argument and can derive
         # the store rows without recomputing that state from the
         # survivors' raw text.
-        # label the per-batch phases (guide §1.5): foreachBatch runs on
-        # the stream-execution thread and setJobDescription is
-        # thread-local, so these tags land on exactly this batch's jobs
-        # — the UI/profiler can attribute the stream's job floor to
-        # gate/dedup construction (eager signature checkpoints,
-        # connected components), the corpus write, and the store write.
-        sc = spark.sparkContext
-        # ADVICE r12 #2: restore the PRIOR description (the streaming
-        # engine's own batch label), not None — jobs running after this
-        # sink body in the same micro-batch (e.g. a composing sink's
-        # serving appends or maintenance) keep their attribution
-        prev_desc = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(f"ingest b={batch_id}: gates+dedup plan")
-        try:
+        # the per-batch phase labels attribute the stream's job floor to
+        # gate/dedup construction (eager signature checkpoints, connected
+        # components), the corpus write, and the store write
+        with _job_label(spark, f"ingest b={batch_id}: gates+dedup plan"):
             res = dedup_fn(batch_df, idx)
             aux = None
             if isinstance(res, tuple):
                 res, aux = res
-            sc.setJobDescription(f"ingest b={batch_id}: corpus write")
+        with _job_label(spark, f"ingest b={batch_id}: corpus write"):
             _maybe_cluster_output(res, cluster_output).write.mode(
                 "overwrite"
             ).parquet(f"{out_path}/batch_id={batch_id}")
             kept = spark.read.parquet(f"{out_path}/batch_id={batch_id}")
-            sc.setJobDescription(f"ingest b={batch_id}: store index rows")
+        with _job_label(spark, f"ingest b={batch_id}: store index rows"):
             (index_fn(kept, aux) if aux is not None else index_fn(kept)).write.mode(
                 "overwrite"
             ).parquet(f"{index_path}/batch_id={batch_id}")
-        finally:
-            sc.setJobDescription(prev_desc)
 
     return inner
 
@@ -846,10 +854,10 @@ def prepared_serving_sink(
     skip batch ids they already committed. Crash windows are per-store
     and heal independently (`text_index_compact` / `ivf_index_compact`).
 
-    ``maintain_every_n`` (VERDICT r09 #2): every N-th micro-batch, AFTER
-    the batch commits, run the one-call maintain runbooks on every store
-    this sink owns — `store_maintain` on the dedup signature store and
-    `text_index_maintain` / `ivf_index_maintain` on the serving indexes
+    ``maintain_every_n``: every N-th micro-batch, AFTER the batch
+    commits, run the one-call maintain runbooks on every store this
+    sink owns — `store_maintain` on the dedup signature store and
+    `index_maintain` on each serving index
     (heal -> compact-if-pressure/tombstones -> vacuum past
     ``maintain_vacuum_min_age_sec``). The sink is the single writer, so
     the runbooks' writer locks never contend with its own appends; set
@@ -873,14 +881,9 @@ def prepared_serving_sink(
     def inner(batch_df: DataFrame, batch_id: int) -> None:
         prep(batch_df, batch_id)
         spark = batch_df.sparkSession
-        sc = spark.sparkContext
         kept = spark.read.parquet(f"{out_path}/batch_id={batch_id}")
-        # ADVICE r12 #2: restore the prior (streaming-engine) description
-        # in finally, and give the maintenance branch its own label
-        prev_desc = sc.getLocalProperty("spark.job.description")
-        try:
-            if text_index_path is not None:
-                sc.setJobDescription(f"serve b={batch_id}: bm25 append")
+        if text_index_path is not None:
+            with _job_label(spark, f"serve b={batch_id}: bm25 append"):
                 text_index_append(
                     kept,
                     text_index_path,
@@ -888,41 +891,23 @@ def prepared_serving_sink(
                     id_col=id_col,
                     src_batch=int(batch_id),
                 )
-            if ann_sink is not None:
-                sc.setJobDescription(f"serve b={batch_id}: ann append")
+        if ann_sink is not None:
+            with _job_label(spark, f"serve b={batch_id}: ann append"):
                 ann_sink(kept, batch_id)
-            if (
-                maintain_every_n
-                and batch_id > 0
-                and batch_id % maintain_every_n == 0
-            ):
-                from geoscan_fraud_spark.operators.retrieval import (
-                    text_index_maintain,
-                )
-                from geoscan_fraud_spark.operators.similarity import (
-                    ivf_index_maintain,
-                )
-                from geoscan_fraud_spark.sources.io import store_maintain
+        if maintain_every_n and batch_id > 0 and batch_id % maintain_every_n == 0:
+            from geoscan_fraud_spark.sources.io import index_maintain, store_maintain
 
-                sc.setJobDescription(f"serve b={batch_id}: maintenance")
+            with _job_label(spark, f"serve b={batch_id}: maintenance"):
                 store_maintain(
                     spark, index_path, compact_after=maintain_compact_after
                 )
-                if text_index_path is not None:
-                    text_index_maintain(
-                        spark,
-                        text_index_path,
-                        compact_after=maintain_compact_after,
-                        vacuum_min_age_sec=maintain_vacuum_min_age_sec,
-                    )
-                if ann_index_path is not None:
-                    ivf_index_maintain(
-                        spark,
-                        ann_index_path,
-                        compact_after=maintain_compact_after,
-                        vacuum_min_age_sec=maintain_vacuum_min_age_sec,
-                    )
-        finally:
-            sc.setJobDescription(prev_desc)
+                for path in (text_index_path, ann_index_path):
+                    if path is not None:
+                        index_maintain(
+                            spark,
+                            path,
+                            compact_after=maintain_compact_after,
+                            vacuum_min_age_sec=maintain_vacuum_min_age_sec,
+                        )
 
     return inner

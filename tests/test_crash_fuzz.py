@@ -32,20 +32,19 @@ import geoscan_fraud_spark.sources.io as io
 from geoscan_fraud_spark.operators.retrieval import (
     text_index_append,
     text_index_compact,
-    text_index_delete,
-    text_index_fsck,
-    text_index_maintain,
     text_index_query,
     text_index_write,
 )
 from geoscan_fraud_spark.operators.similarity import (
     ivf_index_append,
     ivf_index_compact,
-    ivf_index_delete,
-    ivf_index_fsck,
-    ivf_index_maintain,
     ivf_index_query,
     ivf_index_write,
+)
+from geoscan_fraud_spark.sources.io import (
+    index_delete,
+    index_fsck,
+    index_maintain,
 )
 
 
@@ -125,7 +124,7 @@ def _text_steps(spark, docs, path):
         lambda: text_index_append(
             docs.filter(F.col("doc_id") >= 4), path, src_batch=1
         ),
-        lambda: text_index_delete(spark, path, [1, 6]),
+        lambda: index_delete(spark, path, [1, 6]),
         lambda: text_index_compact(spark, path),
     ]
 
@@ -149,9 +148,9 @@ def test_text_index_crash_fuzz(spark, tmp_path):
         path = str(tmp_path / f"crash{n}")
         _, step = _run_lifecycle(_text_steps(spark, docs, path), boom_at=n)
         assert step is not None, f"commit #{n} fired outside every step?"
-        report = text_index_maintain(spark, path, compact_after=1)
+        report = index_maintain(spark, path, compact_after=1)
         assert report["status"] == "ok", (n, step, report)
-        assert text_index_fsck(spark, path)["findings"] == []
+        assert index_fsck(spark, path)["findings"] == []
         assert _text_serve(spark, path) == want, (
             f"crash at commit #{n} (step {step}) diverged after heal"
         )
@@ -175,7 +174,7 @@ def _ivf_steps(spark, emb, path):
         lambda: ivf_index_append(
             emb.filter(F.col("vec_id") % 2 == 1), path, src_batch=1
         ),
-        lambda: ivf_index_delete(
+        lambda: index_delete(
             spark, path, emb.filter(F.col("vec_id") % 7 == 3).select("vec_id")
         ),
         lambda: ivf_index_compact(spark, path),
@@ -203,9 +202,9 @@ def test_ivf_pq_index_crash_fuzz(spark, tmp_path):
         path = str(tmp_path / f"crash{n}")
         _, step = _run_lifecycle(_ivf_steps(spark, emb, path), boom_at=n)
         assert step is not None
-        report = ivf_index_maintain(spark, path, compact_after=1)
+        report = index_maintain(spark, path, compact_after=1)
         assert report["status"] == "ok", (n, step, report)
-        assert ivf_index_fsck(spark, path)["findings"] == []
+        assert index_fsck(spark, path)["findings"] == []
         assert _ivf_serve(spark, emb, path) == want, (
             f"crash at commit #{n} (step {step}) diverged after heal"
         )

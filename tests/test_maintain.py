@@ -1,5 +1,5 @@
 """VERDICT r09 #2 — one-call `maintain()` ops runbooks: the doctor trio
-(`text_index_fsck` / `ivf_index_fsck` / `store_fsck`) reports; these ACT.
+(`index_fsck` on either serving index, `store_fsck`) reports; these ACT.
 A planted crashed/accreted/orphaned index must return to clean via ONE
 call, and `prepared_serving_sink(maintain_every_n=...)` runs the runbooks
 on cadence inside the streaming sink."""
@@ -18,20 +18,18 @@ from pyspark.sql import functions as F
 
 from geoscan_fraud_spark.operators.retrieval import (
     text_index_append,
-    text_index_delete,
-    text_index_maintain,
     text_index_query,
     text_index_write,
 )
 from geoscan_fraud_spark.operators.similarity import (
     ivf_index_append,
-    ivf_index_delete,
-    ivf_index_maintain,
     ivf_index_query,
     ivf_index_write,
     lloyd_centroids,
 )
 from geoscan_fraud_spark.sources.io import (
+    index_delete,
+    index_maintain,
     list_index_generations,
     read_index_meta,
     store_maintain,
@@ -69,12 +67,12 @@ def test_text_index_maintain_one_call(spark, tmp_path):
     # plant: orphaned tmp, dead-holder lock, pending takedown, orphan gen
     with open(path + "/stats.json.tmp", "w") as f:
         f.write('{"half')
-    text_index_delete(spark, path, [1])
+    index_delete(spark, path, [1])
     with open(path + "/.writer.lock", "w") as f:
         f.write(f"pid={_dead_pid()} host={HOST} op=crashed token=tttt")
     os.makedirs(path + "/postings.g7")  # crashed, never-published orphan
 
-    report = text_index_maintain(spark, path, compact_after=3)
+    report = index_maintain(spark, path, compact_after=3)
 
     assert report["status"] == "ok" and report["fsck"]["findings"] == []
     healed = " ".join(report["healed"])
@@ -90,7 +88,7 @@ def test_text_index_maintain_one_call(spark, tmp_path):
     want = {tuple(r) for r in text_index_query(spark, ref, qs, k=5).collect()}
     assert got == want
     # idempotent: a second call heals nothing, compacts nothing
-    report2 = text_index_maintain(spark, path, compact_after=3)
+    report2 = index_maintain(spark, path, compact_after=3)
     assert report2["healed"] == [] and report2["compacted"] is False
     assert report2["vacuumed"] == [] and report2["status"] == "ok"
 
@@ -109,7 +107,7 @@ def test_maintain_sweeps_dead_acquire_debris(spark, tmp_path):
         f.write(dead)
     with open(path + "/.writer.lock.claim-1-live", "w") as f:
         f.write(live)
-    report = text_index_maintain(spark, path)
+    report = index_maintain(spark, path)
     swept = [h for h in report["healed"] if "debris" in h]
     assert len(swept) == 2
     assert not os.path.exists(path + "/.writer.lock.claim-999-abcd")
@@ -124,11 +122,11 @@ def test_text_index_maintain_refuses_live_foreign_lock(spark, tmp_path):
     path = str(tmp_path / "idx")
     docs = spark.createDataFrame(DOCS, SCHEMA)
     text_index_write(docs, path, n_buckets=4)
-    text_index_delete(spark, path, [1])  # forces a compaction attempt
+    index_delete(spark, path, [1])  # forces a compaction attempt
     with open(path + "/.writer.lock", "w") as f:
         f.write("pid=1 host=elsewhere op=remote token=uuuu")
     with pytest.raises(ValueError, match="writer is active"):
-        text_index_maintain(spark, path)
+        index_maintain(spark, path)
     assert os.path.exists(path + "/.writer.lock")  # untouched
 
 
@@ -155,12 +153,12 @@ def test_ivf_index_maintain_one_call(spark, tmp_path):
         )
     with open(path + "/centroids.json.tmp", "w") as f:
         f.write('{"half')
-    ivf_index_delete(spark, path, [100, 101])
+    index_delete(spark, path, [100, 101])
     with open(path + "/.writer.lock", "w") as f:
         f.write(f"pid={_dead_pid()} host={HOST} op=crashed token=vvvv")
     os.makedirs(path + "/lists.g9")
 
-    report = ivf_index_maintain(spark, path, compact_after=3)
+    report = index_maintain(spark, path, compact_after=3)
 
     assert report["status"] == "ok" and report["fsck"]["findings"] == []
     healed = " ".join(report["healed"])
@@ -175,7 +173,7 @@ def test_ivf_index_maintain_one_call(spark, tmp_path):
     res = ivf_index_query(q, path, k=60, nprobe=4, exclude_self=False)
     ids = {r["vec_id"] for r in res.collect()}
     assert 100 not in ids and 101 not in ids and 102 in ids
-    report2 = ivf_index_maintain(spark, path, compact_after=3)
+    report2 = index_maintain(spark, path, compact_after=3)
     assert report2["healed"] == [] and report2["compacted"] is False
     assert report2["vacuumed"] == [] and report2["status"] == "ok"
 

@@ -25,11 +25,11 @@ from geoscan_fraud_spark.operators.similarity import (
     brute_force_topk,
     ivf_index_append,
     ivf_index_compact,
-    ivf_index_delete,
     ivf_index_query,
     ivf_index_write,
     ivf_recall_at_k,
 )
+from geoscan_fraud_spark.sources.io import index_delete
 
 
 @pytest.fixture(scope="module")
@@ -115,7 +115,7 @@ def test_pq_index_lifecycle_serves_identically(spark, emb):
         n_centroids=4, pq_m=8, pq_k=16, pq_train_rows=250,
     )
     ivf_index_append(emb.filter(F.col("vec_id") % 2 == 1), path)
-    ivf_index_delete(
+    index_delete(
         spark, path, emb.filter(F.col("vec_id") % 7 == 3).select("vec_id")
     )
     q = emb.filter(F.col("vec_id") < 3)
@@ -169,7 +169,7 @@ def test_rebuild_keeps_pq_tier(spark, emb):
         emb.filter(F.col("vec_id") < 300), path,
         n_centroids=4, pq_m=8, pq_k=16, pq_train_rows=250,
     )
-    ivf_index_delete(
+    index_delete(
         spark, path, emb.filter(F.col("vec_id") % 11 == 0).select("vec_id")
     )
     ivf_index_rebuild(spark, path, n_centroids=4)
@@ -245,7 +245,7 @@ def test_residual_index_lifecycle(spark, emb):
         n_centroids=4, pq_m=8, pq_k=16, pq_train_rows=250, pq_residual=True,
     )
     ivf_index_append(emb.filter(F.col("vec_id") % 2 == 1), path)
-    ivf_index_delete(
+    index_delete(
         spark, path, emb.filter(F.col("vec_id") % 7 == 3).select("vec_id")
     )
     q = emb.filter(F.col("vec_id") < 3)
@@ -275,20 +275,23 @@ def test_fsck_checks_pq_tier(spark, emb):
     finding, not a silent serve-time crash."""
     import json
 
-    from geoscan_fraud_spark.operators.similarity import ivf_index_fsck
-    from geoscan_fraud_spark.sources.io import atomic_write_json, read_index_meta
+    from geoscan_fraud_spark.sources.io import (
+        atomic_write_json,
+        index_fsck,
+        read_index_meta,
+    )
 
     path = tempfile.mkdtemp(prefix="pq_fsck_") + "/idx"
     ivf_index_write(
         emb.limit(200), path, n_centroids=2, pq_m=8, pq_k=16,
         pq_train_rows=200,
     )
-    assert ivf_index_fsck(spark, path)["findings"] == []
+    assert index_fsck(spark, path)["findings"] == []
     # wrong advertised width -> every row flagged
     meta = read_index_meta(path + "/centroids.json")
     meta["pq"]["m"] = 5
     atomic_write_json(path + "/centroids.json", meta)
-    bad = ivf_index_fsck(spark, path)["findings"]
+    bad = index_fsck(spark, path)["findings"]
     assert any("wrong-width codes" in f for f in bad), bad
     # pq block on an index whose lists never had the columns
     plain = tempfile.mkdtemp(prefix="pq_fsck2_") + "/idx"
@@ -296,8 +299,45 @@ def test_fsck_checks_pq_tier(spark, emb):
     meta = read_index_meta(plain + "/centroids.json")
     meta["pq"] = {"m": 8, "k": 16, "codebooks": [[[0.0] * 8] * 16] * 8}
     atomic_write_json(plain + "/centroids.json", meta)
-    bad = ivf_index_fsck(spark, plain)["findings"]
+    bad = index_fsck(spark, plain)["findings"]
     assert any("lack codes/vnorm" in f for f in bad), bad
+
+
+def test_fsck_null_vnorm_is_pq_corruption_only(spark, emb):
+    """A PQ row with a NULL vnorm is corruption the PQ-tier check names
+    — and nothing else: counting distinct rows column by column skips
+    a row holding a NULL, which misreported it as a duplicate row and
+    as row-counter drift."""
+    import glob
+    import shutil
+
+    from geoscan_fraud_spark.sources.io import index_fsck
+
+    path = tempfile.mkdtemp(prefix="pq_nullnorm_") + "/idx"
+    ivf_index_write(
+        emb.limit(200), path, n_centroids=2, pq_m=8, pq_k=16,
+        pq_train_rows=200,
+    )
+    assert index_fsck(spark, path)["findings"] == []
+    # plant: one list's file rewritten with a NULL vnorm on one row
+    d = sorted(glob.glob(path + "/lists/list_id=*"))[0]
+    rows = spark.read.parquet(d)
+    victim = rows.agg(F.min("vec_id")).first()[0]
+    tmp = tempfile.mkdtemp(prefix="pq_nullnorm_file_") + "/out"
+    rows.withColumn(
+        "vnorm",
+        F.when(F.col("vec_id") == victim, F.lit(None)).otherwise(
+            F.col("vnorm")
+        ),
+    ).coalesce(1).write.parquet(tmp)
+    for f in glob.glob(d + "/*.parquet"):
+        os.remove(f)
+    (planted,) = glob.glob(tmp + "/*.parquet")
+    shutil.move(planted, d)
+
+    findings = index_fsck(spark, path)["findings"]
+    assert any("1 rows with null vnorm" in f for f in findings), findings
+    assert not any("duplicate" in f or "drift" in f for f in findings), findings
 
 
 def test_streaming_ingest_into_pq_index(spark, emb):
@@ -404,7 +444,7 @@ def test_expire_keeps_pq_tier(spark, emb):
     """Retention on a pq index: expiry relays out the lists generically,
     so codes/vnorm survive and the ADC tier serves exactly the
     build + surviving-batch corpus."""
-    from geoscan_fraud_spark.operators.similarity import ivf_index_expire
+    from geoscan_fraud_spark.sources.io import index_expire
 
     path = tempfile.mkdtemp(prefix="pq_expire_") + "/idx"
     ivf_index_write(
@@ -416,7 +456,7 @@ def test_expire_keeps_pq_tier(spark, emb):
         path, src_batch=1,
     )
     ivf_index_append(emb.filter(F.col("vec_id") >= 350), path, src_batch=2)
-    ivf_index_expire(spark, path, min_src_batch=2)
+    index_expire(spark, path, min_src_batch=2)
     q = emb.filter(F.col("vec_id") < 3)
     got = _rows(
         ivf_index_query(

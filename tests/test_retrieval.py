@@ -381,10 +381,8 @@ def test_text_index_expire_parity_with_fresh_build(spark, docs_df, tmp_path):
     rows never expire; legacy indexes are refused."""
     import json
 
-    from geoscan_fraud_spark.operators.retrieval import (
-        text_index_append,
-        text_index_expire,
-    )
+    from geoscan_fraud_spark.operators.retrieval import text_index_append
+    from geoscan_fraud_spark.sources.io import gen_dir, index_expire
 
     seed = docs_df.filter(F.col("doc_id") <= 3)
     gen1 = docs_df.filter((F.col("doc_id") > 3) & (F.col("doc_id") <= 5))
@@ -394,7 +392,7 @@ def test_text_index_expire_parity_with_fresh_build(spark, docs_df, tmp_path):
     text_index_write(seed, path, n_buckets=8)
     text_index_append(gen1, path, src_batch=1)
     text_index_append(gen2, path, src_batch=2)
-    text_index_expire(spark, path, min_src_batch=2)
+    index_expire(spark, path, min_src_batch=2)
 
     fresh = str(tmp_path / "fresh")
     text_index_write(seed.unionByName(gen2), fresh, n_buckets=8)
@@ -421,8 +419,6 @@ def test_text_index_expire_parity_with_fresh_build(spark, docs_df, tmp_path):
     )
     # build generation survived an aggressive cutoff (live postings
     # resolve through the flipped pointer)
-    from geoscan_fraud_spark.sources.io import gen_dir
-
     gens = {
         r["src_batch"]
         for r in spark.read.parquet(gen_dir(path, "postings", lived))
@@ -439,7 +435,7 @@ def test_text_index_expire_parity_with_fresh_build(spark, docs_df, tmp_path):
     with open(path + "/stats.json", "w") as f:
         json.dump(meta, f)
     with pytest.raises(ValueError, match="format-2"):
-        text_index_expire(spark, path, min_src_batch=3)
+        index_expire(spark, path, min_src_batch=3)
 
 
 def test_text_index_delete_lucene_semantics(spark, docs_df, tmp_path):
@@ -448,10 +444,8 @@ def test_text_index_delete_lucene_semantics(spark, docs_df, tmp_path):
     compaction the index is bit-identical to one built without the doc."""
     import json
 
-    from geoscan_fraud_spark.operators.retrieval import (
-        text_index_compact,
-        text_index_delete,
-    )
+    from geoscan_fraud_spark.operators.retrieval import text_index_compact
+    from geoscan_fraud_spark.sources.io import gen_dir, index_delete
 
     path = str(tmp_path / "del")
     text_index_write(docs_df, path, n_buckets=8)
@@ -462,7 +456,7 @@ def test_text_index_delete_lucene_semantics(spark, docs_df, tmp_path):
         for r in text_index_query(spark, path, queries, k=8).collect()
     }
     victim = 3  # "quick quick quick fox"
-    text_index_delete(spark, path, [victim])
+    index_delete(spark, path, [victim])
 
     mid = {
         (r["query_id"], r["doc_id"]): r["score"]
@@ -475,8 +469,6 @@ def test_text_index_delete_lucene_semantics(spark, docs_df, tmp_path):
 
     text_index_compact(spark, path)
     # physically gone from the LIVE generation + stats corrected
-    from geoscan_fraud_spark.sources.io import gen_dir
-
     with open(path + "/stats.json") as f:
         meta = json.load(f)
     assert (

@@ -5,11 +5,8 @@
   never both win, a fresh live lock is never removed, a vanished lock is
   retried instead of refused, and the lock is never visible without its
   holder metadata;
-* vacuum grace period ages from the RETIRE flip, not last write
-  (ADVICE r09 medium #2);
 * exact n_empty accounting for deleted/expired zero-token docs
   (VERDICT r09 #5 — the ``empty_docs`` list);
-* one-column takedown contract fail-fast (VERDICT r09 #7);
 * `dedup_span_store` pending flag (ADVICE r09 low #4);
 * MVCC snapshot read handles on both serving queries (``meta=`` — the
   stale-generation contract VERDICT r09 #6 put under the hash gate);
@@ -38,24 +35,21 @@ from pyspark.sql import functions as F
 from geoscan_fraud_spark.operators.retrieval import (
     text_index_append,
     text_index_compact,
-    text_index_delete,
-    text_index_expire,
-    text_index_fsck,
     text_index_query,
-    text_index_vacuum,
     text_index_write,
 )
 from geoscan_fraud_spark.operators.similarity import (
     ivf_index_append,
     ivf_index_compact,
-    ivf_index_delete,
-    ivf_index_vacuum,
     ivf_index_write,
     lloyd_centroids,
 )
 from geoscan_fraud_spark.sources.io import (
     _try_steal_stale_lock,
-    forget_ids,
+    index_delete,
+    index_expire,
+    index_fsck,
+    index_vacuum,
     index_writer_lock,
     list_index_generations,
     read_index_meta,
@@ -225,8 +219,6 @@ def test_lock_still_refuses_live_and_foreign_holders(tmp_path):
     os.unlink(os.path.join(path, ".writer.lock"))
 
 
-# ------------------------------------------------- vacuum retire-time grace
-
 DOCS = [
     (0, "alpha beta gamma"),
     (1, "alpha delta"),
@@ -234,46 +226,6 @@ DOCS = [
     (3, "gamma delta epsilon"),
 ]
 SCHEMA = "doc_id long, text string"
-
-
-def _backdate(root: str, names, age: float) -> None:
-    t = time.time() - age
-    for name, gens in list_index_generations(root, list(names)).items():
-        for g in gens:
-            d = os.path.join(root, name if g == 0 else f"{name}.g{g}")
-            os.utime(d, (t, t))
-
-
-def test_vacuum_grace_ages_from_retire_not_last_write(spark, tmp_path):
-    """ADVICE r09 medium #2: a generation QUIESCENT for longer than the
-    grace period used to be vacuumable the instant it was retired. Now
-    the flip stamps outgoing dirs, so a fresh retirement always gets a
-    full grace period."""
-    path = str(tmp_path / "idx")
-    text_index_write(spark.createDataFrame(DOCS, SCHEMA), path, n_buckets=4)
-    # make generation 0 look long-quiescent (last write far in the past)
-    _backdate(path, ["postings", "terms"], age=3600)
-    text_index_compact(spark, path)  # flips to gen 1, stamps gen 0 = NOW
-    # a grace-period vacuum right after the flip must NOT remove gen 0
-    assert text_index_vacuum(path, min_age_sec=60) == []
-    assert os.path.isdir(os.path.join(path, "postings"))
-    # once the grace period has really elapsed since the RETIRE, it goes
-    _backdate(path, ["postings", "terms"], age=120)
-    removed = text_index_vacuum(path, min_age_sec=60)
-    assert "postings" in removed and "terms" in removed
-
-
-def test_ivf_vacuum_grace_ages_from_retire(spark, tmp_path):
-    path = str(tmp_path / "ivf")
-    rows = [(i, [float(i % 5), float(i % 3)]) for i in range(40)]
-    cent = lloyd_centroids(np.array([v for _, v in rows]), 4)
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    ivf_index_write(df, path, centroids=cent)
-    _backdate(path, ["lists"], age=3600)
-    ivf_index_compact(spark, path)
-    assert ivf_index_vacuum(path, min_age_sec=60) == []
-    _backdate(path, ["lists"], age=120)
-    assert "lists" in ivf_index_vacuum(path, min_age_sec=60)
 
 
 # ------------------------------------------- exact empty-doc stat recompute
@@ -295,7 +247,7 @@ def test_deleted_empty_doc_comes_off_n_docs_exactly(spark, tmp_path):
     assert meta["empties_tracked"] is True
 
     # tombstone one empty doc and one real doc, compact
-    text_index_delete(spark, path, [1, 4])
+    index_delete(spark, path, [1, 4])
     text_index_compact(spark, path)
     meta = read_index_meta(path + "/stats.json")
     assert meta["n_empty"] == 1  # doc 5 survives, doc 4 is gone
@@ -333,7 +285,7 @@ def test_expired_empty_doc_comes_off_n_docs(spark, tmp_path):
     text_index_write(docs.filter(F.col("doc_id") <= 3), path, n_buckets=4)
     # batch 1 carries the empty docs; expire below 2 drops them
     text_index_append(docs.filter(F.col("doc_id") > 3), path, src_batch=1)
-    text_index_expire(spark, path, min_src_batch=2)
+    index_expire(spark, path, min_src_batch=2)
     meta = read_index_meta(path + "/stats.json")
     assert meta["n_empty"] == 0
     assert meta["n_docs"] == 4  # the four build docs (src_batch=-1 kept)
@@ -354,7 +306,7 @@ def test_legacy_index_without_tracking_keeps_carry_forward(spark, tmp_path):
     import shutil
 
     shutil.rmtree(os.path.join(path, "empty_docs"))
-    text_index_delete(spark, path, [4])  # a (now-invisible) empty doc
+    index_delete(spark, path, [4])  # a (now-invisible) empty doc
     text_index_compact(spark, path)
     meta = read_index_meta(meta_path)
     assert meta["n_empty"] == 2  # carry-forward, the documented legacy mode
@@ -371,35 +323,11 @@ def test_empty_docs_fold_under_generations_and_vacuum(spark, tmp_path):
     text_index_compact(spark, path)
     gens = list_index_generations(path, ["empty_docs"])["empty_docs"]
     assert gens == [0, 1]
-    removed = text_index_vacuum(path)
+    removed = index_vacuum(path)
     assert "empty_docs" in removed
     assert list_index_generations(path, ["empty_docs"])["empty_docs"] == [1]
-    rep = text_index_fsck(spark, path)
+    rep = index_fsck(spark, path)
     assert rep["status"] == "ok"
-
-
-# --------------------------------------------------- takedown id contract
-
-
-def test_takedown_rejects_multi_column_ids(spark, tmp_path):
-    docs = spark.createDataFrame(DOCS, SCHEMA)
-    path = str(tmp_path / "idx")
-    text_index_write(docs, path, n_buckets=4)
-    with pytest.raises(ValueError, match="ONE-column"):
-        text_index_delete(spark, path, docs)  # two columns
-    with pytest.raises(ValueError, match="ONE-column"):
-        forget_ids(spark, str(tmp_path / "store"), docs)
-    rows = [(i, [float(i), 1.0]) for i in range(20)]
-    cent = lloyd_centroids(np.array([v for _, v in rows]), 2)
-    vdf = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    ivf = str(tmp_path / "ivf")
-    ivf_index_write(vdf, ivf, centroids=cent)
-    with pytest.raises(ValueError, match="ONE-column"):
-        ivf_index_delete(spark, ivf, vdf)
-    # the happy paths still work
-    text_index_delete(spark, path, docs.select("doc_id"))
-    ivf_index_delete(spark, ivf, vdf.select("vec_id"))
-    forget_ids(spark, str(tmp_path / "store"), [1, 2])
 
 
 # ------------------------------------------------- j2 fold value pin (r10)
@@ -459,7 +387,7 @@ def test_ivf_query_meta_handle_pins_generation(spark, tmp_path):
     ivf_index_compact(spark, path)  # flip to gen 1
     # delete AFTER the flip: tombstones are generation-scoped to gen 1,
     # so the stale gen-0 read must NOT see them
-    ivf_index_delete(spark, path, [100])
+    index_delete(spark, path, [100])
     from geoscan_fraud_spark.operators.similarity import ivf_index_query
 
     q = spark.createDataFrame(
@@ -489,7 +417,7 @@ def test_text_query_meta_handle_pins_generation(spark, tmp_path):
     text_index_write(docs, path, n_buckets=4)
     gen0 = read_index_meta(path + "/stats.json")
     text_index_compact(spark, path)  # flip to gen 1
-    text_index_delete(spark, path, [2])  # gen-1-scoped tombstone
+    index_delete(spark, path, [2])  # gen-1-scoped tombstone
     qs = [("q1", "beta gamma")]
     live = text_index_query(spark, path, qs, k=5)
     stale = text_index_query(spark, path, qs, k=5, meta=gen0)

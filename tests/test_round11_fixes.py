@@ -286,12 +286,11 @@ def test_upgrade_empties_backfills_and_restores_exact_accounting(
     build over the survivors."""
     from geoscan_fraud_spark.operators.retrieval import (
         text_index_compact,
-        text_index_delete,
         text_index_query,
         text_index_upgrade_empties,
         text_index_write,
     )
-    from geoscan_fraud_spark.sources.io import read_index_meta
+    from geoscan_fraud_spark.sources.io import index_delete, read_index_meta
 
     docs = spark.createDataFrame(_TDOCS, _TSCHEMA)
     path = str(tmp_path / "idx")
@@ -312,7 +311,7 @@ def test_upgrade_empties_backfills_and_restores_exact_accounting(
     assert again["upgraded"] is False and again["tracked"] is True
 
     # the exact accounting the flag buys: delete an empty doc, compact
-    text_index_delete(spark, path, [4])
+    index_delete(spark, path, [4])
     text_index_compact(spark, path)
     meta = read_index_meta(path + "/stats.json")
     ref = str(tmp_path / "ref")
@@ -356,11 +355,8 @@ def test_upgrade_empties_rejects_wrong_corpus(spark, tmp_path):
 def test_upgrade_empties_free_when_no_empties_and_maintain_folds_it(
     spark, tmp_path
 ):
-    from geoscan_fraud_spark.operators.retrieval import (
-        text_index_maintain,
-        text_index_upgrade_empties,
-    )
-    from geoscan_fraud_spark.sources.io import read_index_meta
+    from geoscan_fraud_spark.operators.retrieval import text_index_upgrade_empties
+    from geoscan_fraud_spark.sources.io import index_maintain, read_index_meta
 
     docs = spark.createDataFrame(_TDOCS, _TSCHEMA).filter("doc_id <= 3")
     p1 = str(tmp_path / "free")
@@ -373,11 +369,11 @@ def test_upgrade_empties_free_when_no_empties_and_maintain_folds_it(
     # maintain performs the same free flip on a legacy index...
     p2 = str(tmp_path / "maint")
     _make_legacy(spark, p2, docs)
-    rep = text_index_maintain(spark, p2)
+    rep = index_maintain(spark, p2)
     assert rep["empties_upgrade"]["upgraded"] is True
     assert read_index_meta(p2 + "/stats.json")["empties_tracked"] is True
     # ...and is idempotent: the second pass sees a tracked index
-    rep2 = text_index_maintain(spark, p2)
+    rep2 = index_maintain(spark, p2)
     assert "empties_upgrade" not in rep2
     assert rep2["status"] == "ok"
 
@@ -385,7 +381,7 @@ def test_upgrade_empties_free_when_no_empties_and_maintain_folds_it(
     full = spark.createDataFrame(_TDOCS, _TSCHEMA)
     p3 = str(tmp_path / "needs")
     _make_legacy(spark, p3, full)
-    rep3 = text_index_maintain(spark, p3)
+    rep3 = index_maintain(spark, p3)
     assert rep3["empties_upgrade"]["needs_corpus"] is True
 
 

@@ -13,7 +13,6 @@
   src_batch, cursor commits with the counters in ONE write);
 * idempotent `text_index_compact` stats (recomputed from surviving
   postings — the ADVICE r08 crash window heals by re-running);
-* `ivf_index_delete` accepts non-numeric ids;
 * `hybrid_search` fails fast on query-id disagreement and supports
   external string query ids (dense leg runs exclude_self=False).
 """
@@ -30,17 +29,16 @@ from pyspark.sql import functions as F
 from geoscan_fraud_spark.operators.retrieval import (
     text_index_append,
     text_index_compact,
-    text_index_delete,
     text_index_query,
     text_index_write,
 )
 from geoscan_fraud_spark.operators.similarity import (
     ivf_index_append,
-    ivf_index_delete,
     ivf_index_query,
     ivf_index_write,
     lloyd_centroids,
 )
+from geoscan_fraud_spark.sources.io import index_delete
 
 DOCS = [
     (1, "the quick brown fox"),
@@ -291,7 +289,7 @@ def test_text_index_compact_stats_heal_by_rerun(spark, tmp_path):
     text_index_write(spark.createDataFrame(DOCS, SCHEMA), path, n_buckets=4)
     pre_meta = open(path + "/stats.json").read()
 
-    text_index_delete(spark, path, [2, 6])
+    index_delete(spark, path, [2, 6])
     text_index_compact(spark, path)
     good = json.load(open(path + "/stats.json"))
     assert good["n_docs"] == 4
@@ -333,7 +331,7 @@ def test_compact_preserves_empty_doc_count(spark, tmp_path):
     path = str(tmp_path / "idx")
     text_index_write(spark.createDataFrame(docs[:5], SCHEMA), path, n_buckets=4)
     text_index_append(spark.createDataFrame(docs[5:], SCHEMA), path)
-    text_index_delete(spark, path, [1])
+    index_delete(spark, path, [1])
     text_index_compact(spark, path)
 
     ref = str(tmp_path / "ref")
@@ -359,27 +357,6 @@ def test_compact_preserves_empty_doc_count(spark, tmp_path):
         for r in text_index_query(spark, ref, qs, k=5).collect()
     }
     assert a == b and len(a) > 0
-
-
-# ------------------------------------------------------- delete id types
-
-
-def test_ivf_index_delete_accepts_string_ids(spark, tmp_path):
-    path = str(tmp_path / "ivf")
-    rng = np.random.RandomState(21)
-    rows = [
-        (f"doc-{i}", [float(x) for x in rng.randn(6)]) for i in range(20)
-    ]
-    cent = lloyd_centroids(np.array([v for _, v in rows]), 2)
-    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    ivf_index_write(df, path, centroids=cent)
-
-    ivf_index_delete(spark, path, ["doc-3", "doc-7"])
-    got = ivf_index_query(
-        df.limit(3), path, k=20, nprobe=2, exclude_self=False
-    )
-    ids = {r["vec_id"] for r in got.select("vec_id").distinct().collect()}
-    assert "doc-3" not in ids and "doc-7" not in ids and len(ids) > 0
 
 
 # ------------------------------------------------------------ hybrid guard
@@ -461,116 +438,6 @@ def test_ivf_query_numeric_external_id_keeps_colliding_doc(spark, tmp_path):
     assert top["vec_id"] == 5 and top["sim"] >= 0.999
     without = ivf_index_query(probe, path, k=3)  # default contract intact
     assert 5 not in {r["vec_id"] for r in without.collect()}
-
-
-# ------------------------------------------------------------- index fsck
-
-
-def test_text_index_fsck_clean_and_dirty(spark, tmp_path):
-    from geoscan_fraud_spark.operators.retrieval import text_index_fsck
-
-    path = str(tmp_path / "idx")
-    text_index_write(spark.createDataFrame(DOCS, SCHEMA), path, n_buckets=4)
-    rep = text_index_fsck(spark, path)
-    assert rep["status"] == "ok" and rep["findings"] == []
-    assert rep["measured"]["n_docs"] == rep["meta"]["n_docs"] == 6
-
-    # crash-window replay: duplicate postings + df over-count, counters intact
-    batch = spark.createDataFrame([(7, "replayed fox doc")], SCHEMA)
-    text_index_append(batch, path, src_batch=0)
-    meta_path = path + "/stats.json"
-    # simulate: rows landed, stats commit didn't, then the replay re-ran
-    m = json.load(open(meta_path))
-    m["last_stream_batch"] = -1
-    m["n_docs"] -= 1
-    m["total_dl"] -= 3
-    m["appends"] -= 1
-    m["n_empty"] = m.get("n_empty", 0)
-    with open(meta_path, "w") as f:
-        json.dump(m, f)
-    text_index_append(batch, path, src_batch=0)
-
-    rep = text_index_fsck(spark, path)
-    assert rep["status"] == "attention"
-    text = " ".join(rep["findings"])
-    assert "duplicate posting rows" in text and "df log" in text
-    # counters never double-counted (same-write contract): no drift finding
-    assert "counter drift" not in text
-
-    text_index_compact(spark, path)
-    rep = text_index_fsck(spark, path)
-    assert rep["status"] == "ok" and rep["findings"] == []
-
-    # pending tombstones + stale lock + corrupt meta all surface
-    text_index_delete(spark, path, [1])
-    with open(os.path.join(path, ".writer.lock"), "w") as f:
-        f.write("pid=1 op=test")
-    rep = text_index_fsck(spark, path)
-    text = " ".join(rep["findings"])
-    assert "tombstones" in text and "writer lock" in text
-    os.unlink(os.path.join(path, ".writer.lock"))
-    with open(meta_path, "w") as f:
-        f.write('{"torn')
-    rep = text_index_fsck(spark, path)
-    assert rep["status"] == "attention" and "corrupt" in " ".join(
-        rep["findings"]
-    )
-
-
-def test_ivf_index_fsck_and_recall(spark, tmp_path):
-    from geoscan_fraud_spark.operators.similarity import (
-        ivf_index_compact,
-        ivf_index_fsck,
-        ivf_recall_at_k,
-    )
-
-    path = str(tmp_path / "ivf")
-    rows = _vec_corpus(120, seed=51, dim=8)
-    cent = lloyd_centroids(np.array([v for _, v in rows]), 6)
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    ivf_index_write(df, path, centroids=cent)
-
-    rep = ivf_index_fsck(spark, path)
-    assert rep["status"] == "ok" and rep["findings"] == []
-    assert rep["measured"]["rows"] == 120
-
-    # crash-window replay: duplicate rows, counters committed once
-    batch = spark.createDataFrame(
-        _vec_corpus(10, seed=52, dim=8, id0=500),
-        "vec_id long, embedding array<double>",
-    )
-    ivf_index_append(batch, path, src_batch=0)
-    meta_path = path + "/centroids.json"
-    m = json.load(open(meta_path))
-    m["last_stream_batch"] = -1
-    m["appended_rows"] -= 10
-    m["appends"] -= 1
-    with open(meta_path, "w") as f:
-        json.dump(m, f)
-    ivf_index_append(batch, path, src_batch=0)
-    rep = ivf_index_fsck(spark, path)
-    assert rep["status"] == "attention"
-    assert "duplicate rows" in " ".join(rep["findings"])
-    assert "drift" not in " ".join(rep["findings"])
-    ivf_index_compact(spark, path)
-    assert ivf_index_fsck(spark, path)["status"] == "ok"
-
-    # measured recall: probing ALL lists with full-precision re-rank is
-    # exact by construction (recall 1.0); with int8 re-rank only the k
-    # boundary can wobble; nprobe=2 of 6 may drop neighbors but not
-    # collapse
-    probes = df.filter(F.col("vec_id") < 10)
-    full_corpus = df.unionByName(batch)
-    assert (
-        ivf_recall_at_k(
-            probes, path, full_corpus, k=5, nprobe=6,
-            rerank_corpus=full_corpus,
-        )
-        == 1.0
-    )
-    assert ivf_recall_at_k(probes, path, full_corpus, k=5, nprobe=6) >= 0.9
-    part = ivf_recall_at_k(probes, path, full_corpus, k=5, nprobe=2)
-    assert 0.3 <= part <= 1.0
 
 
 # -------------------------------------------------- span-store migration

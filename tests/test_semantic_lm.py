@@ -329,15 +329,15 @@ def test_ivf_index_tombstones_keep_pruning_and_broadcast(spark, emb, tmp_path):
     import re
 
     from geoscan_fraud_spark.operators.similarity import (
-        ivf_index_delete,
         ivf_index_query,
         ivf_index_write,
     )
+    from geoscan_fraud_spark.sources.io import index_delete
 
     cent = _centroids(emb, k=8)
     path = str(tmp_path / "ivf_tp")
     ivf_index_write(emb, path, centroids=cent)
-    ivf_index_delete(spark, path, [1, 2, 3])
+    index_delete(spark, path, [1, 2, 3])
 
     out = ivf_index_query(emb.filter(F.col("vec_id") == 0), path, k=3, nprobe=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -557,8 +557,12 @@ def test_ivf_index_expire_ages_out_old_generations(spark, emb, tmp_path):
 
     from geoscan_fraud_spark.operators.similarity import (
         ivf_index_append,
-        ivf_index_expire,
         ivf_index_write,
+    )
+    from geoscan_fraud_spark.sources.io import (
+        gen_dir,
+        index_expire,
+        read_index_meta,
     )
 
     cent = _centroids(emb, k=8)
@@ -574,8 +578,7 @@ def test_ivf_index_expire_ages_out_old_generations(spark, emb, tmp_path):
     gens = {r["src_batch"] for r in lists.select("src_batch").distinct().collect()}
     assert gens == {-1, 1, 2}
 
-    ivf_index_expire(spark, path, min_src_batch=2)
-    from geoscan_fraud_spark.sources.io import gen_dir, read_index_meta
+    index_expire(spark, path, min_src_batch=2)
 
     after = spark.read.parquet(
         gen_dir(path, "lists", read_index_meta(path + "/centroids.json"))
@@ -591,7 +594,7 @@ def test_ivf_index_expire_ages_out_old_generations(spark, emb, tmp_path):
     with open(path + "/centroids.json", "w") as f:
         json.dump(meta, f)
     with pytest.raises(ValueError, match="format-2"):
-        ivf_index_expire(spark, path, min_src_batch=3)
+        index_expire(spark, path, min_src_batch=3)
 
 
 def test_ivf_index_rebuild_adapts_to_drift(spark, emb, tmp_path):
@@ -658,10 +661,15 @@ def test_ivf_index_delete_tombstones_then_compact(spark, emb, tmp_path):
 
     from geoscan_fraud_spark.operators.similarity import (
         ivf_index_compact,
-        ivf_index_delete,
         ivf_index_query,
         ivf_index_stats,
         ivf_index_write,
+    )
+    from geoscan_fraud_spark.sources.io import (
+        gen_dir,
+        index_delete,
+        index_vacuum,
+        read_index_meta,
     )
 
     cent = _centroids(emb, k=8)
@@ -674,7 +682,7 @@ def test_ivf_index_delete_tombstones_then_compact(spark, emb, tmp_path):
     top1 = sorted({r["vec_id"] for r in before if r["rank"] == 1})
     assert top1
 
-    ivf_index_delete(spark, path, top1)
+    index_delete(spark, path, top1)
     after = ivf_index_query(q, path, k=5, nprobe=4).collect()
     assert not ({r["vec_id"] for r in after} & set(top1))
     # top-k backfills: still k rows per query
@@ -691,13 +699,10 @@ def test_ivf_index_delete_tombstones_then_compact(spark, emb, tmp_path):
     assert total() == n - len(top1)
     # the LIVE generation starts tombstone-free (the old snapshot keeps
     # its tombstones for in-flight readers until vacuum removes both)
-    from geoscan_fraud_spark.operators.similarity import ivf_index_vacuum
-    from geoscan_fraud_spark.sources.io import gen_dir, read_index_meta
-
     live_meta = read_index_meta(path + "/centroids.json")
     assert not os.path.isdir(gen_dir(path, "tombstones", live_meta))
     assert os.path.isdir(path + "/tombstones")  # old snapshot's, pre-vacuum
-    removed = ivf_index_vacuum(path)
+    removed = index_vacuum(path)
     assert "tombstones" in removed and "lists" in removed
     assert not os.path.isdir(path + "/tombstones")
     healed = ivf_index_query(q, path, k=5, nprobe=4).collect()

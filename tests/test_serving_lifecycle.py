@@ -17,18 +17,17 @@ from pyspark.sql import functions as F
 
 from geoscan_fraud_spark.operators.retrieval import (
     text_index_compact,
-    text_index_delete,
     text_index_query,
     text_index_write,
 )
 from geoscan_fraud_spark.operators.similarity import (
     ivf_index_compact,
-    ivf_index_delete,
     ivf_index_query,
     ivf_index_stats,
     ivf_index_write,
     lloyd_centroids,
 )
+from geoscan_fraud_spark.sources.io import index_delete
 from geoscan_fraud_spark.streaming.scoring import (
     ann_index_ingest_sink,
     text_index_ingest_sink,
@@ -161,8 +160,8 @@ def test_full_lifecycle_parity(spark, tmp_path_factory, seed_rows, batch_rows):
 
     # takedown: delete one seed doc and one streamed doc from both
     dead = [seed_rows[0][0], batch_rows[0][0][0]]
-    text_index_delete(spark, text_path, dead)
-    ivf_index_delete(spark, ann_path, dead)
+    index_delete(spark, text_path, dead)
+    index_delete(spark, ann_path, dead)
 
     queries = [("q1", "spark fox"), ("q2", "alpha data gamma")]
     mid = text_index_query(spark, text_path, queries, k=10).collect()
