@@ -332,6 +332,7 @@ def geoscan_score_pipeline(spark, sf_dir):
     against a baked golden (pinned-mini-fixture pattern): per user, the
     planted noise point must be flagged by BOTH the anti-join and the
     bloom path (bloom false positives at fpr=0.01 are deterministic
-    given the hash family, and none occur on this fixture), and the
+    given the md5 hash family of `BloomFilter`, and none occur on this
+    fixture), and the
     tf-idf relation must keep one row per (user, cluster, tile)."""
     return score_pipeline(_pinned_personalized_points(spark), 50.0, 5, res=10)

@@ -17,9 +17,13 @@ Two scoring paths:
 * `score_with_blooms` — distributed: blooms live in a DataFrame
   (user, bloom bytes) joined to transactions by user (no forced broadcast
   — AQE broadcasts when small, shuffle-hash-joins when not), membership
-  tested in an Arrow-batched pandas iterator. Nothing is collected
-  driver-side, so it scales to any user count — per-user blooms are
-  ~1-2 KB, so 100 M users is ~150 GB *distributed*.
+  tested by one native SQL expression (md5 positions, `forall` over the k
+  bits), so no row leaves the JVM and a batch pays no Python-task floor.
+  Nothing is collected driver-side, so it scales to any user count —
+  per-user blooms are ~1-2 KB, so 100 M users is ~150 GB *distributed*.
+
+`BloomFilter` is the one definition of the serialized format; the SQL
+scorer reads the same bytes, and a parity test ties the two together.
 """
 
 from __future__ import annotations
@@ -34,8 +38,27 @@ from pyspark.sql import functions as F
 from geoscan_fraud_spark.functions.grid import cell_id_py
 
 
+#: first byte of every serialized bloom, so a bloom in an older layout fails
+#: to load instead of scoring wrong
+FORMAT_VERSION = 2
+#: version byte + m (8 bytes) + k (2 bytes), big-endian
+HEADER_BYTES = 11
+FORMAT_NAME = (
+    f"bloom format v{FORMAT_VERSION} (version byte {FORMAT_VERSION}, big-endian "
+    "m/k header, md5 positions)"
+)
+
+
 class BloomFilter:
-    """Plain-Python bloom filter (stdlib hashlib; deterministic)."""
+    """Plain-Python bloom filter (stdlib hashlib; deterministic).
+
+    The one definition of the serialized format. Positions come from the
+    item's md5 hex digest, which Spark SQL computes natively (`md5`), so
+    `score_with_blooms` tests membership without leaving the JVM:
+    ``h1 = int(hx[0:15], 16) % m``, ``h2 = (int(hx[15:30], 16) | 1) % m``,
+    ``p_i = (h1 + i * h2) % m`` for ``i < k``; bit ``p`` is bit ``p & 7``
+    of byte ``p >> 3``.
+    """
 
     def __init__(self, n_items: int, fpr: float = 0.01):
         n_items = max(1, int(n_items))
@@ -45,9 +68,9 @@ class BloomFilter:
         self.bits = bytearray((m + 7) // 8)
 
     def _positions(self, item: str):
-        d = hashlib.blake2b(item.encode("utf-8"), digest_size=16).digest()
-        h1 = int.from_bytes(d[:8], "little")
-        h2 = int.from_bytes(d[8:], "little") | 1
+        hx = hashlib.md5(item.encode("utf-8")).hexdigest()
+        h1 = int(hx[0:15], 16) % self.m
+        h2 = (int(hx[15:30], 16) | 1) % self.m
         for i in range(self.k):
             yield (h1 + i * h2) % self.m
 
@@ -63,14 +86,23 @@ class BloomFilter:
         return all(self.bits[p >> 3] & (1 << (p & 7)) for p in self._positions(item))
 
     def to_bytes(self) -> bytes:
-        return self.m.to_bytes(8, "little") + self.k.to_bytes(2, "little") + bytes(self.bits)
+        return (
+            bytes([FORMAT_VERSION])
+            + self.m.to_bytes(8, "big")
+            + self.k.to_bytes(2, "big")
+            + bytes(self.bits)
+        )
 
     @classmethod
     def from_bytes(cls, raw: bytes) -> "BloomFilter":
         bf = cls.__new__(cls)
-        bf.m = int.from_bytes(raw[:8], "little")
-        bf.k = int.from_bytes(raw[8:10], "little")
-        bf.bits = bytearray(raw[10:])
+        bf.m = int.from_bytes(raw[1:9], "big")
+        bf.k = int.from_bytes(raw[9:11], "big")
+        bf.bits = bytearray(raw[HEADER_BYTES:])
+        # the length check catches an old blob whose first byte happens
+        # to equal the version: its m would then be wildly wrong
+        if raw[:1] != bytes([FORMAT_VERSION]) or len(bf.bits) != (bf.m + 7) // 8:
+            raise ValueError(f"not a {FORMAT_NAME}; rebuild it with train_blooms")
         return bf
 
 
@@ -158,46 +190,54 @@ def score_with_blooms(
     lng_col: str = "longitude",
     precision: int = 10,
 ) -> DataFrame:
-    """Distributed bloom scoring: join blooms by user, test membership in
-    Arrow batches. Unmatched users (no bloom) -> anomaly=1.
+    """Distributed bloom scoring: join blooms by user, test membership as
+    one native SQL expression. Unmatched users (no bloom) -> anomaly=1.
 
-    The tile id is computed JVM-side (native `cell_id` expression inside
-    whole-stage codegen); the Python side only runs membership tests, and
-    only one per DISTINCT (user, tile) pair in the batch — transactions
-    repeat the same tile constantly (the whole premise of the tile model),
-    so the per-row blake2b hashing of the naive loop collapses ~4x."""
+    The tile id, its md5 and the bloom header are all built-in
+    expressions, so no row leaves the JVM. The two 60-bit hash halves are
+    computed on the transaction side and m, k on the bloom side, both
+    below the join: Catalyst re-evaluates a lambda body per element and
+    inlines projections into it when a filter on `anomaly` is pushed
+    down, but never across a join, so the `forall` body only does
+    arithmetic and the k bit reads. A bloom not in the current format
+    fails the query through `raise_error` instead of scoring garbage.
+    """
     from geoscan_fraud_spark.functions.grid import cell_id
+    from geoscan_fraud_spark.operators.dedup import _ident
 
-    tx_h3 = transactions.withColumn(
-        "__h3", cell_id(F.col(lat_col), F.col(lng_col), precision)
+    tx = [_ident(c) for c in transactions.columns]
+    hx = F.md5(cell_id(F.col(_ident(lat_col)), F.col(_ident(lng_col)), precision))
+    hashed = transactions.select(
+        *tx,
+        F.conv(F.substring(hx, 1, 15), 16, 10).cast("bigint").alias("__x1"),
+        F.conv(F.substring(hx, 16, 15), 16, 10).cast("bigint").bitwiseOR(F.lit(1)).alias("__x2"),
+    )
+    m_raw = "try_cast(conv(hex(substring(bloom, 2, 8)), 16, 10) AS BIGINT)"
+    headers = blooms_df.selectExpr(
+        _ident(user_col),
+        "bloom AS __bloom",
+        f"""CASE WHEN bloom IS NULL THEN NULL
+        WHEN substring(bloom, 1, 1) = X'{FORMAT_VERSION:02X}'
+         AND length(bloom) = {HEADER_BYTES} + ({m_raw} + 7) DIV 8 THEN {m_raw}
+        ELSE raise_error('not a {FORMAT_NAME}; rebuild it with train_blooms') END AS __m""",
+        "CAST(conv(hex(substring(bloom, 10, 2)), 16, 10) AS INT) AS __k",
     )
     # No broadcast hint: blooms_df grows with the user population (~1.5 KB
     # per user → ~150 GB at 100 M users), far past broadcast range. AQE
     # still picks a broadcast join when the table is actually small; at
     # scale it degrades to a shuffle-hash join instead of an OOM.
-    joined = tx_h3.join(blooms_df.select(user_col, "bloom"), user_col, "left_outer")
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in transactions.schema.fields
+    joined = hashed.join(headers, user_col, "left_outer")
+    p = "pmod(pmod(__x1, __m) + i * pmod(__x2, __m), __m)"
+    byte = (
+        f"CAST(conv(hex(substring(__bloom, {HEADER_BYTES + 1} + CAST(shiftright({p}, 3) AS INT), 1)),"
+        " 16, 10) AS INT)"
     )
-    schema = f"{out_fields}, anomaly int"
-    tx_cols = [f.name for f in transactions.schema.fields]
-
-    def score(batches):
-        for pdf in batches:
-            anomaly = pd.Series(1, index=pdf.index, dtype="int32")
-            seen = pdf["bloom"].notna()
-            if seen.any():
-                sub = pdf.loc[seen, [user_col, "__h3", "bloom"]]
-                for _, g in sub.groupby(user_col, sort=False):
-                    bf = BloomFilter.from_bytes(bytes(g["bloom"].iloc[0]))
-                    member = {t: (t in bf) for t in pd.unique(g["__h3"])}
-                    hit = g["__h3"].map(member)
-                    anomaly.loc[hit.index[hit]] = 0
-            out = pdf[tx_cols].copy()
-            out["anomaly"] = anomaly
-            yield out
-
-    return joined.mapInPandas(score, schema)
+    return joined.selectExpr(
+        *tx,
+        f"""CASE WHEN __bloom IS NULL THEN 1
+        WHEN forall(sequence(0, __k - 1), i -> shiftright({byte}, CAST({p} & 7 AS INT)) & 1 = 1)
+        THEN 0 ELSE 1 END AS anomaly""",
+    )
 
 
 def log_h3lookup(

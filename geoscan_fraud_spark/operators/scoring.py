@@ -54,11 +54,11 @@ def extract_anomalies(
     Idiomatic form: anti join on (user, h3); map-only when tiles broadcast.
     The tile table is users × tiles-per-user and grows with the user base,
     so the join strategy is left to AQE (broadcast while small,
-    shuffle-hash at scale).
+    shuffle-hash at scale). No `distinct` on the keys: an anti join's
+    output does not change with duplicate or NULL keys on the right.
     """
     pts = with_cell(transactions, lat_col, lng_col, res)
-    keys = tiles.select(user_col, "h3").distinct()
-    return pts.join(keys, [user_col, "h3"], "left_anti").drop("h3")
+    return pts.join(tiles.select(user_col, "h3"), [user_col, "h3"], "left_anti").drop("h3")
 
 
 def extract_anomalies_literal(
@@ -71,9 +71,9 @@ def extract_anomalies_literal(
 ) -> DataFrame:
     """Literal reference form: left_outer + `cluster IS NULL` + drop.
 
-    Kept to pin the semantics equivalence in tests (J3 parity; duplicate
-    tile rows on the right would multiply rows here, hence the distinct
-    inside `extract_anomalies` and the tile-table uniqueness invariant).
+    Kept to pin the semantics equivalence in tests (J3 parity). Duplicate
+    tile rows on the right would multiply rows here, hence the
+    `dropDuplicates`; the anti join in `extract_anomalies` needs none.
     """
     pts = with_cell(transactions, lat_col, lng_col, res)
     return (

@@ -314,8 +314,12 @@ def _lambda_bodies(plan: str):
         i = k
 
 
-@pytest.mark.parametrize("op", ["winnow", "grams", "chunks"])
-def test_no_tokenize_inside_hof_lambda(spark, op):
+@pytest.mark.parametrize(
+    "op, forbidden_token",
+    [("winnow", "split("), ("grams", "split("), ("chunks", "split("), ("bloom", "md5(")],
+    ids=["winnow", "grams", "chunks", "bloom"],
+)
+def test_no_tokenize_inside_hof_lambda(spark, op, forbidden_token):
     """Catalyst re-evaluates non-trivial lambda subexpressions PER
     ELEMENT (no loop-invariant hoisting), so a tokenize/hash chain
     inside a higher-order-function lambda is O(T^2) per document — the
@@ -326,7 +330,9 @@ def test_no_tokenize_inside_hof_lambda(spark, op):
     call — tokenization must reach lambdas only as an attribute
     reference. (A hash OF the lambda variable itself, e.g.
     transform(grams, md5), is the intended linear per-element work and
-    stays allowed.)"""
+    stays allowed.) The bloom scorer's per-row md5 must reach its
+    `forall` as a column too, also when a filter on the score is pushed
+    down and inlines the projections above the join."""
     docs = spark.createDataFrame(
         [(0, "a b c d e f g h i j k l"), (1, "m n o p q r s t")],
         "doc_id long, text string",
@@ -339,13 +345,22 @@ def test_no_tokenize_inside_hof_lambda(spark, op):
         from geoscan_fraud_spark.operators.spans import _gram_inventory
 
         df = _gram_inventory(docs, "text", "doc_id", 3)
-    else:
+    elif op == "chunks":
         from geoscan_fraud_spark.operators.packing import chunk_documents
 
         df = chunk_documents(docs, 4)
+    else:
+        from geoscan_fraud_spark.operators.bloom import BloomFilter, score_with_blooms
+
+        raw = BloomFilter(1).to_bytes()
+        blooms = spark.createDataFrame([("u", 1, raw)], "user string, n_tiles long, bloom binary")
+        tx = spark.createDataFrame([("u", 40.7, -74.0)], "user string, latitude double, longitude double")
+        df = score_with_blooms(tx, blooms).filter("anomaly = 1").select("user")
     plan = df._jdf.queryExecution().optimizedPlan().toString()
-    for body in _lambda_bodies(plan):
-        assert "split(" not in body, body
+    bodies = _lambda_bodies(plan)
+    assert bodies or op != "bloom", plan
+    for body in bodies:
+        assert forbidden_token not in body, body
 
 
 # ---------------------------------------------------------------------------
