@@ -113,21 +113,18 @@ def cell_id(lat: Column, lng: Column, res: int) -> Column:
     return cell_id_from_ij(i, j, res)
 
 
-def lng_ring_count(
-    lat: Column, res: int, epsilon_m: float, cap: int | None = None
-) -> Column:
+def lng_ring_count(lat: Column, res: int, epsilon_m: float) -> Column:
     """Rings needed in the longitude direction to cover ``epsilon_m``.
 
     Longitude cell width shrinks as cos(latitude); near the poles this
-    diverges, so it is capped.  The default cap scales with how much finer
-    than epsilon the cell edge is — ``16 * ceil(epsilon / edge(res))`` —
-    so the latitude at which truncation starts (|lat| ~ 86.4 degrees) is
-    the same whether the pairing runs at the epsilon-matched resolution or
-    an auto-densified finer one.  Points beyond that are not meaningful
-    for this workload.
+    diverges, so it is capped.  The cap scales with how much finer than
+    epsilon the cell edge is — ``16 * ceil(epsilon / edge(res))`` — so
+    the latitude at which truncation starts (|lat| ~ 86.4 degrees) is the
+    same whether the pairing runs at the epsilon-matched resolution or an
+    auto-densified finer one.  Points beyond that are not meaningful for
+    this workload.
     """
-    if cap is None:
-        cap = 16 * max(1, math.ceil(float(epsilon_m) / RES_EDGE_M[res]))
+    cap = 16 * max(1, math.ceil(float(epsilon_m) / RES_EDGE_M[res]))
     width_m = F.lit(RES_EDGE_M[res]) * F.greatest(
         F.cos(F.radians(lat)), F.lit(1e-3)
     )

@@ -52,7 +52,7 @@ def register(name: str, sql: str | Callable[[], str] | None = None):
 
 def _ordered(df, *cols):
     """Deterministic presentation order WITHOUT the RangePartitioning
-    double-evaluation (r12, guide §2.4: "an orderBy used only to make
+    double-evaluation (guide §2.4: "an orderBy used only to make
     output deterministic"). A bare ``.orderBy`` plans a range exchange
     whose boundary sampling executes the child plan a SECOND time —
     measured 2x wall on the expensive dedup entries (dedup_simhash at
@@ -119,9 +119,8 @@ def flagship_event_anomalies(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# r12 (optimization round) keeps the r11 registry unchanged: the interim
-# rotation that folded this entry is deferred to the next build round
-# (optimization rounds add no new gate entries and remove none).
+# Kept registered: performance-only changes add no gate entries and
+# remove none, so folding this entry waits for a registry rotation.
 @register(
     "s2_pruned_scan",
     sql="""
@@ -137,7 +136,7 @@ def s2_pruned_scan(spark, sf_dir):
     )
 
 
-# P5 (left_outer + IS NULL) was a registered entry through r06; it is the
+# P5 (left_outer + IS NULL) is no longer a registered entry; it is the
 # literal FORM of the same anti-join the hash-green `j3_anti_join` and
 # `flagship_event_anomalies` evidence (the two forms' row-for-row
 # equivalence is additionally pinned in test_flagship.py), so the slot
@@ -165,11 +164,11 @@ def p_isnull_left_outer(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# j1_join_single_key was a registered entry through r07; single-key
+# j1_join_single_key is no longer a registered entry; single-key
 # shuffle-equi-join + broadcast-dim + decimal-sum algebra stays
 # driver-evidenced by the hash-green `salted_join` (composite-key equi
 # join, same DECIMAL(18,2) sum idiom — also the named evidence for the
-# r10 j2 fold below), `u3_tfidf_relational` (single-key broadcast term
+# j2 fold below), `u3_tfidf_relational` (single-key broadcast term
 # join), and `flagship_event_anomalies` (key-equality anti-join); the
 # exact three-table result stays pinned against pandas merge in
 # tests/test_round8_fixes.py, and the bench still times it. The slot
@@ -195,8 +194,8 @@ def j1_join_single_key(spark, sf_dir):
     )
 
 
-# J2 (two-key equi join) was a registered entry through r09 (hash-green
-# since r01); composite-key equi-join + decimal-sum algebra stays
+# J2 (two-key equi join) is no longer a registered entry (it was
+# hash-green throughout); composite-key equi-join + decimal-sum algebra stays
 # driver-evidenced by the hash-green `salted_join` (a two-key — key +
 # salt — equi join with the same DECIMAL sum idiom, the skew-hardened
 # variant of this exact shape), `interval_join` / `asof_join` (richer
@@ -204,7 +203,7 @@ def j1_join_single_key(spark, sf_dir):
 # join); the exact aggregate-then-self-join result stays pinned against
 # a pandas merge in tests/test_round10_fixes.py, and the bench still
 # times it. The slot under the driver's 50-entry cap now funds
-# `ann_ivf_incremental_query` (round-10 rotation, VERDICT r09 #1).
+# `ann_ivf_incremental_query`.
 def j2_join_two_keys(spark, sf_dir):
     """J2 — two-key equi join (`01:401` shape)."""
     li = _t(spark, sf_dir, "lineitem")
@@ -262,7 +261,7 @@ def salted_join_entry(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# A1 (groupBy+count) was a registered entry through r06; the identical
+# A1 (groupBy+count) is no longer a registered entry; the identical
 # algebra is driver-evidenced by `vocab_token_frequencies` (count per
 # token), `u3_tfidf_relational` (sum(lit(1)) per group) and the window
 # count inside `tumbling_window_counts`, so the slot under the driver's
@@ -271,7 +270,7 @@ def a1_groupby_count(spark, sf_dir):
     return _t(spark, sf_dir, "events").groupBy("event_type").count().withColumnRenamed("count", "cnt")
 
 
-# a2_collect_sorted was a registered entry through r07's fourth rotation;
+# a2_collect_sorted is no longer a registered entry;
 # deterministic sorted-collect algebra is now driver-evidenced INSIDE two
 # hash-green entries — `remove_repeated_spans` (collect_list of marked
 # positions, array_sort inside the interval-merge fold) and
@@ -292,14 +291,14 @@ def a2_collect_sorted(spark, sf_dir):
     )
 
 
-# A3 (the reference's `F.sum(F.lit(1))` counting idiom, `01:393-394`) was a
-# registered entry through r04; the same grouped-count algebra is already
+# A3 (the reference's `F.sum(F.lit(1))` counting idiom, `01:393-394`) is no
+# longer a registered entry; the same grouped-count algebra is already
 # driver-evidenced by `u3_tfidf_relational` (its TF term is sum(lit(1)) per
 # (doc, token)) and `a1_groupby_count`, so the slot under the driver's
-# 50-entry cap now funds `vocab_token_frequencies` (VERDICT r04 #4).
+# 50-entry cap now funds `vocab_token_frequencies`.
 
 
-# A5 (groupBy+max/min) was a registered entry through r06; the identical
+# A5 (groupBy+max/min) is no longer a registered entry; the identical
 # extremal-aggregate algebra is driver-evidenced by `w1_topk_desc` (max
 # by rank), `a8_percentiles` (grouped order statistics) and the
 # min-aggregates inside the hash-green LSH signature oracles, so the
@@ -316,7 +315,7 @@ def a5_groupby_max(spark, sf_dir):
     )
 
 
-# a8_percentiles was a registered entry through r07; grouped exact
+# a8_percentiles is no longer a registered entry; grouped exact
 # interpolated-percentile algebra stays driver-evidenced by the
 # hash-green `ppl_buckets` (per-group percentile cuts over doc
 # perplexity, exact path quantile_cont-replayed) and `w1_topk_desc`
@@ -343,9 +342,9 @@ def a8_percentiles(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# r12 (optimization round) keeps the r11 registry unchanged: the interim
-# rotation that folded this entry (VERDICT r11 #6) is deferred to the
-# next build round; the pandas value pin in test_round12_fixes.py stays.
+# Kept registered: performance-only changes add no gate entries and
+# remove none, so folding this entry waits for a registry rotation; the
+# pandas value pin in test_round12_fixes.py stays.
 @register(
     "w1_topk_desc",
     sql="""
@@ -370,10 +369,10 @@ def w1_topk_desc(spark, sf_dir):
     )
 
 
-# W2 (global sort asc + limit) was a registered entry through r04; its
+# W2 (global sort asc + limit) is no longer a registered entry; its
 # algebra is already driver-evidenced by `w1_topk_desc` (same TakeOrdered
 # plan, desc primary + asc tiebreaker), so the slot under the driver's
-# 50-entry cap now funds `sessionize` below (VERDICT r04 #2).
+# 50-entry cap now funds `sessionize` below.
 
 
 @register(
@@ -440,7 +439,7 @@ def ttl_window_filter(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# U4 (explode) was a registered entry through r06; explode+count algebra
+# U4 (explode) is no longer a registered entry; explode+count algebra
 # is driver-evidenced by the hash-green `vocab_token_frequencies` (the
 # same explode -> groupBy count over documents) and `chunk_documents` /
 # `bpe_tokens_to_ids` (posexplode of struct/slice arrays), so the slot
@@ -543,9 +542,9 @@ U1_ORACLE_SQL = f"""
 """
 
 
-# r12 (optimization round) keeps the r11 registry unchanged: the interim
-# rotation that folded this entry is deferred to the next build round;
-# the DuckDB-replay value pin in test_round12_fixes.py stays.
+# Kept registered: performance-only changes add no gate entries and
+# remove none, so folding this entry waits for a registry rotation; the
+# DuckDB-replay value pin in test_round12_fixes.py stays.
 @register("u1_cell_id", sql=U1_ORACLE_SQL)
 def u1_cell_id(spark, sf_dir):
     """U1 — the grid index (engine's `to_h3` analog, `utils/spark_utils.py:6-9`).
@@ -558,7 +557,7 @@ def u1_cell_id(spark, sf_dir):
     )
 
 
-# U7 (native haversine) was a registered entry through r06; the same
+# U7 (native haversine) is no longer a registered entry; the same
 # trig expression is load-bearing INSIDE the hash-green
 # `geoscan_distributed_fit` golden (epsilon_pairs keeps only pairs with
 # haversine < eps — a wrong distance would change the pinned cluster

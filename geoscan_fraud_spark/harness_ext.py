@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from geoscan_fraud_spark.harness import _events_coords, _t, register
 
 
-# win_rank_per_user was a registered entry through r07's third rotation;
+# win_rank_per_user is no longer a registered entry;
 # per-user window-partitioning algebra stays driver-evidenced by the
 # hash-green `sessionize` (lag + running sum over the identical
 # Window.partitionBy(user_id).orderBy(ts) machinery) and top-k ordering
@@ -33,7 +33,7 @@ def win_rank_per_user(spark, sf_dir):
     )
 
 
-# win_lag_delta was a registered entry through r06; per-user lag window
+# win_lag_delta is no longer a registered entry; per-user lag window
 # algebra is driver-evidenced by the hash-green `sessionize` (whose
 # oracle replays lag + running sum over the same (user_id, ts) window in
 # DuckDB), so the slot under the driver's 50-entry cap now funds
@@ -74,8 +74,8 @@ def rollup_counts(spark, sf_dir):
     )
 
 
-# distinct_users_exact was a registered entry through r07's third
-# rotation; distinct-aggregation algebra stays driver-evidenced by the
+# distinct_users_exact is no longer a registered entry;
+# distinct-aggregation algebra stays driver-evidenced by the
 # hash-green `dedup_minhash` (whose DuckDB replay contains the LSH
 # candidate `.distinct()`) and `u3_tfidf_relational` (per-term distinct
 # document frequency); the exact counts themselves stay pinned against
@@ -102,7 +102,7 @@ def distinct_users_approx(spark, sf_dir):
     )
 
 
-# Tumbling-window counts was a registered entry through r06; event-time
+# Tumbling-window counts is no longer a registered entry; event-time
 # bucket-and-count algebra is driver-evidenced by the hash-green
 # `sessionize` (event-time gap windows + per-bucket aggregation) and
 # `ttl_window_filter` (event-time interval arithmetic + grouped counts),
@@ -156,8 +156,8 @@ def generation_latest_snapshot(spark, sf_dir):
 
 
 # U2 (the reference's per-cell sample pipeline shape: collect struct
-# arrays, slice, explode, dotted access) was a registered entry through
-# r06; the struct-array explode + dotted-field algebra is
+# arrays, slice, explode, dotted access) is no longer a registered
+# entry; the struct-array explode + dotted-field algebra is
 # driver-evidenced by the hash-green `chunk_documents` (slice +
 # posexplode replayed in DuckDB) and `bpe_tokens_to_ids` (posexplode +
 # struct-sorted reassembly), and the deterministic-sample semantics stay

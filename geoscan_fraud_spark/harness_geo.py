@@ -57,8 +57,8 @@ def ref_csv_unclustered(spark, sf_dir):
     matching the reference prose's "~2,000 non-clustered transactions",
     `01:227`), distinct users, exact DECIMAL column sums, and an
     order-insensitive xor of per-row xxhash64 — pinned against a literal
-    golden (the `geoscan_distributed_fit` pattern; r08, replacing the
-    r05–r07 rows-only form). The digest is verified partition-invariant
+    golden (the `geoscan_distributed_fit` pattern, not a rows-only
+    check). The digest is verified partition-invariant
     (recomputed identical under `repartition(17)`); any change to the
     clustering decisions, the surviving rows, or their values flips it."""
     from geoscan_fraud_spark.operators.geoscan import Geoscan
@@ -242,7 +242,7 @@ _PERSONALIZED_TILES_GOLDEN = """
 @register("geoscan_personalized_tiles", sql=_PERSONALIZED_TILES_GOLDEN)
 def geoscan_personalized_tiles(spark, sf_dir):
     """M7/M9 — per-group fit + getTiles, upgraded from rows-only to a full
-    value oracle (VERDICT r04 #3): the input is a pinned deterministic
+    value oracle: the input is a pinned deterministic
     mini-fixture (sf-independent), so the expected (user, cluster, h3)
     tile set is baked into the oracle as literals — a golden regression
     oracle in the spirit of `01:364-365` getTiles schema. Cluster labels
@@ -295,9 +295,9 @@ def score_pipeline(pts, epsilon=80.0, min_pts=5, res=11):
         .agg(F.count(F.lit(1)).alias("bloom_anomalies"))
     )
     # tfidf_rows rides the result plan as a one-row broadcast aggregate
-    # (r13, guide §1.2/§5): the old driver-side `scored_tiles.count()`
-    # was a separately scheduled job per invocation whose only consumer
-    # was a literal column. The cross join against a single aggregated
+    # (guide §1.2/§5): a driver-side `scored_tiles.count()` would be a
+    # separately scheduled job per invocation whose only consumer is a
+    # literal column. The cross join against a single aggregated
     # row is a broadcast nested loop over 2-3 user rows; `cast("int")`
     # keeps the column's observable type identical to the old
     # `F.lit(python_int)` (IntegerType — the golden pins it).

@@ -150,7 +150,7 @@ def dedup_minhash(spark, sf_dir):
     return _ordered(kept.select("doc_id"), "doc_id")
 
 
-# ngram_jaccard_pairs was a registered entry through r07; the exact
+# ngram_jaccard_pairs is no longer a registered entry; the exact
 # intersect/union Jaccard arithmetic stays driver-evidenced INSIDE the
 # hash-green `dedup_minhash` (its candidate-verify stage keeps exactly
 # the pairs whose shingle Jaccard >= threshold, and the oracle replays
@@ -355,8 +355,8 @@ def semantic_decontam(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# ann_cosine_topk was a registered entry through r08 (hash-green since
-# r04; its DuckDB oracle replayed the cosine via list_dot_product).
+# ann_cosine_topk is no longer a registered entry (it was hash-green; its
+# DuckDB oracle replayed the cosine via list_dot_product).
 # Brute-force cosine top-k algebra stays driver-evidenced by TWO
 # still-registered hash-green entries: `ann_ivf_topk` (its exact
 # re-rank stage computes the identical cosine + (sim desc, id asc)
@@ -406,7 +406,7 @@ def _ivf_oracle_sql(
     cte_only: bool = False,
 ) -> str:
     """IVF probe as DuckDB SQL over centroid literals, shared by
-    `ann_ivf_topk`, the lifecycle entry, and (r12) the hybrid-serving
+    `ann_ivf_topk`, the lifecycle entry, and the hybrid-serving
     oracle. The correctness gate runs at sf=0.01 (driver contract), so
     the quantizer is derived from that fixture — the SAME fixed
     centroid set the Spark plans feed, at every sf. ``corpus_where``
@@ -508,8 +508,7 @@ def _ivf_lifecycle_oracle() -> str:
 @register("ann_ivf_incremental_query", sql=_ivf_lifecycle_oracle)
 def ann_ivf_incremental_query(spark, sf_dir):
     """Serving-path ANN over the FULL index lifecycle — the dense twin of
-    `bm25_incremental_query` (VERDICT r09 #1) plus the MVCC stale-read
-    pin (VERDICT r09 #6). Build `ivf_index_write` over the even vec_ids
+    `bm25_incremental_query` plus the MVCC stale-read pin. Build `ivf_index_write` over the even vec_ids
     (the fixed sf0.01 Lloyd quantizer, so probes replay in SQL), append
     the odd half against the frozen centroids, tombstone every
     ``vec_id % 7 == 3`` (`index_delete`), snapshot the generation-0
@@ -522,8 +521,7 @@ def ann_ivf_incremental_query(spark, sf_dir):
     hash-equality certifies (a) the whole append/delete/compact/flip
     lifecycle reproduces a from-scratch survivor index and (b) the MVCC
     read contract itself: a reader holding gen-0 metadata mid-flip still
-    sees complete, tombstone-filtered data. Since r10's second wave the
-    index builds with the RESIDUAL PQ tier (``pq_m=8``) and both reads
+    sees complete, tombstone-filtered data. The index builds with the RESIDUAL PQ tier (``pq_m=8``) and both reads
     serve through it (``shortlist='auto'`` resolves to ADC) — so the
     hash row also certifies the compressed tier's plumbing end to end:
     residual encode at build, meta-driven encode at append, codes
@@ -579,7 +577,7 @@ def ann_ivf_incremental_query(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# text_token_stats was a registered entry through r07; the
+# text_token_stats is no longer a registered entry; the
 # tokenize-and-count algebra stays driver-evidenced by the hash-green
 # `text_quality` (same whitespace tokenization, token counts, and
 # distinct ratio over the same table) and `token_shards` (the same
@@ -755,14 +753,14 @@ def text_repetition(spark, sf_dir):
     """,
 )
 def token_entropy(spark, sf_dir):
-    """Shannon token entropy (r07 rotation): the engine's map-only sort +
+    """Shannon token entropy: the engine's map-only sort +
     run-length fold vs the oracle's closed-form group-and-sum — H =
     ln N - (1/N)·Σ c·ln c must agree to the rounded 4 decimals."""
     return tx.token_entropy(_t(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
-# BPE text -> token ids (pinned mini-fixture golden, r07 rotation)
+# BPE text -> token ids (pinned mini-fixture golden)
 # ---------------------------------------------------------------------------
 
 #: deterministic mini-corpus for the BPE golden: enough shared subwords
@@ -870,7 +868,7 @@ def _bpe_ids_oracle() -> str:
 
 @register("bpe_tokens_to_ids", sql=_bpe_ids_oracle)
 def bpe_tokens_to_ids(spark, sf_dir):
-    """End-to-end distributed tokenizer golden (r07 rotation): train BPE
+    """End-to-end distributed tokenizer golden: train BPE
     merges on the pinned mini-corpus (`train_bpe` — one corpus shuffle +
     vocabulary-sized merge rounds), segment (`bpe_segment`, map-only
     Arrow-batched), build the frequency-ranked vocab and map to ids
@@ -880,8 +878,7 @@ def bpe_tokens_to_ids(spark, sf_dir):
 
     Output is posexploded to one `(doc_id, pos, token_id)` row per token
     (not the `array<int>` column `tokens_to_ids` returns) so the driver's
-    pandas canonicalizer can sort it — list cells are unhashable there
-    (the r07 red row)."""
+    pandas canonicalizer can sort it — list cells are unhashable there."""
     from geoscan_fraud_spark.operators.bpe import (
         bpe_segment,
         build_vocab,
@@ -926,7 +923,7 @@ def bpe_tokens_to_ids(spark, sf_dir):
     """,
 )
 def multimodal_features(spark, sf_dir):
-    """Binary-column pipeline, now value-oracled (VERDICT r04 #5): payloads
+    """Binary-column pipeline, value-oracled: payloads
     get deterministic magic-byte headers (PNG/JPEG/RIFF/none by
     blob_id % 4) so the JVM-side sniff dispatch actually branches, and
     byte_len + sniffed_type replay in DuckDB blob algebra. The fake
@@ -1012,7 +1009,7 @@ def chunk_documents_entry(spark, sf_dir):
 )
 def vocab_token_frequencies(spark, sf_dir):
     """Corpus vocabulary (operators/packing.py) with the fixture's stable
-    doc_id for doc_freq (VERDICT r04 #4) — top-200 by frequency, token as
+    doc_id for doc_freq — top-200 by frequency, token as
     tiebreaker. Generalizes the reference's sum(lit(1)) TF grouping
     (`01:399-403`) from tiles to tokens. The fixture's text is
     single-space tokenized (same contract text_token_stats pins), so the
@@ -1189,7 +1186,7 @@ def dedup_incremental(spark, sf_dir):
     # disk): dedup_against_index consumes the index twice (banding + the
     # estimate join) and recomputing the signature pipeline per consumer
     # would double the entry's cost. bands= pre-computes the band-hash
-    # array at build (r07) — identical buckets to per-batch re-hashing
+    # array at build — identical buckets to per-batch re-hashing
     # (parity pinned in test_round7_fixes), so the oracle replay of the
     # banding from signatures stays exact.
     idx = inc.minhash_index(
@@ -1588,7 +1585,7 @@ def lm_perplexity(spark, sf_dir):
     broadcast (vocabulary-sized right side), so the corpus never
     shuffles for it.
 
-    Folded r11 (the slot funds `prepared_stream_query`): the identical
+    Folded (the slot funds `prepared_stream_query`): the identical
     unigram-LM algebra is load-bearing inside the hash-green
     `ppl_buckets` entry — its oracle literally embeds
     `_lm_perplexity_oracle()` as the `base` CTE — and the closed-form
@@ -1745,7 +1742,7 @@ def bpe_ids_roundtrip(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# r08 rotations: token shards, BM25 search, hybrid RRF fusion, HTML
+# token shards, BM25 search, hybrid RRF fusion, HTML
 # extraction (slots from the folded j1_join_single_key / a8_percentiles /
 # text_token_stats / ngram_jaccard_pairs — fold notes at their functions)
 # ---------------------------------------------------------------------------
@@ -1780,7 +1777,7 @@ _SEARCH_TOK_SQL = (
 )
 def token_shards(spark, sf_dir):
     """Deterministic token-balanced training-shard assignment
-    (`operators/shards.py::assign_token_shards`, r08 rotation): md5
+    (`operators/shards.py::assign_token_shards`): md5
     order key -> range-partitioned global order -> two-pass distributed
     prefix sum -> floor-div shard id. The oracle replays the whole
     assignment as ONE window over the md5-ordered corpus (the
@@ -1871,7 +1868,7 @@ def bm25_search(spark, sf_dir):
     posting shuffle (shuffled rows ~ query-term postings, never corpus
     tokens); (N, avgdl) ride the plan as a lazy one-row broadcast.
 
-    Folded r09 (the slot funds `bm25_incremental_query`): the identical
+    Folded (the slot funds `bm25_incremental_query`): the identical
     BM25 algebra is load-bearing inside the hash-green `rrf_fusion`
     entry (its oracle replays the full tokenize/tf/df/idf/score/rank
     chain) and inside `bm25_incremental_query`'s one-shot oracle;
@@ -1898,8 +1895,8 @@ def _bm25_survivors_oracle() -> str:
 
 @register("bm25_incremental_query", sql=_bm25_survivors_oracle())
 def bm25_incremental_query(spark, sf_dir):
-    """Serving-path BM25 over the FULL index lifecycle (r09 rotation,
-    widened this round to gate the MVCC machinery too): build
+    """Serving-path BM25 over the FULL index lifecycle, including the
+    MVCC machinery: build
     `text_index_write` over the even doc_ids, `text_index_append` the
     odd half, tombstone every ``doc_id % 7 == 3`` (`index_delete`),
     `text_index_compact` — which applies the tombstones physically,
@@ -1974,8 +1971,8 @@ def _rrf_oracle() -> str:
 @register("rrf_fusion", sql=_rrf_oracle())
 def rrf_fusion(spark, sf_dir):
     """Hybrid sparse+dense retrieval fused by reciprocal-rank fusion
-    (`operators/retrieval.py::rrf_fuse`, Cormack et al. 2009; r08
-    rotation). The fixtures' doc_id and vec_id share the same id space,
+    (`operators/retrieval.py::rrf_fuse`, Cormack et al. 2009). The
+    fixtures' doc_id and vec_id share the same id space,
     so queries 0..4 get BOTH a lexical form (the doc's first 8 tokens ->
     `bm25_topk` top-10) and a dense form (the vec's embedding ->
     `brute_force_topk` top-10), and the fused ranking is semantically a
@@ -2007,7 +2004,7 @@ def rrf_fusion(spark, sf_dir):
 
 
 def _hybrid_lifecycle_oracle() -> str:
-    """RRF of the two SURVIVOR oracles (VERDICT r11 #6): the lexical leg
+    """RRF of the two SURVIVOR oracles: the lexical leg
     is the one-shot BM25 CTE over the post-takedown corpus (exactly
     `bm25_incremental_query`'s oracle) and the dense leg is the probed
     IVF cosine top-k over the survivor embeddings with
@@ -2043,13 +2040,12 @@ def _hybrid_lifecycle_oracle() -> str:
     """
 
 
-# r12 (optimization round): NOT registered — the r11 50-entry registry is
-# kept unchanged this round; this entry (code, oracle thunk, tests, bench
-# timing all live) is staged for the next build-round rotation.
+# NOT registered — the registry is held at 50 entries; this entry (code,
+# oracle thunk, tests, bench timing all live) is staged for the next
+# registry rotation.
 def hybrid_incremental_query(spark, sf_dir):
     """Hybrid sparse+dense SERVING over both persisted index lifecycles
-    under the hash gate (r12 rotation — VERDICT r11 #6; the slot is
-    funded by folding `w1_topk_desc`, whose order-statistics algebra is
+    under the hash gate (the slot is funded by folding `w1_topk_desc`, whose order-statistics algebra is
     witnessed by `ppl_buckets` and the rank stages inside both
     retrieval oracles, with a pandas value pin kept in
     tests/test_round12_fixes.py). Build the BM25 index through its FULL
@@ -2163,8 +2159,8 @@ def _html_oracle() -> str:
 
 @register("html_extract", sql=_html_oracle())
 def html_extract(spark, sf_dir):
-    """HTML -> text extraction (`operators/html.py::strip_html`, r08
-    rotation — the CommonCrawl/C4 ingest stage): each fixture document
+    """HTML -> text extraction (`operators/html.py::strip_html` — the
+    CommonCrawl/C4 ingest stage): each fixture document
     is wrapped in deterministic markup exercising every rule class
     (head/style/script elements with content, a comment, block tags,
     inline tags, the `&amp;lt;` no-double-decode round trip, `&nbsp;`,
@@ -2227,8 +2223,7 @@ def _pii_oracle() -> str:
 
 @register("pii_redact", sql=_pii_oracle())
 def pii_redact(spark, sf_dir):
-    """PII redaction (`operators/text.py::redact_pii`, r08 rotation —
-    the pre-training scrub stage every public corpus pipeline runs, cf.
+    """PII redaction (`operators/text.py::redact_pii` — the pre-training scrub stage every public corpus pipeline runs, cf.
     C4/Dolma): each fixture document gets a deterministic doc_id-derived
     PII payload (email, 16-digit card, NANP phone, dotted-quad IP, SSN —
     one span per pattern class) appended, then flows through the native
@@ -2257,8 +2252,8 @@ def pii_redact(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# streaming serving pipeline under the hash gate (r11 rotation — VERDICT
-# r10 #4: §2.9 was the last pytest-only surface; slot funded by the
+# streaming serving pipeline under the hash gate (§2.9 was the last
+# pytest-only surface; slot funded by the
 # folded lm_perplexity, whose algebra is load-bearing inside the green
 # ppl_buckets oracle)
 # ---------------------------------------------------------------------------
@@ -2399,8 +2394,8 @@ _psq_src_cache: dict[str, str] = {}
 
 @register("prepared_stream_query", sql=_prepared_stream_oracle)
 def prepared_stream_query(spark, sf_dir):
-    """Streaming serving pipeline UNDER the hash gate (VERDICT r10 #4 —
-    the first §2.9 entry): a real two-cycle availableNow
+    """Streaming serving pipeline UNDER the hash gate (the first §2.9
+    entry): a real two-cycle availableNow
     `prepared_serving_sink` run — file-source micro-batches through the
     quality gate, the store-backed MinHash dedup (md5 family, the
     oracle-portable configuration), the corpus append, and TWO
@@ -2436,8 +2431,8 @@ def prepared_stream_query(spark, sf_dir):
 
     # The two SOURCE parquet files are deterministic functions of the
     # fixture — write them once per process per sf_dir and hardlink
-    # them into each call's fresh src dir (r12, VERDICT r11 #3: the
-    # bench re-timed two coalesce(1) fixture writes per pass; real
+    # them into each call's fresh src dir (otherwise the bench re-times
+    # two coalesce(1) fixture writes per pass; real
     # deployments don't re-create their input stream per query). The
     # stream/store/index/checkpoint dirs stay per-call: the whole
     # ingest lifecycle is still what's measured.
@@ -2460,7 +2455,7 @@ def prepared_stream_query(spark, sf_dir):
     src = f"{work}/src"
     tidx = f"{work}/tidx"
     # bootstrap-empty serving index: the stream's appends are its only
-    # content (the empty-build shape text_index_write supports since r11)
+    # content (the empty-build shape text_index_write supports)
     text_index_write(docs.limit(0), tidx, n_buckets=32)
     sink = prepared_serving_sink(
         f"{work}/store",
@@ -2482,7 +2477,7 @@ def prepared_stream_query(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        # ADVICE r11 #5: awaitTermination(timeout) returns False when the
+        # awaitTermination(timeout) returns False when the
         # wait times out with the query still running — proceeding then
         # would serve a partially-ingested index and hash-mismatch
         # nondeterministically. Fail loudly instead.
@@ -2661,12 +2656,12 @@ def _wtw_oracle(sf_dir: str = "/root/testdata/sf0.01") -> str:
     """
 
 
-# r12 (optimization round): NOT registered — the r11 50-entry registry is
-# kept unchanged this round; this entry (code, oracle thunk, tests, bench
-# timing all live) is staged for the next build-round rotation.
+# NOT registered — the registry is held at 50 entries; this entry (code,
+# oracle thunk, tests, bench timing all live) is staged for the next
+# registry rotation.
 def watermarked_tile_windows(spark, sf_dir):
-    """§2.9 EVENT-TIME semantics under the hash gate (VERDICT r11 #8,
-    design note COVERAGE.md §2.9): a real two-cycle availableNow run of
+    """§2.9 EVENT-TIME semantics under the hash gate (design note
+    COVERAGE.md §2.9): a real two-cycle availableNow run of
     `sliding_tile_counts` (window 1h, slide 30min, watermark 30min) in
     APPEND mode into a parquet sink. Cycle 1 streams the in-order
     pre-split events; cycle 2 streams the post-split events PLUS a
@@ -2768,12 +2763,12 @@ def _snt_oracle(sf_dir: str = "/root/testdata/sf0.01") -> str:
     """
 
 
-# r12 (optimization round): NOT registered — the r11 50-entry registry is
-# kept unchanged this round; this entry (code, oracle thunk, tests, bench
-# timing all live) is staged for the next build-round rotation.
+# NOT registered — the registry is held at 50 entries; this entry (code,
+# oracle thunk, tests, bench timing all live) is staged for the next
+# registry rotation.
 def stateful_novel_tiles(spark, sf_dir):
     """§2.9 CUSTOM STATEFUL operator under the hash gate (the last
-    streaming face — COVERAGE.md §2.9 r13 design note, landed r12): a
+    streaming face — COVERAGE.md §2.9 design note): a
     real two-cycle availableNow run of `novel_tile_stream`
     (`applyInPandasWithState`, per-user tile-set state) over the SAME
     staged arrival-cycle fixture as `watermarked_tile_windows`. The run

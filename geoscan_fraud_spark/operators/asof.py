@@ -200,7 +200,7 @@ def interval_join(
     and silently drop or duplicate points). That makes ``how='left'`` an
     eager two-materialization path — ``'inner'`` stays fully lazy.
 
-    Leaving ``bucket_width`` unset derives the width LAZILY (r06): the
+    Leaving ``bucket_width`` unset derives the width LAZILY: the
     median interval length is computed as a broadcast one-row scalar
     crossed into both sides, so the plan builds without running a job
     and the median evaluates with the first action (it still costs one

@@ -1,4 +1,4 @@
-"""Bloom-filter serving path — per-user probabilistic tile membership.
+"""Bloom filters — per-user tile membership, and a corpus membership digest.
 
 Re-implements `utils/bloom_utils.py` (`bu:8-42`) and the pyfunc packaging
 of `02_geofraud_fraud.py:173-238`, with the reference's bugs fixed
@@ -22,8 +22,25 @@ Two scoring paths:
   Nothing is collected driver-side, so it scales to any user count —
   per-user blooms are ~1-2 KB, so 100 M users is ~150 GB *distributed*.
 
-`BloomFilter` is the one definition of the serialized format; the SQL
-scorer reads the same bytes, and a parity test ties the two together.
+The same filter is also a corpus digest (`build_bloom` / `merge_blooms` /
+`probe_bloom`), the Dolma pipeline's paragraph-dedup mechanism: the
+O(1)-state point on the exact-dedup cost curve beside `exact_dedup` (a
+full groupBy, one corpus shuffle) and the MinHash signature store
+(~8·H bytes per retained doc). It holds ~1.2 bytes per key at 1% FPR
+whatever the corpus size, probes are map-only (zero shuffle at ingest),
+and digests MERGE by bitwise OR — the mergeable-rollup property of the
+HLL / count-min / weighted-sample sketches, so per-batch digests fold
+into any-horizon membership with no rescan. The error is one-sided, and
+for dedup the side matters: a false POSITIVE drops a genuinely new
+document (bounded by ``fpr``); a seen document is NEVER missed (no false
+negatives — the invariant the reference demands of its serving blooms at
+`02_geofraud_fraud.py:141-147`).
+
+`BloomFilter` is the one definition of the serialized format, the sizing
+rule and the bit positions; the SQL scorer reads the same bytes, the
+digest builders write them, and parity tests tie the Python and SQL
+sides together. Every digest is deterministic in its keys: the same set
+yields the same bytes, however it is partitioned.
 """
 
 from __future__ import annotations
@@ -31,11 +48,13 @@ from __future__ import annotations
 import hashlib
 import math
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geoscan_fraud_spark.functions.grid import cell_id_py
+from geoscan_fraud_spark.functions.sqltext import _ident
 
 
 #: first byte of every serialized bloom, so a bloom in an older layout fails
@@ -43,67 +62,202 @@ from geoscan_fraud_spark.functions.grid import cell_id_py
 FORMAT_VERSION = 2
 #: version byte + m (8 bytes) + k (2 bytes), big-endian
 HEADER_BYTES = 11
-FORMAT_NAME = (
-    f"bloom format v{FORMAT_VERSION} (version byte {FORMAT_VERSION}, big-endian "
-    "m/k header, md5 positions)"
+#: raised by `BloomFilter.from_bytes` and, via `raise_error`, by
+#: `score_with_blooms` for any blob that is not a well-formed v2 bloom
+FORMAT_ERROR = (
+    f"not a bloom format v{FORMAT_VERSION} (version byte {FORMAT_VERSION}, "
+    "big-endian m/k header, md5 positions); rebuild it with train_blooms or "
+    "build_bloom"
 )
+
+
+def _md5_halves(items) -> tuple[np.ndarray, np.ndarray]:
+    """Each item's two 60-bit md5 halves, ``int(hx[0:15], 16)`` and
+    ``int(hx[15:30], 16) | 1`` — the values `_md5_half_cols` computes in
+    the JVM."""
+    hx = [hashlib.md5(s.encode("utf-8")).hexdigest() for s in items]
+    return (
+        np.array([int(h[0:15], 16) for h in hx], dtype=np.int64),
+        np.array([int(h[15:30], 16) | 1 for h in hx], dtype=np.int64),
+    )
+
+
+def _md5_half_cols(key: Column) -> tuple[Column, Column]:
+    """`_md5_halves` as native expressions over a string column."""
+    hx = F.md5(key)
+    return (
+        F.conv(F.substring(hx, 1, 15), 16, 10).cast("bigint"),
+        F.conv(F.substring(hx, 16, 15), 16, 10).cast("bigint").bitwiseOR(F.lit(1)),
+    )
+
+
+def _positions(x1: np.ndarray, x2: np.ndarray, m: int, k: int) -> np.ndarray:
+    """(len, k) bit positions ``p_i = (x1 mod m + i * (x2 mod m)) mod m``,
+    the rule `score_with_blooms` evaluates in SQL. Bit ``p`` is bit
+    ``p & 7`` of byte ``p >> 3``."""
+    return (x1[:, None] % m + np.arange(k) * (x2[:, None] % m)) % m
+
+
+def _set_bits(bits: np.ndarray, pos: np.ndarray) -> None:
+    np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+
+
+def _test_bits(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
+    return ((bits[pos >> 3] >> (pos & 7)) & 1).astype(bool).all(axis=1)
 
 
 class BloomFilter:
     """Plain-Python bloom filter (stdlib hashlib; deterministic).
 
-    The one definition of the serialized format. Positions come from the
-    item's md5 hex digest, which Spark SQL computes natively (`md5`), so
-    `score_with_blooms` tests membership without leaving the JVM:
-    ``h1 = int(hx[0:15], 16) % m``, ``h2 = (int(hx[15:30], 16) | 1) % m``,
-    ``p_i = (h1 + i * h2) % m`` for ``i < k``; bit ``p`` is bit ``p & 7``
-    of byte ``p >> 3``.
+    The one definition of the serialized format, sized by the standard
+    rule ``m = -n·ln p / ln²2`` bits (at least 8), ``k = (m/n)·ln 2``
+    hashes (at least 1). Positions come from the item's md5 hex digest,
+    which Spark SQL computes natively (`md5`), so `score_with_blooms`
+    tests membership without leaving the JVM: ``h1 = int(hx[0:15], 16)
+    % m``, ``h2 = (int(hx[15:30], 16) | 1) % m``, ``p_i = (h1 + i * h2) %
+    m`` for ``i < k`` (`_positions`).
     """
 
-    def __init__(self, n_items: int, fpr: float = 0.01):
-        n_items = max(1, int(n_items))
-        m = max(8, int(math.ceil(-n_items * math.log(fpr) / (math.log(2) ** 2))))
+    def __init__(self, expected_items: int, fpr: float = 0.01):
+        n = int(expected_items)
+        if n <= 0:
+            raise ValueError(f"expected_items must be positive, got {expected_items}")
+        if not 0.0 < fpr < 1.0:
+            raise ValueError(f"fpr must be in (0, 1), got {fpr}")
+        m = max(8, int(math.ceil(-n * math.log(fpr) / (math.log(2) ** 2))))
         self.m = m
-        self.k = max(1, round(m / n_items * math.log(2)))
-        self.bits = bytearray((m + 7) // 8)
+        self.k = max(1, round(m / n * math.log(2)))
+        self.bits = np.zeros((m + 7) // 8, dtype=np.uint8)
 
-    def _positions(self, item: str):
-        hx = hashlib.md5(item.encode("utf-8")).hexdigest()
-        h1 = int(hx[0:15], 16) % self.m
-        h2 = (int(hx[15:30], 16) | 1) % self.m
-        for i in range(self.k):
-            yield (h1 + i * h2) % self.m
-
-    def add(self, item: str) -> None:
-        for p in self._positions(item):
-            self.bits[p >> 3] |= 1 << (p & 7)
+    @classmethod
+    def of(cls, items, fpr: float = 0.01) -> "BloomFilter":
+        """A filter sized for, and holding, the distinct ``items`` — how
+        both `train_blooms` and `log_h3lookup` build a user's filter, so
+        serving rebuilds exactly the trained bytes."""
+        distinct = list(set(items))
+        bf = cls(len(distinct), fpr)
+        bf.update(distinct)
+        return bf
 
     def update(self, items) -> None:
-        for it in items:
-            self.add(it)
+        _set_bits(self.bits, _positions(*_md5_halves(items), self.m, self.k))
+
+    def contains(self, items) -> np.ndarray:
+        """Vectorized membership: one boolean per item."""
+        return _test_bits(self.bits, _positions(*_md5_halves(items), self.m, self.k))
 
     def __contains__(self, item: str) -> bool:
-        return all(self.bits[p >> 3] & (1 << (p & 7)) for p in self._positions(item))
+        return bool(self.contains([item])[0])
 
     def to_bytes(self) -> bytes:
         return (
             bytes([FORMAT_VERSION])
             + self.m.to_bytes(8, "big")
             + self.k.to_bytes(2, "big")
-            + bytes(self.bits)
+            + self.bits.tobytes()
         )
 
     @classmethod
     def from_bytes(cls, raw: bytes) -> "BloomFilter":
-        bf = cls.__new__(cls)
-        bf.m = int.from_bytes(raw[1:9], "big")
-        bf.k = int.from_bytes(raw[9:11], "big")
-        bf.bits = bytearray(raw[HEADER_BYTES:])
+        m = int.from_bytes(raw[1:9], "big")
+        k = int.from_bytes(raw[9:11], "big")
         # the length check catches an old blob whose first byte happens
-        # to equal the version: its m would then be wildly wrong
-        if raw[:1] != bytes([FORMAT_VERSION]) or len(bf.bits) != (bf.m + 7) // 8:
-            raise ValueError(f"not a {FORMAT_NAME}; rebuild it with train_blooms")
+        # to equal the version: its m would then be wildly wrong; m < 8
+        # and k = 0 are never written and would fail (m = 0) or accept
+        # everything (k = 0) at scoring time
+        if (
+            raw[:1] != bytes([FORMAT_VERSION])
+            or m < 8
+            or k < 1
+            or len(raw) != HEADER_BYTES + (m + 7) // 8
+        ):
+            raise ValueError(FORMAT_ERROR)
+        bf = cls.__new__(cls)
+        bf.m, bf.k = m, k
+        bf.bits = np.frombuffer(raw, dtype=np.uint8, offset=HEADER_BYTES).copy()
         return bf
+
+
+def build_bloom(
+    df: DataFrame,
+    key_col: str,
+    expected_items: int,
+    fpr: float = 0.01,
+) -> bytes:
+    """Digest every non-null ``key_col`` value (as a string) into the
+    bytes of ``BloomFilter(expected_items, fpr)`` updated with the same
+    keys. One Arrow-batched corpus pass sets per-partition bitmaps; the
+    only non-map step is the driver OR of those bitmaps (P × m/8 bytes of
+    transfer; at multi-GB digests fold in two levels by calling
+    `merge_blooms` over partition groups)."""
+    bf = BloomFilter(expected_items, fpr)
+    m, k, nbytes = bf.m, bf.k, len(bf.bits)
+    x1, x2 = _md5_half_cols(F.col(key_col).cast("string"))
+    hashed = df.filter(F.col(key_col).isNotNull()).select(
+        x1.alias("__x1"), x2.alias("__x2")
+    )
+
+    def per_partition(batches):
+        bits = np.zeros(nbytes, dtype=np.uint8)
+        any_rows = False
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            any_rows = True
+            _set_bits(bits, _positions(pdf["__x1"].to_numpy(), pdf["__x2"].to_numpy(), m, k))
+        if any_rows:
+            yield pd.DataFrame({"bits": [bits.tobytes()]})
+
+    for r in hashed.mapInPandas(per_partition, "bits binary").collect():
+        bf.bits |= np.frombuffer(r["bits"], dtype=np.uint8)
+    return bf.to_bytes()
+
+
+def merge_blooms(blooms: "list[bytes]") -> bytes:
+    """Union digests with the same header (m, k), i.e. built with the
+    same (expected_items, fpr): bitwise OR — per-batch digests roll up
+    exactly (set-union semantics)."""
+    if not blooms:
+        raise ValueError("nothing to merge")
+    parsed = [BloomFilter.from_bytes(b) for b in blooms]
+    headers = sorted({(b.m, b.k) for b in parsed})
+    if len(headers) != 1:
+        raise ValueError(
+            f"mismatched bloom headers (m, k) {headers} — digests must share "
+            "(expected_items, fpr)"
+        )
+    out = parsed[0]
+    for b in parsed[1:]:
+        out.bits |= b.bits
+    return out.to_bytes()
+
+
+def probe_bloom(
+    df: DataFrame,
+    bloom: bytes,
+    key_col: str,
+    out_col: str = "maybe_seen",
+) -> DataFrame:
+    """df + boolean ``out_col``: True when the key MAY be in the digest
+    (false positives at ~fpr), False when it is DEFINITELY absent. m and
+    k come from the digest's header. The digest ships with the
+    serialized task (m/8 bytes); the probe is one Arrow-batched map pass
+    — zero shuffle. NULL keys probe NULL."""
+    from pyspark.sql.functions import pandas_udf
+
+    bf = BloomFilter.from_bytes(bloom)
+    m, k, bits = bf.m, bf.k, bf.bits
+
+    @pandas_udf("boolean")
+    def seen(x1: pd.Series, x2: pd.Series) -> pd.Series:
+        return pd.Series(_test_bits(bits, _positions(x1.to_numpy(), x2.to_numpy(), m, k)))
+
+    # md5(NULL) is NULL, and one NULL would turn the batch's Arrow longs
+    # into float64 and round the 60-bit halves; NULL keys hash a stand-in
+    # and are masked back to NULL
+    x1, x2 = _md5_half_cols(F.col(key_col).cast("string"))
+    hit = seen(F.coalesce(x1, F.lit(0)), F.coalesce(x2, F.lit(1)))
+    return df.withColumn(out_col, F.when(F.col(key_col).isNotNull(), hit))
 
 
 def train_blooms(
@@ -127,14 +281,12 @@ def train_blooms(
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        cells = sorted(set(pdf["h3"]))
-        bf = BloomFilter(len(cells), fpr)
-        bf.update(cells)
+        cells = set(pdf["h3"])
         return pd.DataFrame(
             {
                 user_col: [pdf[user_col].iloc[0]],
                 "n_tiles": [len(cells)],
-                "bloom": [bf.to_bytes()],
+                "bloom": [BloomFilter.of(cells, fpr).to_bytes()],
             }
         )
 
@@ -170,15 +322,15 @@ class H3Lookup:
 
     def predict(self, pdf: pd.DataFrame) -> pd.DataFrame:
         out = pdf.copy()
-        anomalies = []
-        for user, lat, lng in zip(pdf["user"], pdf["latitude"], pdf["longitude"]):
+        lat, lng = pdf["latitude"].to_numpy(), pdf["longitude"].to_numpy()
+        # one vectorized probe per user; rows of unseen users stay 1
+        anomaly = np.ones(len(pdf), dtype=np.int64)
+        for user, rows in pdf.groupby("user", sort=False).indices.items():
             bf = self.blooms.get(user)
-            if bf is None:
-                anomalies.append(1)
-                continue
-            tile = cell_id_py(float(lat), float(lng), self.precision)
-            anomalies.append(0 if tile in bf else 1)
-        out["anomaly"] = anomalies
+            if bf is not None:
+                tiles = [cell_id_py(float(lat[i]), float(lng[i]), self.precision) for i in rows]
+                anomaly[rows] = ~bf.contains(tiles)
+        out["anomaly"] = anomaly
         return out
 
 
@@ -200,27 +352,27 @@ def score_with_blooms(
     inlines projections into it when a filter on `anomaly` is pushed
     down, but never across a join, so the `forall` body only does
     arithmetic and the k bit reads. A bloom not in the current format
-    fails the query through `raise_error` instead of scoring garbage.
+    (or with m < 8 or k = 0) fails the query through `raise_error`
+    instead of scoring garbage.
     """
     from geoscan_fraud_spark.functions.grid import cell_id
-    from geoscan_fraud_spark.operators.dedup import _ident
 
     tx = [_ident(c) for c in transactions.columns]
-    hx = F.md5(cell_id(F.col(_ident(lat_col)), F.col(_ident(lng_col)), precision))
-    hashed = transactions.select(
-        *tx,
-        F.conv(F.substring(hx, 1, 15), 16, 10).cast("bigint").alias("__x1"),
-        F.conv(F.substring(hx, 16, 15), 16, 10).cast("bigint").bitwiseOR(F.lit(1)).alias("__x2"),
+    x1, x2 = _md5_half_cols(
+        cell_id(F.col(_ident(lat_col)), F.col(_ident(lng_col)), precision)
     )
+    hashed = transactions.select(*tx, x1.alias("__x1"), x2.alias("__x2"))
     m_raw = "try_cast(conv(hex(substring(bloom, 2, 8)), 16, 10) AS BIGINT)"
+    k_raw = "CAST(conv(hex(substring(bloom, 10, 2)), 16, 10) AS INT)"
     headers = blooms_df.selectExpr(
         _ident(user_col),
         "bloom AS __bloom",
         f"""CASE WHEN bloom IS NULL THEN NULL
         WHEN substring(bloom, 1, 1) = X'{FORMAT_VERSION:02X}'
+         AND {m_raw} >= 8 AND {k_raw} >= 1
          AND length(bloom) = {HEADER_BYTES} + ({m_raw} + 7) DIV 8 THEN {m_raw}
-        ELSE raise_error('not a {FORMAT_NAME}; rebuild it with train_blooms') END AS __m""",
-        "CAST(conv(hex(substring(bloom, 10, 2)), 16, 10) AS INT) AS __k",
+        ELSE raise_error('{FORMAT_ERROR}') END AS __m""",
+        f"{k_raw} AS __k",
     )
     # No broadcast hint: blooms_df grows with the user population (~1.5 KB
     # per user → ~150 GB at 100 M users), far past broadcast range. AQE
@@ -249,18 +401,18 @@ def log_h3lookup(
     run_name: str = "h3_lookup",
 ):
     """Package the serving scorer as a REAL ``mlflow.pyfunc`` model —
-    the thin adapter for `02_geofraud_fraud.py:200-238` (VERDICT r11
-    missing #1). The tiles relation is exported as a long-format CSV
-    artifact (one ``user,h3`` row per tile — a proper table, avoiding
-    the reference's stringified-list bug `bu:21` where blooms trained on
-    single characters), and the logged PythonModel rebuilds the per-user
-    blooms from that artifact in ``load_context`` with EXACTLY
-    `train_blooms`' construction (sorted distinct tiles, same fpr at
+    the thin adapter for `02_geofraud_fraud.py:200-238`. The tiles
+    relation is exported as a long-format CSV artifact (one ``user,h3``
+    row per tile — a proper table, avoiding the reference's
+    stringified-list bug `bu:21` where blooms trained on single
+    characters), and the logged PythonModel rebuilds the per-user blooms
+    from that artifact in ``load_context`` with EXACTLY `train_blooms`'
+    construction (`BloomFilter.of` over the distinct tiles, same fpr at
     train and serve — the `bu:22` fix), then scores through `H3Lookup`.
 
     Requires ``mlflow`` (importable in a Databricks-like deployment;
-    NOT installed in this sandbox — the adapter raises a friendly
-    ImportError and its test skips cleanly). Returns whatever
+    without it the adapter raises a friendly ImportError and its test
+    skips cleanly). Returns whatever
     ``mlflow.pyfunc.log_model`` returns (ModelInfo).
 
     SCALE CEILING: same as `H3Lookup.from_model_df` — the artifact holds
@@ -302,12 +454,10 @@ def log_h3lookup(
             pdf = pd.read_csv(
                 context.artifacts["tiles"], dtype={"user": str, "h3": str}
             )
-            blooms = {}
-            for user, grp in pdf.groupby("user", sort=False):
-                cells = sorted(set(grp["h3"]))
-                bf = BloomFilter(len(cells), self._fpr)
-                bf.update(cells)
-                blooms[user] = bf
+            blooms = {
+                user: BloomFilter.of(grp["h3"], self._fpr)
+                for user, grp in pdf.groupby("user", sort=False)
+            }
             self._scorer = H3Lookup(blooms, self._precision)
 
         def predict(self, context, model_input, params=None):

@@ -90,8 +90,8 @@ def connected_components(
     latency. When the materialized edge list is at or under
     ``small_graph_threshold`` edges, the labels are computed with a
     driver-side union-find instead: identical min-label result, 2 jobs
-    total (checkpoint + LIMIT-probe collect — r13 folded the old
-    count() path-pick job into the collect) instead of ~4 per
+    total (checkpoint + LIMIT-probe collect; the path pick rides on
+    the collect instead of its own count() job) instead of ~4 per
     iteration. The pairs cross the wire as Arrow
     batches into a 2-column pandas frame (two int64 numpy arrays — 16
     bytes/edge, ~32 MB at the 2M-symmetrized default, NOT per-row
@@ -108,9 +108,9 @@ def connected_components(
     sym = cut(sym)
 
     if small_graph_threshold > 0:
-        # r13 (VERDICT r12 #1 — per-call job floor): the old shape paid a
-        # count() job to pick the path and a second toPandas job to fetch
-        # the edges. A LIMIT-probe collect does both in ONE action over
+        # per-call job floor: picking the path with a count() job and
+        # fetching the edges with a second toPandas job costs two
+        # actions. A LIMIT-probe collect does both in ONE action over
         # the just-checkpointed blocks: fetch at most 2*threshold+1 rows
         # — if everything came back, that IS the edge list (rows ≤ limit
         # means limit was not binding); if the limit bound, the list is

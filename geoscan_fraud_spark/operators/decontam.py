@@ -42,7 +42,7 @@ def contamination_hits(
         benchmark.select(F.explode(_gram_hashes(benchmark, text_col, n)).alias("gram"))
         .distinct()
     )
-    # r12 (guide §2.5): shingle + xxhash64 per gram position is the
+    # shingle + xxhash64 per gram position is the
     # CPU-heavy map side, and the probe + partial count run in the same
     # scan stage — on a small/unsplittable corpus that whole stage sat
     # on the source's 1-2 tasks. Same size-estimate-gated fan-out as the

@@ -18,11 +18,11 @@ cross product.
 from __future__ import annotations
 
 import hashlib
-import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from geoscan_fraud_spark.functions.sqltext import _dlit, _ident
 from geoscan_fraud_spark.operators.components import connected_components
 
 
@@ -88,15 +88,15 @@ def minhash_mix_params(num_hashes: int) -> tuple[list[int], list[int], list[int]
     return a_mul, b_mul, c_xor
 
 
-#: `_fan_out_small` sizing knobs (r13, VERDICT r12 #7): the fan-out
+#: `_fan_out_small` sizing knobs: the fan-out
 #: target is capped by the size estimate so a stale/small estimate on a
 #: 10k-core cluster can never shatter a <64 MB relation into 10k
 #: near-empty partitions — but floored at 32, because the stages this
 #: guards are CPU-QUADRATIC per input byte (shingling + H-way hashing),
 #: where bytes under-measure work (the 5 000-doc fixture estimates
-#: ~250 KB yet costs ~2 s of single-core signature compute; the r12 A/B
-#: wins came from spreading exactly that). local[32] keeps target = 32,
-#: bit-identical to the r12-measured behavior.
+#: ~250 KB yet costs ~2 s of single-core signature compute; the measured
+#: A/B wins came from spreading exactly that). local[32] keeps target =
+#: 32, bit-identical to the uncapped fan-out's behavior.
 _FAN_OUT_MIN_PARTS = 32
 _FAN_OUT_BYTES_PER_PART = 1024 * 1024
 #: Catalyst reports "no idea" as defaultSizeInBytes (Long.MaxValue) —
@@ -130,8 +130,8 @@ def _fan_out_small(df: DataFrame) -> DataFrame:
     intact; every consumer here is partition-order-independent
     (signatures/band hashes are row-local, aggregates associative).
 
-    r13: (a) the target partition count is size-capped
-    (`_fan_out_target` — VERDICT r12 #7) instead of a bare
+    Two refinements: (a) the target partition count is size-capped
+    (`_fan_out_target`) instead of a bare
     ``defaultParallelism``; (b) RDD-backed plans — foreachBatch hands
     the sink a LogicalRDD snapshot, whose size estimate is the
     defaultSizeInBytes SENTINEL, not a measurement — previously never
@@ -193,7 +193,7 @@ def minhash_signature_table(
     # hash the shingle string ONCE, then derive the H signature hashes by
     # seed-mixing the first digest — not by re-hashing the string H times.
     # The H aggregate expressions are built as JVM-parsed `F.expr` strings
-    # (r13, guide §5 — driver overhead): the Column-operator form made
+    # (guide §5 — driver overhead): the Column-operator form made
     # ~10 py4j round-trips per hash function (~0.7 s of pure driver-side
     # construction per invocation at H=48, re-paid by every streaming
     # micro-batch that rebuilds the gate plan); one parsed string per
@@ -279,7 +279,7 @@ def _star_capped_buckets(
     member pairs with the bucket's min-id hub, k-1 edges instead of
     k^2/2.
 
-    Why star beats drop here (r10 — the skew scale rung caught the
+    Why star beats drop here (the skew scale rung caught the
     default-unguarded path going quadratic at 29x the uniform wall on a
     planted 20% near-dup family): downstream consumers verify candidate
     pairs and feed CONNECTED COMPONENTS, where a verified star over a
@@ -375,7 +375,7 @@ def minhash_candidate_pairs(
     bands x rows = num_hashes; collision prob ~ 1-(1-j^r)^b for Jaccard j.
     ``max_bucket`` (optional): band buckets holding more than that many
     docs emit a linear min-id STAR instead of the quadratic all-pairs
-    self-join (`_star_capped_buckets` — the r10 hot-bucket guard that
+    self-join (`_star_capped_buckets` — the hot-bucket guard that
     keeps a near-dup-flooded corpus from going quadratic while the flood
     still collapses through its hub in connected components).
     """
@@ -401,7 +401,7 @@ def jaccard_verified_pairs(
         .union(candidates.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    # r12 (guide §2.5): the shingle+verify compute otherwise runs at the
+    # guide §2.5: the shingle+verify compute otherwise runs at the
     # source scan's task granularity (measured: a 4-task 2.4 s job inside
     # dedup_minhash on 32 cores — the semi-join is broadcast, so it stays
     # in the scan stage). Fanning out the semi-joined docs BEFORE the
@@ -495,7 +495,7 @@ def minhash_dedup(
     cluster is the connected component over verified pairs (A near B
     near C collapses to one doc even if A!~C).
 
-    ``keep`` picks the representative (r07): ``'min_id'`` (default — the
+    ``keep`` picks the representative: ``'min_id'`` (default — the
     deterministic baseline every oracle replays), ``'longest'`` (max
     text length — the common curation preference: near-dups usually
     differ by truncation, keep the fullest copy), or ``'score'`` (max
@@ -528,7 +528,7 @@ def minhash_dedup(
     component-min id — the representative the collapse kept; NULL and
     empty texts share the [''] shingle set and merge either way
     (equivalence pinned in test_round6_fixes). ``max_bucket`` (default
-    256 since r10 — the skew scale rung measured the unguarded default
+    256 — the skew scale rung measured the unguarded default
     going quadratic, 29x the uniform wall, on a planted 20% near-dup
     family) additionally bounds residual hot buckets
     (distinct-but-near-identical floods): oversized buckets emit a
@@ -689,7 +689,7 @@ def simhash_table(
             F.conv(F.substring(F.md5("t"), 1, 15), 16, 10).cast("long").alias("h"),
         )
     # lane aggregates and the per-bit unpack are built as JVM-parsed
-    # `F.expr` strings (r13, guide §5): the Column-operator loops made
+    # `F.expr` strings (guide §5): the Column-operator loops made
     # ~600 py4j round-trips (~1.2 s of driver-side plan construction per
     # invocation — a third of the benched entry's wall); the parsed
     # strings produce identical trees (`|`/`&`/shiftleft/shiftright and
@@ -773,7 +773,7 @@ def simhash_pairs(
     )
     if max_bucket is not None:
         chunked = _cap_buckets(chunked, ["chunk_idx", "chunk"], max_bucket)
-    # r12 (guide §2.5): the broadcast self-join + Hamming verify +
+    # guide §2.5: the broadcast self-join + Hamming verify +
     # distinct below is CPU-QUADRATIC in bucket density but byte-tiny,
     # so AQE's byte-based partition coalescing squeezed it onto 1-3
     # tasks (measured: the entry's dominant job — 3.8 s on 3 of 32
@@ -832,61 +832,31 @@ def norm_expr(a):
     return F.sqrt(dot_expr(a, a))
 
 
-def _dlit(v: float) -> str:
-    """Exact SQL double literal: repr() is the shortest round-trip form
-    and Spark's `...D` literal goes through Double.parseDouble, so the
-    IEEE value is bit-identical to `F.lit(float)` (incl. subnormals and
-    exponent forms — pinned in tests/test_round13_fixes.py). NaN and
-    the infinities have no `...D` spelling and are cast from strings."""
-    v = float(v)
-    if math.isnan(v):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(v):
-        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-    return repr(v) + "D"
+def hyperplane_bucket(emb: str, dim: int, planes: int = 16, seed: int = 42):
+    """Sign-bit LSH bucket key for the embedding column NAMED ``emb``: one
+    bit per seeded hyperplane (sign of the dot product), packed into an
+    int. Shared between the batch near-dup pairs and the persisted
+    embedding index (`operators/incremental.py`) — identical (dim,
+    planes, seed) means identical bucketing across runs.
 
-
-def _ident(name: str) -> str:
-    """Backtick-quoted SQL identifier; embedded backticks are doubled."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def hyperplane_bucket(emb, dim: int, planes: int = 16, seed: int = 42):
-    """Sign-bit LSH bucket key for an embedding column: one bit per
-    seeded hyperplane (sign of the dot product), packed into an int.
-    Shared between the batch near-dup pairs and the persisted embedding
-    index (`operators/incremental.py`) — identical (dim, planes, seed)
-    means identical bucketing across runs.
-
-    ``emb`` may be a column NAME (preferred — the whole key is built as
-    ONE JVM-parsed `F.expr`; the Column-operator form made dim x planes
-    py4j literal calls, ~0.9 s of driver-side construction per
-    invocation at 64x16, re-paid per streaming micro-batch) or any
-    Column expression (compatibility path, same tree built
-    operator-by-operator). Both produce identical values — the SQL
-    string mirrors `dot_expr`'s transform/zip_with/aggregate fold
-    exactly (parity pinned in tests/test_round13_fixes.py)."""
-    hp = _hyperplanes(dim, planes, seed)
-    if isinstance(emb, str):
-        bits = []
-        for p, plane in enumerate(hp):
-            arr = "array(" + ",".join(_dlit(v) for v in plane) + ")"
-            dot = (
-                f"aggregate(zip_with("
-                f"transform({_ident(emb)}, x -> CAST(x AS DOUBLE)), "
-                f"transform({arr}, x -> CAST(x AS DOUBLE)), "
-                f"(x, y) -> x * y), 0.0D, (s, x) -> s + x)"
-            )
-            bits.append(
-                f"(CASE WHEN {dot} >= 0 THEN 1 ELSE 0 END) * {2 ** p}"
-            )
-        return F.expr(" + ".join(bits))
-    key = None
-    for p, plane in enumerate(hp):
-        dot = dot_expr(emb, F.array(*[F.lit(v) for v in plane]))
-        bit = F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2**p)
-        key = bit if key is None else key + bit
-    return key
+    The whole key is built as ONE JVM-parsed `F.expr` (a Column-operator
+    tree made dim x planes py4j literal calls, ~0.9 s of driver-side
+    construction per invocation at 64x16, re-paid per streaming
+    micro-batch). The SQL string mirrors `dot_expr`'s
+    transform/zip_with/aggregate fold exactly, so each dot product
+    accumulates left to right from 0.0 (pinned against a pure-Python
+    fold in tests/test_round13_fixes.py)."""
+    bits = []
+    for p, plane in enumerate(_hyperplanes(dim, planes, seed)):
+        arr = "array(" + ",".join(_dlit(v) for v in plane) + ")"
+        dot = (
+            f"aggregate(zip_with("
+            f"transform({_ident(emb)}, x -> CAST(x AS DOUBLE)), "
+            f"transform({arr}, x -> CAST(x AS DOUBLE)), "
+            f"(x, y) -> x * y), 0.0D, (s, x) -> s + x)"
+        )
+        bits.append(f"(CASE WHEN {dot} >= 0 THEN 1 ELSE 0 END) * {2 ** p}")
+    return F.expr(" + ".join(bits))
 
 
 def cosine_expr(a, b):
@@ -924,7 +894,7 @@ def embedding_neardup_pairs(
     # per-row norms once, not per pair — the verify join then pays one
     # dot per candidate pair (bit-identical to the per-pair cosine)
     keyed = keyed.withColumn("__n", norm_expr(F.col("e")))
-    # r12 (guide §2.5, the dedup_simhash finding): the bucket self-join's
+    # guide §2.5, the dedup_simhash finding: the bucket self-join's
     # quadratic dot-product verify otherwise runs at the source scan's
     # task granularity (the bucketing is map-only, so nothing upstream
     # spreads an unsplittable input). One shared fan-out under both join

@@ -63,17 +63,6 @@ class _Params:
         self.minPts = 20
         self.tilePrecision = 10
         self.tileLayers = 0
-        #: pairing-grid resolution override (None = coarsest cell whose
-        #: edge >= epsilon). A finer resolution keeps the pairing COMPLETE
-        #: (the ring count adapts) while shrinking candidate sets in dense
-        #: data — measured ~35% faster pairing on the reference CSV one
-        #: step finer; in sparse data the wider ring explode can lose, so
-        #: the safe default stands.
-        self.pairingRes = None
-
-    def setPairingRes(self, v):
-        self.pairingRes = None if v is None else int(v)
-        return self
 
     def setLatitudeCol(self, v):
         self.latitudeCol = v
@@ -112,7 +101,6 @@ class _Params:
             "minPts": self.minPts,
             "tilePrecision": self.tilePrecision,
             "tileLayers": self.tileLayers,
-            "pairingRes": self.pairingRes,
         }
 
     def _load_params(self, d: dict):
@@ -225,29 +213,27 @@ class Geoscan(_Params):
         )
         pts = pts.persist()
 
-        # pick the pairing resolution: explicit override, else measure cell
-        # density at the default resolution and go one step finer when the
-        # data is dense (>= 16 distinct coordinates per cell). Candidate
-        # pairs grow quadratically with per-cell density while the finer
-        # ring only explodes ~2x more cells per point, so dense workloads
-        # win big (measured 222s -> 145s on an 878k-point fit, identical
-        # output — pairing is complete at any resolution up to the same
-        # |lat| ~ 86.4 deg truncation point, since the longitude ring cap
-        # scales with epsilon/edge(res)); sparse data
-        # keeps the coarse default. One approx-distinct pass over the
-        # (persisted) deduped coordinates is noise next to the join.
-        pairing_res = self.pairingRes
-        if pairing_res is None:
-            res0 = res_for_epsilon(eps)
-            if res0 + 1 in RES_EDGE_M:
-                stats = pts.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.approx_count_distinct(
-                        cell_id(F.col("lat"), F.col("lng"), res0)
-                    ).alias("c"),
-                ).first()
-                dense = stats["n"] / max(stats["c"], 1) >= 16
-                pairing_res = res0 + 1 if dense else res0
+        # pick the pairing resolution: measure cell density at the
+        # default resolution and go one step finer when the data is dense
+        # (>= 16 distinct coordinates per cell). Candidate pairs grow
+        # quadratically with per-cell density while the finer ring only
+        # explodes ~2x more cells per point, so dense workloads win big
+        # (measured 222s -> 145s on an 878k-point fit, identical output —
+        # pairing is complete at any resolution up to the same |lat| ~
+        # 86.4 deg truncation point, since the longitude ring cap scales
+        # with epsilon/edge(res)); sparse data keeps the coarse default.
+        # One approx-distinct pass over the (persisted) deduped
+        # coordinates is noise next to the join.
+        pairing_res = res_for_epsilon(eps)
+        if pairing_res + 1 in RES_EDGE_M:
+            stats = pts.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.approx_count_distinct(
+                    cell_id(F.col("lat"), F.col("lng"), pairing_res)
+                ).alias("c"),
+            ).first()
+            if stats["n"] / max(stats["c"], 1) >= 16:
+                pairing_res += 1
 
         # pairs feed BOTH the degree aggregate and the core-core edge list;
         # without a persist the ring-explode + haversine join runs twice

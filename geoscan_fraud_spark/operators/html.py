@@ -6,8 +6,8 @@ Spark-first shape: ONE map-only chain of native `regexp_replace`
 expressions (whole-stage codegen, zero shuffle, zero Python — the same
 contract as `text.normalize_text`). The extraction is deliberately a
 DETERMINISTIC SPECIFICATION, not a best-effort scraper: a fixed pipeline
-of documented rules that an external SQL engine can replay rule-by-rule
-(r08 rotation candidate), because at 100 TB "which bytes survived
+of documented rules that an external SQL engine can replay rule-by-rule,
+because at 100 TB "which bytes survived
 extraction" is a provenance question that must be answerable later.
 
 Rules, in order (each a regex pass):

@@ -19,14 +19,14 @@ is by design cold — the whole point of the index is never touching it
 again. Batch-internal pairs use the same estimator for consistency (the
 full-text-verify path is the batch operator `minhash_dedup`).
 
-100 TB shape: the index never shuffles wholesale — since r11 the index
+100 TB shape: the index never shuffles wholesale — the index
 side is LEFT-SEMI PRUNED to the batch's own (band, band-hash) key set
 (broadcast, bounded by bands x batch docs) before the hot-bucket window
 and the candidate join, so the per-batch store cost is one map-only
 scan plus shuffles over TOUCHED buckets only (O(batch), not O(store));
 the candidate restriction joins touch only signature rows whose ids
 appear in a candidate pair. Hot buckets are star-guarded BY DEFAULT
-since r10 (``max_bucket=256``): an oversized index bucket collapses to
+(``max_bucket=256``): an oversized index bucket collapses to
 its min-id hub (batch docs still test against the family's
 representative — a flood keeps being suppressed, never admitted) and
 the batch-internal self-join emits hub edges instead of all pairs; the
@@ -63,7 +63,7 @@ def minhash_index(
     independent of H-at-write-time readers and makes the estimator a
     single `zip_with` fold.
 
-    ``bands`` (r07, VERDICT r06 #2) additionally PRE-COMPUTES the LSH
+    ``bands`` additionally PRE-COMPUTES the LSH
     band-hash array into a ``bands`` column: without it,
     `dedup_against_index` must re-hash the ENTIRE index into band
     buckets on every batch — at a billion-row store that is a full map
@@ -172,7 +172,7 @@ def estimated_jaccard(sig_a, sig_b):
 
 
 def _resolve_prune(prune_index, key_count_fn, prune_max_keys: int) -> bool:
-    """Resolve the public ``prune_index`` tri-state (ADVICE r11 #3):
+    """Resolve the public ``prune_index`` tri-state:
     True/False pass through with zero extra work; ``'auto'`` pays one
     cheap count (the callable) and disables the broadcast prune when
     the build side would exceed ``prune_max_keys`` keys — the
@@ -225,7 +225,7 @@ def dedup_against_index(
     the already-checkpointed signature table (one small shuffle of
     ~8·H-byte rows).
 
-    ``max_bucket`` (default 256 since r10): hot band buckets are
+    ``max_bucket`` (default 256): hot band buckets are
     star-guarded — an oversized INDEX bucket collapses to its min-id
     hub (every batch doc still estimates against the family's
     representative, so a near-dup flood keeps being SUPPRESSED; the old
@@ -243,7 +243,7 @@ def dedup_against_index(
     their build width, so a mismatch fail-fasts instead of silently
     missing candidates.
 
-    ``_sig_out`` (internal, r12): when a dict is passed, the eagerly
+    ``_sig_out`` (internal): when a dict is passed, the eagerly
     checkpointed batch signature table lands in it under ``'sigs'`` —
     the ingest sinks reuse it to derive the store's index rows for the
     KEPT ids instead of re-shingling + re-minhashing the survivors'
@@ -252,8 +252,8 @@ def dedup_against_index(
     `minhash_index` of its text."""
     if precollapse_exact:
         # signature pass and exact-dup collapse in ONE materialization
-        # (r12, guide §2.4): groupBy(sig).min(id) IS the old "full sig
-        # table, then semi-join to min-id reps" — same (rep_id, sig)
+        # (guide §2.4): groupBy(sig).min(id) IS "full sig table, then
+        # semi-join to min-id reps" — same (rep_id, sig)
         # rows — but as one eager checkpoint instead of two chained
         # ones (the full table was only ever consumed collapsed).
         new_sig = (
@@ -277,7 +277,7 @@ def dedup_against_index(
     nb = _banded_sig(new_sig, num_hashes, bands, sig_hash)
     # a store written with minhash_index(bands=...) carries pre-computed
     # band hashes — _banded_sig explodes them instead of re-hashing the
-    # whole index every batch (VERDICT r06 #2)
+    # whole index every batch
     idx_for_bands = index.select(
         "id",
         "sig",
@@ -287,7 +287,7 @@ def dedup_against_index(
         "band", "bh", F.col("id").alias("oid")
     )
     # prune the index side to BATCH-TOUCHED buckets before anything
-    # shuffles it (VERDICT r10 #1): the batch's distinct (band, bh) key
+    # shuffles it: the batch's distinct (band, bh) key
     # set is bounded by bands x batch docs, so it broadcasts, and the
     # left-semi keeps whole touched buckets — the hot-bucket window
     # below and the stage-1 candidate join see bit-identical rows for
@@ -297,7 +297,7 @@ def dedup_against_index(
     # store rows twice (window + join) to admit a few thousand docs —
     # per-batch work O(store), not O(batch).
     #
-    # ``prune_index`` (public since r12 — ADVICE r11 #3) controls it:
+    # ``prune_index`` (public) controls it:
     #   True (default)  — always prune. The broadcast build side is
     #       bands x batch-doc rows of (int, long); for trigger-bounded
     #       micro-batches (the intended caller) that is a few MB.
@@ -323,7 +323,7 @@ def dedup_against_index(
         ib = ib.join(F.broadcast(batch_keys), ["band", "bh"], "left_semi")
     nb_small, nb_star = nb, None
     if max_bucket is not None:
-        # index side (r10 — the star-guard idea applied to ingest): a HOT
+        # index side (the star-guard idea applied to ingest): a HOT
         # index bucket collapses to its min-id representative instead of
         # being dropped. The batch x index join output for that bucket is
         # then m_batch x 1 (linear), and every batch doc still tests its
@@ -352,7 +352,7 @@ def dedup_against_index(
         )
 
     # stage 1 — batch vs index: band-bucket candidates, then estimate.
-    # r13: NO distinct on the candidate lists (here and stage 2) — the
+    # NO distinct on the candidate lists (here and stage 2) — the
     # dedup-before-verify exchange cost more than it saved: a pair
     # colliding in k bands re-verifies k times (a cheap zip_with over
     # the signatures, map-side through broadcast joins), and every
@@ -368,7 +368,7 @@ def dedup_against_index(
         .filter(estimated_jaccard(F.col("sig"), F.col("osig")) >= threshold)
         .select("id")
         .distinct()
-        # materialization is `_component_drop`'s decision (r13): the
+        # materialization is `_component_drop`'s decision: the
         # default driver path collects this once; the distributed
         # fallback checkpoints it there (consumed twice)
     )
@@ -449,7 +449,7 @@ def _component_drop(
     index-matched doc (transitively represented), and each remaining
     component's non-min members.
 
-    r13 (VERDICT r12 #1/#5 — the per-micro-batch job floor): near-dup
+    The per-micro-batch job floor sets the shape: near-dup
     pair lists are batch-bounded and sparse, so by default ``pairs``
     (LIMIT-probed) and ``matched`` are COLLECTED — one action each —
     and the component collapse runs through the same min-label
@@ -604,13 +604,13 @@ def embedding_dedup_against_index(
         hyperplane_bucket(emb_col, dim, planes, seed).alias("bucket"),
     )
     # batch-touched-bucket prune, then dequantize only survivors (the
-    # minhash gate's VERDICT r10 #1 fix applied to the same join shape):
+    # minhash gate's prune applied to the same join shape):
     # the batch's distinct bucket set broadcasts, whole touched buckets
     # are kept — `_cap_buckets` decisions and the candidate join are
     # bit-identical — and the store-wide rows never reach a shuffle or
     # the dequantize projection
     ib = index.select("bucket", F.col("id").alias("oid"), "scale", "qvec")
-    # public tri-state since r12 (ADVICE r11 #3) — see the minhash gate:
+    # public tri-state — see the minhash gate:
     # 'auto' counts the batch ids (column-pruned scan of new_df; unlike
     # the minhash gate there is no pre-checkpointed relation to count,
     # so 'auto' here may rescan the batch source once) and disables the

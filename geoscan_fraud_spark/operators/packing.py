@@ -280,7 +280,7 @@ def chunk_documents(
         )
     stride = max_tokens - overlap
     # single-sourced tokenization contract (operators/text.tokens).
-    # Staged as a REAL column before the per-chunk lambda (r12):
+    # Staged as a REAL column before the per-chunk lambda:
     # Catalyst re-evaluates non-trivial lambda subexpressions PER
     # ELEMENT, so the nested form re-tokenized the document for every
     # chunk — O(T^2 / stride) per doc, a real cost for the long

@@ -89,15 +89,15 @@ def pq_train_sample(
     sample: str = "hash",
 ) -> list[list[list[float]]]:
     """Deterministic training sample straight from a DataFrame feeding
-    `pq_train_codebooks`. ``sample='hash'`` (default since r11 — VERDICT
-    r10 #3) takes the ``train_rows`` rows with the LOWEST ``xxhash64(id)``
-    (id tiebreak): equally deterministic and bit-stable across retrains,
+    `pq_train_codebooks`. ``sample='hash'`` (the default) takes the
+    ``train_rows`` rows with the LOWEST ``xxhash64(id)`` (id tiebreak):
+    equally deterministic and bit-stable across retrains,
     but pseudo-random in id space, so a corpus whose ids correlate with
     content (crawl order, source shards) trains on an unbiased slice —
     the same stratification as ``pmod(xxhash64(id), p) = 0`` without
     having to pick ``p`` or re-count the corpus, and with an exact
     sample size. Both modes are a TakeOrdered — no full sort
-    materializes. ``sample='lowest_id'`` keeps the pre-r11 ordering for
+    materializes. ``sample='lowest_id'`` keeps the lowest-id ordering for
     callers that pinned codebooks against it."""
     pdf = (
         df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))

@@ -260,7 +260,7 @@ def profile_drift(
 
 
 # ---------------------------------------------------------------------------
-# Count-min sketch — mergeable per-token frequency estimates (r07)
+# Count-min sketch — mergeable per-token frequency estimates
 # ---------------------------------------------------------------------------
 
 

@@ -106,10 +106,9 @@ def _doc_postings_outer(docs: DataFrame, text_col: str, id_col: str) -> DataFram
     zero-token doc survives as ONE NULL-term sentinel row, so the doc
     count, the global counters and the empty-doc id list all derive from
     the SAME relation as the postings — no second (or third) corpus
-    tokenize pass. Shared by `text_index_write` and `text_index_append`
-    (r12: the build adopted the append's r11 sentinel shape).
+    tokenize pass. Shared by `text_index_write` and `text_index_append`.
 
-    r12 (guide §2.5 "input skew"): the tokenize+explode map side runs at
+    Guide §2.5 "input skew": the tokenize+explode map side runs at
     the SOURCE's task granularity — one file / one row group = one core
     doing the whole pass (measured directly: the build's postings map
     stage planned 1 task on 32 cores over the single-row-group fixture,
@@ -196,7 +195,7 @@ def bm25_topk(
     q_terms = _query_terms(queries, query_id_col, query_text_col)
     vocab = q_terms.select("term").distinct()
 
-    # r12 measured-and-rejected: a shared `_fan_out_small` head for the
+    # measured-and-rejected: a shared `_fan_out_small` head for the
     # two corpus branches (token scan + stats aggregate) timed FLAT at
     # sf0.1 (2.05 s → 2.06 s min-of-4) — the one-shot path's cost is not
     # the tokenize map side, and the fan-out added three round-robin
@@ -255,7 +254,7 @@ def text_index_write(
       docs behind ``n_empty`` (written only when there are any, read
       only by maintenance): postings cannot witness an empty doc, so
       without this list a TOMBSTONED empty doc's +1 in n_docs would
-      survive every compaction (the r09 caveat — VERDICT r09 #5).
+      survive every compaction.
       ``stats.json`` carries ``empties_tracked: true`` so compaction
       knows the list is authoritative; a legacy index without the flag
       keeps the old conservative carry-forward.
@@ -264,7 +263,7 @@ def text_index_write(
     the per-bucket directories keep the scan bounded and the (term)
     filter inside a bucket is an ordinary pushed predicate.
 
-    Contract (ADVICE r12 #4 — explicit since r12 changed the counter):
+    Contract (explicit because ``n_docs`` is a distinct-id counter):
     corpus ``doc_id``s must be unique — ``n_docs`` counts DISTINCT ids
     (mirroring `text_index_append`'s documented unique-id contract, so
     build and incremental accounting agree), and a corpus that repeats
@@ -305,7 +304,7 @@ def text_index_write(
         # src_batch stamps each posting's ingest generation (-1 =
         # build), enabling `index_expire`; format 2 = the column
         # is in EVERY postings file (no mixed schemas).
-        # NOTE (r12): the obvious job cut here — riding the global
+        # NOTE: the obvious job cut here — riding the global
         # counters on the postings write via `Dataset.observe` — is
         # deliberately NOT taken: constructing an `Observation`
         # initializes the session's lazy (non-serializable)
@@ -314,31 +313,27 @@ def text_index_write(
         # e.g. the quality/lang classifier gates) dies with "Task not
         # serializable". Measured in tests/test_stateful_streaming.py.
         #
-        # r12 (guide §1.2): ONE tokenize pass for everything — the
-        # sentinel shape `text_index_append` adopted in r11, applied to
-        # the build. The previous build paid a SECOND full corpus
-        # tokenize for the (n_docs, total_dl) counter job and a THIRD
-        # when empties existed; now the postings write, the counters
-        # and the empty-doc id list all derive from one persisted
-        # explode_outer relation. n_docs counts distinct doc_ids (the
+        # guide §1.2: ONE tokenize pass for everything — the sentinel
+        # shape of `text_index_append`, applied to the build (a separate
+        # counter job would tokenize the corpus a second time, and a
+        # third when empties exist). n_docs counts distinct doc_ids (the
         # unique-id contract `text_index_append` already documents),
-        # and NULL-text docs now land in empty_docs exactly as an
-        # APPENDED null-text doc always did — build and incremental
-        # accounting agree on that edge instead of diverging.
-        # r13 (VERDICT r12 #3, ADVICE r12 #1): the build holds NO
-        # corpus-scale cache. r12 persisted the full sentinel-bearing
-        # postings relation for the whole build to get single-tokenize
-        # counters — at 100 TB that spills a postings-sized second copy
-        # to executor storage, and partial eviction under a
-        # nondeterministic upstream could recompute counters from a
-        # different corpus sample than the written postings. Now:
+        # and NULL-text docs land in empty_docs exactly as an APPENDED
+        # null-text doc does — build and incremental accounting agree on
+        # that edge instead of diverging.
+        # The build holds NO corpus-scale cache: persisting the full
+        # sentinel-bearing postings relation for the whole build would,
+        # at 100 TB, spill a postings-sized second copy to executor
+        # storage, and partial eviction under a nondeterministic
+        # upstream could recompute counters from a different corpus
+        # sample than the written postings. Instead:
         # ONE corpus tokenize (the postings write), then every counter
         # derives from the WRITTEN snapshot plus one column-pruned
         # aggregate over the corpus id column (no text read, no second
         # tokenize): total_dl = sum(tf) over written postings (a doc's
         # term frequencies sum to its dl), n_posting_docs from the same
         # read-back aggregate, n_docs = countDistinct(id) over `docs` —
-        # the same distinct-id semantics as the r12 sentinel counter —
+        # the same distinct-id semantics as the append's sentinel counter —
         # and the empty-doc id list (only when empties exist) is the
         # distinct corpus ids ANTI-JOINED against the written posting
         # doc ids, never a re-tokenize.
@@ -378,7 +373,7 @@ def text_index_write(
             .partitionBy("bucket")
             .parquet(terms_dir)
         )
-        # ONE blocking action for all three build counters (r13, guide
+        # ONE blocking action for all three build counters (guide
         # §1.2/§5 — the probe-union trick from the incremental gate):
         # the written-postings aggregate and the column-pruned corpus
         # id count are independent one-row relations, so a cross join
@@ -455,7 +450,8 @@ def text_index_append(
 
     Contract: batch ``doc_id``s must be new to the index (an existing
     id would double-count in df/n_docs) — ingest pipelines get this for
-    free from upstream exact-dedup (`bloomset` / `dedup_incremental`).
+    free from upstream exact-dedup (`bloom.probe_bloom` /
+    `dedup_incremental`).
     Like the build, df/stats are computed from the SAME batch relation
     the postings write consumed; a nondeterministic upstream should be
     persisted first (foreachBatch batches already are).
@@ -475,10 +471,9 @@ def text_index_append(
     log, the ``(total_dl, n_docs, posting-doc count)`` counters AND the
     empty-doc id log all derive from those cached rows (``total_dl =
     sum(tf)`` over real terms — a doc's term frequencies sum to its
-    dl). r12: the previous shape paid a separate ``new_docs.count()``
-    Spark job (and a second tokenize pass when empties existed) per
-    append — a measurable slice of the streaming sink's per-batch job
-    floor (VERDICT r11 #3).
+    dl), so an append pays no separate ``new_docs.count()`` Spark job (nor
+    a second tokenize pass when empties exist) — that would be a
+    measurable slice of the streaming sink's per-batch job floor.
     Single-writer: guarded by `index_writer_lock` — a concurrent append
     would lose one side's counter update (read-modify-write JSON).
     """
@@ -498,12 +493,12 @@ def text_index_append(
                 "skipped_replay": True,
             }
 
-        # VERDICT r11 #3 (streaming job floor): tokenize with
+        # streaming job floor: tokenize with
         # explode_outer so zero-token docs survive as one NULL-term row
         # — the batch doc count and the empty-doc ids then derive from
         # the SAME persisted relation as the postings/df-log/counters,
         # instead of paying a separate new_docs.count() job (and a
-        # second tokenize pass for empties) per append. r12: shared with
+        # second tokenize pass for empties) per append. Shared with
         # the build (`_doc_postings_outer`), which also fans out a small
         # or unsplittable batch before the tokenize map side.
         postings_all = _doc_postings_outer(new_docs, text_col, id_col)
@@ -525,8 +520,8 @@ def text_index_append(
         try:
             # append INTO the live generation: new files beside immutable
             # existing ones — a reader that listed earlier just doesn't
-            # see the batch yet (no in-place mutation, ever). r12
-            # (guide §6): REBALANCE on the layout column first — the
+            # see the batch yet (no in-place mutation, ever). Guide §6:
+            # REBALANCE on the layout column first — the
             # cached batch relation is partitioned by doc, so a direct
             # write emitted tasks x buckets files per append (672 at the
             # gate fixture, 2.4 s of commit overhead vs 1.0 s for the
@@ -731,8 +726,7 @@ def text_index_upgrade_empties(
     strict: bool = True,
 ) -> dict:
     """One-shot migration of a LEGACY index (written before
-    ``empties_tracked``) to exact zero-token-doc accounting (VERDICT r10
-    #5): backfill the ``empty_docs`` family and flip the flag, so
+    ``empties_tracked``) to exact zero-token-doc accounting: backfill the ``empty_docs`` family and flip the flag, so
     compaction can subtract tombstoned/expired empty docs from
     ``n_docs`` exactly instead of carrying the conservative counter
     forward forever.
@@ -980,12 +974,12 @@ def hybrid_search(
     EXTERNAL (often strings like 'q1'), not members of the corpus id
     space, so the corpus-self-join exclusion would either throw on the
     string-vs-bigint comparison under ANSI mode or silently drop a doc
-    whose vec_id collides with a numeric query id (ADVICE r08).
+    whose vec_id collides with a numeric query id.
     Both legs inherit their index's pruning (term buckets / probe
     lists) and tombstone filters; each leg's top-k is tiny, so the
     fusion shuffle is bounded by n_queries * k * 2 rows.
     ``rerank`` / ``rerank_corpus`` pass through to the dense leg's
-    `ivf_index_query` (r12 — the hash-gate entry widens the shortlist
+    `ivf_index_query` (the hash-gate entry widens the shortlist
     to cover every probed candidate and re-ranks against the original
     full-precision relation, so the fused ranking replays exactly in
     SQL; serving callers keep the compressed-tier defaults). Returns

@@ -317,7 +317,7 @@ def ivf_topk_quantized(
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF ANN over an int8-quantized corpus with exact re-rank — the
-    standard memory-bound ANN shape at 100 TB (VERDICT r05 #8).
+    standard memory-bound ANN shape at 100 TB.
 
     The probe scan reads the 8x-smaller ``(scale, qvec)`` representation
     (for a scan-bound corpus that is the difference between an IO-bound
@@ -426,7 +426,7 @@ def semantic_pairs(
     because the two differ by reordering error alone, so the output —
     ids AND cosines — is identical to 'fold' at BLAS cost).
 
-    ``nprobe`` (r07, VERDICT r06 #5) is the multi-probe answer to the
+    ``nprobe`` is the multi-probe answer to the
     boundary-miss caveat above: each vector is assigned to its
     ``nprobe`` NEAREST centroids (not just the argmin), so a near-dup
     pair straddling a cluster boundary still shares their runner-up
@@ -472,7 +472,7 @@ def semantic_pairs(
             .filter(F.col("cosine") >= F.lit(float(threshold)))
             .select("id_a", "id_b", "cosine")
         )
-    # r12 measured-and-rejected (guide §1): a `_fan_out_small` here —
+    # measured-and-rejected (guide §1): a `_fan_out_small` here —
     # the dedup_simhash/embedding_lsh fix applied to the assignment map
     # side — REGRESSED semantic_dedup 1.92 → 2.38 s at sf0.1. Unlike
     # those broadcast self-joins, the cluster blocking downstream is a
@@ -652,7 +652,7 @@ def semantic_dedup(
     `minhash_dedup`). Eager: connected components iterates to fixpoint
     (O(log n) rounds, each checkpointed — `operators/components.py`).
     ``impl`` and ``nprobe`` (multi-probe boundary recall) as in
-    `semantic_pairs`. ``keep`` (r07, shared with `minhash_dedup`):
+    `semantic_pairs`. ``keep`` (shared with `minhash_dedup`):
     ``'min_id'`` (default — the oracle semantics) or ``'score'`` (max
     ``keep_score_col`` from ``df`` — e.g. a quality-model p_good — with
     min-id tiebreak); ``'longest'`` needs a text column and is a
@@ -873,7 +873,7 @@ def _ivf_index_write_locked(
             if len(pdf) == 0:
                 # same friendly refusal as pq_train_sample — np.stack
                 # over zero rows would raise numpy's opaque "need at
-                # least one array to stack" (ADVICE r10)
+                # least one array to stack"
                 raise ValueError(
                     "pq residual training: the corpus is empty — PQ "
                     "codebooks cannot train on zero rows (build the "
@@ -911,8 +911,8 @@ def _ivf_index_write_locked(
             "residual": bool(pq_residual),
             # sampling parameters persist so a rebuild retrains on the
             # same sample size/mode — without train_rows a custom
-            # (larger) sample silently shrank to the default (ADVICE
-            # r10); recorded even when codebooks were passed in, as the
+            # (larger) sample would silently shrink to the default;
+            # recorded even when codebooks were passed in, as the
             # retrain parameters a rebuild should use
             "train_rows": int(pq_train_rows),
             "sample": str(pq_sample),
@@ -924,7 +924,7 @@ def _ivf_index_write_locked(
         base, vec_col="c_emb", id_col="vec_id", keep_cols=keep
     )
     # cluster by the layout column before the dynamic-partition write
-    # (guide §6, r12): otherwise every task holds rows of every list and
+    # (guide §6): otherwise every task holds rows of every list and
     # the writer emits tasks x lists files; REBALANCE coalesces to one
     # right-sized file per list and still splits an oversized hot list.
     # `ivf_index_compact` applies the same discipline via repartition.
@@ -1109,7 +1109,7 @@ def ivf_index_append(
             )
             # append INTO the live generation: new files beside immutable
             # existing ones — never an in-place mutation. REBALANCE on
-            # the layout column (guide §6, r12): one file per touched
+            # the layout column (guide §6): one file per touched
             # list per append instead of tasks x lists — appends compound
             # the file count until compaction, so per-append layout
             # hygiene matters most here.
@@ -1279,14 +1279,13 @@ def ivf_index_rebuild(
             pq_k = int(meta["pq"]["k"])
             pq_residual = bool(meta["pq"].get("residual"))
             # retrain on the SAME sample size/mode the index was built
-            # with (ADVICE r10 — a custom larger sample used to shrink
-            # silently to the default). A legacy pq block MISSING the
-            # 'sample' key predates the key itself, and every pre-r11
-            # index was trained with lowest-id ordering — so the legacy
-            # default is 'lowest_id', not the current-write default
-            # 'hash' (ADVICE r11: defaulting to 'hash' silently switched
-            # sample modes on rebuild, surprising pinned-recall
-            # comparisons). 'hash' is used only when a block RECORDED it.
+            # with (a custom larger sample must not shrink silently to
+            # the default). A legacy pq block MISSING the 'sample' key
+            # predates the key itself, and every such index was trained
+            # with lowest-id ordering — so the legacy default is
+            # 'lowest_id', not the current-write default 'hash'
+            # (defaulting to 'hash' would silently switch sample modes
+            # on rebuild, surprising pinned-recall comparisons). 'hash' is used only when a block RECORDED it.
             pq_train_rows = int(meta["pq"].get("train_rows", 4096))
             pq_sample = str(meta["pq"].get("sample", "lowest_id"))
         _ivf_index_write_locked(
@@ -1476,7 +1475,7 @@ def ivf_index_query(
     (scale cancels out of cosine); the top ``rerank * k`` per query
     re-rank against dequantized vectors — the re-rank scan is bounded to
     the shortlist's vec_ids (a broadcast left-semi join against the
-    materialized |queries| x rerank*k shortlist; ADVICE r10/r11 — the PQ
+    materialized |queries| x rerank*k shortlist — the PQ
     tier's IO win holds by default with no driver-side id collect) —
     or bit-true full-precision ones if ``rerank_corpus`` (the original
     relation) is given.
@@ -1486,8 +1485,8 @@ def ivf_index_query(
     queries whose ids live in a different id space than the corpus:
     comparing a string query id against bigint vec_ids throws under
     ANSI mode, and a numeric query id that happens to equal a doc's
-    vec_id would silently drop that doc (ADVICE r08 —
-    `hybrid_search` passes False)."""
+    vec_id would silently drop that doc (`hybrid_search` passes
+    False)."""
     import os
 
     spark = queries.sparkSession
@@ -1549,12 +1548,12 @@ def ivf_index_query(
             # literals — evaluated on PROBES (one row per query x probed
             # list) BEFORE the candidate join, so the fold runs
             # |queries| * nprobe times, not once per candidate
-            # one JVM-parsed literal (r13, guide §5): the nested
+            # one JVM-parsed literal (guide §5): the nested
             # F.array(F.lit) form made n_centroids x dim py4j calls
             # (~1000 round-trips of driver latency per query
             # construction); `_dlit` literals are bit-identical to
             # F.lit(float)
-            from geoscan_fraud_spark.operators.dedup import _dlit
+            from geoscan_fraud_spark.functions.sqltext import _dlit
 
             arr = F.expr(
                 "array("
@@ -1622,7 +1621,7 @@ def ivf_index_query(
             F.col(id_col).alias("vec_id"), F.col(emb_col).alias("c_emb")
         )
     else:
-        # bound the re-rank scan to the SHORTLIST rows (ADVICE r10): the
+        # bound the re-rank scan to the SHORTLIST rows: the
         # shortlist is |queries| x rerank*k by construction, so it
         # materializes once (the ADC/int8 scan is not recomputed per
         # consumer) and bounds the dequantize pass to shortlist rows,
@@ -1630,7 +1629,7 @@ def ivf_index_query(
         # IO win was only real when callers passed rerank_corpus: the
         # default path re-read the full int8 vectors of all probed
         # partitions on top of the codes scan.
-        # ADVICE r11 / VERDICT r11 #2: the bound is a broadcast
+        # The bound is a broadcast
         # LEFT-SEMI join against the checkpointed shortlist's vec_ids,
         # not a driver collect + In(...) literal — at |queries| x
         # rerank*k scale the literal list was a driver materialization

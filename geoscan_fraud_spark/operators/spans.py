@@ -62,7 +62,7 @@ def _gram_inventory(
     never structurally.
 
     The token array is staged as a REAL column before the per-position
-    lambda (r12): Catalyst re-evaluates non-trivial lambda
+    lambda: Catalyst re-evaluates non-trivial lambda
     subexpressions PER ELEMENT, so the original nested form re-ran the
     split+filter tokenization for every gram position — O(T^2)
     tokenizations per document on top of the honest O(T*L) hash work
@@ -289,15 +289,14 @@ def dedup_span_store(raw: DataFrame, pending: bool | None = None) -> DataFrame:
     per origin batch (`span_gram_index` group-sums per batch), so
     dropping duplicate ``(gh, origin)`` keys removes exactly the crash
     artifacts. Rows of UNKNOWN origin (``src_batch = -1``, written when
-    re-compacting a pre-r07 base that lost provenance) are structurally
+    re-compacting an older base that lost provenance) are structurally
     non-dedupable and pass through untouched — for those, compact's
     manual crash recovery remains the contract until the one-shot
     `migrate_span_store_origins` collapses them into dedupable
     ``MIGRATED_ORIGIN`` rows. One extra store-sized (never
     corpus-sized) shuffle on the gram hash.
 
-    ``pending`` short-circuits the crashed-publish detection (ADVICE
-    r09): a caller that KNOWS whether a ``batch_id=-3`` publish dir is
+    ``pending`` short-circuits the crashed-publish detection: a caller that KNOWS whether a ``batch_id=-3`` publish dir is
     present — the streaming sink, which calls `heal_pending_base` at
     batch start so the state cannot exist on its hot path, or any
     caller holding the store path (``os.path.isdir(pending_base_dir
@@ -354,8 +353,8 @@ MIGRATED_ORIGIN = -2
 
 def migrate_span_store_origins(spark, index_path: str) -> int:
     """One-shot migration for a span-gram store whose ``batch_id=-1``
-    base carries provenance-free rows (``src_batch = -1`` from a pre-r07
-    re-compaction, or a pre-r07 base with no ``src_batch`` column at
+    base carries provenance-free rows (``src_batch = -1`` from an older
+    re-compaction, or an older base with no ``src_batch`` column at
     all): collapse ALL unknown-origin rows into ONE group-summed row per
     gram, stamped ``src_batch = MIGRATED_ORIGIN``. Returns the number of
     unknown-origin rows collapsed (0 = nothing to migrate).
@@ -371,9 +370,9 @@ def migrate_span_store_origins(spark, index_path: str) -> int:
     must be CLEAN of crash artifacts when this runs — a lingering
     half-swapped duplicate would be group-summed INTO the migrated row
     and the over-count baked in permanently. `heal_pending_base` runs
-    first (it completes a crashed r09-style publish mechanically — the
+    first (it completes a crashed publish mechanically — the
     publish dir holds every folded row, so healing cannot duplicate);
-    only a legacy pre-r09 ``__old__`` leftover still refuses for manual
+    only a legacy ``__old__`` leftover still refuses for manual
     recovery. Single-writer, like every store maintenance op; commits
     through the same publish-then-retire sequence as `compact_index`
     (rows never transiently missing)."""
@@ -447,7 +446,7 @@ def remove_spans_against_index(
     only crosses the threshold in a LATER batch under-removes earlier
     copies — the inherent cost of not seeing the future.
 
-    Plan shape per batch (r11 — the `dedup_against_index`
+    Plan shape per batch (the `dedup_against_index`
     batch-touched-bucket prune applied to this gate's identical join
     shape): the batch gram inventory shuffles once by gram hash (window:
     batch count + batch first), and the STORE side is left-semi pruned
@@ -464,16 +463,15 @@ def remove_spans_against_index(
     grouping key), so the crash-dup collapse also runs on touched grams
     only. ``_prune_store=False`` keeps the unpruned reference plan for
     the identity test (and for a caller whose batch gram inventory is
-    genuinely too large to broadcast). Measured (r12 ladder, disk-backed
+    genuinely too large to broadcast). Measured (size ladder, disk-backed
     synthetic stores, fixed 2000-doc batch): the pruned plan shuffles
     ZERO store bytes at every rung while the unpruned plan's shuffle
     grows linearly with the store (11.7 MB at 1M gram rows -> 93.5 MB at
     8M, wall 1.2 s flat vs 5.4 s and climbing) — on a real cluster that
     unpruned shuffle is the whole store on the wire per micro-batch,
-    terabytes at a 10^11-row gram store. (Before the r12
-    `_gram_inventory` staging fix the batch-side tokenization noise
-    drowned this out locally and the docstring called it a wash; the
-    divergence was always the plan shape.) The rebuild is the shared
+    terabytes at a 10^11-row gram store. (Without the
+    `_gram_inventory` staging the batch-side tokenization noise drowns
+    this out locally; the divergence is the plan shape.) The rebuild is the shared
     broadcast-join + interval fold."""
     from pyspark.sql import Window
 

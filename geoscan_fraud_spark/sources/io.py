@@ -91,7 +91,7 @@ def _clear_orphan_location(spark: SparkSession, name: str) -> None:
     location exists on disk, delete the directory. A *registered* table's
     location is never touched (save-mode semantics own those).
 
-    NOT called by default (ADVICE r05): "no entry in *this session's*
+    NOT called by default: "no entry in *this session's*
     in-memory catalog" is also exactly the state of a live table owned by
     a CONCURRENT Spark session (or another engine) sharing the warehouse
     directory — an unconditional sweep would destroy its data. Callers
@@ -382,10 +382,9 @@ def _try_steal_stale_lock(lock: str, holder: str) -> bool:
     `_holder_is_dead_here`). Returns True if the stale lock was removed
     — the caller then re-contends for a fresh acquire.
 
-    Two guarantees, both load-bearing for mutual exclusion (ADVICE r09
-    — the previous rename-claim let two stealers that both read the
-    same dead holder BOTH win, the second one moving the first's fresh
-    live lock):
+    Two guarantees, both load-bearing for mutual exclusion (a bare
+    rename-claim lets two stealers that both read the same dead holder
+    BOTH win, the second one moving the first's fresh live lock):
 
     * **One stealer per stale holder.** The steal is serialized by a
       SENTINEL file named after the stale holder's content hash,
@@ -466,9 +465,9 @@ def index_writer_lock(path: str, op: str):
     The claim is an atomic `os.link` of a pre-written holder file into
     place (link fails with EEXIST when the lock exists — same atomicity
     as ``O_CREAT|O_EXCL``, but the lock is NEVER visible without its
-    holder metadata: the old create-then-write left a crash window
+    holder metadata: create-then-write would leave a crash window
     whose empty lock no stealer could ever adjudicate, a permanent
-    manual-intervention outage — ADVICE r09). The holder string carries
+    manual-intervention outage). The holder string carries
     a unique per-acquire token, so no two locks ever have equal
     content (kills pid-recycling ABA in the steal path's verify).
 
@@ -483,7 +482,7 @@ def index_writer_lock(path: str, op: str):
     from a lock file. A lock that VANISHES between the failed claim and
     the read (the prior holder released, or a racing steal completed)
     is a free lock, not a conflict: the claim is simply retried
-    (VERDICT r09 #3 — this used to refuse spuriously)."""
+    instead of refusing spuriously."""
     import socket
     import time
     import uuid
@@ -1074,7 +1073,7 @@ def heal_pending_base(index_path: str) -> bool:
     place as the ``batch_id=-1`` base. Also clears a lone
     ``<path>.__compact__`` scratch dir (never published, so the live
     store cannot reference it) — but REFUSES while a legacy
-    ``<path>.__old__`` exists, because a pre-r09 rename-swap crash may
+    ``<path>.__old__`` exists, because a legacy rename-swap crash may
     have parked the only copy of the base there (manual recovery per
     the old compact_index contract). Returns True if anything was
     healed. Idempotent; every store writer calls it first, so a crashed
@@ -1161,7 +1160,7 @@ def compact_index(
     survivor. Same single-writer rule as `compact_files`: run between
     stream restarts, never under a live writer.
 
-    Crash-safety (r09 — publish-then-retire): for a dedup index the
+    Crash-safety (publish-then-retire): for a dedup index the
     failure modes are asymmetric — a transient DUPLICATE signature row
     is idempotent for `dedup_against_index` (same match set; the
     count-summing span store collapses duplicates by (gh, origin) at
@@ -1175,7 +1174,7 @@ def compact_index(
     its ``_folded.json`` manifest, which `heal_pending_base` — called
     here, by `expire_index`, by the migration, and by the streaming
     sinks at batch start — finishes mechanically. Only a legacy
-    pre-r09 ``<path>.__old__`` still demands manual recovery (it may
+    rename-swap ``<path>.__old__`` still demands manual recovery (it may
     hold the only copy of the base) and is refused."""
     prefix = "batch_id="
     heal_pending_base(index_path)
@@ -1211,9 +1210,9 @@ def compact_index(
         .option("mergeSchema", "true")  # an existing base carries src_batch
         .parquet(*fold_dirs)
     )
-    # preserve each row's ORIGIN batch through the fold (r07): batch_id
+    # preserve each row's ORIGIN batch through the fold: batch_id
     # becomes the payload column src_batch so `expire_index` can age the
-    # base by real ingest batch. Rows folded from a pre-r07 base keep
+    # base by real ingest batch. Rows folded from a legacy base keep
     # src_batch=-1 — origin unknown, never expires (documented there).
     src = (
         F.coalesce(F.col("src_batch"), F.col("batch_id"))
@@ -1241,7 +1240,7 @@ def one_column_ids(spark: SparkSession, ids, id_col: str, op: str) -> DataFrame:
     DataFrame) to a single-column DataFrame named ``id_col``. A
     multi-column DataFrame is REFUSED with the contract named — the
     bare ``toDF(id_col)`` it replaces threw an arity error that named
-    toDF instead (VERDICT r09 #7); silently picking a column would be
+    toDF instead; silently picking a column would be
     worse (the wrong one tombstones the wrong documents)."""
     if not isinstance(ids, DataFrame):
         return spark.createDataFrame([(i,) for i in ids], [id_col])
@@ -1295,7 +1294,7 @@ def store_fsck(
     returns ``{"status": "ok" | "attention", "findings": [...],
     "measured": {...}}``. Checks, cheapest first:
 
-    * crash artifacts: a legacy pre-r09 ``__old__`` (may hold the only
+    * crash artifacts: a legacy rename-swap ``__old__`` (may hold the only
       copy of the base — manual recovery), a pending ``batch_id=-3``
       publish dir (a crashed publish-then-retire run — healed by the
       next store write or `heal_pending_base`; rows are duplicated,
@@ -1462,13 +1461,12 @@ def store_maintain(
     keep_last: int = 1,
     target_mb: int = 128,
 ) -> dict:
-    """One-call ops runbook for an incremental-dedup store (VERDICT r09
-    #2): heal → compact-if-pressure → verify. The doctor trio reports;
+    """One-call ops runbook for an incremental-dedup store: heal → compact-if-pressure → verify. The doctor trio reports;
     this ACTS — a planted crashed publish, accreted batch dirs, or
     leftover scratch returns to clean in one call.
 
     1. `heal_pending_base` — finish a crashed publish-then-retire run
-       mechanically (refuses only on a legacy pre-r09 ``__old__``, whose
+       mechanically (refuses only on a legacy rename-swap ``__old__``, whose
        manual-recovery contract stands);
     2. compact when the live ``batch_id=N`` dir count exceeds
        ``compact_after`` — the same pressure threshold `store_fsck`
@@ -1524,15 +1522,15 @@ def expire_index(
     Mechanics: whole ``batch_id=N`` partitions with ``0 <= N <
     min_batch_id`` are deleted outright; a compacted ``batch_id=-1``
     base is age-filtered on its ``src_batch`` column (written by
-    `compact_index` since r07 — each folded row keeps its origin batch).
-    A base WITHOUT ``src_batch`` (pre-r07 compaction) cannot be aged and
+    `compact_index` — each folded row keeps its origin batch). A base
+    WITHOUT ``src_batch`` (a legacy compaction) cannot be aged and
     raises — its rows' origins are unrecoverable; rebuild the store or
     accept the base as immortal. Rows folded from such a legacy base by
     a NEWER compaction carry ``src_batch=-1``: unknown origin expires
     with the oldest data (``-1 < min_batch_id`` always) — the
     freshness-conservative reading of "older than the horizon".
 
-    Crash-safety matches `compact_index` (r09 publish-then-retire): the
+    Crash-safety matches `compact_index` (publish-then-retire): the
     filtered base is written to scratch and committed through
     `_publish_folded_base` — visible as the ``batch_id=-3`` publish dir
     before the old base is removed, so UNEXPIRED rows are never

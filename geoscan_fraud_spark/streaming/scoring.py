@@ -61,7 +61,6 @@ def score_stream(
     lat_col: str = "latitude",
     lng_col: str = "longitude",
     user_col: str = "user",
-    broadcast: bool = False,
     ts_col: str | None = None,
 ) -> DataFrame:
     """Stateless stream-static scoring; emits only anomalous rows.
@@ -77,15 +76,11 @@ def score_stream(
 
     Join planning caveat: AQE does NOT run inside streaming micro-batches
     — only static planning applies — and the static side here (a distinct
-    over a computed DF) carries no size statistics, so the default plan is
-    a sort-merge join with a per-micro-batch shuffle+sort. That is the
-    scale-safe default; pass ``broadcast=True`` whenever the tile table is
-    known to fit comfortably in driver memory (e.g. a single-city model) —
-    for small models that turns every micro-batch into a map-only pass.
+    over a computed DF) carries no size statistics, so the plan is a
+    sort-merge join with a per-micro-batch shuffle+sort: the scale-safe
+    choice.
     """
     keys = tiles.select(user_col, "h3").distinct().withColumn("known", F.lit(1))
-    if broadcast:
-        keys = F.broadcast(keys)
     pts = stream_df.withColumn(
         "h3", cell_id(F.col(lat_col).cast("double"), F.col(lng_col).cast("double"), res)
     )
@@ -161,7 +156,7 @@ def dedup_stream(
     )
 
 
-#: corpus-output clustering gate (r13, VERDICT r12 #4): a batch whose
+#: corpus-output clustering gate: a batch whose
 #: driver-side size estimate clears this many bytes gets a REBALANCE
 #: before its ``batch_id=N`` write, so a large trigger lands
 #: advisory-sized files instead of task-count small ones
@@ -188,7 +183,7 @@ def _job_label(spark, label: str):
 
 def _maybe_cluster_output(df: DataFrame, cluster_output):
     """Size-gated REBALANCE before a ``batch_id=N`` corpus write (guide
-    §6, VERDICT r12 #4). ``cluster_output``: ``'auto'`` applies the
+    §6). ``cluster_output``: ``'auto'`` applies the
     hint only when the optimizer's driver-only size estimate is KNOWN
     and clears `_OUT_CLUSTER_MIN_BYTES` — small micro-batches never pay
     a text shuffle for layout. The estimate caveat: foreachBatch hands
@@ -288,12 +283,12 @@ def incremental_ingest_sink(
             # store from empty.
             idx = spark.createDataFrame([], empty_index_schema(batch_df))
         # One evaluation feeds both writes: the dedup plan materializes
-        # ONCE, directly into the corpus dir (VERDICT r11 #3 — this used
-        # to be localCheckpoint + write, paying an extra per-batch job
-        # and double-materializing the batch into executor memory); the
+        # ONCE, directly into the corpus dir (a localCheckpoint + write
+        # would pay an extra per-batch job and double-materialize the
+        # batch into executor memory); the
         # index rows then derive from the committed on-disk snapshot, so
         # they match the stored corpus by construction even if an
-        # upstream were nondeterministic. ``aux`` (r12): dedup_fn may
+        # upstream were nondeterministic. ``aux``: dedup_fn may
         # return ``(kept_plan, aux_dict)`` carrying already-materialized
         # per-batch state (e.g. the checkpointed signature table);
         # index_fn then receives it as a second argument and can derive
@@ -363,9 +358,9 @@ def neardup_ingest_sink(
         return kept, sig_out
 
     def index_fn(kept, aux=None):
-        # bands pre-computed at append time (VERDICT r06 #2): the next
-        # batch's index-side band join explodes the stored array instead
-        # of re-hashing the whole store. r12 (guide §1.2): the dedup
+        # bands pre-computed at append time: the next batch's index-side
+        # band join explodes the stored array instead of re-hashing the
+        # whole store. Guide §1.2: the dedup
         # stage already materialized every batch doc's signature —
         # semi-join that checkpointed table to the committed kept ids
         # instead of re-shingling + re-minhashing the survivors' text
@@ -473,9 +468,9 @@ def ann_index_ingest_sink(
 
     Idempotency: `ivf_index_append` itself skips any
     ``batch_id <= last_stream_batch`` and commits the batch id in the
-    SAME atomic ``centroids.json`` write as the row counters (r09 —
-    previously this sink held the cursor in a second, separate write,
-    leaving a window where a crash double-counted the meta counters).
+    SAME atomic ``centroids.json`` write as the row counters (holding
+    the cursor in a second, separate write would leave a window where a
+    crash double-counts the meta counters).
     Crash window: dying between the parquet append and the meta commit
     makes the replay re-append BIT-IDENTICAL rows (assignment and
     quantization are deterministic) — until maintenance runs, a
@@ -660,7 +655,7 @@ def prepared_ingest_sink(
         base = _sig(batch_df)
         reps = repetition_stats(base, text_col, id_col, ns=(2, 3))
         rules = dict(quality_rules or default_quality_rules())
-        # r12 (guide §1.2 "don't compute things you throw away"): both
+        # guide §1.2 "don't compute things you throw away": both
         # stat operators are strict one-row-per-doc selects, so their
         # inner joins attach columns without changing cardinality —
         # skipping one whose columns no active rule references is
@@ -715,7 +710,7 @@ def prepared_ingest_sink(
                 rules["language"] = F.col("lang").isin(list(allowed_langs))
             if min_p_lang is not None:
                 rules["lang_confidence"] = F.col("p_lang") >= min_p_lang
-        # r13 (guide §1.2 — don't compute things twice): the gate chain
+        # guide §1.2 — don't compute things twice: the gate chain
         # (normalize + token counts + the Arrow repetition pass + the
         # LM-NLL broadcast join + annotate/filter) used to live only in
         # `passed`'s LINEAGE, so it executed TWICE per micro-batch —
@@ -788,7 +783,7 @@ def prepared_ingest_sink(
         return kept, sig_out
 
     def index_fn(kept, aux=None):
-        # r12 (guide §1.2): reuse the dedup stage's checkpointed batch
+        # guide §1.2: reuse the dedup stage's checkpointed batch
         # signature table for the survivors' store rows — the sigs were
         # computed over the SAME `_sig(...)` normalization this fallback
         # applies, so the (id, sig, bands) rows are bit-identical to a

@@ -1,13 +1,14 @@
-"""Distributed Bloom digest — no-false-negative invariant, FPR bound,
-mergeability, and the cross-batch ingest guard."""
+"""Bloom corpus digest — no-false-negative invariant, FPR bound,
+mergeability, and the one shared format with `BloomFilter`."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from geoscan_fraud_spark.operators.bloomset import (
-    bloom_params,
+from geoscan_fraud_spark.operators.bloom import (
+    HEADER_BYTES,
+    BloomFilter,
     build_bloom,
     merge_blooms,
     probe_bloom,
@@ -26,15 +27,11 @@ def _keys(spark, lo, hi, tag="k"):
 def test_no_false_negatives_and_fpr_bound(spark):
     seen = _keys(spark, 0, N)
     bloom = build_bloom(seen, "key", expected_items=N, fpr=FPR)
-    probed = probe_bloom(seen, bloom, "key", expected_items=N, fpr=FPR)
+    probed = probe_bloom(seen, bloom, "key")
     assert probed.filter(~F.col("maybe_seen")).count() == 0  # NEVER miss
 
     fresh = _keys(spark, N, 3 * N)
-    fp = (
-        probe_bloom(fresh, bloom, "key", expected_items=N, fpr=FPR)
-        .filter(F.col("maybe_seen"))
-        .count()
-    )
+    fp = probe_bloom(fresh, bloom, "key").filter(F.col("maybe_seen")).count()
     assert fp / (2 * N) < 3 * FPR  # one-sided error stays near target
 
 
@@ -44,6 +41,15 @@ def test_digest_deterministic_and_layout_independent(spark):
         _keys(spark, 0, N).repartition(13), "key", N, FPR
     )
     assert a == b
+
+
+def test_digest_equals_bloomfilter_bytes(spark):
+    """The distributed build writes exactly the bytes `BloomFilter` does
+    for the same keys and sizing — one format, one hash, one position
+    rule."""
+    bf = BloomFilter(N, FPR)
+    bf.update(f"k{i}" for i in range(N))
+    assert build_bloom(_keys(spark, 0, N), "key", N, FPR) == bf.to_bytes()
 
 
 def test_merge_is_union(spark):
@@ -56,26 +62,33 @@ def test_merge_is_union(spark):
 
 
 def test_null_keys_probe_null(spark):
-    df = spark.createDataFrame([("a",), (None,)], "key string")
+    df = spark.createDataFrame([("a",), (None,), ("b",)], "key string").coalesce(1)
     bloom = build_bloom(df, "key", 10, 0.01)
     got = {
         r["key"]: r["maybe_seen"]
-        for r in probe_bloom(df, bloom, "key", 10, 0.01).collect()
+        for r in probe_bloom(df, bloom, "key").collect()
     }
-    assert got["a"] is True and got[None] is None
+    assert got == {"a": True, None: None, "b": True}
 
 
-def test_validation():
+def test_validation(spark):
+    df = _keys(spark, 0, 10)
     with pytest.raises(ValueError, match="expected_items"):
-        bloom_params(0, 0.01)
+        build_bloom(df, "key", 0, 0.01)
     with pytest.raises(ValueError, match="fpr"):
-        bloom_params(10, 1.5)
-    with pytest.raises(ValueError, match="mismatched"):
-        merge_blooms([b"\x00" * 8, b"\x00" * 16])
+        build_bloom(df, "key", 10, 1.5)
+    with pytest.raises(ValueError, match="mismatched bloom headers"):
+        merge_blooms([build_bloom(df, "key", 10, 0.01), build_bloom(df, "key", 100, 0.01)])
 
 
-def test_probe_rejects_mismatched_params(spark):
+def test_headerless_digest_rejected(spark):
+    """A digest in the earlier corpus layout (raw bits, no header) fails
+    in probe and merge with an error naming the format — including one
+    whose first byte happens to equal the version byte."""
     df = _keys(spark, 0, 100)
-    bloom = build_bloom(df, "key", 100, 0.01)
-    with pytest.raises(ValueError, match="parameters must match"):
-        probe_bloom(df, bloom, "key", 9999, 0.01)
+    raw = build_bloom(df, "key", 100, 0.01)[HEADER_BYTES:]
+    for bits in (raw, bytes([2]) + raw[1:]):
+        with pytest.raises(ValueError, match="bloom format v2"):
+            probe_bloom(df, bits, "key")
+        with pytest.raises(ValueError, match="bloom format v2"):
+            merge_blooms([bits, bits])

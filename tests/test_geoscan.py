@@ -116,6 +116,22 @@ def test_model_save_load_library_free(model, spark, tmp_path):
     assert m2.polygons.count() == model.polygons.count()
 
 
+def test_model_with_saved_pairing_res_still_loads(model, spark, tmp_path):
+    """A params.json written while `pairingRes` was a settable option still
+    loads: the retired key is ignored and the model keeps its params and
+    polygons."""
+    path = str(tmp_path / "geoscan_model_pairing")
+    model.save(path)
+    meta = tmp_path / "geoscan_model_pairing" / "metadata" / "params.json"
+    params = json.loads(meta.read_text())
+    assert "pairingRes" not in params
+    meta.write_text(json.dumps({**params, "pairingRes": 9}))
+    m2 = GeoscanModel.load(spark, path)
+    assert not hasattr(m2, "pairingRes")
+    assert m2.params_dict() == model.params_dict()
+    assert m2.polygons.count() == model.polygons.count()
+
+
 def test_transform_null_for_far_points(model, spark):
     far = spark.createDataFrame(
         [(10.0, 10.0, 1.0, "u")], ["latitude", "longitude", "amount", "user"]

@@ -201,6 +201,22 @@ def test_old_bloom_format_fails_loudly(spark):
             score_with_blooms(tx, blooms, precision=PRECISION).collect()
 
 
+@pytest.mark.parametrize("m, k", [(0, 3), (16, 0)], ids=["m0", "k0"])
+def test_impossible_bloom_header_rejected(spark, m, k):
+    """A v2 header with m = 0 or k = 0 is never written; with k = 0 every
+    tile would pass as a member, with m = 0 scoring divides by zero.
+    Every reader rejects it up front with the format error."""
+    raw = bytes([2]) + m.to_bytes(8, "big") + k.to_bytes(2, "big") + bytes((m + 7) // 8)
+    with pytest.raises(ValueError, match="bloom format"):
+        BloomFilter.from_bytes(raw)
+    blooms = spark.createDataFrame([("u", 1, raw)], "user string, n_tiles long, bloom binary")
+    with pytest.raises(ValueError, match="bloom format"):
+        H3Lookup.from_model_df(blooms, precision=PRECISION)
+    tx = spark.createDataFrame([("u", 40.7, -74.0)], "user string, latitude double, longitude double")
+    with pytest.raises(Exception, match="bloom format"):
+        score_with_blooms(tx, blooms, precision=PRECISION).collect()
+
+
 def test_streaming_scores_match_batch(pipeline, spark, tmp_path):
     """foreachBatch/stream-static path produces the same anomaly set as
     the batch anti-join (§2.9 parity)."""

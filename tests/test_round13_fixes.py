@@ -246,7 +246,7 @@ def test_dlit_double_literal_exact_roundtrip(spark):
     """`_dlit` literals parse to the exact IEEE double of F.lit(float) —
     incl. exponent forms and subnormals (the hyperplane/PQ literal
     arrays are built from these)."""
-    from geoscan_fraud_spark.operators.dedup import _dlit
+    from geoscan_fraud_spark.functions.sqltext import _dlit
 
     vals = [3e-05, -8.26e-05, 0.8444218515250481, -2.2135949537926754,
             1e-320, 123456789.123456789, 0.0]
@@ -360,11 +360,13 @@ def test_simhash_expr_pack_bit_parity_with_column_form(spark):
 
 
 def test_hyperplane_bucket_name_equals_column_form(spark):
-    """hyperplane_bucket(str) — the one-expr JVM-parsed path — equals
-    hyperplane_bucket(Column) — the kept compatibility path — on real
-    vectors including negatives and zeros, and on a column name with an
-    embedded backtick. The string builders' double literals equal
-    `F.lit` for the non-finite values too."""
+    """hyperplane_bucket(name) — one JVM-parsed expr — equals a pure-Python
+    left-to-right fold of each `_hyperplanes(64, 16, 42)` dot product (the
+    SQL fold's order, so the signs are bit-identical) on real vectors
+    including negatives and zeros, and on a column name with an embedded
+    backtick. The string builders' double literals equal `F.lit` for the
+    non-finite values too."""
+    from geoscan_fraud_spark.functions.sqltext import _dlit
     from geoscan_fraud_spark.operators import dedup as dd
 
     rows = [
@@ -372,23 +374,27 @@ def test_hyperplane_bucket_name_equals_column_form(spark):
         (2, [-3.0, 1e-9, -1e-9, 7.5] * 16),
         (3, [0.0] * 64),
     ]
+
+    def folded_bucket(vec):
+        key = 0
+        for p, plane in enumerate(dd._hyperplanes(64, 16, 42)):
+            s = 0.0
+            for x, y in zip(vec, plane):
+                s = s + x * y
+            key += (1 if s >= 0 else 0) * 2**p
+        return key
+
+    want = sorted((i, folded_bucket(v)) for i, v in rows)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     for name in ("embedding", "emb`x"):
         d = df.withColumnRenamed("embedding", name)
-        quoted = "`" + name.replace("`", "``") + "`"
         by_name = d.select(
             "vec_id", dd.hyperplane_bucket(name, 64, 16, 42).alias("b")
         )
-        by_col = d.select(
-            "vec_id",
-            dd.hyperplane_bucket(F.col(quoted), 64, 16, 42).alias("b"),
-        )
-        assert sorted(map(tuple, by_name.collect())) == sorted(
-            map(tuple, by_col.collect())
-        ), name
+        assert sorted(map(tuple, by_name.collect())) == want, name
 
     values = [float("nan"), float("inf"), float("-inf"), -0.0, 5e-324]
-    by_str = df.limit(1).select(*[F.expr(dd._dlit(v)) for v in values]).first()
+    by_str = df.limit(1).select(*[F.expr(_dlit(v)) for v in values]).first()
     by_lit = df.limit(1).select(*[F.lit(v) for v in values]).first()
     assert [repr(v) for v in by_str] == [repr(v) for v in by_lit] == [
         repr(v) for v in values

@@ -65,17 +65,10 @@ def main():
         f"in {time.perf_counter()-t0:.1f}s"
     )
 
-    pairing_res = int(sys.argv[5]) if len(sys.argv) > 5 else None
-
     t0 = time.perf_counter()
-    model = (
-        Geoscan().setEpsilon(200.0).setMinPts(20).setPairingRes(pairing_res).fit(sampled)
-    )
+    model = Geoscan().setEpsilon(200.0).setMinPts(20).fit(sampled)
     k = model.polygons.count()
-    print(
-        f"distributed fit (pairingRes={pairing_res}): {k} clusters "
-        f"in {time.perf_counter()-t0:.1f}s"
-    )
+    print(f"distributed fit: {k} clusters in {time.perf_counter()-t0:.1f}s")
 
     t0 = time.perf_counter()
     out = model.transform(tx)
