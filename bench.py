@@ -177,31 +177,6 @@ def bench_text_repetition(spark, sf_dir):
     return repetition_stats(load_fixture(spark, sf_dir, "documents"))
 
 
-def bench_semantic_blas(spark, sf_dir):
-    """Pure-BLAS variant of `semantic_dedup` (same fixed quantizer +
-    workload): the registered entry runs impl='hybrid' (BLAS
-    candidates + exact-fold re-verify, fold-identical output); this
-    times the scan without the re-verify joins so the two are never
-    conflated (the dedup_minhash md5/xxhash64 split)."""
-    from geoscan_fraud_spark.harness_pipeline import _ivf_centroids
-    from geoscan_fraud_spark.operators.similarity import semantic_dedup
-    from geoscan_fraud_spark.sources.io import load_fixture
-    from pyspark.sql import functions as F
-
-    cent = _ivf_centroids("/root/testdata/sf0.01")
-    e = load_fixture(spark, sf_dir, "embeddings")
-    dup = e.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.000001)).alias(
-            "embedding"
-        ),
-        "label",
-    )
-    return semantic_dedup(
-        e.unionByName(dup), threshold=0.98, centroids=cent, impl="blas"
-    )
-
-
 _ivf_disk_index: dict[str, str] = {}
 
 
@@ -712,7 +687,6 @@ EXTRAS = {
     "dedup_minhash_unguarded": bench_minhash_unguarded,
     "text_repetition": bench_text_repetition,
     "semantic_dedup": QUERIES["semantic_dedup"],
-    "semantic_dedup_blas": bench_semantic_blas,
     "lm_perplexity": lm_perplexity,
     "bpe_segment": bench_bpe_segment,
     "prepared_ingest_stream": bench_prepared_ingest,

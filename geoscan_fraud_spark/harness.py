@@ -119,8 +119,6 @@ def flagship_event_anomalies(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# Kept registered: performance-only changes add no gate entries and
-# remove none, so folding this entry waits for a registry rotation.
 @register(
     "s2_pruned_scan",
     sql="""
@@ -136,29 +134,6 @@ def s2_pruned_scan(spark, sf_dir):
     )
 
 
-# P5 (left_outer + IS NULL) is no longer a registered entry; it is the
-# literal FORM of the same anti-join the hash-green `j3_anti_join` and
-# `flagship_event_anomalies` evidence (the two forms' row-for-row
-# equivalence is additionally pinned in test_flagship.py), so the slot
-# under the driver's 50-entry cap now funds `dsir_importance_weights`
-# (round-7 second rotation).
-def p_isnull_left_outer(spark, sf_dir):
-    """P5 — the literal left_outer + IS NULL idiom of `02:62-68`:
-    customers with no high-value order (non-empty at every sf)."""
-    c = _t(spark, sf_dir, "customer")
-    o = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 450000.0)
-        .select("o_custkey")
-        .distinct()
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_outer")
-        .filter(F.expr("o_custkey IS NULL"))
-        .select("c_custkey", "c_name")
-    )
-
-
 # ---------------------------------------------------------------------------
 # §2.3 joins
 # ---------------------------------------------------------------------------
@@ -171,9 +146,7 @@ def p_isnull_left_outer(spark, sf_dir):
 # j2 fold below), `u3_tfidf_relational` (single-key broadcast term
 # join), and `flagship_event_anomalies` (key-equality anti-join); the
 # exact three-table result stays pinned against pandas merge in
-# tests/test_round8_fixes.py, and the bench still times it. The slot
-# under the driver's 50-entry cap now funds `bm25_search` (round-8
-# rotation).
+# tests/test_round8_fixes.py, and the bench still times it.
 def j1_join_single_key(spark, sf_dir):
     """J1 — equi joins on one key. Only `nation` (fixed 25 rows) gets a
     broadcast hint; `customer` grows with sf (150k rows/sf), so its join
@@ -202,8 +175,7 @@ def j1_join_single_key(spark, sf_dir):
 # key+range join machinery), and `u3_tfidf_relational` (broadcast equi
 # join); the exact aggregate-then-self-join result stays pinned against
 # a pandas merge in tests/test_round10_fixes.py, and the bench still
-# times it. The slot under the driver's 50-entry cap now funds
-# `ann_ivf_incremental_query`.
+# times it.
 def j2_join_two_keys(spark, sf_dir):
     """J2 — two-key equi join (`01:401` shape)."""
     li = _t(spark, sf_dir, "lineitem")
@@ -225,7 +197,7 @@ def j2_join_two_keys(spark, sf_dir):
     """,
 )
 def j3_anti_join(spark, sf_dir):
-    """J3 — idiomatic left_anti (equivalent to p_isnull_left_outer)."""
+    """J3 — the left_anti form of `02:62-68`'s left_outer + IS NULL."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 450000.0)
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
@@ -261,24 +233,13 @@ def salted_join_entry(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# A1 (groupBy+count) is no longer a registered entry; the identical
-# algebra is driver-evidenced by `vocab_token_frequencies` (count per
-# token), `u3_tfidf_relational` (sum(lit(1)) per group) and the window
-# count inside `tumbling_window_counts`, so the slot under the driver's
-# 50-entry cap now funds `semantic_dedup` (round-6 rotation).
-def a1_groupby_count(spark, sf_dir):
-    return _t(spark, sf_dir, "events").groupBy("event_type").count().withColumnRenamed("count", "cnt")
-
-
 # a2_collect_sorted is no longer a registered entry;
 # deterministic sorted-collect algebra is now driver-evidenced INSIDE two
 # hash-green entries — `remove_repeated_spans` (collect_list of marked
 # positions, array_sort inside the interval-merge fold) and
 # `bpe_ids_roundtrip` (the literal array_sort(collect_list(struct))
 # reassembly idiom in `ids_to_text`) — and the entry's own semantics
-# stay pinned against pandas in tests/test_ext.py. The slot under the
-# driver's 50-entry cap now funds `bpe_ids_roundtrip` (round-7 fifth
-# rotation).
+# stay pinned against pandas in tests/test_ext.py.
 def a2_collect_sorted(spark, sf_dir):
     """A2 — collect_list made deterministic: collect_set → sort → join.
 
@@ -291,28 +252,9 @@ def a2_collect_sorted(spark, sf_dir):
     )
 
 
-# A3 (the reference's `F.sum(F.lit(1))` counting idiom, `01:393-394`) is no
-# longer a registered entry; the same grouped-count algebra is already
-# driver-evidenced by `u3_tfidf_relational` (its TF term is sum(lit(1)) per
-# (doc, token)) and `a1_groupby_count`, so the slot under the driver's
-# 50-entry cap now funds `vocab_token_frequencies`.
-
-
-# A5 (groupBy+max/min) is no longer a registered entry; the identical
-# extremal-aggregate algebra is driver-evidenced by `w1_topk_desc` (max
-# by rank), `a8_percentiles` (grouped order statistics) and the
-# min-aggregates inside the hash-green LSH signature oracles, so the
-# slot under the driver's 50-entry cap now funds `lm_perplexity`
-# (round-6 rotation).
-def a5_groupby_max(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.max("o_totalprice").alias("max_price"),
-            F.min("o_orderdate").alias("first_order"),
-        )
-    )
+# A3 (the reference's `F.sum(F.lit(1))` counting idiom, `01:393-394`) has
+# no entry of its own; the hash-green `u3_tfidf_relational` runs the same
+# grouped-count algebra (its TF term is sum(lit(1)) per (doc, token)).
 
 
 # a8_percentiles is no longer a registered entry; grouped exact
@@ -321,8 +263,7 @@ def a5_groupby_max(spark, sf_dir):
 # perplexity, exact path quantile_cont-replayed) and `w1_topk_desc`
 # (grouped order statistics); the exact per-flag quartiles stay pinned
 # against numpy.percentile in tests/test_round8_fixes.py, and the bench
-# still times it. The slot under the driver's 50-entry cap now funds
-# `token_shards` (round-8 rotation).
+# still times it.
 def a8_percentiles(spark, sf_dir):
     """A8 — exact interpolated percentiles (engine also exposes
     percentile_approx as the 100 TB-scale variant)."""
@@ -342,9 +283,7 @@ def a8_percentiles(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# Kept registered: performance-only changes add no gate entries and
-# remove none, so folding this entry waits for a registry rotation; the
-# pandas value pin in test_round12_fixes.py stays.
+# Also value-pinned against pandas in test_round12_fixes.py.
 @register(
     "w1_topk_desc",
     sql="""
@@ -369,10 +308,8 @@ def w1_topk_desc(spark, sf_dir):
     )
 
 
-# W2 (global sort asc + limit) is no longer a registered entry; its
-# algebra is already driver-evidenced by `w1_topk_desc` (same TakeOrdered
-# plan, desc primary + asc tiebreaker), so the slot under the driver's
-# 50-entry cap now funds `sessionize` below.
+# W2 (global sort asc + limit) has no entry of its own; `w1_topk_desc`
+# runs the same TakeOrdered plan (desc primary + asc tiebreaker).
 
 
 @register(
@@ -442,9 +379,7 @@ def ttl_window_filter(spark, sf_dir):
 # U4 (explode) is no longer a registered entry; explode+count algebra
 # is driver-evidenced by the hash-green `vocab_token_frequencies` (the
 # same explode -> groupBy count over documents) and `chunk_documents` /
-# `bpe_tokens_to_ids` (posexplode of struct/slice arrays), so the slot
-# under the driver's 50-entry cap now funds `text_repetition` (round-7
-# rotation).
+# `bpe_tokens_to_ids` (posexplode of struct/slice arrays).
 def u4_explode_tokens(spark, sf_dir):
     """U4 — explode (`01:189`) on the documents fixture."""
     d = _t(spark, sf_dir, "documents")
@@ -542,9 +477,7 @@ U1_ORACLE_SQL = f"""
 """
 
 
-# Kept registered: performance-only changes add no gate entries and
-# remove none, so folding this entry waits for a registry rotation; the
-# DuckDB-replay value pin in test_round12_fixes.py stays.
+# Also value-pinned by a DuckDB replay in test_round12_fixes.py.
 @register("u1_cell_id", sql=U1_ORACLE_SQL)
 def u1_cell_id(spark, sf_dir):
     """U1 — the grid index (engine's `to_h3` analog, `utils/spark_utils.py:6-9`).
@@ -561,8 +494,7 @@ def u1_cell_id(spark, sf_dir):
 # trig expression is load-bearing INSIDE the hash-green
 # `geoscan_distributed_fit` golden (epsilon_pairs keeps only pairs with
 # haversine < eps — a wrong distance would change the pinned cluster
-# assignment), so the slot under the driver's 50-entry cap now funds
-# `countmin_sketch` (round-7 third rotation).
+# assignment).
 def u7_haversine(spark, sf_dir):
     """U7 — native haversine (`01:20`), rounded (libm last-ulp tolerance)."""
     pts = _events_coords(spark, sf_dir)

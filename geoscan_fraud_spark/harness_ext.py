@@ -1,7 +1,6 @@
-"""Harness entries for SURVEY §7.5 extensions: ranking/analytic window
-functions on per-user event sequences, rollup, distinct-count variants,
-tumbling event-time windows, generation snapshots, the per-cell sample
-pipeline (U2 parity), and as-of / interval joins.
+"""Harness entries for SURVEY §7.5 extensions: ranking window functions
+on per-user event sequences, rollup, distinct-count variants,
+generation snapshots, and as-of / interval joins.
 """
 
 from __future__ import annotations
@@ -9,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from geoscan_fraud_spark.harness import _events_coords, _t, register
+from geoscan_fraud_spark.harness import _t, register
 
 
 # win_rank_per_user is no longer a registered entry;
@@ -17,9 +16,7 @@ from geoscan_fraud_spark.harness import _events_coords, _t, register
 # hash-green `sessionize` (lag + running sum over the identical
 # Window.partitionBy(user_id).orderBy(ts) machinery) and top-k ordering
 # by `w1_topk_desc`; the row_number semantics themselves stay pinned
-# against a pandas rank in tests/test_ext.py. The slot under the
-# driver's 50-entry cap
-# now funds `remove_repeated_spans` (round-7 fourth rotation).
+# against a pandas rank in tests/test_ext.py.
 def win_rank_per_user(spark, sf_dir):
     """W5 extension — top-3 latest events per user (per-user sequence
     analytics; the window key is the high-cardinality user id, so the
@@ -30,22 +27,6 @@ def win_rank_per_user(spark, sf_dir):
         ev.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= 3)
         .select("user_id", "event_id", "ts", "rnk")
-    )
-
-
-# win_lag_delta is no longer a registered entry; per-user lag window
-# algebra is driver-evidenced by the hash-green `sessionize` (whose
-# oracle replays lag + running sum over the same (user_id, ts) window in
-# DuckDB), so the slot under the driver's 50-entry cap now funds
-# `lm_bigram` (round-7 second rotation).
-def win_lag_delta(spark, sf_dir):
-    """W5 extension — inter-event value delta per user (lag)."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    return ev.select(
-        "user_id",
-        "event_id",
-        (F.col("value") - F.lag("value").over(w)).alias("delta"),
     )
 
 
@@ -79,8 +60,7 @@ def rollup_counts(spark, sf_dir):
 # hash-green `dedup_minhash` (whose DuckDB replay contains the LSH
 # candidate `.distinct()`) and `u3_tfidf_relational` (per-term distinct
 # document frequency); the exact counts themselves stay pinned against
-# pandas nunique in tests/test_ext.py. The slot under the driver's
-# 50-entry cap now funds `ppl_buckets` (round-7 fourth rotation).
+# pandas nunique in tests/test_ext.py.
 def distinct_users_exact(spark, sf_dir):
     """Exact distinct (oracle); `distinct_users_approx` is the 100 TB
     variant (HLL sketch, single pass, no per-key state explosion)."""
@@ -99,25 +79,6 @@ def distinct_users_approx(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", rsd=0.02).alias("n_users_approx")
-    )
-
-
-# Tumbling-window counts is no longer a registered entry; event-time
-# bucket-and-count algebra is driver-evidenced by the hash-green
-# `sessionize` (event-time gap windows + per-bucket aggregation) and
-# `ttl_window_filter` (event-time interval arithmetic + grouped counts),
-# the epoch alignment of F.window vs time_bucket stays pinned by the
-# streaming parity test (test_ext.py::test_streaming_tumbling_matches_batch),
-# so the slot under the driver's 50-entry cap now funds
-# `bpe_tokens_to_ids` (round-7 rotation).
-def tumbling_window_counts(spark, sf_dir):
-    """Event-time tumbling window (batch form of the streaming agg; both
-    engines align buckets to the epoch in UTC)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 day").alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
     )
 
 
@@ -152,36 +113,6 @@ def generation_latest_snapshot(spark, sf_dir):
             F.max("generation").cast("int").alias("latest_gen"),
             F.count(F.lit(1)).alias("versions"),
         )
-    )
-
-
-# U2 (the reference's per-cell sample pipeline shape: collect struct
-# arrays, slice, explode, dotted access) is no longer a registered
-# entry; the struct-array explode + dotted-field algebra is
-# driver-evidenced by the hash-green `chunk_documents` (slice +
-# posexplode replayed in DuckDB) and `bpe_tokens_to_ids` (posexplode +
-# struct-sorted reassembly), and the deterministic-sample semantics stay
-# pinned by test_ext.py — so the slot under the driver's 50-entry cap
-# now funds `url_features` (round-7 third rotation).
-def u2_sample_explode(spark, sf_dir):
-    """U2 + P1 parity — the reference's per-cell sample pipeline shape
-    (`01:174-191`): collect coordinate structs per cell, take <=10, explode,
-    dotted-path access ('sample.latitude'). Deterministic: sort_array
-    instead of the reference's unseeded random.sample (SURVEY §5.3).
-    The oracle expresses the same result as a window rank."""
-    from geoscan_fraud_spark.functions.grid import cell_id
-
-    pts = _events_coords(spark, sf_dir)
-    agg = pts.groupBy(
-        cell_id(F.col("latitude"), F.col("longitude"), 7).alias("h3")
-    ).agg(
-        F.sort_array(F.collect_list(F.struct("latitude", "longitude"))).alias("coords")
-    )
-    exploded = agg.select("h3", F.explode(F.slice("coords", 1, 10)).alias("sample"))
-    return exploded.select(
-        "h3",
-        F.col("sample.latitude").alias("latitude"),
-        F.col("sample.longitude").alias("longitude"),
     )
 
 

@@ -156,8 +156,7 @@ def dedup_minhash(spark, sf_dir):
 # the pairs whose shingle Jaccard >= threshold, and the oracle replays
 # the same len(list_intersect)/len(list_distinct(list_concat)) algebra);
 # the pairwise values stay pinned against python set arithmetic in
-# tests/test_round8_fixes.py. The slot under the driver's 50-entry cap
-# now funds `html_extract` (round-8 rotation).
+# tests/test_round8_fixes.py.
 def ngram_jaccard_pairs(spark, sf_dir):
     """Exact token-set Jaccard between consecutive docs — pins the verify
     arithmetic used by the LSH dedup path."""
@@ -364,9 +363,7 @@ def semantic_decontam(spark, sf_dir):
 # leg IS this function — `sim.brute_force_topk` over the same fixture
 # queries, replayed end-to-end in the fusion oracle). The exact
 # sim/rank values stay pinned against a numpy cosine oracle in
-# tests/test_round8_fixes.py, and the bench still times it. The slot
-# under the driver's 50-entry cap now funds `pii_redact` (round-8
-# rotation).
+# tests/test_round8_fixes.py, and the bench still times it.
 def ann_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k baseline (left-fold accumulation verified
     bit-exact against DuckDB's list_dot_product)."""
@@ -584,8 +581,7 @@ def ann_ivf_incremental_query(spark, sf_dir):
 # len(string_split(trim(text))) token count is its shard-size input);
 # the full stat row (incl. the TOKEN_PATTERN regex count) stays pinned
 # against a python oracle in tests/test_round8_fixes.py, and the bench
-# still times it. The slot under the driver's 50-entry cap now funds
-# `rrf_fusion` (round-8 rotation).
+# still times it.
 def text_token_stats(spark, sf_dir):
     return tx.token_stats(_t(spark, sf_dir, "documents"))
 
@@ -1022,7 +1018,7 @@ def vocab_token_frequencies(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# round-6 rotations: weighted sampling, incremental dedup
+# weighted sampling, incremental dedup
 # ---------------------------------------------------------------------------
 
 
@@ -1199,9 +1195,7 @@ def dedup_incremental(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# semantic dedup (SemDeDup) + unigram-LM perplexity (round-6 rotation:
-# slots funded by a1_groupby_count / a5_groupby_max, whose algebra is
-# driver-evidenced elsewhere — see harness.py fold notes)
+# semantic dedup (SemDeDup) + unigram-LM perplexity
 # ---------------------------------------------------------------------------
 
 
@@ -1260,12 +1254,11 @@ def semantic_dedup_entry(spark, sf_dir):
     """SemDeDup-style semantic dedup (operators/similarity.py): k-means
     blocking + within-cluster cosine + connected components + keep min
     id. Runs the fixed-centroid quantizer (sf0.01 Lloyd literals — the
-    same set `ann_ivf_topk` shares with its oracle) with `impl='hybrid'`
-    — BLAS candidate scan at a 1e-6-widened threshold, exact left-fold
-    re-verify on the candidates — so the output is identical to the pure
-    fold the DuckDB oracle replays, at BLAS cost; the seeded
-    MLlib-KMeans fit + pure-BLAS scan stay the 100 TB path (parity and
-    recall pinned in pytest; variants benched separately)."""
+    same set `ann_ivf_topk` shares with its oracle) so the assignment
+    replays bit-exactly in DuckDB; the in-cluster cosines come from the
+    BLAS Gram kernel and match the oracle's left-fold by margin (see
+    `semantic_pairs`' boundary contract). The seeded MLlib-KMeans fit
+    stays the 100 TB path (recall pinned in pytest)."""
     cent = _ivf_centroids("/root/testdata/sf0.01")
     e = _t(spark, sf_dir, "embeddings")
     dup = e.select(
@@ -1275,7 +1268,7 @@ def semantic_dedup_entry(spark, sf_dir):
     )
     return _ordered(
         sim.semantic_dedup(
-            e.unionByName(dup), threshold=0.98, centroids=cent, impl="hybrid"
+            e.unionByName(dup), threshold=0.98, centroids=cent
         ),
         "vec_id",
     )
@@ -1585,9 +1578,8 @@ def lm_perplexity(spark, sf_dir):
     broadcast (vocabulary-sized right side), so the corpus never
     shuffles for it.
 
-    Folded (the slot funds `prepared_stream_query`): the identical
-    unigram-LM algebra is load-bearing inside the hash-green
-    `ppl_buckets` entry — its oracle literally embeds
+    Not registered: the identical unigram-LM algebra is load-bearing
+    inside the hash-green `ppl_buckets` entry — its oracle literally embeds
     `_lm_perplexity_oracle()` as the `base` CTE — and the closed-form
     python value pin lives at `tests/test_semantic_lm.py::
     test_lm_closed_form_tiny_corpus`; bench.py still times it."""
@@ -1642,8 +1634,7 @@ def _spans_oracle(L: int = _SPAN_L) -> str:
 @register("remove_repeated_spans", sql=_spans_oracle())
 def remove_repeated_spans(spark, sf_dir):
     """ExactSubstr repeated-span removal (operators/spans.py, Lee et al.
-    2021 arXiv:2107.06499; round-7 fourth rotation, slot from the folded
-    `win_rank_per_user`): every maximal token span of >= 8 tokens that
+    2021 arXiv:2107.06499): every maximal token span of >= 8 tokens that
     occurs more than once corpus-wide is deleted in place, the
     corpus-FIRST occurrence (by (doc_id, pos)) exempted — the paper's
     remove-all-but-one semantics. The engine's suffix-array replacement
@@ -1680,8 +1671,7 @@ def _ppl_buckets_oracle() -> str:
 @register("ppl_buckets", sql=_ppl_buckets_oracle())
 def ppl_buckets(spark, sf_dir):
     """CCNet head/middle/tail perplexity bucketing (operators/text.py
-    ::perplexity_buckets; Wenzek et al. 2020 §4.4; round-7 fourth
-    rotation, slot from the folded `distinct_users_exact`): unigram-LM
+    ::perplexity_buckets; Wenzek et al. 2020 §4.4): unigram-LM
     scores from the same train slice as `lm_perplexity`, split at the
     exact 1/3 and 2/3 percentiles (exact=True — the oracle-parity path;
     production uses the mergeable `percentile_approx` sketch default),
@@ -1715,9 +1705,8 @@ def _bpe_decode_oracle() -> str:
 
 @register("bpe_ids_roundtrip", sql=_bpe_decode_oracle)
 def bpe_ids_roundtrip(spark, sf_dir):
-    """Tokenizer decode golden (`operators/bpe.py::ids_to_text`; round-7
-    fifth rotation, slot from the folded `a2_collect_sorted` — whose
-    sorted-collect idiom is literally the reassembly aggregate here):
+    """Tokenizer decode golden (`operators/bpe.py::ids_to_text`, whose
+    reassembly aggregate is `a2_collect_sorted`'s sorted-collect idiom):
     train BPE on the pinned mini-corpus, segment, map to ids, then
     DECODE the ids back through the vocabulary. The oracle is the
     normalized input text itself — a lossless round trip through all
@@ -1742,9 +1731,7 @@ def bpe_ids_roundtrip(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# token shards, BM25 search, hybrid RRF fusion, HTML
-# extraction (slots from the folded j1_join_single_key / a8_percentiles /
-# text_token_stats / ngram_jaccard_pairs — fold notes at their functions)
+# token shards, BM25 search, hybrid RRF fusion, HTML extraction
 # ---------------------------------------------------------------------------
 
 _SHARD_TOKENS = 2000
@@ -1868,9 +1855,8 @@ def bm25_search(spark, sf_dir):
     posting shuffle (shuffled rows ~ query-term postings, never corpus
     tokens); (N, avgdl) ride the plan as a lazy one-row broadcast.
 
-    Folded (the slot funds `bm25_incremental_query`): the identical
-    BM25 algebra is load-bearing inside the hash-green `rrf_fusion`
-    entry (its oracle replays the full tokenize/tf/df/idf/score/rank
+    Not registered: the identical BM25 algebra is load-bearing inside
+    the hash-green `rrf_fusion` entry (its oracle replays the full tokenize/tf/df/idf/score/rank
     chain) and inside `bm25_incremental_query`'s one-shot oracle;
     python value pin in `tests/test_retrieval.py::
     test_bm25_matches_python_reference`; bench.py still times it."""
@@ -2040,15 +2026,11 @@ def _hybrid_lifecycle_oracle() -> str:
     """
 
 
-# NOT registered — the registry is held at 50 entries; this entry (code,
-# oracle thunk, tests, bench timing all live) is staged for the next
-# registry rotation.
+# NOT registered — the registry is held at 50 entries; this entry's
+# code, oracle thunk, tests and bench timing are all live.
 def hybrid_incremental_query(spark, sf_dir):
     """Hybrid sparse+dense SERVING over both persisted index lifecycles
-    under the hash gate (the slot is funded by folding `w1_topk_desc`, whose order-statistics algebra is
-    witnessed by `ppl_buckets` and the rank stages inside both
-    retrieval oracles, with a pandas value pin kept in
-    tests/test_round12_fixes.py). Build the BM25 index through its FULL
+    under the hash gate. Build the BM25 index through its FULL
     lifecycle (write evens -> append odds -> tombstone doc_id%7==3 ->
     compact) and the residual-PQ IVF index through the same lifecycle
     over the embeddings, then answer five hybrid queries (each doc's
@@ -2252,10 +2234,7 @@ def pii_redact(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# streaming serving pipeline under the hash gate (§2.9 was the last
-# pytest-only surface; slot funded by the
-# folded lm_perplexity, whose algebra is load-bearing inside the green
-# ppl_buckets oracle)
+# streaming serving pipeline under the hash gate (§2.9)
 # ---------------------------------------------------------------------------
 
 _PSQ_MIN_TOK = 20
@@ -2656,9 +2635,8 @@ def _wtw_oracle(sf_dir: str = "/root/testdata/sf0.01") -> str:
     """
 
 
-# NOT registered — the registry is held at 50 entries; this entry (code,
-# oracle thunk, tests, bench timing all live) is staged for the next
-# registry rotation.
+# NOT registered — the registry is held at 50 entries; this entry's
+# code, oracle thunk, tests and bench timing are all live.
 def watermarked_tile_windows(spark, sf_dir):
     """§2.9 EVENT-TIME semantics under the hash gate (design note
     COVERAGE.md §2.9): a real two-cycle availableNow run of
@@ -2763,9 +2741,8 @@ def _snt_oracle(sf_dir: str = "/root/testdata/sf0.01") -> str:
     """
 
 
-# NOT registered — the registry is held at 50 entries; this entry (code,
-# oracle thunk, tests, bench timing all live) is staged for the next
-# registry rotation.
+# NOT registered — the registry is held at 50 entries; this entry's
+# code, oracle thunk, tests and bench timing are all live.
 def stateful_novel_tiles(spark, sf_dir):
     """§2.9 CUSTOM STATEFUL operator under the hash gate (the last
     streaming face — COVERAGE.md §2.9 design note): a

@@ -610,37 +610,6 @@ def minhash_dedup(
 # ---------------------------------------------------------------------------
 
 
-def simhash64(text_col):
-    """64-bit SimHash as a native expression: per bit, sign of the sum of
-    +-1 contributions from each token hash (token multiplicity = weight)."""
-    tokens = F.split(text_col, r"\s+")
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    bits = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda b: F.when(
-            F.aggregate(
-                hashes,
-                F.lit(0).cast("long"),
-                # F.shiftright needs a literal bit count; call_function
-                # routes the SQL shiftright, which takes column args
-                lambda acc, h: acc
-                + F.when(
-                    F.call_function("shiftright", h, b).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1),
-            )
-            >= 0,
-            F.lit(1).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    # pack bits (bit 0 = LSB); shift+or, not arithmetic — setting bit 63
-    # would overflow a signed long under ANSI mode
-    return F.aggregate(
-        F.reverse(bits),
-        F.lit(0).cast("long"),
-        lambda acc, x: F.shiftleft(acc, 1).bitwiseOR(x),
-    )
-
-
 def simhash_bits(sig_hash: str) -> int:
     """Signature width per hash family: xxhash64 -> 64 bits; md5 -> 60
     bits (15 hex chars — the widest slice that parses into a signed long
@@ -659,8 +628,7 @@ def simhash_table(
     id_col: str = "doc_id",
     sig_hash: str = "xxhash64",
 ) -> DataFrame:
-    """(id, sh) SimHash via explode + codegen'd aggregates — the bulk
-    path (the row-level `simhash64` expression runs interpreted).
+    """(id, sh) SimHash via explode + codegen'd aggregates.
 
     Per bit b the signature wants sign(sum over tokens of +-1 by bit
     value) = [2*count(bit set) - n_tokens >= 0]. The per-bit counts are

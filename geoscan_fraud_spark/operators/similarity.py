@@ -12,8 +12,13 @@ Beyond-reference operators (SURVEY §2.10). Two paths:
   (inverted file), probe only the closest `nprobe` centroids per query —
   the same bucket-then-verify shape as the geo engine's cell join.
 
-Cosines are computed with deterministic left-fold accumulation
-(`cosine_expr`) so results are oracle-matchable.
+SemDeDup (`semantic_pairs` / `semantic_dedup`) blocks the corpus by
+k-means cluster and scores each cluster's pairs with one BLAS Gram
+matrix.
+
+The ANN paths compute cosines with deterministic left-fold accumulation
+(`cosine_expr`) so results are oracle-matchable; the Gram kernel matches
+the oracle's left fold to reordering error (see `semantic_pairs`).
 """
 
 from __future__ import annotations
@@ -384,12 +389,12 @@ def semantic_pairs(
     seed: int = 42,
     centroids: list[list[float]] | None = None,
     max_bucket: int | None = None,
-    impl: str = "blas",
     nprobe: int = 1,
 ) -> DataFrame:
     """(id_a, id_b, cosine): within-cluster embedding pairs with
-    ``cosine >= threshold`` — the SemDeDup blocking scheme (Abbas et al.
-    2023): k-means the corpus, compare only inside each cluster.
+    ``id_a < id_b`` and ``cosine >= threshold`` — the SemDeDup blocking
+    scheme (Abbas et al. 2023): k-means the corpus, compare only inside
+    each cluster.
 
     Same bucket-then-verify shape as the geo engine's cell join (J4) and
     the hyperplane-LSH `embedding_neardup_pairs`, with a *learned*
@@ -399,78 +404,49 @@ def semantic_pairs(
     a cluster boundary are missed; raise ``n_clusters`` only as the
     corpus grows (cost is O(sum k_i^2) over cluster sizes k_i).
 
-    Scale: the self-join is a plain equi-join on the cluster id, one
-    shuffle; per-row norms are computed once before the join. At 100 TB,
-    size ``n_clusters ~ n / 10_000`` so clusters stay bounded, and set
-    ``max_bucket`` as the hot-cluster guard (same tradeoff as the LSH
-    `_cap_buckets`: a dense semantic clump — boilerplate at corpus scale
-    — would otherwise emit k^2/2 pairs; exact-duplicate vectors should be
-    collapsed upstream). Quantizer: seeded MLlib KMeans by default (the
-    distributed scale path); pass fixed ``centroids`` (e.g. from
-    `lloyd_centroids`) for a plan that replays bit-exactly in an external
-    SQL oracle (assignment = first index of min squared-L2, 1-based).
+    Kernel: one `groupBy(cluster).applyInPandas` shuffle; each cluster's
+    all-pairs cosine is a Gram matrix of the row-normalized float64
+    embeddings, built with a BLAS matmul in 1024-row blocks so per-group
+    memory is O(block x k). A zero vector has cosine 0 with everything,
+    so it pairs only at ``threshold <= 0``.
 
-    ``impl``: ``'blas'`` (default — per-cluster `applyInPandas` with a
-    BLOCKED numpy matmul; vectorized, the production path: the in-cluster
-    all-pairs cosine is exactly a Gram matrix, and Spark's higher-order
-    fold is interpreted per element while BLAS does the same flops
-    vectorized, measured ~5x faster at fixture scale and widening with
-    cluster size; the similarity matrix is built in 1024-row blocks so
-    per-group memory is O(block x k), and `max_bucket` bounds k),
-    ``'fold'`` (native `F.aggregate` left-fold cosine over every
-    in-cluster pair — the semantics-defining oracle path; pairs with
-    |cos - threshold| below float-sum reordering error (~1e-12) may
-    differ from 'blas'), or ``'hybrid'`` (BLAS candidate scan at
-    ``threshold - 1e-6``, then the exact fold re-scores ONLY the
-    candidates: every fold-passing pair clears the widened BLAS bound
-    because the two differ by reordering error alone, so the output —
-    ids AND cosines — is identical to 'fold' at BLAS cost).
+    Boundary contract: the Gram matrix sums in BLAS order, so a cosine
+    can differ from a left-fold dot product (`cosine_expr`, and the
+    DuckDB oracle's `list_dot_product`) by reordering error (~1e-15). A
+    pair whose cosine sits within that distance of ``threshold`` may
+    fall on the other side in the two engines: oracle parity holds by
+    margin, not by construction. On the sf0.001, sf0.01 and sf0.1
+    fixtures the registered entry's workload (threshold 0.98) has no
+    in-cluster cosine in [0.90, 0.98), and Gram and left-fold cosines
+    agree to 1.2e-15.
+
+    Scale: at 100 TB, size ``n_clusters ~ n / 10_000`` so clusters stay
+    bounded, and set ``max_bucket`` as the hot-cluster guard (same
+    tradeoff as the LSH `_cap_buckets`: a dense semantic clump —
+    boilerplate at corpus scale — would otherwise emit k^2/2 pairs;
+    exact-duplicate vectors should be collapsed upstream). Quantizer:
+    seeded MLlib KMeans by default (the distributed scale path); pass
+    fixed ``centroids`` (e.g. from `lloyd_centroids`) for a plan that
+    replays bit-exactly in an external SQL oracle (assignment = first
+    index of min squared-L2, 1-based).
 
     ``nprobe`` is the multi-probe answer to the
     boundary-miss caveat above: each vector is assigned to its
     ``nprobe`` NEAREST centroids (not just the argmin), so a near-dup
     pair straddling a cluster boundary still shares their runner-up
     cluster with high probability. Cost scales linearly in assignment
-    rows (~nprobe x the self-join input) — the standard multi-probe
+    rows (~nprobe x the kernel input) — the standard multi-probe
     recall/cost dial; pairs found in several shared clusters dedup to
     one row. With the MLlib quantizer the fitted cluster centers are
     extracted and probed through the same distance algebra as fixed
     ``centroids``. ``nprobe=1`` is exactly the published SemDeDup
     assignment (and the registered oracle's semantics).
     """
-    if impl not in ("blas", "fold", "hybrid"):
-        raise ValueError(f"impl must be 'blas', 'fold' or 'hybrid', got {impl!r}")
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     if nprobe > n_clusters:
         raise ValueError(
             f"nprobe ({nprobe}) cannot exceed n_clusters ({n_clusters})"
-        )
-    if impl == "hybrid":
-        cand = semantic_pairs(
-            df, float(threshold) - 1e-6, n_clusters, emb_col, id_col,
-            seed, centroids, max_bucket, "blas", nprobe,
-        ).select("id_a", "id_b")
-        e = df.select(F.col(id_col).alias("__id"), F.col(emb_col).alias("__e"))
-        ea = e.select(
-            F.col("__id").alias("id_a"),
-            F.col("__e").alias("e_a"),
-            norm_expr(F.col("__e")).alias("n_a"),
-        )
-        eb = e.select(
-            F.col("__id").alias("id_b"),
-            F.col("__e").alias("e_b"),
-            norm_expr(F.col("__e")).alias("n_b"),
-        )
-        return (
-            cand.join(ea, "id_a")
-            .join(eb, "id_b")
-            .withColumn(
-                "cosine",
-                dot_expr(F.col("e_a"), F.col("e_b")) / (F.col("n_a") * F.col("n_b")),
-            )
-            .filter(F.col("cosine") >= F.lit(float(threshold)))
-            .select("id_a", "id_b", "cosine")
         )
     # measured-and-rejected (guide §1): a `_fan_out_small` here —
     # the dedup_simhash/embedding_lsh fix applied to the assignment map
@@ -539,83 +515,58 @@ def semantic_pairs(
         from geoscan_fraud_spark.operators.dedup import _cap_buckets
 
         assigned = _cap_buckets(assigned, ["cl"], max_bucket)
-    if impl == "blas":
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
-        thr = float(threshold)
-        schema = T.StructType(
-            [
-                T.StructField("id_a", df.schema[id_col].dataType),
-                T.StructField("id_b", df.schema[id_col].dataType),
-                T.StructField("cosine", T.DoubleType()),
-            ]
-        )
+    thr = float(threshold)
+    schema = T.StructType(
+        [
+            T.StructField("id_a", df.schema[id_col].dataType),
+            T.StructField("id_b", df.schema[id_col].dataType),
+            T.StructField("cosine", T.DoubleType()),
+        ]
+    )
 
-        def per_cluster(pdf):
-            import numpy as np
-            import pandas as pd
+    def per_cluster(pdf):
+        import numpy as np
+        import pandas as pd
 
-            pdf = pdf.sort_values("id")
-            ids = pdf["id"].to_numpy()
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
-            norms = np.sqrt((X * X).sum(axis=1))
-            norms[norms == 0] = 1.0
-            Xn = X / norms[:, None]
-            n = len(ids)
-            out_a, out_b, out_c = [], [], []
-            block = 1024
-            for s in range(0, n, block):
-                e_ = min(s + block, n)
-                S = Xn[s:e_] @ Xn.T  # (block, n)
-                for r in range(s, e_):
-                    row = S[r - s, r + 1 :]
-                    hit = np.nonzero(row >= thr)[0]
-                    if hit.size:
-                        out_a.append(np.full(hit.size, ids[r]))
-                        out_b.append(ids[r + 1 + hit])
-                        out_c.append(row[hit])
-            if not out_a:
-                empty = np.array([], dtype=ids.dtype)
-                return pd.DataFrame(
-                    {
-                        "id_a": empty,
-                        "id_b": empty,
-                        "cosine": np.array([], dtype="float64"),
-                    }
-                )
+        pdf = pdf.sort_values("id")
+        ids = pdf["id"].to_numpy()
+        X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
+        norms = np.sqrt((X * X).sum(axis=1))
+        norms[norms == 0] = 1.0
+        Xn = X / norms[:, None]
+        n = len(ids)
+        out_a, out_b, out_c = [], [], []
+        block = 1024
+        for s in range(0, n, block):
+            e_ = min(s + block, n)
+            S = Xn[s:e_] @ Xn.T  # (block, n)
+            for r in range(s, e_):
+                row = S[r - s, r + 1 :]
+                hit = np.nonzero(row >= thr)[0]
+                if hit.size:
+                    out_a.append(np.full(hit.size, ids[r]))
+                    out_b.append(ids[r + 1 + hit])
+                    out_c.append(row[hit])
+        if not out_a:
+            empty = np.array([], dtype=ids.dtype)
             return pd.DataFrame(
                 {
-                    "id_a": np.concatenate(out_a),
-                    "id_b": np.concatenate(out_b),
-                    "cosine": np.concatenate(out_c),
+                    "id_a": empty,
+                    "id_b": empty,
+                    "cosine": np.array([], dtype="float64"),
                 }
             )
-
-        out = assigned.groupBy("cl").applyInPandas(per_cluster, schema)
-        return _dedup_probe_pairs(out, nprobe)
-    assigned = assigned.withColumn("__n", norm_expr(F.col("e")))
-    a = assigned.select(
-        F.col("cl"),
-        F.col("id").alias("id_a"),
-        F.col("e").alias("e_a"),
-        F.col("__n").alias("n_a"),
-    )
-    b = assigned.select(
-        F.col("cl"),
-        F.col("id").alias("id_b"),
-        F.col("e").alias("e_b"),
-        F.col("__n").alias("n_b"),
-    )
-    out = (
-        a.join(b, "cl")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            dot_expr(F.col("e_a"), F.col("e_b")) / (F.col("n_a") * F.col("n_b")),
+        return pd.DataFrame(
+            {
+                "id_a": np.concatenate(out_a),
+                "id_b": np.concatenate(out_b),
+                "cosine": np.concatenate(out_c),
+            }
         )
-        .filter(F.col("cosine") >= F.lit(float(threshold)))
-        .select("id_a", "id_b", "cosine")
-    )
+
+    out = assigned.groupBy("cl").applyInPandas(per_cluster, schema)
     return _dedup_probe_pairs(out, nprobe)
 
 
@@ -638,7 +589,6 @@ def semantic_dedup(
     seed: int = 42,
     centroids: list[list[float]] | None = None,
     max_bucket: int | None = None,
-    impl: str = "blas",
     nprobe: int = 1,
     keep: str = "min_id",
     keep_score_col: str | None = None,
@@ -651,8 +601,8 @@ def semantic_dedup(
     semi-join it back to recover full rows — same contract as
     `minhash_dedup`). Eager: connected components iterates to fixpoint
     (O(log n) rounds, each checkpointed — `operators/components.py`).
-    ``impl`` and ``nprobe`` (multi-probe boundary recall) as in
-    `semantic_pairs`. ``keep`` (shared with `minhash_dedup`):
+    ``nprobe`` (multi-probe boundary recall) as in `semantic_pairs`.
+    ``keep`` (shared with `minhash_dedup`):
     ``'min_id'`` (default — the oracle semantics) or ``'score'`` (max
     ``keep_score_col`` from ``df`` — e.g. a quality-model p_good — with
     min-id tiebreak); ``'longest'`` needs a text column and is a
@@ -668,7 +618,7 @@ def semantic_dedup(
         )
     pairs = semantic_pairs(
         df, threshold, n_clusters, emb_col, id_col, seed, centroids,
-        max_bucket, impl, nprobe,
+        max_bucket, nprobe,
     )
     comp = connected_components(pairs, "id_a", "id_b")
     dropped = _component_winners_drop(

@@ -263,55 +263,6 @@ def compact_files(
     return n_files
 
 
-def compact_partitioned(
-    spark: SparkSession,
-    path: str,
-    partition_cols: list[str],
-    transform=None,
-) -> int:
-    """`compact_files` for a PARTITIONED directory: rewrite preserving
-    the ``col=value`` layout (plain compact_files would flatten it and
-    break partition pruning). Returns the data-file count after.
-
-    The append-based index ingest paths (`ivf_index_append`,
-    `text_index_append`) accrete one file set per batch inside each
-    partition directory; this folds every partition back to one file
-    per directory (hash `repartition` on the partition columns puts each
-    key in exactly one task — parquet files are splittable, so one big
-    file per directory is the optimal serving layout, no footer fan-out).
-    ``transform`` runs between read and write — how `text_index_compact`
-    collapses its sum-mergeable df log.
-
-    Same single-writer rule and rename-swap crash story as
-    `compact_files`; refuses to run over a previous crash's leftovers.
-    """
-    for leftover in ("__compact__", "__old__"):
-        p = path.rstrip("/") + f".{leftover}"
-        if os.path.exists(p):
-            raise ValueError(
-                f"{p} exists — a previous compaction crashed mid-swap; "
-                f"inspect/remove it before re-running"
-            )
-    df = spark.read.parquet(path)
-    if transform is not None:
-        df = transform(df)
-    tmp = path.rstrip("/") + ".__compact__"
-    (
-        df.repartition(*[F.col(c) for c in partition_cols])
-        .write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .parquet(tmp)
-    )
-    old = path.rstrip("/") + ".__old__"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    n = 0
-    for _root, _dirs, files in os.walk(path):
-        n += sum(1 for f in files if not f.startswith(("_", ".")))
-    return n
-
-
 def atomic_write_json(path: str, obj: dict) -> None:
     """Atomically commit index metadata: write ``<path>.tmp``, fsync,
     `os.replace` into place. Every serving-index metadata file
@@ -580,8 +531,8 @@ def index_artifact_findings(path: str, meta_name: str, data_dirs) -> list:
             if os.path.exists(p):
                 findings.append(
                     f"{os.path.basename(p)} leftover — a compaction crashed "
-                    f"mid-swap; recover per compact_partitioned before the "
-                    f"next maintenance run"
+                    f"mid-swap; inspect/remove it before the next "
+                    f"maintenance run"
                 )
     for leftover in ("__rebuild__", "__old__"):
         p = path.rstrip("/") + f".{leftover}"
@@ -1081,7 +1032,7 @@ def heal_pending_base(index_path: str) -> bool:
     old = index_path.rstrip("/") + ".__old__"
     if os.path.exists(old):
         raise ValueError(
-            f"{old} exists — a pre-r09 compaction crashed mid-swap and may "
+            f"{old} exists — a legacy compaction crashed mid-swap and may "
             f"hold the only copy of the base; recover it manually (move "
             f"missing batch_id=* dirs back) before any store write"
         )
@@ -1324,7 +1275,7 @@ def store_fsck(
     old = index_path.rstrip("/") + ".__old__"
     if os.path.exists(old):
         findings.append(
-            f"{os.path.basename(old)} leftover — a pre-r09 compaction "
+            f"{os.path.basename(old)} leftover — a legacy compaction "
             f"crashed mid-swap and may hold the only copy of the base; "
             f"recover manually before any store write"
         )
@@ -1418,7 +1369,7 @@ def store_fsck(
             )
             if "src_batch" not in base.columns:
                 findings.append(
-                    "base has no src_batch column (pre-r07 compaction) — "
+                    "base has no src_batch column (legacy compaction) — "
                     "expire_index will refuse; rebuild the store or "
                     "migrate to restore provenance"
                 )
@@ -1565,7 +1516,7 @@ def expire_index(
         bdf = spark.read.parquet(base)
         if "src_batch" not in bdf.columns:
             raise ValueError(
-                f"{base} has no src_batch column (pre-r07 compaction) — "
+                f"{base} has no src_batch column (legacy compaction) — "
                 f"its rows' origin batches are unrecoverable, so it "
                 f"cannot be aged; rebuild the store to apply retention"
             )

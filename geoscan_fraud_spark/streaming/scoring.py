@@ -8,9 +8,6 @@ an externally-served bloom scorer and a TTL'd online store
 * `score_stream` — stream-static join scoring: the literal left_outer +
   IS NULL form of `02:62-68` (stream-static anti joins aren't supported;
   the outer-join + filter plan is, and is stateless);
-* `foreach_batch_scorer` — wrap any batch scorer (anti-join or bloom) for
-  `writeStream.foreachBatch`, the pattern for sinks Spark can't address
-  natively (e.g. the reference's MongoDB TTL store, `02:293-304`);
 * `sliding_tile_counts` — watermarked sliding-window tile activity, the
   streaming equivalent of the 7-day TTL behavioral window (`02:286`).
 """
@@ -91,19 +88,6 @@ def score_stream(
         .filter(F.col("known").isNull())
         .drop("h3", "known")
     )
-
-
-def foreach_batch_scorer(score_fn, sink_fn):
-    """`writeStream.foreachBatch(foreach_batch_scorer(score, sink))`.
-
-    ``score_fn(batch_df) -> DataFrame``; ``sink_fn(scored_df, batch_id)``
-    writes wherever needed (table append, external store with TTL, ...).
-    """
-
-    def inner(batch_df: DataFrame, batch_id: int) -> None:
-        sink_fn(score_fn(batch_df), batch_id)
-
-    return inner
 
 
 def sliding_tile_counts(
@@ -641,75 +625,75 @@ def prepared_ingest_sink(
             else df
         )
 
-    def _rules_resolve(ann, rules) -> bool:
-        """True when every rule Column analyzes against ``ann`` — a
-        driver-only schema probe (no job). Used to attach only the stat
-        relations the ACTIVE rules actually reference."""
-        try:
-            annotate_filter_reasons(ann, rules).schema
-            return True
-        except Exception:
-            return False
-
     def dedup_fn(batch_df, idx):
+        from geoscan_fraud_spark.operators.text import token_count_col
+
         base = _sig(batch_df)
         reps = repetition_stats(base, text_col, id_col, ns=(2, 3))
         rules = dict(quality_rules or default_quality_rules())
-        # guide §1.2 "don't compute things you throw away": both
-        # stat operators are strict one-row-per-doc selects, so their
-        # inner joins attach columns without changing cardinality —
-        # skipping one whose columns no active rule references is
-        # value-identical and saves a full map pass (for reps, an Arrow
-        # round-trip) PER MICRO-BATCH. A min_tokens-only gate (the
-        # prepared_stream_query shape) now runs zero repetition passes.
-        # Unknown rule columns keep today's error: attach everything and
-        # let the action's analysis raise. The n_tokens attach itself is
-        # a map-only `withColumn` of the SAME expression token_stats
-        # computes (`token_count_col`) — the old shape inner-joined
-        # token_stats back onto its own input, a per-batch shuffle join
-        # of two branches of one relation for a row-local value
-        # (guide §2.4; cardinality-identical: the join was 1:1 on id).
-        from geoscan_fraud_spark.operators.text import token_count_col
-
-        base_stats = base.withColumn("n_tokens", token_count_col(text_col))
-        need_stats = not _rules_resolve(base.join(reps, id_col), rules)
-        need_reps = not _rules_resolve(base_stats, rules)
-        if not need_stats and not need_reps and not _rules_resolve(base, rules):
-            need_stats = need_reps = True
-        ann = base
-        if need_stats:
-            ann = ann.withColumn("n_tokens", token_count_col(text_col))
-        if need_reps:
-            ann = ann.join(reps, id_col)
+        # per-doc relations joined on id after the stat columns
+        scored = []
         if lm is not None:
-            nll = perplexity_score(base, lm, oov_logp, text_col, id_col).select(
-                id_col, "nll"
+            scored.append(
+                perplexity_score(base, lm, oov_logp, text_col, id_col).select(
+                    id_col, "nll"
+                )
             )
-            ann = ann.join(nll, id_col)
             if max_nll is not None:
                 rules["lm_nll"] = F.col("nll") <= max_nll
         if quality_model is not None:
             from geoscan_fraud_spark.operators.quality_model import score_quality
 
-            pg = score_quality(base, quality_model, text_col, id_col)
-            ann = ann.join(pg, id_col)
+            scored.append(score_quality(base, quality_model, text_col, id_col))
             if min_p_good is not None:
                 rules["quality_model"] = F.col("p_good") >= min_p_good
         if lang_model is not None:
             from geoscan_fraud_spark.operators.lang_model import score_lang
 
             for c in ("lang", "p_lang"):
-                if c in ann.columns:
+                if c in base.columns:
                     raise ValueError(
                         f"streamed batch already has a {c!r} column — it "
                         "is reserved by the lang_model gate; rename it"
                     )
-            lg = score_lang(base, lang_model, text_col, id_col)
-            ann = ann.join(lg, id_col)
+            scored.append(score_lang(base, lang_model, text_col, id_col))
             if allowed_langs is not None:
                 rules["language"] = F.col("lang").isin(list(allowed_langs))
             if min_p_lang is not None:
                 rules["lang_confidence"] = F.col("p_lang") >= min_p_lang
+
+        # Both stat operators are strict one-row-per-doc selects, so
+        # attaching one changes no cardinality, and skipping one whose
+        # columns no rule references is value-identical and saves a full
+        # map pass (for reps, an Arrow round-trip) PER MICRO-BATCH: a
+        # min_tokens-only gate (the prepared_stream_query shape) runs no
+        # repetition pass. The rules are analyzed once (lazily, no job)
+        # against the batch with every stat column attached, and the
+        # attribute names their projection references pick the passes;
+        # a rule naming an unknown column raises AnalysisException here.
+        # A stat column the batch already carries is used as is.
+        tok = "n_tokens" not in base.columns
+        rep_cols = [c for c in reps.columns if c not in base.columns]
+
+        def attach(df, with_tokens, with_reps):
+            if with_tokens:
+                df = df.withColumn("n_tokens", token_count_col(text_col))
+            if with_reps:
+                df = df.join(reps.select(id_col, *rep_cols), id_col)
+            for rel in scored:
+                df = df.join(rel, id_col)
+            return df
+
+        probe = attach(base, tok, bool(rep_cols)).select(
+            *[passes.alias(name) for name, passes in rules.items()]
+        )
+        refs = probe._jdf.queryExecution().analyzed().references().toSeq()
+        used = {refs.apply(i).name() for i in range(refs.size())}
+        ann = attach(
+            base,
+            tok and "n_tokens" in used,
+            bool(used.intersection(rep_cols)),
+        )
         # guide §1.2 — don't compute things twice: the gate chain
         # (normalize + token counts + the Arrow repetition pass + the
         # LM-NLL broadcast join + annotate/filter) used to live only in

@@ -38,7 +38,7 @@ EXTRAS = [
     "dedup_incremental_query", "dedup_incremental_gate_small_batch",
     "weighted_sample", "salted_join", "profile_corpus",
     "dedup_minhash_unguarded", "text_repetition", "semantic_dedup",
-    "semantic_dedup_blas", "lm_perplexity", "bpe_segment",
+    "lm_perplexity", "bpe_segment",
     "prepared_ingest_stream", "dsir_sample", "lm_bigram",
     "semantic_decontam", "bm25_search", "bm25_index_query",
     "hybrid_index_query", "bm25_incremental_query",

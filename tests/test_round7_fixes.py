@@ -250,7 +250,7 @@ def test_neardup_sink_writes_and_reads_prebanded_store(spark, tmp_path):
 def test_semantic_pairs_multiprobe_finds_boundary_pair(spark):
     """A near-dup pair straddling a cluster boundary is missed at
     nprobe=1 (the published SemDeDup behavior) and found at nprobe=2
-    (VERDICT r06 #5), for every impl."""
+    (VERDICT r06 #5)."""
     from geoscan_fraud_spark.operators.similarity import semantic_pairs
 
     cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
@@ -262,18 +262,15 @@ def test_semantic_pairs_multiprobe_finds_boundary_pair(spark):
         (4, [0.0, 0.97, 0.0, 0.1]),   # core of cluster 2
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for impl in ("blas", "fold", "hybrid"):
-        p1 = semantic_pairs(
-            df, threshold=0.95, centroids=cents, impl=impl, nprobe=1
-        ).collect()
-        assert all({r["id_a"], r["id_b"]} != {1, 2} for r in p1), impl
-        rows2 = semantic_pairs(
-            df, threshold=0.95, centroids=cents, impl=impl, nprobe=2
-        ).collect()
-        p2 = {(r["id_a"], r["id_b"]) for r in rows2}
-        assert (1, 2) in p2, impl
-        # multi-probe emits each found pair exactly once
-        assert len(rows2) == len(p2), impl
+    p1 = semantic_pairs(df, threshold=0.95, centroids=cents, nprobe=1).collect()
+    assert all({r["id_a"], r["id_b"]} != {1, 2} for r in p1)
+    rows2 = semantic_pairs(
+        df, threshold=0.95, centroids=cents, nprobe=2
+    ).collect()
+    p2 = {(r["id_a"], r["id_b"]) for r in rows2}
+    assert (1, 2) in p2
+    # multi-probe emits each found pair exactly once
+    assert len(rows2) == len(p2)
 
 
 def test_semantic_dedup_multiprobe_mllib_path(spark):

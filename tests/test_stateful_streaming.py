@@ -1,5 +1,6 @@
 """Stateful streaming operator: per-user novel-tile detection."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from geoscan_fraud_spark.operators.scoring import with_cell
@@ -656,6 +657,59 @@ def test_prepared_serving_sink_end_to_end(spark, tmp_path):
         ivf_index_stats(spark, paths["ivf"]).agg(F.sum("n_vectors")).collect()[0][0]
         == 3
     )
+
+
+def test_prepared_ingest_gate_picks_stat_passes_without_failed_analysis(
+    spark, tmp_path, monkeypatch
+):
+    """The gate picks its stat passes from the column names its rules
+    reference: one batch of the default gate and one of a
+    min_tokens-only gate raise no AnalysisException along the way, and a
+    rule naming an unknown column still raises one naming it."""
+    import pyspark.errors.exceptions.captured as captured
+    from pyspark.errors import AnalysisException
+
+    from geoscan_fraud_spark.streaming.scoring import prepared_ingest_sink
+
+    failed = []
+    convert = captured.convert_exception
+
+    def counting_convert(e):
+        out = convert(e)
+        # a fresh store's first batch probes the missing index path
+        if (
+            isinstance(out, AnalysisException)
+            and out.getCondition() != "PATH_NOT_FOUND"
+        ):
+            failed.append(str(out))
+        return out
+
+    monkeypatch.setattr(captured, "convert_exception", counting_convert)
+    docs = spark.createDataFrame(
+        [(0, " ".join(f"w{i}" for i in range(12))), (1, "spam " * 12)],
+        "doc_id long, text string",
+    )
+    for name, rules, want in (
+        ("default", None, [0]),
+        ("min_tokens", {"min_tokens": F.col("n_tokens") >= 3}, [0, 1]),
+    ):
+        out = tmp_path / f"{name}_out"
+        sink = prepared_ingest_sink(
+            str(tmp_path / f"{name}_idx"), str(out), quality_rules=rules,
+            num_hashes=48, bands=12, threshold=0.5,
+        )
+        sink(docs, 0)
+        kept = spark.read.parquet(str(out / "batch_id=0")).collect()
+        assert sorted(r.doc_id for r in kept) == want, name
+    assert failed == []
+
+    sink = prepared_ingest_sink(
+        str(tmp_path / "bad_idx"), str(tmp_path / "bad_out"),
+        quality_rules={"bad": F.col("no_such_stat") > 0},
+        num_hashes=48, bands=12, threshold=0.5,
+    )
+    with pytest.raises(AnalysisException, match="no_such_stat"):
+        sink(docs, 0)
 
 
 def test_prepared_ingest_sink_lm_gate(spark, tmp_path):
