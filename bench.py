@@ -281,7 +281,7 @@ def bench_incremental_gate_small_batch(spark, sf_dir):
     batch-touched-bucket prune pays off (the registered
     `dedup_incremental` and `dedup_incremental_query` twins run
     batch ~ store, the shape that amortizes the prune's broadcast
-    barrier least; the ladder's bigstore rungs cover the store-size
+    barrier least; `tools/profile.py scale` covers the store-size
     axis, this row tracks the recurring per-batch cost)."""
     from pyspark.sql import functions as F
 

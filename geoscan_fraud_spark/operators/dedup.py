@@ -144,23 +144,17 @@ def _fan_out_small(df: DataFrame) -> DataFrame:
     by the sinks' contract, and for a genuinely huge RDD-backed batch
     spreading the CPU-bound signature work across 64 partitions still
     beats computing it on the source's task count."""
-    try:
-        sc = df.sparkSession.sparkContext
-        p = sc.defaultParallelism
-        if p <= 1:
-            return df
-        est = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        if est >= _FAN_OUT_UNKNOWN_EST:
-            # no estimate (RDD-backed plan): unstarve by partition count
-            target = min(p, _FAN_OUT_UNKNOWN_PARTS)
-            if df.rdd.getNumPartitions() < target:
-                return df.repartition(target)
-        elif est < 64 * 1024 * 1024:
-            return df.repartition(_fan_out_target(p, est))
-    except Exception:
-        pass
+    p = df.sparkSession.sparkContext.defaultParallelism
+    if p <= 1:
+        return df
+    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    if est >= _FAN_OUT_UNKNOWN_EST:
+        # no estimate (RDD-backed plan): unstarve by partition count
+        target = min(p, _FAN_OUT_UNKNOWN_PARTS)
+        if df.rdd.getNumPartitions() < target:
+            return df.repartition(target)
+    elif est < 64 * 1024 * 1024:
+        return df.repartition(_fan_out_target(p, est))
     return df
 
 

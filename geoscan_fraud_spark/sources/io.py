@@ -1234,6 +1234,21 @@ def store_tombstones(spark: SparkSession, index_path: str, id_col: str = "id"):
     return spark.read.parquet(tpath).toDF(id_col)
 
 
+def store_has_committed_batch(index_path: str) -> bool:
+    """Whether an incremental store holds a committed batch: a
+    ``batch_id=*`` dir with a data file. Spark's file commit moves data
+    files into place only at job commit, and partition discovery skips
+    ``_``/``.`` names, so a store without one has nothing to read."""
+    if not os.path.isdir(index_path):
+        return False
+    return any(
+        not f.startswith(("_", "."))
+        for d in os.listdir(index_path)
+        if d.startswith("batch_id=")
+        for f in os.listdir(os.path.join(index_path, d))
+    )
+
+
 def store_fsck(
     spark: SparkSession,
     index_path: str,

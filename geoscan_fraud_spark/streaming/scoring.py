@@ -186,14 +186,9 @@ def _maybe_cluster_output(df: DataFrame, cluster_output):
             f"cluster_output must be True, False or 'auto', got "
             f"{cluster_output!r}"
         )
-    try:
-        est = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        if est < (1 << 60) and est >= _OUT_CLUSTER_MIN_BYTES:
-            return df.hint("rebalance")
-    except Exception:
-        pass
+    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    if est < (1 << 60) and est >= _OUT_CLUSTER_MIN_BYTES:
+        return df.hint("rebalance")
     return df
 
 
@@ -233,9 +228,11 @@ def incremental_ingest_sink(
     def inner(batch_df: DataFrame, batch_id: int) -> None:
         import os
 
-        from pyspark.errors import AnalysisException
-
-        from geoscan_fraud_spark.sources.io import heal_pending_base
+        from geoscan_fraud_spark.sources.io import (
+            heal_pending_base,
+            store_has_committed_batch,
+            store_tombstones,
+        )
 
         spark = batch_df.sparkSession
         # complete a crashed compaction/expiry before reading: the
@@ -243,7 +240,10 @@ def incremental_ingest_sink(
         # and this sink is the store's single writer while streaming
         if os.path.isdir(index_path):
             heal_pending_base(index_path)
-        try:
+        # only a store with no committed batch bootstraps from empty; any
+        # failure to read an existing one (corrupt files, a missing index
+        # column) must surface, not silently restart the store
+        if store_has_committed_batch(index_path):
             raw = spark.read.parquet(index_path)
             # optional columns (e.g. the pre-banded 'bands' array) are
             # selected only when the store has them, so a sink upgraded
@@ -255,16 +255,10 @@ def incremental_ingest_sink(
             idx = raw.filter(F.col("batch_id") < batch_id).select(*cols)
             # forgotten docs (sources/io.forget_ids) must stop matching:
             # anti-join the tombstone sibling, broadcast-sized by nature
-            from geoscan_fraud_spark.sources.io import store_tombstones
-
             dead = store_tombstones(spark, index_path)
             if dead is not None:
                 idx = idx.join(F.broadcast(dead), "id", "left_anti")
-        except AnalysisException:
-            # bootstrap only: the index path does not exist yet (or holds
-            # no readable schema). Anything else — corrupt files, wrong
-            # schema mid-stream — must surface, not silently restart the
-            # store from empty.
+        else:
             idx = spark.createDataFrame([], empty_index_schema(batch_df))
         # One evaluation feeds both writes: the dedup plan materializes
         # ONCE, directly into the corpus dir (a localCheckpoint + write

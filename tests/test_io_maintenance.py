@@ -350,13 +350,3 @@ def test_store_fsck_null_optional_columns_no_phantom_duplicates(
     assert rep["measured"]["rows"] == 20
     assert not any("duplicate" in f for f in rep["findings"])
 
-
-def test_stress_fit_slope_guards_degenerate_ladder():
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from stress_pipeline import fit_slope
-
-    assert abs(fit_slope([10, 100], [1.0, 10.0]) - 1.0) < 0.01
-    with pytest.raises(ValueError, match="two distinct scales"):
-        fit_slope([10, 10], [1.0, 1.1])

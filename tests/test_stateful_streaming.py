@@ -170,6 +170,26 @@ def test_neardup_ingest_sink_dedups_across_batches(spark, tmp_path):
     assert sorted(r.doc_id for r in spark.read.parquet(out_path).collect()) == [1, 12]
 
 
+def test_ingest_sink_raises_on_store_missing_an_index_column(spark, tmp_path):
+    """A store that holds a committed batch is read, never bootstrapped:
+    one whose rows lack an index column ('sig') raises instead of
+    deduping the next batch against an empty index."""
+    from pyspark.errors import AnalysisException
+
+    from geoscan_fraud_spark.streaming.scoring import neardup_ingest_sink
+
+    index_path = str(tmp_path / "sig_index")
+    out_path = str(tmp_path / "corpus")
+    spark.createDataFrame([(1,)], "id long").write.parquet(
+        f"{index_path}/batch_id=0"
+    )
+    sink = neardup_ingest_sink(index_path, out_path)
+    batch = spark.createDataFrame([(10, "w1 w2 w3 w4")], "doc_id long, text string")
+    with pytest.raises(AnalysisException):
+        sink(batch, 1)
+    assert not (tmp_path / "corpus").exists()
+
+
 def test_neardup_ingest_sink_through_streaming_query(spark, tmp_path):
     """End-to-end through writeStream.foreachBatch with availableNow."""
     from geoscan_fraud_spark.streaming.scoring import neardup_ingest_sink
