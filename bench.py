@@ -33,6 +33,7 @@ from geoscan_fraud_spark.harness import (
     a8_percentiles,
     j1_join_single_key,
     j2_join_two_keys,
+    scratch_dir,
     u4_explode_tokens,
     u7_haversine,
 )
@@ -185,8 +186,6 @@ def bench_ivf_index_query(spark, sf_dir):
     index (`ivf_index_write` runs once per bench process — the
     amortized build; timed is the query: static-pruned scan of
     nprobe lists + quantized score + exact re-rank)."""
-    import tempfile
-
     from geoscan_fraud_spark.harness_pipeline import _ivf_centroids
     from geoscan_fraud_spark.operators.similarity import (
         ivf_index_query,
@@ -197,7 +196,7 @@ def bench_ivf_index_query(spark, sf_dir):
 
     e = load_fixture(spark, sf_dir, "embeddings")
     if sf_dir not in _ivf_disk_index:
-        path = tempfile.mkdtemp(prefix="ivf_bench_") + "/index"
+        path = scratch_dir("ivf_bench_") + "/index"
         ivf_index_write(
             e, path, centroids=_ivf_centroids("/root/testdata/sf0.01")
         )
@@ -216,8 +215,6 @@ def bench_ivf_pq_index_query(spark, sf_dir):
     vectors (operators/pq.py — the compressed tier below int8). The
     delta between the two rows is the cost/benefit of ADC at this
     sf; at a scan-bound sf the PQ row wins on IO."""
-    import tempfile
-
     from geoscan_fraud_spark.harness_pipeline import _ivf_centroids
     from geoscan_fraud_spark.operators.similarity import (
         ivf_index_query,
@@ -228,7 +225,7 @@ def bench_ivf_pq_index_query(spark, sf_dir):
 
     e = load_fixture(spark, sf_dir, "embeddings")
     if sf_dir not in _ivf_pq_index:
-        path = tempfile.mkdtemp(prefix="ivf_pq_bench_") + "/index"
+        path = scratch_dir("ivf_pq_bench_") + "/index"
         ivf_index_write(
             e, path, centroids=_ivf_centroids("/root/testdata/sf0.01"),
             pq_m=8, pq_k=256, pq_residual=True,
@@ -368,8 +365,6 @@ def bench_prepared_ingest(spark, sf_dir):
     runs the full two-batch cycle against a FRESH store + checkpoint,
     so the number is the cold per-corpus streaming cost."""
     import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from geoscan_fraud_spark.operators.text import fit_unigram_lm
@@ -378,7 +373,7 @@ def bench_prepared_ingest(spark, sf_dir):
 
     docs = load_fixture(spark, sf_dir, "documents").select("doc_id", "text")
     if "src" not in _prep_state:
-        src = tempfile.mkdtemp(prefix="prep_bench_src_")
+        src = scratch_dir("prep_bench_src_")
         docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(f"{src}/half=0")
@@ -393,7 +388,7 @@ def bench_prepared_ingest(spark, sf_dir):
     prev = _prep_state.pop("work", None)
     if prev:
         shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix="prep_bench_work_")
+    work = scratch_dir("prep_bench_work_")
     _prep_state["work"] = work
     sink = prepared_ingest_sink(
         f"{work}/idx",
@@ -506,8 +501,6 @@ def bench_bm25_index_query(spark, sf_dir):
     built once per bench process (amortized in production); timed is
     the query path — driver-side bucket computation + a postings scan
     statically pruned to the query terms' bucket directories."""
-    import tempfile
-
     from geoscan_fraud_spark.operators.retrieval import (
         text_index_query,
         text_index_write,
@@ -515,7 +508,7 @@ def bench_bm25_index_query(spark, sf_dir):
     from geoscan_fraud_spark.sources.io import load_fixture
 
     if sf_dir not in _bm25_index_state:
-        path = tempfile.mkdtemp(prefix="bm25_bench_idx_") + "/idx"
+        path = scratch_dir("bm25_bench_idx_") + "/idx"
         docs = load_fixture(spark, sf_dir, "documents").select("doc_id", "text")
         text_index_write(docs, path, n_buckets=32)
         _bm25_index_state[sf_dir] = path
@@ -530,8 +523,6 @@ def bench_hybrid_index_query(spark, sf_dir):
     Queries are the first five documents' leading tokens (sparse)
     paired with their own embeddings (dense) over the fixtures'
     shared doc_id/vec_id space."""
-    import tempfile
-
     from geoscan_fraud_spark.harness_pipeline import _ivf_centroids
     from geoscan_fraud_spark.operators.retrieval import (
         hybrid_search,
@@ -544,11 +535,11 @@ def bench_hybrid_index_query(spark, sf_dir):
     docs = load_fixture(spark, sf_dir, "documents").select("doc_id", "text")
     emb = load_fixture(spark, sf_dir, "embeddings")
     if sf_dir not in _bm25_index_state:
-        path = tempfile.mkdtemp(prefix="bm25_bench_idx_") + "/idx"
+        path = scratch_dir("bm25_bench_idx_") + "/idx"
         text_index_write(docs, path, n_buckets=32)
         _bm25_index_state[sf_dir] = path
     if sf_dir not in _ivf_disk_index:
-        path = tempfile.mkdtemp(prefix="ivf_bench_") + "/index"
+        path = scratch_dir("ivf_bench_") + "/index"
         ivf_index_write(
             emb, path, centroids=_ivf_centroids("/root/testdata/sf0.01")
         )
@@ -581,8 +572,6 @@ def bench_bm25_index_query_tombstoned(spark, sf_dir):
     index copy with ~10% of docs logically deleted, timed on the same
     query set as `bm25_index_query` — shows the broadcast anti-join cost
     pre-compaction is bounded."""
-    import tempfile
-
     from geoscan_fraud_spark.operators.retrieval import (
         text_index_query,
         text_index_write,
@@ -592,7 +581,7 @@ def bench_bm25_index_query_tombstoned(spark, sf_dir):
 
     key = "bm25:" + sf_dir
     if key not in _tomb_state:
-        path = tempfile.mkdtemp(prefix="bm25_tomb_idx_") + "/idx"
+        path = scratch_dir("bm25_tomb_idx_") + "/idx"
         docs = load_fixture(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
@@ -611,8 +600,6 @@ def bench_ivf_index_query_tombstoned(spark, sf_dir):
     vectors logically deleted on a separate index copy; timed is the
     same probe-pruned query as `ann_ivf_index_query` plus the
     read-side broadcast anti-join."""
-    import tempfile
-
     from geoscan_fraud_spark.harness_pipeline import _ivf_centroids
     from geoscan_fraud_spark.operators.similarity import (
         ivf_index_query,
@@ -624,7 +611,7 @@ def bench_ivf_index_query_tombstoned(spark, sf_dir):
     key = "ivf:" + sf_dir
     e = load_fixture(spark, sf_dir, "embeddings")
     if key not in _tomb_state:
-        path = tempfile.mkdtemp(prefix="ivf_tomb_") + "/index"
+        path = scratch_dir("ivf_tomb_") + "/index"
         ivf_index_write(
             e, path, centroids=_ivf_centroids("/root/testdata/sf0.01")
         )

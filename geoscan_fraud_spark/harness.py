@@ -19,6 +19,9 @@ Determinism rules used throughout (so Spark and DuckDB hash-match):
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +41,21 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # whole registry — depend on a fixture file existing on disk.
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str | Callable[[], str]] = {}
+
+
+_scratch_root: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for an entry's per-call store. Entries return lazy
+    DataFrames that read their store, so they cannot remove it themselves;
+    every store lives under one root per process instead, and the root is
+    deleted at interpreter exit."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="geoscan_scratch_")
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
 
 
 def register(name: str, sql: str | Callable[[], str] | None = None):

@@ -304,12 +304,19 @@ def score_pipeline(pts, epsilon=80.0, min_pts=5, res=11):
     n_tfidf_rel = scored_tiles.agg(
         F.count(F.lit(1)).cast("int").alias("tfidf_rows")
     )
-    return _ordered(
+    out = _ordered(
         anti.join(blm, "user", "full_outer").crossJoin(
             F.broadcast(n_tfidf_rel)
         ),
         "user",
     )
+    # `_ordered` materialized the result: release what this call cached,
+    # so a later call scans its input again instead of reading this one's
+    pts.unpersist()
+    tiles.unpersist()
+    model.models.unpersist()
+    model.unpersistTiles()
+    return out
 
 
 def score_pipeline_dense(spark, sf_dir):

@@ -9,7 +9,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from geoscan_fraud_spark.harness import _events_coords, _ordered, _t, register
+from geoscan_fraud_spark.harness import (
+    _events_coords,
+    _ordered,
+    _t,
+    register,
+    scratch_dir,
+)
 from geoscan_fraud_spark.operators import dedup as dd
 from geoscan_fraud_spark.operators import multimodal as mm
 from geoscan_fraud_spark.operators import similarity as sim
@@ -529,8 +535,6 @@ def ann_ivf_incremental_query(spark, sf_dir):
     exact re-rank (full-precision ``rerank_corpus``); approximate-tier
     shortlist recall is pinned separately by `ivf_recall_at_k` and
     `test_pq.py`."""
-    import tempfile
-
     from geoscan_fraud_spark.operators.similarity import (
         ivf_index_append,
         ivf_index_compact,
@@ -541,7 +545,7 @@ def ann_ivf_incremental_query(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings")
     cent = _ivf_centroids("/root/testdata/sf0.01")
-    path = tempfile.mkdtemp(prefix="ivf_inc_entry_") + "/idx"
+    path = scratch_dir("ivf_inc_entry_") + "/idx"
     ivf_index_write(
         e.filter(F.col("vec_id") % 2 == 0), path, centroids=cent,
         pq_m=8, pq_k=16, pq_residual=True,
@@ -1895,8 +1899,6 @@ def bm25_incremental_query(spark, sf_dir):
     generation-resolved serving, and bucket pruning must together
     reproduce a from-scratch build over the post-delete corpus
     BIT-EXACTLY (scores round to 6dp pre-rank on both sides)."""
-    import tempfile
-
     from geoscan_fraud_spark.operators.retrieval import (
         text_index_append,
         text_index_compact,
@@ -1906,7 +1908,7 @@ def bm25_incremental_query(spark, sf_dir):
     from geoscan_fraud_spark.sources.io import index_delete
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    path = tempfile.mkdtemp(prefix="bm25_inc_entry_") + "/idx"
+    path = scratch_dir("bm25_inc_entry_") + "/idx"
     text_index_write(docs.filter(F.col("doc_id") % 2 == 0), path, n_buckets=32)
     text_index_append(docs.filter(F.col("doc_id") % 2 == 1), path)
     index_delete(
@@ -2044,8 +2046,6 @@ def hybrid_incremental_query(spark, sf_dir):
     shortlist exhaustive at the gate sf, same as
     `ann_ivf_incremental_query` (compressed-tier recall is pinned
     separately)."""
-    import tempfile
-
     from geoscan_fraud_spark.operators.retrieval import (
         hybrid_search,
         text_index_append,
@@ -2060,7 +2060,7 @@ def hybrid_incremental_query(spark, sf_dir):
     from geoscan_fraud_spark.sources.io import index_delete
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    tpath = tempfile.mkdtemp(prefix="hybrid_inc_bm25_") + "/idx"
+    tpath = scratch_dir("hybrid_inc_bm25_") + "/idx"
     text_index_write(docs.filter(F.col("doc_id") % 2 == 0), tpath, n_buckets=32)
     text_index_append(docs.filter(F.col("doc_id") % 2 == 1), tpath)
     index_delete(
@@ -2070,7 +2070,7 @@ def hybrid_incremental_query(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings")
     cent = _ivf_centroids("/root/testdata/sf0.01")
-    apath = tempfile.mkdtemp(prefix="hybrid_inc_ivf_") + "/idx"
+    apath = scratch_dir("hybrid_inc_ivf_") + "/idx"
     ivf_index_write(
         e.filter(F.col("vec_id") % 2 == 0), apath, centroids=cent,
         pq_m=8, pq_k=16, pq_residual=True,
@@ -2388,8 +2388,6 @@ def prepared_stream_query(spark, sf_dir):
     strictly-earlier-batch store read, the integer stats merges of the
     two appends, and bucket-pruned serving must together reproduce the
     batch-SQL answer BIT-EXACTLY."""
-    import tempfile
-
     from geoscan_fraud_spark.operators.retrieval import (
         text_index_query,
         text_index_write,
@@ -2416,7 +2414,7 @@ def prepared_stream_query(spark, sf_dir):
     # stream/store/index/checkpoint dirs stay per-call: the whole
     # ingest lifecycle is still what's measured.
     if sf_dir not in _psq_src_cache:
-        cache_dir = tempfile.mkdtemp(prefix="psq_src_cache_")
+        cache_dir = scratch_dir("psq_src_cache_")
         evens.coalesce(1).write.mode("overwrite").parquet(f"{cache_dir}/f=a")
         batch_b.coalesce(1).write.mode("overwrite").parquet(f"{cache_dir}/f=b")
         _psq_src_cache[sf_dir] = cache_dir
@@ -2430,7 +2428,7 @@ def prepared_stream_query(spark, sf_dir):
             if f.endswith(".parquet") or f == "_SUCCESS":
                 os.link(f"{s}/{f}", f"{d}/{f}")
 
-    work = tempfile.mkdtemp(prefix="psq_entry_")
+    work = scratch_dir("psq_entry_")
     src = f"{work}/src"
     tidx = f"{work}/tidx"
     # bootstrap-empty serving index: the stream's appends are its only
@@ -2516,8 +2514,6 @@ def _wtw_staged(spark, sf_dir: str) -> str:
     sf_dir (deterministic functions of the fixture — same caching
     rationale as `_psq_src_cache`)."""
     if sf_dir not in _wtw_src_cache:
-        import tempfile
-
         ev = _events_coords(spark, sf_dir, "ts")
         t = _wtw_epoch_secs(ev)
         pts = ev.select(
@@ -2530,7 +2526,7 @@ def _wtw_staged(spark, sf_dir: str) -> str:
                 | (F.col("event_id") % _WTW_LATE_MOD == _WTW_LATE_RES)
             ).alias("cyc2"),
         )
-        cache = tempfile.mkdtemp(prefix="wtw_src_cache_")
+        cache = scratch_dir("wtw_src_cache_")
         pts.filter(~F.col("cyc2")).drop("cyc2").coalesce(1).write.parquet(
             f"{cache}/f=a"
         )
@@ -2651,12 +2647,10 @@ def watermarked_tile_windows(spark, sf_dir):
     and append-mode closed-window emission end-to-end. Streaming analog
     of the reference's TTL'd behavioral window (`02:281-287`)."""
     import os
-    import tempfile
-
     from geoscan_fraud_spark.streaming.scoring import sliding_tile_counts
 
     cache = _wtw_staged(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="wtw_entry_")
+    work = scratch_dir("wtw_entry_")
     src, out, ckpt = f"{work}/src", f"{work}/out", f"{work}/ckpt"
     os.makedirs(src)
     schema = "ts timestamp, user_id bigint, latitude double, longitude double"
@@ -2764,12 +2758,10 @@ def stateful_novel_tiles(spark, sf_dir):
     analog of the reference's online behavioral store (`02:281-314`),
     learned online instead of pre-trained."""
     import os
-    import tempfile
-
     from geoscan_fraud_spark.streaming.stateful import novel_tile_stream
 
     cache = _wtw_staged(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="snt_entry_")
+    work = scratch_dir("snt_entry_")
     src, out, ckpt = f"{work}/src", f"{work}/out", f"{work}/ckpt"
     os.makedirs(src)
     schema = "ts timestamp, user_id bigint, latitude double, longitude double"

@@ -28,6 +28,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+#: the most rows a driver-side graph path fetches with its LIMIT probe:
+#: `connected_components`' symmetrized edge list, and `Geoscan.fit`'s
+#: epsilon pairs plus its distinct points. Above it the distributed path
+#: runs. Read at call time, so a test can patch it to 0 to force the
+#: distributed path.
+DRIVER_MAX_ROWS = 2_000_000
+
 
 def _cutter(df: DataFrame):
     """Lineage cut: reliable `checkpoint()` when the session has a
@@ -78,7 +85,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    small_graph_threshold: int = 1_000_000,
 ) -> DataFrame:
     """(src, dst) long-id edges -> (id, component) where component is the
     minimum vertex id in the connected component.
@@ -87,8 +93,8 @@ def connected_components(
     can't): near-dup graphs are SPARSE — a 100 TB corpus with 0.1%
     duplicates yields a tiny edge list — and each distributed iteration
     costs 2 joins + a checkpoint + a convergence count in fixed job
-    latency. When the materialized edge list is at or under
-    ``small_graph_threshold`` edges, the labels are computed with a
+    latency. When the symmetrized edge list has at most
+    `DRIVER_MAX_ROWS` rows, the labels are computed with a
     driver-side union-find instead: identical min-label result, 2 jobs
     total (checkpoint + LIMIT-probe collect; the path pick rides on
     the collect instead of its own count() job) instead of ~4 per
@@ -97,8 +103,8 @@ def connected_components(
     bytes/edge, ~32 MB at the 2M-symmetrized default, NOT per-row
     Python ``Row`` objects at ~100+ bytes each), and the union-find
     runs over contiguous numpy index arrays. The iterative min-label +
-    pointer-jumping path remains for genuinely large edge lists (pass
-    ``small_graph_threshold=0`` to force it)."""
+    pointer-jumping path remains for genuinely large edge lists
+    (`DRIVER_MAX_ROWS` = 0 forces it)."""
     cut = _cutter(edges)
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # no distinct: duplicate edges are absorbed by the min-aggregates each
@@ -107,17 +113,17 @@ def connected_components(
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     sym = cut(sym)
 
-    if small_graph_threshold > 0:
+    lim = DRIVER_MAX_ROWS
+    if lim > 0:
         # per-call job floor: picking the path with a count() job and
         # fetching the edges with a second toPandas job costs two
         # actions. A LIMIT-probe collect does both in ONE action over
-        # the just-checkpointed blocks: fetch at most 2*threshold+1 rows
+        # the just-checkpointed blocks: fetch at most lim+1 rows
         # — if everything came back, that IS the edge list (rows ≤ limit
         # means limit was not binding); if the limit bound, the list is
         # big and the distributed path takes over (CollectLimit
         # short-circuits after filling, so the probe never materializes
         # a huge frame driver-side).
-        lim = 2 * small_graph_threshold
         pdf = sym.limit(lim + 1).toPandas()
         if len(pdf) <= lim:
             import numpy as np  # local: keep module import-light

@@ -15,6 +15,14 @@ Re-implements the algorithm the reference describes in prose
    propagation, `operators/components.py` — no GraphX);
 4. convex hull per component (`01:30-32`) via applyInPandas.
 
+Steps 2-4 run on the driver when the graph is small: one LIMIT-probe
+collect fetches the pairs and the distinct points (at most
+`components.DRIVER_MAX_ROWS` rows), and numpy does the degree, the core
+filter, the min-label union-find, the cluster ranks and the hulls, with
+the same results as the distributed path. Each of those steps is a
+scheduled Spark job or more on the distributed path, and at interactive
+sizes the job count, not the data, sets the fit's latency.
+
 API parity with `Geoscan()` (M1-M5 of SURVEY §2.8): builder setters,
 fit/transform/save/load, toGeoJson, getTiles. Models are plain DataFrames
 over parquet — readable without this library, the property the reference
@@ -28,6 +36,7 @@ import math
 import os
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -47,6 +56,7 @@ from geoscan_fraud_spark.functions.hull import (
     polygon_geometry,
 )
 from geoscan_fraud_spark.functions.polyfill import polyfill
+from geoscan_fraud_spark.operators import components
 from geoscan_fraud_spark.operators.components import connected_components
 
 POLYGON_SCHEMA = "cluster long, geometry string, n_points long"
@@ -192,6 +202,92 @@ def epsilon_pairs(
     )
 
 
+def _fit_on_driver(
+    pts: DataFrame, pairs: DataFrame, min_pts: int
+) -> DataFrame | None:
+    """Steps 2-4 of the fit on the driver, or None when the graph has more
+    than `components.DRIVER_MAX_ROWS` rows (pairs + points).
+
+    ONE action fetches both relations: each point rides the union as an
+    (id, id, w, lat, lng, true) row, each ordered pair as (id_a, id_b,
+    w_b, 0, 0, false). No id is ever NULL: a NULL would turn the int64
+    column into float64 and round the 64-bit hashes. The polygons equal
+    the distributed path's row for row: same integer degree, same
+    min-label components (shared union-find), ranks ordered by the
+    component's minimum id, and one hull per cluster over its core
+    points (hull(hulls) == hull(points), so the two-level reduction
+    gives the same polygon)."""
+    lim = components.DRIVER_MAX_ROWS
+    if lim <= 0:
+        return None
+    probe = (
+        pts.select(
+            F.col("id").alias("id_a"),
+            F.col("id").alias("id_b"),
+            "w",
+            "lat",
+            "lng",
+            F.lit(True).alias("__pt"),
+        )
+        .unionByName(
+            pairs.select(
+                "id_a",
+                "id_b",
+                F.col("w_b").alias("w"),
+                F.lit(0.0).alias("lat"),
+                F.lit(0.0).alias("lng"),
+                F.lit(False).alias("__pt"),
+            )
+        )
+        .limit(lim + 1)
+        .toPandas()
+    )
+    if len(probe) > lim:
+        return None
+    is_pt = probe["__pt"].to_numpy()
+    point_rows = probe[is_pt]
+    pair_rows = probe[~is_pt]
+    # np.unique sorts, so an index order is also an id order
+    ids, first = np.unique(point_rows["id_a"].to_numpy(), return_index=True)
+    w = point_rows["w"].to_numpy()[first]
+    lat = point_rows["lat"].to_numpy()[first]
+    lng = point_rows["lng"].to_numpy()[first]
+    id_a = pair_rows["id_a"].to_numpy()
+    id_b = pair_rows["id_b"].to_numpy()
+    a = np.searchsorted(ids, id_a)
+    b = np.searchsorted(ids, id_b)
+
+    nbr_w = np.zeros(len(ids), dtype=np.int64)
+    np.add.at(nbr_w, a, pair_rows["w"].to_numpy())
+    core = nbr_w + w - 1 >= min_pts
+    # core-core edges, one direction of each undirected pair
+    edge = (id_a < id_b) & core[a] & core[b]
+    pos = np.cumsum(core) - 1  # index among the (sorted) core points
+    roots = components._min_label_union_find(
+        pos[a[edge]], pos[b[edge]], int(core.sum())
+    )
+    # dense ranks by component minimum id == row_number() over the
+    # sorted distinct components
+    _, cluster = np.unique(roots, return_inverse=True)
+
+    core_pts = pd.DataFrame({"lng": lng[core], "lat": lat[core], "w": w[core]})
+    geoms, n_points = [], []
+    for _, g in core_pts.groupby(cluster, sort=True):
+        hull = convex_hull(list(zip(g["lng"].tolist(), g["lat"].tolist())))
+        geoms.append(polygon_geometry(hull))
+        n_points.append(int(g["w"].sum()))
+    pdf = pd.DataFrame(
+        {
+            "cluster": np.arange(len(geoms), dtype=np.int64),
+            "geometry": pd.Series(geoms, dtype=object),
+            "n_points": np.asarray(n_points, dtype=np.int64),
+        }
+    )
+    # a pandas frame crosses as Arrow batches; a list of tuples would
+    # start a Python worker to serialize the rows
+    return pts.sparkSession.createDataFrame(pdf, POLYGON_SCHEMA)
+
+
 class Geoscan(_Params):
     """Distributed estimator (`Geoscan()` of the reference, M1-M2)."""
 
@@ -235,13 +331,19 @@ class Geoscan(_Params):
             if stats["n"] / max(stats["c"], 1) >= 16:
                 pairing_res += 1
 
-        # pairs feed BOTH the degree aggregate and the core-core edge list;
-        # without a persist the ring-explode + haversine join runs twice
+        # pairs feed the driver probe, and on the distributed path BOTH the
+        # degree aggregate and the core-core edge list; without a persist
+        # the ring-explode + haversine join runs more than once
         pairs = (
             epsilon_pairs(pts, eps, res=pairing_res)
             .select("id_a", "id_b", "w_b")
             .persist()
         )
+        polygons = _fit_on_driver(pts, pairs, minp)
+        if polygons is not None:
+            pts.unpersist()
+            pairs.unpersist()
+            return GeoscanModel(polygons, self.params_dict())
         degree = pairs.groupBy("id_a").agg(F.sum("w_b").alias("nbr_w"))
         core = (
             pts.join(degree, pts.id == degree.id_a, "left_outer")

@@ -2,6 +2,7 @@
 
 from pyspark.sql import functions as F
 
+from geoscan_fraud_spark.operators import components
 from geoscan_fraud_spark.operators.components import connected_components
 
 
@@ -47,7 +48,7 @@ def test_self_loops_and_duplicates(spark):
     assert got == {1: 1, 2: 1, 5: 5, 6: 5}
 
 
-def test_small_graph_path_equals_iterative(spark):
+def test_small_graph_path_equals_iterative(spark, monkeypatch):
     """The driver union-find fast path and the distributed iterative
     path must produce IDENTICAL (id, component) labelings."""
     import random
@@ -61,9 +62,10 @@ def test_small_graph_path_equals_iterative(spark):
         (r["id"], r["component"])
         for r in connected_components(df).collect()
     }
+    monkeypatch.setattr(components, "DRIVER_MAX_ROWS", 0)
     slow = {
         (r["id"], r["component"])
-        for r in connected_components(df, small_graph_threshold=0).collect()
+        for r in connected_components(df).collect()
     }
     assert fast == slow and len(fast) > 0
     # labels are component minima on both paths

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from geoscan_fraud_spark.functions.dbscan_local import local_dbscan
 from geoscan_fraud_spark.functions.geo import haversine_m_np
 from geoscan_fraud_spark.functions.hull import geometry_ring, points_in_polygon
+from geoscan_fraud_spark.harness_geo import _pinned_fit_points
+from geoscan_fraud_spark.operators import components, geoscan
 from geoscan_fraud_spark.operators.geoscan import Geoscan, GeoscanModel
 from geoscan_fraud_spark.operators.personalized import (
     GeoscanPersonalized,
@@ -94,6 +96,84 @@ def test_fit_deterministic_under_partitioning(spark):
     g1 = sorted(r["geometry"] for r in m1.polygons.collect())
     g2 = sorted(r["geometry"] for r in m2.polygons.collect())
     assert g1 == g2
+
+
+def _line_points(spark):
+    """30 points 11 m apart on one meridian: one colinear cluster."""
+    rows = [(40.0 + i * 1e-4, -74.0) for i in range(30)]
+    return spark.createDataFrame(rows, "latitude double, longitude double")
+
+
+def _stacked_points(spark):
+    """One coordinate repeated 12 times with no neighbour (core by its own
+    weight, a padded quad), next to an isolated singleton."""
+    rows = [(41.0, -73.0)] * 12 + [(41.5, -73.5)]
+    return spark.createDataFrame(rows, "latitude double, longitude double")
+
+
+_PATH_CASES = {
+    "tx": lambda spark, tx: (tx[0], EPS, MINPTS),
+    "pinned": lambda spark, tx: (_pinned_fit_points(spark), 50.0, 5),
+    "colinear": lambda spark, tx: (_line_points(spark), 50.0, 5),
+    "stacked": lambda spark, tx: (_stacked_points(spark), 50.0, 8),
+    "no_core": lambda spark, tx: (_stacked_points(spark), 50.0, 20),
+    "reversed13": lambda spark, tx: (
+        spark.createDataFrame(tx[1].iloc[::-1]).repartition(13),
+        EPS,
+        MINPTS,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PATH_CASES))
+def test_driver_fit_equals_distributed_fit(spark, tx, monkeypatch, case):
+    """The driver path (small graph) and the distributed path
+    (`DRIVER_MAX_ROWS` = 0) give the same polygons row for row, also when
+    no point is core."""
+    df, eps, minp = _PATH_CASES[case](spark, tx)
+    cc_calls = []
+
+    def counted_cc(*a, **kw):
+        cc_calls.append(1)
+        return components.connected_components(*a, **kw)
+
+    monkeypatch.setattr(geoscan, "connected_components", counted_cc)
+
+    def fit_rows():
+        polys = Geoscan().setEpsilon(eps).setMinPts(minp).fit(df).polygons
+        return [tuple(r) for r in polys.orderBy("cluster").collect()]
+
+    driver = fit_rows()
+    assert cc_calls == []
+    monkeypatch.setattr(components, "DRIVER_MAX_ROWS", 0)
+    distributed = fit_rows()
+    assert cc_calls == [1]
+    assert driver == distributed
+    assert bool(driver) == (case != "no_core")
+    if case == "stacked":
+        ((cluster, geometry, n_points),) = driver
+        assert n_points == 12 and len(geometry_ring(geometry)) == 4
+
+
+def test_driver_fit_job_count_and_plan(spark, tx):
+    """A small fit schedules at most 8 Spark jobs, and its polygons are a
+    local relation: no Python-worker node in the executed plan."""
+    df, _ = tx
+    sc = spark.sparkContext
+    fit = lambda: Geoscan().setEpsilon(EPS).setMinPts(MINPTS).fit(df)  # noqa: E731
+    fit()  # warm
+    sc.setJobGroup("driver_fit_jobs", "small-graph fit")
+    try:
+        model = fit()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("driver_fit_jobs")
+    assert 0 < len(jobs) <= 8, jobs
+    assert model.polygons.count() > 0
+    plan = model.polygons._jdf.queryExecution().executedPlan().toString()
+    for node in ("FlatMapGroupsInPandas", "MapInPandas", "PythonUDF"):
+        assert node not in plan, plan
 
 
 def test_geojson_output(model):
@@ -213,3 +293,17 @@ def test_hull_contains_cluster_points(pmodel, tx):
             buffered = centroid + (ring - centroid) * (1 + 1e-6)
             inside = points_in_polygon(lng[mask], lat[mask], buffered)
             assert inside.all(), (user, cid, inside.mean())
+
+
+def test_score_pipeline_releases_its_caches(spark, sf_dir):
+    """The score-pipeline entry leaves nothing in the session's cache:
+    its persisted points, tiles and personalized models are released once
+    the result is materialized."""
+    from geoscan_fraud_spark.harness_geo import geoscan_score_pipeline
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    rows = geoscan_score_pipeline(spark, sf_dir).collect()
+    assert len(rows) == 3
+    assert cache.isEmpty()

@@ -189,3 +189,28 @@ def test_profile_scale_ladder(profile, spark, sf_dir, monkeypatch):
     monkeypatch.setattr(profile, "time", no_timing)
     with pytest.raises(SystemExit, match="two distinct k"):
         profile.scale(spark, sf_dir, ["u1_cell_id"], [2, 2])
+
+
+def test_scratch_dirs_removed_at_exit(tmp_path):
+    """Stores made through `harness.scratch_dir` share one root per
+    process, and the root is gone once that process exits."""
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from geoscan_fraud_spark.harness import scratch_dir\n"
+        "a, b = scratch_dir('a_'), scratch_dir('b_')\n"
+        "open(os.path.join(a, 'part'), 'w').write('x')\n"
+        "assert a != b and os.path.dirname(a) == os.path.dirname(b)\n"
+        "print(os.path.dirname(a))\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=ROOT, env=env, capture_output=True, text=True, check=True,
+    )
+    root = out.stdout.strip().splitlines()[-1]
+    assert pathlib.Path(root).parent == tmp_path
+    assert not os.path.exists(root)
+    assert list(tmp_path.iterdir()) == []

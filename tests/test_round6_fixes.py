@@ -137,13 +137,15 @@ def test_simhash_max_bucket_guard(spark):
     assert low <= pairs | {(a, b) for (a, b) in low if a == 0 or b == 0}
 
 
-def test_connected_components_checkpoint_modes(spark, tmp_path):
+def test_connected_components_checkpoint_modes(spark, tmp_path, monkeypatch):
     """Reliable checkpoints survive executor loss at 100 TB: with a
     checkpoint dir set, the iterative rounds write to it; without one they
     use localCheckpoint. Both converge identically on a chain graph (the
     worst case pointer jumping exists for)."""
+    from geoscan_fraud_spark.operators import components
     from geoscan_fraud_spark.operators.components import connected_components
 
+    monkeypatch.setattr(components, "DRIVER_MAX_ROWS", 0)
     chain = [(i, i + 1) for i in range(40)] + [(100, 101)]
     edges = spark.createDataFrame(chain, ["src", "dst"])
     expect = {i: 0 for i in range(41)} | {100: 100, 101: 100}
@@ -151,7 +153,7 @@ def test_connected_components_checkpoint_modes(spark, tmp_path):
     def run():
         return {
             r.id: r.component
-            for r in connected_components(edges, small_graph_threshold=0).collect()
+            for r in connected_components(edges).collect()
         }
 
     sc = spark.sparkContext

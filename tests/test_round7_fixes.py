@@ -366,9 +366,10 @@ def test_expire_index_rejects_legacy_base(spark, tmp_path):
         expire_index(spark, store, min_batch_id=3)
 
 
-def test_union_find_arrow_path_parity(spark):
+def test_union_find_arrow_path_parity(spark, monkeypatch):
     """The Arrow/numpy small-graph path must produce the identical
     min-label result as the distributed iteration."""
+    from geoscan_fraud_spark.operators import components
     from geoscan_fraud_spark.operators.components import connected_components
 
     edges = spark.createDataFrame(
@@ -379,9 +380,10 @@ def test_union_find_arrow_path_parity(spark):
         (r["id"], r["component"])
         for r in connected_components(edges).collect()
     }
+    monkeypatch.setattr(components, "DRIVER_MAX_ROWS", 0)
     big = {
         (r["id"], r["component"])
-        for r in connected_components(edges, small_graph_threshold=0).collect()
+        for r in connected_components(edges).collect()
     }
     assert small == big
     assert small == {
