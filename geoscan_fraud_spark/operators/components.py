@@ -28,11 +28,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: the most rows a driver-side graph path fetches with its LIMIT probe:
-#: `connected_components`' symmetrized edge list, and `Geoscan.fit`'s
-#: epsilon pairs plus its distinct points. Above it the distributed path
-#: runs. Read at call time, so a test can patch it to 0 to force the
-#: distributed path.
+#: the most rows a driver-side graph path fetches (`collect_small`):
+#: `connected_components`' symmetrized edge list, `Geoscan.fit`'s epsilon
+#: pairs plus its distinct points, and the incremental dedups' pairs plus
+#: their index-matched ids. Above it the distributed path runs. Read at
+#: call time, so a test can patch it to 0 to force the distributed path.
 DRIVER_MAX_ROWS = 2_000_000
 
 
@@ -44,15 +44,44 @@ def _cutter(df: DataFrame):
     return lambda d: d.localCheckpoint(eager=True)
 
 
+def collect_small(*frames: DataFrame) -> list | None:
+    """Fetch small relations to the driver in ONE action, or None.
+
+    Each frame is tagged with its position and the frames are unioned
+    by name, so they must already share one schema, padded with
+    non-NULL literals (a NULL in an int64 column turns Arrow's int64
+    into float64 and rounds 64-bit ids); a mismatch fails in
+    `unionByName`. One ``limit(DRIVER_MAX_ROWS + 1).toPandas()`` both
+    picks the path and fetches the rows: if at most `DRIVER_MAX_ROWS`
+    came back, that IS everything, split back into one pandas frame per
+    input; if the limit bound, the relations are big and the caller's
+    distributed path takes over (None). Picking the path with a count()
+    job and fetching with a second job would cost two actions, and
+    CollectLimit stops after filling, so a huge input never
+    materializes driver-side. The rows cross as Arrow batches into flat
+    numpy columns, not per-row Python ``Row`` objects. Returns None
+    without running anything when `DRIVER_MAX_ROWS` <= 0."""
+    lim = DRIVER_MAX_ROWS
+    if lim <= 0:
+        return None
+    union = frames[0].withColumn("__frame", F.lit(0))
+    for i, f in enumerate(frames[1:], 1):
+        union = union.unionByName(f.withColumn("__frame", F.lit(i)))
+    pdf = union.limit(lim + 1).toPandas()
+    if len(pdf) > lim:
+        return None
+    tag = pdf.pop("__frame").to_numpy()
+    return [pdf[tag == i].reset_index(drop=True) for i in range(len(frames))]
+
+
 def _min_label_union_find(ui, vi, n: int):
     """Union-find with path halving and union-by-MIN-root over
     pre-factorized edge endpoints: ``ui``/``vi`` are integer index
     arrays into a SORTED id table of ``n`` vertices (so the min root
     index is also the min vertex id). Returns the fully-flattened root
-    index per vertex. Shared by `connected_components`' small-graph
-    path and the incremental gates' driver-side drop rule
-    (`operators/incremental._component_drop`) so both compute identical
-    min-label components by construction."""
+    index per vertex. `min_labels` runs it over an edge list's ids, and
+    `Geoscan.fit`'s driver path over its core points (isolated ones
+    included)."""
     import numpy as np
 
     parent = np.arange(n, dtype=np.int64)
@@ -80,6 +109,19 @@ def _min_label_union_find(ui, vi, n: int):
     return roots
 
 
+def min_labels(u, v):
+    """Components of the edge list ``u``-``v`` (numpy id arrays) ->
+    (ids, labels): every vertex id once, sorted, and the minimum id of
+    its component, the labels `connected_components` returns."""
+    import numpy as np
+
+    # np.unique sorts, so index order == id order: the min root INDEX of
+    # a component is also its min vertex ID
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    m = len(u)
+    return ids, ids[_min_label_union_find(inv[:m], inv[m:], len(ids))]
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -89,22 +131,12 @@ def connected_components(
     """(src, dst) long-id edges -> (id, component) where component is the
     minimum vertex id in the connected component.
 
-    Adaptive physical strategy (the AQE philosophy applied where Spark
-    can't): near-dup graphs are SPARSE — a 100 TB corpus with 0.1%
-    duplicates yields a tiny edge list — and each distributed iteration
-    costs 2 joins + a checkpoint + a convergence count in fixed job
-    latency. When the symmetrized edge list has at most
-    `DRIVER_MAX_ROWS` rows, the labels are computed with a
-    driver-side union-find instead: identical min-label result, 2 jobs
-    total (checkpoint + LIMIT-probe collect; the path pick rides on
-    the collect instead of its own count() job) instead of ~4 per
-    iteration. The pairs cross the wire as Arrow
-    batches into a 2-column pandas frame (two int64 numpy arrays — 16
-    bytes/edge, ~32 MB at the 2M-symmetrized default, NOT per-row
-    Python ``Row`` objects at ~100+ bytes each), and the union-find
-    runs over contiguous numpy index arrays. The iterative min-label +
-    pointer-jumping path remains for genuinely large edge lists
-    (`DRIVER_MAX_ROWS` = 0 forces it)."""
+    Small graphs skip the iteration: when the symmetrized edge list
+    fits `collect_small`, `min_labels` computes the identical labels on
+    the driver in 2 jobs (checkpoint + fetch) instead of ~4 per
+    iteration. Near-dup graphs are sparse even at 100 TB, so that is
+    the normal case. The iterative min-label + pointer-jumping path
+    runs for larger edge lists (`DRIVER_MAX_ROWS` = 0 forces it)."""
     cut = _cutter(edges)
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # no distinct: duplicate edges are absorbed by the min-aggregates each
@@ -113,38 +145,19 @@ def connected_components(
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     sym = cut(sym)
 
-    lim = DRIVER_MAX_ROWS
-    if lim > 0:
-        # per-call job floor: picking the path with a count() job and
-        # fetching the edges with a second toPandas job costs two
-        # actions. A LIMIT-probe collect does both in ONE action over
-        # the just-checkpointed blocks: fetch at most lim+1 rows
-        # — if everything came back, that IS the edge list (rows ≤ limit
-        # means limit was not binding); if the limit bound, the list is
-        # big and the distributed path takes over (CollectLimit
-        # short-circuits after filling, so the probe never materializes
-        # a huge frame driver-side).
-        pdf = sym.limit(lim + 1).toPandas()
-        if len(pdf) <= lim:
-            import numpy as np  # local: keep module import-light
+    small = collect_small(sym)
+    if small is not None:
+        import pandas as pd  # local: keep module import-light
 
-            # Arrow transfer: two flat int64 columns, no Row objects
-            uv = np.concatenate(
-                [pdf["u"].to_numpy(), pdf["v"].to_numpy()]
-            )
-            # np.unique sorts, so index order == id order: the min root
-            # INDEX of a component is also its min vertex ID
-            ids, inv = np.unique(uv, return_inverse=True)
-            m = len(pdf)
-            roots = _min_label_union_find(inv[:m], inv[m:], len(ids))
-            import pandas as pd  # noqa: local with numpy above
-
-            out_pdf = pd.DataFrame({"id": ids, "component": ids[roots]})
-            id_type = edges.schema[src].dataType
-            schema = T.StructType(
-                [T.StructField("id", id_type), T.StructField("component", id_type)]
-            )
-            return edges.sparkSession.createDataFrame(out_pdf, schema)
+        (pdf,) = small
+        ids, labels = min_labels(pdf["u"].to_numpy(), pdf["v"].to_numpy())
+        id_type = edges.schema[src].dataType
+        schema = T.StructType(
+            [T.StructField("id", id_type), T.StructField("component", id_type)]
+        )
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame({"id": ids, "component": labels}), schema
+        )
 
     labels = cut(
         sym.select(F.col("u").alias("id"))

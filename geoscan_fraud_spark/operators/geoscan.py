@@ -15,13 +15,13 @@ Re-implements the algorithm the reference describes in prose
    propagation, `operators/components.py` — no GraphX);
 4. convex hull per component (`01:30-32`) via applyInPandas.
 
-Steps 2-4 run on the driver when the graph is small: one LIMIT-probe
-collect fetches the pairs and the distinct points (at most
-`components.DRIVER_MAX_ROWS` rows), and numpy does the degree, the core
-filter, the min-label union-find, the cluster ranks and the hulls, with
-the same results as the distributed path. Each of those steps is a
-scheduled Spark job or more on the distributed path, and at interactive
-sizes the job count, not the data, sets the fit's latency.
+Steps 2-4 run on the driver when the graph is small: one
+`components.collect_small` action fetches the pairs and the distinct
+points (at most `components.DRIVER_MAX_ROWS` rows), and numpy does the
+degree, the core filter, the min-label union-find, the cluster ranks and
+the hulls, with the same results as the distributed path. Each of those
+steps is a scheduled Spark job or more on the distributed path, and at
+interactive sizes the job count, not the data, sets the fit's latency.
 
 API parity with `Geoscan()` (M1-M5 of SURVEY §2.8): builder setters,
 fit/transform/save/load, toGeoJson, getTiles. Models are plain DataFrames
@@ -205,48 +205,31 @@ def epsilon_pairs(
 def _fit_on_driver(
     pts: DataFrame, pairs: DataFrame, min_pts: int
 ) -> DataFrame | None:
-    """Steps 2-4 of the fit on the driver, or None when the graph has more
-    than `components.DRIVER_MAX_ROWS` rows (pairs + points).
+    """Steps 2-4 of the fit on the driver, or None when the pairs plus
+    the points do not fit `components.collect_small`.
 
-    ONE action fetches both relations: each point rides the union as an
-    (id, id, w, lat, lng, true) row, each ordered pair as (id_a, id_b,
-    w_b, 0, 0, false). No id is ever NULL: a NULL would turn the int64
-    column into float64 and round the 64-bit hashes. The polygons equal
-    the distributed path's row for row: same integer degree, same
-    min-label components (shared union-find), ranks ordered by the
-    component's minimum id, and one hull per cluster over its core
-    points (hull(hulls) == hull(points), so the two-level reduction
-    gives the same polygon)."""
-    lim = components.DRIVER_MAX_ROWS
-    if lim <= 0:
-        return None
-    probe = (
+    ONE action fetches both relations: each point as an (id, id, w,
+    lat, lng) row, each ordered pair as (id_a, id_b, w_b, 0, 0). The
+    polygons equal the distributed path's row for row: same integer
+    degree, same min-label components (shared union-find), ranks
+    ordered by the component's minimum id, and one hull per cluster
+    over its core points (hull(hulls) == hull(points), so the two-level
+    reduction gives the same polygon)."""
+    small = components.collect_small(
         pts.select(
-            F.col("id").alias("id_a"),
-            F.col("id").alias("id_b"),
-            "w",
-            "lat",
-            "lng",
-            F.lit(True).alias("__pt"),
-        )
-        .unionByName(
-            pairs.select(
-                "id_a",
-                "id_b",
-                F.col("w_b").alias("w"),
-                F.lit(0.0).alias("lat"),
-                F.lit(0.0).alias("lng"),
-                F.lit(False).alias("__pt"),
-            )
-        )
-        .limit(lim + 1)
-        .toPandas()
+            F.col("id").alias("id_a"), F.col("id").alias("id_b"), "w", "lat", "lng"
+        ),
+        pairs.select(
+            "id_a",
+            "id_b",
+            F.col("w_b").alias("w"),
+            F.lit(0.0).alias("lat"),
+            F.lit(0.0).alias("lng"),
+        ),
     )
-    if len(probe) > lim:
+    if small is None:
         return None
-    is_pt = probe["__pt"].to_numpy()
-    point_rows = probe[is_pt]
-    pair_rows = probe[~is_pt]
+    point_rows, pair_rows = small
     # np.unique sorts, so an index order is also an id order
     ids, first = np.unique(point_rows["id_a"].to_numpy(), return_index=True)
     w = point_rows["w"].to_numpy()[first]

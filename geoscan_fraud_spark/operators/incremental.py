@@ -38,7 +38,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from geoscan_fraud_spark.operators.components import connected_components
+from geoscan_fraud_spark.operators.components import (
+    collect_small,
+    connected_components,
+    min_labels,
+)
 from geoscan_fraud_spark.operators.dedup import (
     _cap_buckets,
     _star_capped_buckets,
@@ -398,43 +402,21 @@ def dedup_against_index(
     return _component_drop(new_df, pairs, matched, id_col)
 
 
-#: driver-side drop-rule gate: pair lists at or under this row count are
-#: collected and resolved with the shared union-find instead of running
-#: the distributed component machinery per micro-batch (monkeypatchable;
-#: resolved at call time)
-_DROP_DRIVER_MAX_PAIRS = 1_000_000
-
-
 def _driver_drop_ids(pairs_pdf, matched_ids) -> set:
-    """The `_component_drop` rule over a collected pair frame: same
-    min-label union-find as `connected_components`' small-graph path
-    (shared helper — identical labels by construction), then the same
-    three drop clauses, in plain Python sets."""
+    """The `_component_drop` rule over a collected pair frame: the
+    `min_labels` components, then the same three drop clauses as numpy
+    masks: the matched ids, every member of a component holding a
+    matched id (transitively represented), and every id whose label is
+    not itself (each other component keeps only its min member)."""
     import numpy as np
 
-    from geoscan_fraud_spark.operators.components import (
-        _min_label_union_find,
+    ids, labels = min_labels(
+        pairs_pdf["id_a"].to_numpy(), pairs_pdf["id_b"].to_numpy()
     )
-
-    uv = np.concatenate(
-        [pairs_pdf["id_a"].to_numpy(), pairs_pdf["id_b"].to_numpy()]
-    )
-    # np.unique sorts, so the min root INDEX is also the min vertex id
-    ids, inv = np.unique(uv, return_inverse=True)
-    m = len(pairs_pdf)
-    roots = _min_label_union_find(inv[:m], inv[m:], len(ids))
-    id_list = ids.tolist()
-    label_list = ids[roots].tolist()
-    matched_set = set(matched_ids)
-    comp_of = dict(zip(id_list, label_list))
-    matched_comps = {comp_of[i] for i in matched_set if i in comp_of}
-    drop = set(matched_set)
-    for i, c in zip(id_list, label_list):
-        # component contains an index-matched doc -> transitively
-        # represented; otherwise drop every non-min member
-        if c in matched_comps or i != c:
-            drop.add(i)
-    return drop
+    # the pairs' dtype: an empty list would otherwise come in as float64
+    matched = np.asarray(matched_ids, dtype=ids.dtype)
+    hit = np.isin(labels, labels[np.isin(ids, matched)]) | (ids != labels)
+    return set(matched.tolist()) | set(ids[hit].tolist())
 
 
 def _component_drop(
@@ -442,66 +424,46 @@ def _component_drop(
     pairs: DataFrame,
     matched: DataFrame,
     id_col: str,
-    max_driver_pairs: int | None = None,
 ) -> DataFrame:
     """Shared drop rule for the incremental dedups: drop index-matched
     docs, every member of a batch-internal component CONTAINING an
     index-matched doc (transitively represented), and each remaining
     component's non-min members.
 
-    The per-micro-batch job floor sets the shape: near-dup
-    pair lists are batch-bounded and sparse, so by default ``pairs``
-    (LIMIT-probed) and ``matched`` are COLLECTED — one action each —
-    and the component collapse runs through the same min-label
-    union-find as `connected_components`' small-graph path; the kept
-    rows are then ONE broadcast anti-join of ``new_df`` against a
-    driver-built drop-id relation. Versus the distributed shape this
-    removes two eager localCheckpoint materializations (``matched``
-    and the symmetrized edge list), the convergence probe, and the
-    cc-join subtrees from the downstream corpus-write plan — at
-    micro-batch scale ~4-5 scheduled jobs (plus their AQE sub-jobs) of
-    fixed latency per batch. The drop SET is identical by construction
-    (same candidate generation, same estimates, same union-find
-    labels; pinned in tests/test_round13_fixes.py). A pair list past
-    ``max_driver_pairs`` (default `_DROP_DRIVER_MAX_PAIRS`) falls back
-    to the distributed path unchanged — the probe's CollectLimit
-    short-circuits after filling, so a giant ad-hoc batch never
-    materializes driver-side; pass ``0`` to force the distributed
-    path."""
-    lim = _DROP_DRIVER_MAX_PAIRS if max_driver_pairs is None else max_driver_pairs
-    if lim > 0:
-        # ONE action fetches both relations: matched ids ride the union
-        # as (id, id, true) marker rows — NOT null-padded id_b, which
-        # would coerce an int64 pandas column to float64 and corrupt
-        # 64-bit ids past 2^53. matched is bounded by batch docs, so the
-        # limit stays a pair-scale guard.
-        probe = (
-            matched.select(
-                F.col("id").alias("id_a"),
-                F.col("id").alias("id_b"),
-                F.lit(True).alias("__m"),
-            )
-            .unionByName(
-                pairs.select("id_a", "id_b", F.lit(False).alias("__m"))
-            )
-            .limit(lim + 1)
-            .toPandas()
-        )
-        if len(probe) <= lim:
-            matched_ids = probe.loc[probe["__m"], "id_a"].tolist()
-            pairs_pdf = probe.loc[~probe["__m"], ["id_a", "id_b"]]
-            drop = _driver_drop_ids(pairs_pdf, matched_ids)
-            if not drop:
-                return new_df
-            from pyspark.sql import types as T
+    The per-micro-batch job floor sets the shape: near-dup pair lists
+    are batch-bounded and sparse, so ``pairs`` and ``matched`` are
+    fetched by one `collect_small` action and `_driver_drop_ids`
+    resolves the components on the driver; the kept rows are then ONE
+    broadcast anti-join of ``new_df`` against a driver-built drop-id
+    relation. Versus the distributed shape this removes two eager
+    localCheckpoint materializations (``matched`` and the symmetrized
+    edge list), the convergence probe, and the cc-join subtrees from
+    the downstream corpus-write plan — at micro-batch scale ~4-5
+    scheduled jobs (plus their AQE sub-jobs) of fixed latency per
+    batch. The drop SET is identical by construction (same candidate
+    generation, same estimates, same min labels; pinned in
+    tests/test_round13_fixes.py). When the fetch does not fit, the
+    distributed path runs unchanged."""
+    # matched ids pad to (id, id) pairs: never a NULL id_b (see
+    # `collect_small`)
+    small = collect_small(
+        matched.select(F.col("id").alias("id_a"), F.col("id").alias("id_b")),
+        pairs.select("id_a", "id_b"),
+    )
+    if small is not None:
+        matched_pdf, pairs_pdf = small
+        drop = _driver_drop_ids(pairs_pdf, matched_pdf["id_a"].to_numpy())
+        if not drop:
+            return new_df
+        from pyspark.sql import types as T
 
-            schema = T.StructType(
-                [T.StructField(id_col, new_df.schema[id_col].dataType)]
-            )
-            drop_df = new_df.sparkSession.createDataFrame(
-                [(d,) for d in sorted(drop)], schema
-            )
-            return new_df.join(F.broadcast(drop_df), id_col, "left_anti")
+        schema = T.StructType(
+            [T.StructField(id_col, new_df.schema[id_col].dataType)]
+        )
+        drop_df = new_df.sparkSession.createDataFrame(
+            [(d,) for d in sorted(drop)], schema
+        )
+        return new_df.join(F.broadcast(drop_df), id_col, "left_anti")
     # distributed fallback: ``matched`` is consumed twice below (the
     # component flag and the final drop union), so cut it here — the
     # callers no longer pre-checkpoint it

@@ -74,3 +74,34 @@ def test_small_graph_path_equals_iterative(spark, monkeypatch):
         comp_min.setdefault(c, set()).add(i)
     for c, members in comp_min.items():
         assert c == min(members | {c})
+
+
+def test_collect_small_one_action_exact_split(spark, monkeypatch):
+    """`collect_small` returns one pandas frame per input, int64 ids
+    near ±2^63 exact and an empty input empty, in exactly one Spark
+    job; with the bound patched below the row count it returns None."""
+    top, bottom = 2**63 - 1, -(2**63)
+    a = spark.range(3).select(
+        (F.lit(top) - F.col("id")).alias("x"), F.col("id").alias("y")
+    )
+    b = spark.range(2).select(
+        (F.lit(bottom) + F.col("id")).alias("x"), (F.col("id") + 10).alias("y")
+    )
+    empty = a.filter(F.col("y") < 0)
+    sc = spark.sparkContext
+    sc.setJobGroup("collect_small_jobs", "collect_small")
+    try:
+        got = components.collect_small(a, b, empty)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("collect_small_jobs")
+    assert len(jobs) == 1, jobs
+    pa, pb, pe = got
+    assert sorted(pa["x"].tolist()) == [top - 2, top - 1, top]
+    assert sorted(pb["x"].tolist()) == [bottom, bottom + 1]
+    assert sorted(pb["y"].tolist()) == [10, 11]
+    assert list(pe.columns) == ["x", "y"] and len(pe) == 0
+
+    monkeypatch.setattr(components, "DRIVER_MAX_ROWS", 1)
+    assert components.collect_small(a, b) is None

@@ -1,7 +1,7 @@
 """Round-13 fixes (second optimization round).
 
 VERDICT r12 #1/#5: `_component_drop` resolves batch-bounded pair lists
-driver-side through the SAME min-label union-find as
+driver-side through the SAME `min_labels` kernel as
 `connected_components`' small-graph path — these tests pin that the
 driver path's kept set is identical to the distributed path's, with
 and without index matches, components, and the star guard.
@@ -37,38 +37,32 @@ from tests.test_round11_fixes import _gate_fixture, _rows
 # ---------------------------------------------------------------------------
 
 
-def test_driver_drop_matches_distributed_minhash_gate(spark):
+def test_driver_drop_matches_distributed_minhash_gate(spark, monkeypatch):
     """The default (driver union-find) kept set is bit-identical to the
     forced-distributed one — cross-batch matches, batch-internal
     components, fresh rows."""
+    from geoscan_fraud_spark.operators import components
     from geoscan_fraud_spark.operators import incremental as inc
 
     batch, idx = _gate_fixture(spark)
     kw = dict(num_hashes=48, bands=12, threshold=0.5)
     default = _rows(inc.dedup_against_index(batch, idx, **kw), "doc_id")
-    forced = inc._DROP_DRIVER_MAX_PAIRS
-    try:
-        inc._DROP_DRIVER_MAX_PAIRS = 0  # distributed fallback
-        dist = _rows(inc.dedup_against_index(batch, idx, **kw), "doc_id")
-    finally:
-        inc._DROP_DRIVER_MAX_PAIRS = forced
+    monkeypatch.setattr(components, "DRIVER_MAX_ROWS", 0)  # distributed
+    dist = _rows(inc.dedup_against_index(batch, idx, **kw), "doc_id")
     assert default == dist and len(default) > 0
 
 
-def test_driver_drop_matches_distributed_star_guard(spark):
+def test_driver_drop_matches_distributed_star_guard(spark, monkeypatch):
     """Same equality under the planted hot family + star guard (hub
     edges are candidates like any other)."""
+    from geoscan_fraud_spark.operators import components
     from geoscan_fraud_spark.operators import incremental as inc
 
     batch, idx = _gate_fixture(spark, planted_hot=True)
     kw = dict(num_hashes=48, bands=12, threshold=0.5, max_bucket=8)
     default = _rows(inc.dedup_against_index(batch, idx, **kw), "doc_id")
-    forced = inc._DROP_DRIVER_MAX_PAIRS
-    try:
-        inc._DROP_DRIVER_MAX_PAIRS = 0
-        dist = _rows(inc.dedup_against_index(batch, idx, **kw), "doc_id")
-    finally:
-        inc._DROP_DRIVER_MAX_PAIRS = forced
+    monkeypatch.setattr(components, "DRIVER_MAX_ROWS", 0)
+    dist = _rows(inc.dedup_against_index(batch, idx, **kw), "doc_id")
     assert default == dist
 
 
@@ -87,22 +81,27 @@ def test_driver_drop_ids_rule():
     # 99: matched, no pairs -> drops alone. {10,11}: matched component,
     # all drop. {1,2,3}: keep min 1, drop 2,3. {20,21}: keep 20, drop 21.
     assert drop == {99, 10, 11, 2, 3, 21}
+    # one more component above 2^53, where a float64 detour would round:
+    # its min survives and the other id drops exactly
+    big = 2**62 + 1
+    pairs.loc[len(pairs)] = [big, big + 2]
+    assert _driver_drop_ids(pairs, matched_ids=[10, 99]) == drop | {big + 2}
+    # no matched id: the matched list must not turn the ids into float64
+    assert _driver_drop_ids(pairs, matched_ids=[]) == {2, 3, 11, 21, big + 2}
 
 
-def test_driver_drop_limit_probe_falls_back(spark):
+def test_driver_drop_limit_probe_falls_back(spark, monkeypatch):
     """A pair list past the gate takes the distributed path and still
     returns the identical kept set."""
+    from geoscan_fraud_spark.operators import components
     from geoscan_fraud_spark.operators import incremental as inc
 
     batch, idx = _gate_fixture(spark)
     kw = dict(num_hashes=48, bands=12, threshold=0.5)
     default = _rows(inc.dedup_against_index(batch, idx, **kw), "doc_id")
-    forced = inc._DROP_DRIVER_MAX_PAIRS
-    try:
-        inc._DROP_DRIVER_MAX_PAIRS = 1  # any real pair list exceeds this
-        tiny = _rows(inc.dedup_against_index(batch, idx, **kw), "doc_id")
-    finally:
-        inc._DROP_DRIVER_MAX_PAIRS = forced
+    # any real pair list exceeds this: the probe runs, then falls back
+    monkeypatch.setattr(components, "DRIVER_MAX_ROWS", 1)
+    tiny = _rows(inc.dedup_against_index(batch, idx, **kw), "doc_id")
     assert default == tiny
 
 
